@@ -32,6 +32,14 @@ OPENS = ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
          "java.net", "java.nio", "java.util", "java.util.concurrent",
          "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
          "sun.security.action", "sun.util.calendar"]
+# The JIT's first tier only. A run is too short for the optimizing tier
+# to finish: with it, the same query pass kept getting faster for ten
+# passes, so a timed round measured how far background compilation had
+# got, which depends on how busy the host was during set-up. With the
+# first tier alone the rounds run at their steady speed from the second
+# one on, about as fast at these input sizes, and set-up is ~10 s
+# shorter.
+JIT = ["-XX:TieredStopAtLevel=1"]
 
 
 def log(msg):
@@ -101,7 +109,7 @@ def main():
     work = os.path.join(ROOT, ".perfbench_run", str(os.getpid()))
     os.makedirs(os.path.join(work, "tmp"))
     cmd = ["java"] + [x for p in OPENS for x in ("--add-opens", f"java.base/{p}=ALL-UNNAMED")] + [
-        "-Xms1536m", "-Xmx1536m", f"-Djava.io.tmpdir={work}/tmp", "-Dspark.ui.enabled=false",
+        *JIT, "-Xms1536m", "-Xmx1536m", f"-Djava.io.tmpdir={work}/tmp", "-Dspark.ui.enabled=false",
         "-cp", classpath, "perfbench.Main",
         "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
         "--trace", a.trace, "--t0-ms", str(int(time.time() * 1000)),

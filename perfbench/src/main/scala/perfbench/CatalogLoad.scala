@@ -5,6 +5,7 @@ import graft.metrics.RecordMetrics
 import graft.operators.{MediaClean, MergeUpsert, Popularity}
 import graft.sources.{Tsv, VersionedTable}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MapType, StringType}
 
@@ -129,16 +130,10 @@ object CatalogLoad extends Workload {
       concat(lit("Taxon "), col("id")).as("name"), lit(true).as("active")))
 
   val maxRounds: Int = Slices - 1
+  /** Night 0, the tables' seed, already ran every path in `prepare`. */
+  val warmUpRounds = 0
 
   def prepare(ctx: Ctx): Prepared = new Load(ctx)
-
-  /** The warm-up runs the two providers' first nights side by side. */
-  override def warmUp(ctx: Ctx): Unit = {
-    val load = new Load(ctx)
-    val nights = 1 to Workload.WarmUpRounds
-    Workload.both(nights.foreach(load.apiNight(_, Tracer.off, _ => ())),
-      nights.foreach(load.inatNight(_, Tracer.off, _ => ())))
-  }
 
   /** Inputs written, live tables seeded: rounds load nights 1, 2, ... */
   private final class Load(ctx: Ctx) extends Prepared {
@@ -153,29 +148,34 @@ object CatalogLoad extends Workload {
     private var loaded = Seq.empty[Int]
 
     // the seed decides which lineitem rows land in which night: night n
-    // loads slice n and re-pulls ~5% of the earlier slices
+    // loads slice n and re-pulls 5% of the earlier slices. Rows are dealt
+    // out in a seeded order, so every seed gives each night as many rows.
     locally {
-      val key = xxhash64(lit(ctx.seed), col("l_orderkey"), col("l_linenumber"))
-      val slice = pmod(key, lit(Slices.toLong))
-      val repull = pmod(xxhash64(key), lit(20L)) === 0
+      val rank = row_number().over(Window.orderBy(
+        xxhash64(lit(ctx.seed), col("l_orderkey"), col("l_linenumber")),
+        col("l_orderkey"), col("l_linenumber"))) - 1
       val li = spark.read.parquet(s"$data/lineitem.parquet")
+        .withColumn("rank", rank)
+        .withColumn("slice", pmod(col("rank"), lit(Slices.toLong)))
+        .withColumn("repull", pmod(floor(col("rank") / Slices), lit(20L)) === 0)
         .withColumn("night", explode(filter(sequence(lit(0), lit(Slices - 1)),
-          n => slice === n || (slice < n && repull))))
+          n => col("slice") === n || (col("slice") < n && col("repull")))))
         .persist()
       try Workload.both(
         apiBatch(li, col("night")).write.partitionBy("night").parquet(s"$dir/in/api"),
         photos(li, col("night")).write.partitionBy("night").parquet(s"$dir/in/photos"))
       finally li.unpersist()
-      // the live tables hold an earlier load's survivors (slice 0)
-      Workload.both({
-        Tsv.write(input("api", 0), s"$dir/tsv/0")
-        VersionedTable.commit(MediaClean.cleanMediaMetadata(
-            typed(Tsv.read(spark, s"$dir/tsv/0")), Provider)
-          .transform(MergeUpsert.dedupeByKey(_, Seq(col("provider"),
-            md5(col("foreign_identifier"))), col("title")))
-          .transform(MergeUpsert.dedupeByKey(_, Seq(col("url")), col("title"))), media)
-      }, VersionedTable.commit(
-        Inat.transform(input("photos", 0), observations, observers, taxa), inat))
+      // the media table starts empty (the url-conflict check reads it,
+      // so it needs a committed version); night 0 then loads slice 0
+      // through the whole chain, so the tables hold an earlier load's
+      // survivors and set-up has run every path of a night once
+      Tsv.write(input("api", 0).limit(0), s"$dir/tsv/empty")
+      VersionedTable.commit(MediaClean.cleanMediaMetadata(
+          typed(Tsv.read(spark, s"$dir/tsv/empty")), Provider)
+        .transform(MergeUpsert.dedupeByKey(_, Seq(col("provider"),
+          md5(col("foreign_identifier"))), col("title")))
+        .transform(MergeUpsert.dedupeByKey(_, Seq(col("url")), col("title"))), media)
+      Workload.both(apiNight(0, Tracer.off, _ => ()), inatNight(0, Tracer.off, _ => ()))
     }
 
     private def input(kind: String, n: Int): DataFrame =
@@ -192,7 +192,7 @@ object CatalogLoad extends Workload {
         if (tracer.enabled) spark.catalog.clearCache()
       })
       loaded :+= n
-      Round(Seq(Op(s"load$n", Some(seconds))), seconds, rows, counts.toMap)
+      Round(Seq(Op(s"load$n", Some(seconds), "load")), seconds, rows, counts.toMap)
     }
 
     /** The API provider's night: stage, load, clean, dedupe, drop url

@@ -5,8 +5,6 @@ import org.apache.spark.sql.SparkSession
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 
 /** Runs one workload and prints its metrics as bare JSON lines, the
   * last one the summary. Launched by run.py, which builds the classes
@@ -17,17 +15,23 @@ import scala.concurrent.duration.Duration
   *   --t0-ms <epoch ms> --data <dir> --work <dir> --out <dir>
   * }}}
   *
-  * A warm-up runs every code path of a round once while the workload's
-  * state is prepared; both count in set-up. Untraced
-  * (`--trace 0`): the workload's minimum of rounds then runs, and more
-  * while their timed sections add up to less than `--seconds`; the
-  * end-to-end metrics are printed. Traced
-  * (`--trace 1`): round 0 runs untraced, then a second preparation
-  * runs round 0 again traced (spans and the Spark listener on); the
-  * per-layer metrics are printed and the spans written to `--out`.
-  * Exits 1 when any output check fails.
+  * Set-up builds the workload's state and runs its untimed warm-up
+  * rounds on it. Untraced (`--trace 0`): the workload's minimum of
+  * rounds then runs, and more while their timed sections add up to less
+  * than `--seconds`; the end-to-end metrics are printed. Traced
+  * (`--trace 1`): the next round runs untraced, then the one after it
+  * traced (spans and the Spark listener on); the per-layer metrics are
+  * printed and the spans written to `--out`. Exits 1 when any output
+  * check fails.
   */
 object Main {
+
+  /** Spark's local threads. Two leave the rest of a small machine to
+    * the JIT, the GC and the driver, so a round measures the engine and
+    * not the scheduler; at these input sizes two were also faster than
+    * four.
+    */
+  val Cores = 2
 
   private def arg(args: Array[String], key: String): String = {
     val i = args.indexOf(s"--$key")
@@ -72,27 +76,30 @@ object Main {
     val traced = arg(args, "trace") == "1"
     val t0Ms = arg(args, "t0-ms").toLong
     val work = arg(args, "work")
-    val cores = math.min(4, Runtime.getRuntime.availableProcessors())
+    val cores = math.min(Cores, Runtime.getRuntime.availableProcessors())
     val spark = session(cores, work)
     val sessionUp = (System.currentTimeMillis() - t0Ms) / 1e3
     val ctx = Ctx(spark, seed, arg(args, "data"), work, cores)
     val out = new Output(workload.name, seed)
 
-    // the warm-up runs beside the preparation of the real state
+    // set-up: the state is built, then the warm-up rounds run on it
+    val warm = workload.warmUpRounds
     val (prepared, prepareS) = Workload.timed {
-      val warm = Future(workload.warmUp(ctx))(ExecutionContext.global)
       val p = workload.prepare(ctx)
-      Await.result(warm, Duration.Inf)
+      (0 until warm).foreach { i =>
+        val (r, s) = Workload.timed(p.round(i, Tracer.off))
+        log(f"warm-up round ${i + 1}: $s%.2f s (${r.seconds}%.2f s timed)")
+      }
       p
     }
-    log(f"session up $sessionUp%.2f s, warm-up and prepare $prepareS%.2f s")
+    log(f"session up $sessionUp%.2f s, prepare and warm-up $prepareS%.2f s")
     val problems = ArrayBuffer.empty[String]
 
     if (!traced) {
       val rounds = ArrayBuffer.empty[Round]
-      while (rounds.size < workload.maxRounds &&
+      while (warm + rounds.size < workload.maxRounds &&
           (rounds.size < workload.minRounds || rounds.map(_.seconds).sum < seconds)) {
-        val r = prepared.round(rounds.size, Tracer.off)
+        val r = prepared.round(warm + rounds.size, Tracer.off)
         rounds += r
         log(f"round ${rounds.size}: ${r.seconds}%.2f s, ops " +
           r.ops.map(_.seconds.fold("failed")(s => f"$s%.2f")).mkString(" "))
@@ -106,8 +113,9 @@ object Main {
       val latencies = Stats.withFailures(
         ops.map(o => if (checked.failed(o)) None else o.seconds))
       out.metric("setup_s", "s", sessionUp + prepareS)
-      out.metric("wall_s", "s", Stats.median(walls))
-      out.metric("rows_per_s", "1/s", rounds.map(_.rows).sum / walls.sum)
+      val wall = Stats.medianRound(rounds.map(_.ops).toSeq)
+      out.metric("wall_s", "s", wall)
+      out.metric("rows_per_s", "1/s", rounds.map(_.rows).sum.toDouble / rounds.size / wall)
       out.metric("rss_peak_mb", "MB", rssPeakMb())
       out.extra("op_p50_s", "s", Stats.median(latencies))
       out.extra("failed_frac", "ratio", outcome.failedFrac)
@@ -117,17 +125,16 @@ object Main {
         out.extra(s"op_p${p}_s", "s", Stats.percentile(latencies, p)))
       out.summary(problems.isEmpty && outcome.failed == 0, outcome)
     } else {
-      // the same round on identical inputs and state, untraced then traced
-      val untracedWall = prepared.round(0, Tracer.off).seconds
-      val p = workload.prepare(ctx)
+      // the next round untraced, then the one after it traced
+      val untracedWall = prepared.round(warm, Tracer.off).seconds
       val sc = spark.sparkContext
       val tracer = new Tracer(true, s"${workload.name}-seed$seed",
         id => sc.setLocalProperty(Tracer.SpanKey, if (id < 0) null else id.toString))
       val probe = SparkProbe.attach(sc, tracer.layerOf)
-      val r = tracer.span("bench.round")(p.round(0, tracer))
+      val r = tracer.span("bench.round")(prepared.round(warm + 1, tracer))
       SparkProbe.drain(sc)
       sc.removeSparkListener(probe)
-      val checked = p.check()
+      val checked = prepared.check()
       problems ++= checked.problems
       val counts = r.counts ++ checked.counts
       val values = Metrics.perLayerValues(tracer.spans, probe, r.copy(counts = counts),

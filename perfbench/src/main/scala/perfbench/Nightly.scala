@@ -5,16 +5,26 @@ package perfbench
   * `dedup_nightly` night folds the day's documents into the near-dup
   * store and compacts it. Each half is one operation (`load<n>`,
   * `fold<n>`), timed and checked exactly as in its own workload.
+  *
+  * Set-up builds both halves' state at once, each in its own thread;
+  * building it runs every path of a night once (see the halves).
   */
 object Nightly extends Workload {
   val name = "nightly"
   val maxRounds: Int = math.min(CatalogLoad.maxRounds, DedupNightly.maxRounds)
-
-  override def warmUp(ctx: Ctx): Unit =
-    Workload.both(CatalogLoad.warmUp(ctx), DedupNightly.warmUp(ctx))
+  val warmUpRounds = 0
+  /** A night is one sample of each half; two halve what a burst of
+    * host load during one of them does to the median.
+    */
+  override val minRounds = 2
 
   def prepare(ctx: Ctx): Prepared = {
-    val (load, dedup) = Workload.both(CatalogLoad.prepare(ctx), DedupNightly.prepare(ctx))
+    def build(w: Workload): Prepared = {
+      val (p, s) = Workload.timed(w.prepare(ctx))
+      System.err.println(f"[perfbench] ${w.name}: prepare $s%.2f s")
+      p
+    }
+    val (load, dedup) = Workload.both(build(CatalogLoad), build(DedupNightly))
     new Prepared {
       def round(i: Int, tracer: Tracer): Round = {
         val a = load.round(i, tracer)
@@ -23,7 +33,10 @@ object Nightly extends Workload {
           Workload.sum(a.counts, b.counts))
       }
 
-      def check(): Checked = load.check() ++ dedup.check()
+      def check(): Checked = {
+        val (a, b) = Workload.both(load.check(), dedup.check())
+        a ++ b
+      }
     }
   }
 }

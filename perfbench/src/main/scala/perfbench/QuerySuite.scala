@@ -41,18 +41,10 @@ object QuerySuite extends Workload {
 
   val maxRounds = 100
 
-  /** One pass with the queries spread over a thread per core: the
-    * warm-up only has to run each once, and their cold starts overlap.
+  /** The cold pass runs before timing (~17-22 s at 2 cores, most of it
+    * class loading and code generation).
     */
-  override def warmUp(ctx: Ctx): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(ctx.cores)
-    try {
-      val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val runs = queries.map(q => scala.concurrent.Future(
-        SparkEntry.queries(q)(ctx.spark, s"${ctx.data}/sf0.01").queryExecution.toRdd.count())(ec))
-      runs.foreach(scala.concurrent.Await.ready(_, scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
-  }
+  val warmUpRounds = 1
 
   def prepare(ctx: Ctx): Prepared = new Prepared {
     private val dir = s"${ctx.data}/sf0.01"

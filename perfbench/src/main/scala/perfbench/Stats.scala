@@ -10,6 +10,17 @@ object Stats {
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
   }
 
+  /** A typical round: the sum over its kinds of operation (a query; a
+    * night's load or fold) of each kind's median time across `rounds`,
+    * so one slow operation does not move it. A failed operation counts
+    * as infinitely slow.
+    */
+  def medianRound(rounds: Seq[Seq[Op]]): Double = {
+    require(rounds.nonEmpty, "no rounds")
+    rounds.flatten.groupBy(_.kind).values
+      .map(ops => median(ops.map(_.seconds.getOrElse(Double.PositiveInfinity)))).sum
+  }
+
   /** Nearest-rank percentile: the smallest sample with at least `p`
     * percent of all samples at or below it.
     */

@@ -8,8 +8,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Ctx(spark: SparkSession, seed: Long, data: String,
     work: String, cores: Int)
 
-/** One operation (a night or a query); `seconds` is None when it failed. */
-final case class Op(name: String, seconds: Option[Double])
+/** One operation (a night's load or fold, or a query); `seconds` is
+  * None when it failed. Operations of one kind (every night's load, one
+  * query in every pass) are the samples of one median.
+  */
+final case class Op(name: String, seconds: Option[Double], kind: String)
+
+object Op {
+  /** An operation that is its own kind. */
+  def apply(name: String, seconds: Option[Double]): Op = Op(name, seconds, name)
+}
 
 /** What one round did: a night of a nightly workload, or one pass over
   * the query suite.
@@ -61,19 +69,14 @@ trait Workload {
   /** Build the inputs of every round from the seed, and the starting state. */
   def prepare(ctx: Ctx): Prepared
 
-  /** Run the first rounds on a copy of the state before anything is
-    * timed: classes load, generated code compiles and the JIT compiles
-    * every path at full size. It runs while the real state is prepared.
+  /** Untimed rounds that run on the real state once it is built, before
+    * anything is timed: classes load, generated code compiles and the
+    * JIT compiles every path at full size. They count in set-up.
     */
-  def warmUp(ctx: Ctx): Unit = {
-    val copy = prepare(ctx)
-    (0 until Workload.WarmUpRounds).foreach(copy.round(_, Tracer.off))
-  }
+  def warmUpRounds: Int
 }
 
 object Workload {
-  /** Rounds the warm-up runs on its copy of the state. */
-  val WarmUpRounds = 1
   val all: Seq[Workload] = Seq(Nightly, QuerySuite, CatalogLoad, DedupNightly)
 
   def sum(a: Map[String, Double], b: Map[String, Double]): Map[String, Double] =

@@ -33,6 +33,19 @@ class StatsSpec extends AnyFunSuite {
     }
   }
 
+  test("a typical round sums each kind's median, so one slow operation does not move it") {
+    val rounds = Seq(
+      Seq(Op("q01", Some(1.0)), Op("q02", Some(9.0))),
+      Seq(Op("q02", Some(2.0)), Op("q01", Some(1.5))),
+      Seq(Op("q01", Some(2.0)), Op("q02", Some(3.0))))
+    assert(Stats.medianRound(rounds) == 1.5 + 3.0)
+    // a night's load and fold are kinds across nights
+    val nights = Seq(Seq(Op("load2", Some(6.0), "load"), Op("fold2", Some(7.0), "fold")),
+      Seq(Op("load3", Some(8.0), "load"), Op("fold3", Some(5.0), "fold")))
+    assert(Stats.medianRound(nights) == 7.0 + 6.0)
+    assert(Stats.medianRound(Seq(Seq(Op("load2", None, "load")))).isPosInfinity)
+  }
+
   test("a failed operation misses every latency limit") {
     val lat = Stats.withFailures(Seq(Some(1.0), None, Some(2.0)))
     assert(Stats.percentile(lat, 100).isPosInfinity)
