@@ -117,7 +117,7 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (FileSystem init, codegen compiler) outside timing
-    spark.read.parquet(s"$sfDir/nation.parquet").count()
+    graft.sources.Parquet.read(spark, s"$sfDir/nation.parquet").count()
     // Three timed runs per query, MEDIAN reported — best-of-N hides
     // nothing but rewards lucky runs, and a single run is exposed to
     // GC/system noise (the r3 artifact swung individual queries 20×).

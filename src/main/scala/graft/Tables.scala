@@ -6,11 +6,14 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated synthetic tables (TESTDATA.md).
   *
-  * Scale notes: each table is a single parquet file locally, but every
-  * reader goes through `spark.read.parquet` so that on a real cluster the
-  * same path can be a partitioned directory; Catalyst handles column
-  * pruning + predicate pushdown into the scan (verify with
-  * `.explain("formatted")` → `PushedFilters`/`ReadSchema`).
+  * Scale notes: each table is a single parquet file locally, but the
+  * loader goes through [[graft.sources.Parquet.read]], which accepts a
+  * file, a directory of part files or a partitioned directory alike, so
+  * on a real cluster the same path can be a partitioned directory;
+  * Catalyst handles column pruning + predicate pushdown into the scan
+  * (verify with `.explain("formatted")` → `PushedFilters`/`ReadSchema`).
+  * The schema comes from one file's footer on the driver, so loading a
+  * table starts no Spark job: a query's first job is its own work.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -18,7 +21,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = graft.sources.Parquet.read(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEventTs(df) else df
   }
 

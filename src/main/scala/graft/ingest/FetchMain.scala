@@ -100,8 +100,8 @@ object FetchMain {
       val recs = extract(spark, landingDir)
       val parquetDir = outDir.resolve("records").toString
       recs.write.mode("overwrite").parquet(parquetDir)
-      println(s"EXTRACTED ${spark.read.parquet(parquetDir).count()} " +
-        s"records -> $parquetDir")
+      val extracted = graft.sources.Parquet.read(spark, parquetDir).count()
+      println(s"EXTRACTED $extracted records -> $parquetDir")
       // a slice that failed every retry is an aggregate error AFTER the
       // commit, exactly like the reference's ingestion_errors re-raise
       if (skipped.nonEmpty)

@@ -147,9 +147,15 @@ object Popularity {
   def refreshViewsVersioned(facts: DataFrame, keys: Seq[String],
       valueCol: String, p: Double, tableRoot: String): Map[String, Any] = {
     import graft.sources.VersionedTable
-    val consts = constants(facts, keys, valueCol, p)
-    val vConsts = VersionedTable.commit(consts.coalesce(1),
-      s"$tableRoot/popularity_constants")
+    val constsRoot = s"$tableRoot/popularity_constants"
+    val vConsts = VersionedTable.commit(
+      constants(facts, keys, valueCol, p).coalesce(1), constsRoot)
+    // score against the COMMITTED constants, read back: the view then
+    // costs one pass over the facts instead of recomputing the
+    // percentiles, and it is scored with exactly the version it names
+    // (doubles round-trip parquet bit-exactly)
+    val consts = VersionedTable.read(facts.sparkSession, constsRoot,
+      Some(vConsts))
     val obs = org.apache.spark.sql.Observation("popularity_refresh_v")
     val scored = score(facts, consts, keys, valueCol)
       .observe(obs, count(lit(1)).as("rows_scored"),

@@ -201,7 +201,8 @@ object Pq {
     corpus
       .select(col(idCol),
         encodeCol(col(vecCol), codebooks).as("codes"),
-        Similarity.nearestCellCol(centroids, col(vecCol)).as("cell_id"))
+        Similarity.nearestCellCol(Similarity.centroidValues(centroids),
+          col(vecCol)).as("cell_id"))
       .write.partitionBy("cell_id").mode("overwrite").parquet(path)
 
   /** The composed SERVING search — IVF-PQ shortlist, exact re-rank:

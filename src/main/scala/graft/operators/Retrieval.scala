@@ -175,8 +175,8 @@ object Retrieval {
   def topKIndexed(spark: SparkSession, indexPath: String,
       queryTerms: DataFrame, k: Int, k1: Double = 1.2, b: Double = 0.75)
       : DataFrame = {
-    val doclens = spark.read.parquet(s"$indexPath/doclens")
-    val qtf = spark.read.parquet(s"$indexPath/postings")
+    val doclens = graft.sources.Parquet.read(spark, s"$indexPath/doclens")
+    val qtf = graft.sources.Parquet.read(spark, s"$indexPath/postings")
       .join(broadcast(queryTerms.select("term").distinct()), "term")
       .join(doclens, "doc_id")
     val stats = doclens.agg(count(lit(1)).as("n"),

@@ -115,38 +115,19 @@ object SegmentedTable {
       .filter(t => t.nonEmpty && t.forall(c => c.isLetterOrDigit || c == '_'))
   }
 
-  /** `spark.read.parquet` with the schema read from one member file's
-    * FOOTER on the driver: an explicit schema skips Spark's
-    * schema-inference pass, which is a scheduled 1-task job per read
-    * call even for a single tiny file — a store-backed operator opens
-    * its tables a dozen times per invocation (q80's nightly loop: ~17
-    * such jobs of 20-200 ms each, JobProfile r18), pure scheduling
-    * floor. Members of one table share a schema by construction (every
-    * segment is written by the same expressions); an empty member set
-    * falls back to plain inference.
-    */
-  private[sources] def readParquet(spark: SparkSession,
-      paths: Seq[String]): DataFrame = {
-    val schema = paths.view
-      .flatMap(p => org.apache.spark.sql.graftbridge.ParquetSchemaBridge
-        .dirSchema(spark, new Path(p)))
-      .headOption
-    schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
-  }
-
   /** Read the committed snapshot: a union scan over the manifest's
     * member directories. Spark plans this as ONE multi-path parquet
     * scan, so pushdown/pruning/split-packing behave exactly as on a
-    * single directory.
+    * single directory. Members of one table share a schema by
+    * construction (every segment is written by the same expressions),
+    * so [[Parquet.read]] takes it from the first member file's footer
+    * and opening the table starts no Spark job.
     */
   def read(spark: SparkSession, root: String,
       asOfVersion: Option[Long] = None): DataFrame =
-    readParquet(spark,
+    Parquet.read(spark,
       members(spark, root, asOfVersion)
-        .map(m => new Path(root, m).toString))
+        .map(m => new Path(root, m).toString): _*)
 
   /** Merge-on-read for UPSERT semantics: the FIRST member is the base
     * snapshot; every later member is a delta of `keyCols`-keyed
@@ -173,11 +154,11 @@ object SegmentedTable {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
     val paths = ms.map(m => new Path(root, m).toString)
-    if (ms.lengthCompare(1) <= 0) readParquet(spark, paths)
+    if (ms.lengthCompare(1) <= 0) Parquet.read(spark, paths: _*)
     else {
-      val base = readParquet(spark, Seq(paths.head))
+      val base = Parquet.read(spark, paths.head)
       val deltas = paths.tail.zipWithIndex.map { case (p, i) =>
-        readParquet(spark, Seq(p)).withColumn("__seg_ord", lit(i))
+        Parquet.read(spark, p).withColumn("__seg_ord", lit(i))
       }.reduce(_.unionByName(_))
       val keep = row_number().over(Window
         .partitionBy(keyCols.map(col): _*).orderBy(col("__seg_ord").desc))
@@ -379,7 +360,7 @@ object SegmentedTable {
   def compact(spark: SparkSession, root: String,
       pack: DataFrame => DataFrame = identity): Long =
     compactWith(spark, root, pack,
-      ms => readParquet(spark, ms.map(m => new Path(root, m).toString)))
+      ms => Parquet.read(spark, ms.map(m => new Path(root, m).toString): _*))
 
   /** [[compact]] for a latest-wins table: the packed segment is the
     * FOLDED state ([[readLatestWins]]), so superseded override rows are

@@ -60,20 +60,14 @@ object VersionedTable {
   }
 
   /** Read the committed snapshot (optionally a retained past version —
-    * time travel).
+    * time travel) through [[Parquet.read]]: the schema comes from one
+    * part file's footer, so opening the table starts no Spark job.
     */
   def read(spark: SparkSession, root: String,
       asOfVersion: Option[Long] = None): DataFrame = {
     val v = asOfVersion.orElse(currentVersion(spark, root)).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
-    // explicit footer schema: skips the per-read schema-inference job
-    // (see SegmentedTable.readParquet)
-    org.apache.spark.sql.graftbridge.ParquetSchemaBridge
-      .dirSchema(spark, versionDir(root, v)) match {
-      case Some(s) =>
-        spark.read.schema(s).parquet(versionDir(root, v).toString)
-      case None => spark.read.parquet(versionDir(root, v).toString)
-    }
+    Parquet.read(spark, versionDir(root, v).toString)
   }
 
   /** Highest version directory present (committed or orphaned). */

@@ -25,9 +25,10 @@ object EventStreams {
     * (legacy TIMESTAMP(NANOS)-as-long vs timestamp[us] NTZ), so
     * hardcoding one is a time bomb: a mismatched declared type silently
     * mis-reads the column. Instead take the schema from the files
-    * already in the landing dir (one driver-side footer read — the
-    * landing zone is seeded before the stream starts in every
-    * deployment shape here) and normalize `ts` with the same
+    * already in the landing dir (one driver-side footer read through
+    * [[graft.sources.Parquet]], no Spark job — the landing zone is
+    * seeded before the stream starts in every deployment shape here)
+    * and normalize `ts` with the same
     * three-encoding branch as the batch path ([[graft.Tables.normalizeEventTs]]).
     *
     * If the landing dir exists but holds no files yet, fall back to the
@@ -43,7 +44,7 @@ object EventStreams {
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     val fileSchema =
-      try spark.read.parquet(dir).schema
+      try graft.sources.Parquet.read(spark, dir).schema
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>

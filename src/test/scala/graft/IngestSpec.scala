@@ -161,6 +161,26 @@ class IngestSpec extends SparkSpec {
     assert(cur.count() == e.filter(col("event_id") % 2 === 0).count())
   }
 
+  test("versioned refresh scores the view with the committed constants, bit-equal") {
+    import graft.sources.VersionedTable
+    val root = java.nio.file.Files.createTempDirectory("refc").toString
+    val e = Tables(spark, sfDir, "events")
+    val keys = Seq("event_type")
+    val m = Popularity.refreshViewsVersioned(e, keys, "value", 0.85, root)
+    val view = VersionedTable.read(spark, s"$root/media_view",
+      Some(m("view_version").asInstanceOf[Long]))
+    // the view as scored against freshly computed constants: every
+    // row, every score, bit for bit (doubles round-trip parquet)
+    val fresh = Popularity.score(e,
+      Popularity.constants(e, keys, "value", 0.85), keys, "value")
+    assert(view.columns.toSeq == fresh.columns.toSeq)
+    val viewRows = view.orderBy("event_id").collect().toSeq
+    val freshRows = fresh.orderBy("event_id").collect().toSeq
+    assert(viewRows.size == e.count())
+    assert(viewRows == freshRows)
+    assert(viewRows.exists(r => !r.isNullAt(r.fieldIndex("score"))))
+  }
+
   test("partitioned sink writes year/month/day directories (S8)") {
     val dir = java.nio.file.Files.createTempDirectory("part").toString
     val e = Tables(spark, sfDir, "events")
