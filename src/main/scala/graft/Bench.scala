@@ -88,34 +88,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE reduce-partition sizing, parameterized (guide §2.2, r18).
-      // parallelismFirst=false (the flip Spark's config doc suggests
-      // for pure size-based coalescing) was A/B-measured this round —
-      // quiet-gated ABAB, 8-query set, plans/r18/AB_aqe_*.json — and
-      // LOST at this scale: +3.9% total, q25 +17%, q100 +11% (MB-scale
-      // CPU-heavy reduce stages collapse to 1-2 tasks at the 64 MB
-      // advisory target and serialize, outweighing the task-launch
-      // savings of the kilobyte stages). The default therefore stays
-      // the upstream `true`, which is itself scale-adaptive (coalesces
-      // by minPartitionSize but never below the cores available); a
-      // cluster deployment whose shuffles are 100 MB+/partition can
-      // flip it with one env var, and the explicit advisory size keeps
-      // the production target one variable away too.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.GraftSession.envCpus("32")
+    val spark = graft.core.GraftSession(cpus)
     // warm the session (FileSystem init, codegen compiler) outside timing
     graft.sources.Parquet.read(spark, s"$sfDir/nation.parquet").count()
     // Three timed runs per query, MEDIAN reported — best-of-N hides
@@ -472,7 +446,6 @@ object Bench {
       val detail = java.io.File.createTempFile("graft_rerun_", ".json")
       val childLog = java.io.File.createTempFile("graft_rerun_", ".log")
       val cmd = (Seq(javaBin) ++ opens ++ Seq(s"-Xmx${mxMb}m",
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         "-cp", cp, "graft.Bench") ++ names)
       val pb = new ProcessBuilder(cmd: _*)
       val env = pb.environment()
@@ -597,11 +570,7 @@ object Bench {
       } finally {
         // the temp store is measurement scratch — multi-GB /tmp residue
         // per full-suite run at larger dirs otherwise
-        def rm(f: java.io.File): Unit = if (f.exists()) {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(new java.io.File(store))
+        graft.core.TempDirs.deleteRecursively(store)
       }
     }
     val qs = results.map { case (k, ts) => "\"" + short(k) + f"\":${medianOf(ts)}%.2f" }

@@ -1,44 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 import graft.functions.{DotProductExpr, HtmlToTextExpr, MinHashSigExpr,
   PercentileDiscAgg, SanitizeStringExpr, ShingleSetExpr, SimHashExpr,
   UnicodeNormalizeExpr, WinnowFingerprintsExpr}
 
-/** SparkSessionExtensions entry point: registers the engine's custom
-  * Catalyst pieces at session build time
-  * (`.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`):
-  * `percentile_disc_exact(x, p)` — exact Postgres discrete percentile —
-  * and the CollapseSanitize optimizer rule (idempotent-sanitize
-  * elimination).
+/** The engine's SQL surface: [[GraftExtensions.register]] makes the
+  * native expressions and aggregates (`percentile_disc_exact(x, p)` —
+  * exact Postgres discrete percentile — `kmv_distinct`,
+  * `sanitize_string`, …) callable from SQL on a live session.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("percentile_disc_exact"),
-      new ExpressionInfo(classOf[PercentileDiscAgg].getName,
-        "percentile_disc_exact"),
-      PercentileDiscAgg.builder))
-    e.injectFunction((
-      FunctionIdentifier("kmv_distinct"),
-      new ExpressionInfo(classOf[graft.functions.KmvSketchAgg].getName,
-        "kmv_distinct"),
-      graft.functions.KmvSketchAgg.builder))
-    GraftExtensions.scalarFns.foreach { case (name, cls, builder) =>
-      e.injectFunction((
-        FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
-        builder))
-    }
-    e.injectOptimizerRule(_ => graft.plans.CollapseSanitize)
-  }
-}
-
 object GraftExtensions {
   /** Fold a SQL argument that must be a constant int (the shape/width
     * parameters of the signature expressions — they size generated
@@ -81,49 +53,45 @@ object GraftExtensions {
     f(exprs)
   }
 
-  /** (name, defining class, arity-checked builder) for every scalar
-    * SQL-surface function — the ONE table both registration paths
-    * (session-build extensions and live-session register) share.
+  /** (name, arity-checked builder) for every scalar SQL-surface
+    * function.
     */
-  private val scalarFns: Seq[(String, Class[_], Seq[Expression] => Expression)] =
+  private val scalarFns: Seq[(String, Seq[Expression] => Expression)] =
     Seq(
-      ("sanitize_string", classOf[SanitizeStringExpr],
+      ("sanitize_string",
         arity(1, "sanitize_string(text)")(e => SanitizeStringExpr(e.head))),
-      ("html_to_text", classOf[HtmlToTextExpr],
+      ("html_to_text",
         arity(1, "html_to_text(html)")(e => HtmlToTextExpr(e.head))),
-      ("dot_product", classOf[DotProductExpr],
+      ("dot_product",
         arity(2, "dot_product(a, b)")(e => DotProductExpr(e.head, e(1)))),
-      ("simhash64", classOf[SimHashExpr],
+      ("simhash64",
         arity(1, "simhash64(text)")(e => SimHashExpr(e.head))),
-      ("minhash_sig", classOf[MinHashSigExpr],
+      ("minhash_sig",
         arity(3, "minhash_sig(text, shingleK, numHashes)")(e =>
           MinHashSigExpr(e.head, litInt(e(1), "minhash_sig shingleK"),
             litInt(e(2), "minhash_sig numHashes")))),
-      ("winnow_fingerprints", classOf[WinnowFingerprintsExpr],
+      ("winnow_fingerprints",
         arity(3, "winnow_fingerprints(text, k, w)")(e =>
           WinnowFingerprintsExpr(e.head, litInt(e(1), "winnow_fingerprints k"),
             litInt(e(2), "winnow_fingerprints w")))),
-      ("shingle_set", classOf[ShingleSetExpr],
+      ("shingle_set",
         arity(2, "shingle_set(text, k)")(e =>
           ShingleSetExpr(e.head, litInt(e(1), "shingle_set k")))),
-      ("unicode_normalize", classOf[UnicodeNormalizeExpr],
+      ("unicode_normalize",
         arity(2, "unicode_normalize(text, form)")(e =>
           UnicodeNormalizeExpr(e.head, UnicodeNormalizeExpr.formOf(
             litString(e(1), "unicode_normalize form"))))),
-      ("tokenize", classOf[graft.functions.TokenizeExpr],
+      ("tokenize",
         arity(1, "tokenize(text)")(e =>
           graft.functions.TokenizeExpr(e.head))),
-      ("token_count", classOf[graft.functions.TokenCountExpr],
+      ("token_count",
         arity(1, "token_count(text)")(e =>
           graft.functions.TokenCountExpr(e.head))))
 
-  /** Register every SQL-surface function on an existing session (the
-    * extensions path requires registration at session BUILD time;
-    * tests and notebooks attach to a live session instead).
-    */
+  /** Register every SQL-surface function on a live session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    scalarFns.foreach { case (name, _, builder) =>
+    scalarFns.foreach { case (name, builder) =>
       reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
     PercentileDiscAgg.register(spark)

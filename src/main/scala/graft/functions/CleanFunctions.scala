@@ -196,16 +196,4 @@ object CleanFunctions {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(HtmlToTextExpr(ColumnBridge.expression(c)))
   }
-
-  /** Register the native cleaning expressions on an existing session's
-    * SQL surface (`sanitize_string(x)`, `html_to_text(x)`); session
-    * builds go through GraftExtensions instead.
-    */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("sanitize_string",
-      exprs => SanitizeStringExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("html_to_text",
-      exprs => HtmlToTextExpr(exprs.head), "built-in")
-  }
 }

@@ -94,8 +94,7 @@ case class PercentileDiscAgg(
 object PercentileDiscAgg {
 
   /** Expression builder for `percentile_disc_exact(x, p)` (p must be a
-    * literal). Shared by the temp-function registration and
-    * graft.GraftExtensions.
+    * literal), for the temp-function registration.
     */
   val builder: Seq[Expression] => Expression = { exprs =>
     val p = exprs(1) match {

@@ -88,14 +88,9 @@ object FetchMain {
       s"records=$records skipped=${skipped.size}")
     skipped.foreach(s => System.err.println(s"SKIPPED ${s.params}: ${s.error}"))
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession(
+      graft.core.GraftSession.envCpus("32"),
+      Some(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]")))
     try {
       val recs = extract(spark, landingDir)
       val parquetDir = outDir.resolve("records").toString

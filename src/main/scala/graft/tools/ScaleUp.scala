@@ -39,16 +39,7 @@ object ScaleUp {
     require(args.length >= 2, "usage: ScaleUp <srcDir> <dstDir> [factor]")
     val (src, dst) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession(graft.core.GraftSession.envCpus("32"))
     scale(spark, src, dst, factor)
     spark.stop()
   }

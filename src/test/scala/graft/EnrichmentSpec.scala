@@ -805,7 +805,7 @@ class EnrichmentSpec extends SparkSpec {
   }
 
   test("native cleaning expressions are callable from SQL") {
-    CleanFunctions.registerSql(spark)
+    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT sanitize_string('  "a"  b ') AS s,
                 html_to_text('<p>x &amp; y</p>') AS h""").collect().head

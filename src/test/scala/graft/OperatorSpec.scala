@@ -1431,10 +1431,7 @@ class OperatorSpec extends SparkSpec {
       shingleK = 3, numHashes = 16, rowsPerBand = 4, minJaccard = 0.5)
     // simulate a store committed under the pre-bands layout
     val bandsDir = new java.io.File(SignatureStore.bandsRoot(root))
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-    }
-    rm(bandsDir)
+    graft.core.TempDirs.deleteRecursively(bandsDir.getPath)
     // sigs+labels suffice for existence; direct band read names the fix
     assert(SignatureStore.exists(spark, root))
     assert(!SignatureStore.hasBands(spark, root))

@@ -99,30 +99,6 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Exchange") && !p.contains("Join"))
   }
 
-  test("CollapseSanitize collapses nested idempotent sanitizes") {
-    import graft.functions.CleanFunctions
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.CollapseSanitize
-    try {
-      val doubled = Tables(spark, sfDir, "documents")
-        .select(CleanFunctions.sanitizeStringNative(
-          CleanFunctions.sanitizeStringNative(
-            CleanFunctions.sanitizeStringNative(col("text")))).as("s"))
-      val optimized = doubled.queryExecution.optimizedPlan.toString
-      assert("sanitizestringexpr".r
-        .findAllIn(optimized.toLowerCase).size == 1, optimized)
-      // semantics unchanged: equal to the single application
-      val single = Tables(spark, sfDir, "documents")
-        .select(CleanFunctions.sanitizeStringNative(col("text")).as("s"))
-      assert(doubled.exceptAll(single).isEmpty &&
-        single.exceptAll(doubled).isEmpty)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_ == graft.plans.CollapseSanitize)
-    }
-  }
-
   test("q45: winnowing is explode-of-expression — no window, no shuffle") {
     val p = plan("q45_winnow_fingerprint")
     // the whole fingerprint set is computed inside each row by the

@@ -294,12 +294,6 @@ class PqSpec extends SparkSpec {
       // more probed cells can only add candidates
       assert(r16 >= r8, s"nprobe monotonicity: $r16 < $r8")
       assert(r16 >= 0.90, s"ivfpq nprobe=16 rerank@200 recall $r16")
-    } finally {
-      def rm(f: java.io.File): Unit = if (f.exists()) {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(idx))
-    }
+    } finally graft.core.TempDirs.deleteRecursively(idx)
   }
 }

@@ -1,0 +1,31 @@
+package graft
+
+import graft.tools.Probe
+
+/** The probe harness runs its bodies against a session it does not
+  * own: the shared spec session must outlive them.
+  */
+class ProbeSpec extends SparkSpec {
+
+  private def out(args: String*): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(buf)(Probe.run(spark, args))
+    buf.toString("UTF-8")
+  }
+
+  test("Probe runs query and plan on the shared session and leaves it alive") {
+    val q = out("query", sfDir, "q26_simhash", "1")
+    assert(q.matches("(?s)== q26_simhash rep 1: rows=\\d+ wall=[0-9.]+s\\s*"), q)
+    val p = out("plan", sfDir, "q26_simhash", "Scan")
+    assert(p.startsWith("lines matching 'Scan': ") && !p.contains(": 0\n"), p)
+    assert(!spark.sparkContext.isStopped)
+    assert(spark.range(3).count() == 3)
+  }
+
+  test("an unknown probe name fails with a usage that lists every probe") {
+    val e = intercept[IllegalArgumentException](Probe.run(spark, Seq("nope", sfDir)))
+    Probe.registry.foreach { case (name, _) =>
+      assert(e.getMessage.contains(s"  $name <sfDir>"), e.getMessage)
+    }
+  }
+}

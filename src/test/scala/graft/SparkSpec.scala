@@ -11,16 +11,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.GraftSession("4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
