@@ -58,13 +58,25 @@ object CacheHandle {
     * twice (2 × 1.3 s, identical job fingerprints) because the two
     * edge-doubling arms raced, and the banded self-joins in
     * minhashCandidates / simhashNearDupPairs / srpNearDupPairs race
-    * the same way. One count() here populates the cache while this
-    * plan is still the only consumer; every later stage reads cached
-    * batches. At cluster scale this adds no compute — the
+    * the same way. One pass here ([[fill]]) populates the cache while
+    * this plan is still the only consumer; every later stage reads
+    * cached batches. At cluster scale this adds no compute — the
     * materialization pass was required anyway for the cache to serve
     * both consumers — it only moves the barrier earlier.
+    *
+    * The pass is one Spark job over the lineage's own stages and no
+    * aggregate: a `df.count()` here would add a partial/final
+    * aggregate — an exchange, a job and ~4 generated classes — at every
+    * call site.
     */
-  def eager(df: DataFrame): DataFrame = { df.count(); df }
+  def eager(df: DataFrame): DataFrame = { fill(df); df }
+
+  /** [[eager]] returning the frame's row count (= `df.count()`), for
+    * callers that size their output from it — so sizing costs no
+    * second job.
+    */
+  def fill(df: DataFrame): Long =
+    org.apache.spark.sql.graftbridge.CacheBridge.fill(df)
 
   /** No-op handle (the default): internal persists live until
     * `clearCache()`/session end, as before r9.

@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType,
+  DateType, DecimalType, IntegerType, LongType, ShortType, StringType,
+  StructField, StructType, TimestampType}
 
 import graft.core.CacheHandle
 
@@ -798,37 +803,13 @@ object Dedupe {
     verifyJaccardShingled(pairs, sh, minJaccard)
   }
 
-  /** Connected components over an undirected edge list by iterative
-    * min-label propagation: each node's label converges to the SMALLEST
-    * node id reachable from it, so the label doubles as the cluster's
-    * deterministic keeper (the surviving document of a near-dup group).
-    *
-    * This is the missing last stage of the dedup pipeline: LSH finds
-    * candidate PAIRS, exact Jaccard verifies them — but duplicates come
-    * in GROUPS (a≈b, b≈c ⇒ drop two of {a,b,c}), and pairwise keep-min
-    * would wrongly keep b. Components resolve the transitive closure.
-    *
-    * Scale shape: each round is one join (labels onto edge endpoints) +
-    * one min-aggregation — two key shuffles over |edges| rows; rounds =
-    * component diameter. Near-dup clusters are overwhelmingly tiny
-    * (pairs/triples), so 3–5 rounds converge in practice; `maxIter`
-    * bounds adversarial chains. Every round ends in `localCheckpoint()`
-    * to truncate lineage — without it the plan tree (and codegen time)
-    * grows per iteration. The per-round `count()` is a scalar
-    * convergence probe, not a data collect. For graphs with huge
-    * diameters prefer alternating large-star/small-star (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond"), which converges in
-    * O(log²) rounds; for near-dup workloads the simple propagation does
-    * fewer total shuffles.
-    *
-    * Output: (node, label) for every node that appears in an edge.
-    */
-  /** Driver-heap working budget for [[connectedComponents]]' local
-    * union-find path: the collected edge array must fit in this many
-    * estimated bytes or the call falls back to the distributed
-    * propagation. Peak local footprint (collect + parent map + result
-    * rows) is a small multiple (~3x) of the budget — ~0.75 GB worst
-    * case against the 8 GB driver this engine documents.
+  /** Driver-heap working budget for the local union-find paths
+    * ([[connectedComponents]], [[incrementalComponentsWithDelta]]):
+    * every array those paths collect must fit in this many estimated
+    * bytes or the call falls back to the distributed propagation. Peak
+    * local footprint (collect + parent map + result rows) is a small
+    * multiple (~3x) of the budget — ~0.75 GB worst case against the
+    * 8 GB driver this engine documents.
     */
   private val localEdgeByteBudget: Long = 256L << 20
 
@@ -857,7 +838,140 @@ object Dedupe {
     case _ => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
   }
 
-  /** @param localEdgeCap ROW cap for the driver-side union-find
+  /** Estimated collected JVM bytes of one key of type `t`, or 0 for a
+    * type the local paths do not take. A type qualifies when (a) its
+    * JVM ordering provably matches the distributed min-aggregate's
+    * ([[localLt]]) and (b) it admits a byte estimate, so the budget
+    * bounds DRIVER MEMORY, not just a row count. String ≈ 48 B header +
+    * 2 B/char at the type's 20-char defaultSize (re-checked per value
+    * after the collect); boxed fixed-width types ≈ 24-48 B.
+    * Floats/doubles are excluded outright (±0.0 equality diverges
+    * between java.lang.Double.equals and Spark's normalized comparison;
+    * no caller keys components on floats); arrays/structs are not
+    * Comparable.
+    */
+  private def estKeyBytes(t: DataType): Long = t match {
+    case StringType => 88L
+    case _: DecimalType => 48L
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+         DateType | TimestampType => 24L
+    case _ => 0L
+  }
+
+  /** Collected bytes of rows of keys: ~48 B of Row/array scaffolding
+    * per row plus each key, strings by their actual length.
+    */
+  private def collectedBytes(rows: Array[Row], estKey: Long): Long =
+    rows.iterator.map { r =>
+      48L + r.toSeq.iterator.map {
+        case s: String => 48L + 2L * s.length
+        case _ => estKey
+      }.sum
+    }.sum
+
+  /** `df.collect()`, or None when the result would pass
+    * spark.driver.maxResultSize (pathological strings under the
+    * estimate): the caller then runs the distributed path instead of
+    * failing a query the propagation could still run.
+    */
+  private def boundedCollect(df: DataFrame): Option[Array[Row]] =
+    try Some(df.collect())
+    catch { case e: org.apache.spark.SparkException
+        if String.valueOf(e.getMessage).contains("maxResultSize") => None
+    }
+
+  /** The (aCol, bCol) edges collected to the driver for a local
+    * union-find, or None where the distributed path must run: a cap of
+    * 0, an unsupported or mismatched key type ([[estKeyBytes]]), more
+    * rows than the ROW cap — the smaller of `localEdgeCap` and
+    * [[localEdgeByteBudget]] over the estimated row width — more
+    * actual bytes than the budget, or a null endpoint (null semantics
+    * stay EXACTLY the propagation's; LSH pairs are non-null by
+    * construction, the guard is for arbitrary callers).
+    */
+  private def collectLocalEdges(edges: DataFrame, aCol: String,
+      bCol: String, localEdgeCap: Int): Option[Array[Row]] = {
+    val keyType = edges.schema(aCol).dataType
+    val estKey = estKeyBytes(keyType)
+    if (localEdgeCap <= 0 || estKey == 0 ||
+        edges.schema(bCol).dataType != keyType) None
+    else {
+      // the budget covers the collected edge array — the parent map and
+      // the result rows scale with the same node count. 256 MB keeps
+      // the long-key row cap at the established 2M while making
+      // wide-string graphs byte-bound
+      val effCap = math.min(localEdgeCap.toLong,
+        localEdgeByteBudget / (48L + 2L * estKey)).toInt
+      boundedCollect(edges.select(col(aCol), col(bCol)).limit(effCap + 1))
+        .filter(el => el.length <= effCap &&
+          !el.exists(r => r.isNullAt(0) || r.isNullAt(1)) &&
+          collectedBytes(el, estKey) <= localEdgeByteBudget)
+    }
+  }
+
+  /** Min-label union-find over `edges`: every endpoint → its
+    * component's minimum node under [[localLt]] — exactly the label the
+    * distributed propagation converges to, deterministically.
+    */
+  private def minLabelRoots(edges: Iterator[(Any, Any)]): Map[Any, Any] = {
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.get(r) != null && parent.get(r) != r)
+        r = parent.get(r)
+      var c = x
+      while (c != r && parent.get(c) != c) {
+        val next = parent.get(c); parent.put(c, r); c = next
+      }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      if (parent.get(a) == null) parent.put(a, a)
+      if (parent.get(b) == null) parent.put(b, b)
+      val (ra, rb) = (find(a), find(b))
+      // the min label becomes the root, so the final map needs no
+      // second ordering pass
+      if (ra != rb) {
+        if (localLt(ra, rb)) parent.put(rb, ra)
+        else parent.put(ra, rb)
+      }
+    }
+    parent.keySet.asScala.iterator.map(n => n -> find(n)).toMap
+  }
+
+  /** A local relation of key pairs, both columns of type `t`. */
+  private def localPairs(spark: SparkSession, pairs: Iterable[(Any, Any)],
+      k: String, v: String, t: DataType): DataFrame =
+    spark.createDataFrame(
+      pairs.map { case (a, b) => Row(a, b) }.toSeq.asJava,
+      StructType(Seq(StructField(k, t), StructField(v, t))))
+
+  /** Connected components over an undirected edge list by iterative
+    * min-label propagation: each node's label converges to the SMALLEST
+    * node id reachable from it, so the label doubles as the cluster's
+    * deterministic keeper (the surviving document of a near-dup group).
+    *
+    * This is the missing last stage of the dedup pipeline: LSH finds
+    * candidate PAIRS, exact Jaccard verifies them — but duplicates come
+    * in GROUPS (a≈b, b≈c ⇒ drop two of {a,b,c}), and pairwise keep-min
+    * would wrongly keep b. Components resolve the transitive closure.
+    *
+    * Scale shape: each round is one join (labels onto edge endpoints) +
+    * one min-aggregation — two key shuffles over |edges| rows; rounds =
+    * component diameter. Near-dup clusters are overwhelmingly tiny
+    * (pairs/triples), so 3–5 rounds converge in practice; `maxIter`
+    * bounds adversarial chains. Every round ends in `localCheckpoint()`
+    * to truncate lineage — without it the plan tree (and codegen time)
+    * grows per iteration. The per-round `count()` is a scalar
+    * convergence probe, not a data collect. For graphs with huge
+    * diameters prefer alternating large-star/small-star (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond"), which converges in
+    * O(log²) rounds; for near-dup workloads the simple propagation does
+    * fewer total shuffles.
+    *
+    * Output: (node, label) for every node that appears in an edge.
+    *
+    * @param localEdgeCap ROW cap for the driver-side union-find
     *   short-circuit (0 disables it). The effective cap is the smaller
     *   of this and [[localEdgeByteBudget]] over the schema-estimated
     *   row width, and a post-collect actual-bytes check re-guards
@@ -867,126 +981,34 @@ object Dedupe {
     */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25, distinctEdges: Boolean = false,
-      localEdgeCap: Int = 2000000): DataFrame = {
+      localEdgeCap: Int = 2000000): DataFrame =
     // Bounded driver-side union-find first (r17, guide §1.2 "the
     // distributed algorithm"): near-dup EDGE sets are tiny relative to
     // their corpora by LSH construction (verified pairs ≈ true
     // duplicates), while the iterative propagation pays
     // (join + aggregate + checkpoint + convergence probe) scheduled
     // jobs PER ROUND — measured 3-5 jobs of pure fixed overhead per
-    // invocation at sf0.1 for graphs that fit in kilobytes. The same
-    // trade was already established for the nightly path
-    // ([[incrementalComponentsWithDelta]]'s contraction map): when the
+    // invocation at sf0.1 for graphs that fit in kilobytes. When the
     // edge list fits under a bounded collect it is strictly cheaper to
     // resolve on the driver — ONE job materializes the whole
     // candidate/verify lineage — and the result re-enters as a local
-    // relation every consumer can broadcast. Graphs past the cap
-    // (a corpus whose duplicate graph itself approaches driver memory)
-    // fall back to the unchanged distributed propagation;
+    // relation every consumer can broadcast. Graphs past the cap (a
+    // corpus whose duplicate graph itself approaches driver memory)
+    // fall back to the unchanged distributed propagation, discarding
+    // the capped collect (one extra edge scan on the rare fallback);
     // `localEdgeCap = 0` forces it (specs pin local ≡ distributed).
-    // Local-path eligibility (r17 judge finding #3 / ADVICE): the key
-    // type must (a) have a JVM ordering that provably matches the
-    // distributed min-aggregate's ordering and (b) admit a byte
-    // estimate so the cap bounds DRIVER MEMORY, not just a row count —
-    // string ids of arbitrary length made the 2M-row cap's real
-    // footprint unbounded. Floats/doubles are excluded outright
-    // (±0.0 equality diverges between java.lang.Double.equals and
-    // Spark's normalized comparison; no caller keys components on
-    // floats). Arrays/structs (not Comparable) and mismatched a/b
-    // column types skip the local path instead of crashing it.
-    val keyType = edges.schema(aCol).dataType
-    val estKeyBytes: Long = keyType match {
-      // collected JVM object estimate per key: String ≈ 48 B header +
-      // 2 B/char at the type's 20-char defaultSize; boxed fixed-width
-      // (Long/Int/…/Decimal/Date/Timestamp/Boolean) ≈ 24-48 B
-      case org.apache.spark.sql.types.StringType => 88L
-      case _: org.apache.spark.sql.types.DecimalType => 48L
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.BooleanType |
-           org.apache.spark.sql.types.DateType |
-           org.apache.spark.sql.types.TimestampType => 24L
-      case _ => 0L // unsupported ordering — distributed path
+    collectLocalEdges(edges, aCol, bCol, localEdgeCap) match {
+      case Some(el) =>
+        localPairs(edges.sparkSession,
+          minLabelRoots(el.iterator.map(r => (r.get(0), r.get(1)))),
+          "node", "label", edges.schema(aCol).dataType)
+      case None => propagateComponents(edges, aCol, bCol, maxIter,
+        distinctEdges)
     }
-    if (localEdgeCap > 0 && estKeyBytes > 0 &&
-        edges.schema(bCol).dataType == keyType) {
-      // ~48 B of Row/array scaffolding + two boxed keys per collected
-      // edge; the budget covers the collected edge array — the parent
-      // map and the result rows scale with the same node count, so
-      // peak local-path footprint is a small multiple (~3x) of it.
-      // 256 MB keeps the long-key row cap at the established 2M while
-      // making wide-string graphs byte-bound (~1.2M rows at the
-      // 20-char estimate, further reduced by the post-collect check).
-      val perRowEst = 48L + 2L * estKeyBytes
-      val effCap = math.min(localEdgeCap.toLong,
-        localEdgeByteBudget / perRowEst).toInt
-      // a collect past spark.driver.maxResultSize (pathological strings
-      // under the estimate) falls back to the distributed path instead
-      // of failing a query the propagation could still run
-      val el: Array[org.apache.spark.sql.Row] =
-        if (effCap <= 0) null
-        else try edges.select(col(aCol), col(bCol))
-          .limit(effCap + 1).collect()
-        catch { case e: org.apache.spark.SparkException
-            if String.valueOf(e.getMessage).contains("maxResultSize") =>
-          null
-        }
-      def actualBytes(rows: Array[org.apache.spark.sql.Row]): Long = {
-        var sum = 0L
-        rows.foreach { r =>
-          def kb(v: Any): Long = v match {
-            case s: String => 48L + 2L * s.length
-            case _ => estKeyBytes
-          }
-          sum += 48L + kb(r.get(0)) + kb(r.get(1))
-        }
-        sum
-      }
-      // null endpoints fall back to the distributed path so their
-      // semantics stay EXACTLY what they were (LSH pairs are non-null
-      // by construction; this guard is for arbitrary callers)
-      if (el != null && el.length <= effCap &&
-          !el.exists(r => r.isNullAt(0) || r.isNullAt(1)) &&
-          actualBytes(el) <= localEdgeByteBudget) {
-        val parent = new java.util.HashMap[Any, Any]()
-        def find(x: Any): Any = {
-          var r = x
-          while (parent.get(r) != null && parent.get(r) != r)
-            r = parent.get(r)
-          var c = x
-          while (c != r && parent.get(c) != c) {
-            val next = parent.get(c); parent.put(c, r); c = next
-          }
-          r
-        }
-        el.foreach { row =>
-          val (a, b) = (row.get(0), row.get(1))
-          if (parent.get(a) == null) parent.put(a, a)
-          if (parent.get(b) == null) parent.put(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) {
-            // min-label root, ordered exactly as the distributed
-            // min-aggregate orders ([[localLt]])
-            if (localLt(ra, rb)) parent.put(rb, ra)
-            else parent.put(ra, rb)
-          }
-        }
-        import scala.jdk.CollectionConverters._
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", keyType),
-          org.apache.spark.sql.types.StructField("label", keyType)))
-        val rows = parent.keySet().asScala.toSeq.map(n =>
-          org.apache.spark.sql.Row(n, find(n)))
-        return edges.sparkSession.createDataFrame(rows.asJava, schema)
-      }
-      // > cap (rows or bytes) or nulls present: fall through to the
-      // distributed propagation. The capped collect is discarded — at
-      // this size its cost is one edge scan, which the persist below
-      // pays again; acceptable for the rare fallback, and the common
-      // case saved 3-5 jobs.
-    }
+
+  /** [[connectedComponents]]' distributed min-label propagation. */
+  private def propagateComponents(edges: DataFrame, aCol: String,
+      bCol: String, maxIter: Int, distinctEdges: Boolean): DataFrame = {
     // doubled edge list: propagation must flow both directions. Callers
     // whose pairs are already distinct with aCol < bCol (any groupBy
     // output, e.g. verified near-dup pairs) pass distinctEdges = true —
@@ -1076,21 +1098,21 @@ object Dedupe {
     * edges is fully decided by components over the contracted graph:
     * map each new-edge endpoint to its existing label (itself if the
     * node is unseen), drop edges that stay inside one component, and
-    * run the iterative propagation over what remains — a frame of at
-    * most |new edges| rows, never the corpus. The resulting
-    * (old label → merged label) map then rewrites the corpus frame in
-    * ONE broadcast-joined narrow scan (the map is small — bounded by
-    * the number of components the batch touches — so no shuffle of the
-    * corpus labels), and unseen endpoints enter with their merged
-    * labels.
+    * resolve components over what remains — at most |new edges| rows,
+    * never the corpus. The resulting (old label → merged label) map
+    * then rewrites the corpus frame in ONE broadcast-joined narrow scan
+    * (the map is small — bounded by the number of components the batch
+    * touches — so no shuffle of the corpus labels), and unseen
+    * endpoints enter with their merged labels.
     *
-    * Scale shape: 2 small joins to contract (new-edge endpoints ×
-    * corpus labels — the new side is the broadcast candidate under
-    * AQE), the O(diameter-of-contracted-graph) propagation over ≤
-    * |new edges| rows, and one narrow relabel scan of the corpus
-    * frame. Equal labels to a from-scratch run over old ∪ new edges
-    * (spec-asserted), at a per-batch cost independent of corpus edge
-    * count.
+    * Scale shape: under the driver byte budget (the nightly case) the
+    * contraction and merge run on the driver after two bounded
+    * collects (see [[incrementalComponentsWithDelta]]); past it, 2
+    * small broadcast joins contract and the O(diameter) propagation
+    * runs over ≤ |new edges| rows. Either way one narrow relabel scan
+    * of the corpus frame follows. Equal labels to a from-scratch run
+    * over old ∪ new edges (spec-asserted), at a per-batch cost
+    * independent of corpus edge count.
     *
     * Output: (node, label) for every node of `labels` plus every node
     * appearing in `newEdges`.
@@ -1110,24 +1132,115 @@ object Dedupe {
     * writing the full merged assignment every night is O(corpus) bytes
     * for a delta that is O(batch + bridged-component members).
     *
-    * The delta costs one extra NARROW corpus scan (labels streamed
-    * against the broadcast merge map, inner instead of left) and no
-    * shuffle; both frames are lazy, so callers that ignore one pay
-    * nothing for it.
+    * Driver path (the nightly case): tonight's edges are collected
+    * ONCE under the byte budget [[connectedComponents]] enforces
+    * (`localEdgeCap` rows, [[localEdgeByteBudget]] estimated and
+    * actual bytes, no null endpoint); the touched nodes' labels come
+    * back in ONE collected lookup — a broadcast semi-join of `labels`
+    * against a local relation of the touched ids, bounded by the same
+    * budget — and the contraction and min-label union-find
+    * ([[localLt]]) run on the driver. Both outputs are then plans over
+    * `labels` and local relations only: the delta is `labels` filtered
+    * to the relabelled old labels and mapped to their merged label
+    * (no scan at all when no old label moved) plus the new nodes. Two
+    * collects, no persist and no count: a fold night's label work
+    * costs the edge lineage's own jobs plus the lookup's.
+    *
+    * Past the budget — or with a null endpoint or label, or key types
+    * that differ between `labels` and the edges — the distributed
+    * contraction runs instead: both frames are persisted, contracted
+    * through broadcast joins and resolved by [[connectedComponents]]
+    * (its own bounded local path first). Both outputs are lazy in
+    * either path, so callers that ignore one pay nothing for it.
+    *
+    * @param localEdgeCap ROW cap of the driver path (0 forces the
+    *   distributed one; specs pin both equal).
     */
   def incrementalComponentsWithDelta(labels: DataFrame,
       newEdges: DataFrame, aCol: String, bCol: String, maxIter: Int = 25,
-      caches: CacheHandle = CacheHandle.session)
-      : (DataFrame, DataFrame) = {
+      caches: CacheHandle = CacheHandle.session,
+      localEdgeCap: Int = 2000000): (DataFrame, DataFrame) = {
     val l = labels.select(col("node"), col("label"))
-    // The edge frame is SMALL (tonight's verified pairs) and consumed
-    // by the endpoint scan + the contraction, so it is persisted —
-    // one materialization job for the whole candidate-verify lineage.
-    // The corpus label table, by contrast, must NEVER be shuffled:
-    // every join below streams it against a broadcast small side (the
-    // r13 sf10 probe showed the previous left-outer contractions
-    // sort-merge-shuffled the corpus labels twice, making the nightly
-    // path scale with |corpus| instead of |batch|).
+    val keyType = l.schema("node").dataType
+    val local =
+      if (l.schema("label").dataType != keyType ||
+          newEdges.schema(aCol).dataType != keyType) None
+      else for {
+        el <- collectLocalEdges(newEdges, aCol, bCol, localEdgeCap)
+        touched = el.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
+          .toSet
+        known <- lookupLabels(l, touched, keyType)
+      } yield (el, touched, known)
+    local match {
+      case Some((el, touched, known)) =>
+        // contract each endpoint to its existing component label
+        // (itself if unseen) and merge on the driver: old label or new
+        // node → merged label
+        val roots = minLabelRoots(el.iterator
+          .map(r => (known.getOrElse(r.get(0), r.get(0)),
+            known.getOrElse(r.get(1), r.get(1))))
+          .filter { case (ca, cb) => ca != cb })
+        val spark = l.sparkSession
+        // unseen endpoints enter with their merged labels; an unseen
+        // node whose only edge is a self-loop contracts to nothing and
+        // stays out, as in the distributed path
+        val newRows = localPairs(spark,
+          touched.flatMap(n =>
+            if (known.contains(n)) None else roots.get(n).map(n -> _)),
+          "node", "label", keyType)
+        val moved = roots.filter { case (o, m) => o != m }
+        if (moved.isEmpty) (l.union(newRows), newRows)
+        else {
+          // corpus rewrite: one streaming scan against the broadcast
+          // (small, driver-built) relabel map
+          val m = broadcast(
+            localPairs(spark, moved, "old_label", "merged", keyType))
+          val updated = l.join(m, l("label") === m("old_label"), "left")
+            .select(col("node"),
+              coalesce(col("merged"), col("label")).as("label"))
+          val changed = l.join(m, l("label") === m("old_label"))
+            .select(col("node"), col("merged").as("label"))
+          (updated.union(newRows), changed.union(newRows))
+        }
+      case None =>
+        contractDistributed(l, newEdges, aCol, bCol, maxIter, caches,
+          localEdgeCap)
+    }
+  }
+
+  /** The (node → label) rows of `l` whose node is in `touched`, in one
+    * collected broadcast semi-join; None (distributed path) when the
+    * result is not one non-null label per node within
+    * [[localEdgeByteBudget]].
+    */
+  private def lookupLabels(l: DataFrame, touched: Set[Any],
+      keyType: DataType): Option[Map[Any, Any]] =
+    if (touched.isEmpty) Some(Map.empty)
+    else {
+      val ids = l.sparkSession.createDataFrame(
+        touched.toSeq.map(Row(_)).asJava,
+        StructType(Seq(StructField("node", keyType))))
+      boundedCollect(l.join(broadcast(ids), Seq("node"), "left_semi"))
+        .filter(found => found.length <= touched.size &&
+          !found.exists(_.isNullAt(1)) &&
+          collectedBytes(found, estKeyBytes(keyType)) <= localEdgeByteBudget)
+        .map(_.iterator.map(r => r.get(0) -> r.get(1)).toMap)
+    }
+
+  /** [[incrementalComponentsWithDelta]] past the driver budget: the
+    * contraction as persisted broadcast joins over edge-sized frames.
+    */
+  private def contractDistributed(l: DataFrame, newEdges: DataFrame,
+      aCol: String, bCol: String, maxIter: Int, caches: CacheHandle,
+      localEdgeCap: Int): (DataFrame, DataFrame) = {
+    // The edge frame is consumed by the endpoint scan + the
+    // contraction, so it is persisted — one materialization job for
+    // the whole candidate-verify lineage. The corpus label table, by
+    // contrast, must NEVER be shuffled: every join below streams it
+    // against a broadcast small side (the r13 sf10 probe showed the
+    // previous left-outer contractions sort-merge-shuffled the corpus
+    // labels twice, making the nightly path scale with |corpus|
+    // instead of |batch|).
     val e = CacheHandle.eager(caches.track(
       newEdges.select(col(aCol).as("a"), col(bCol).as("b")).persist()))
     val touched = e.select(col("a").as("node"))
@@ -1147,61 +1260,12 @@ object Dedupe {
       .filter(col("ca") =!= col("cb"))
     // components over the contracted graph: (old label or new node id)
     // → merged label. The map is consumed ONLY through broadcast()
-    // below, so it must fit on the driver NO MATTER how it is computed
-    // — which makes a driver-side union-find over the collected
-    // contracted edges strictly cheaper than the iterative distributed
-    // propagation at the same scale bound: the propagation pays
-    // (join + aggregate + checkpoint + convergence probe) scheduled
-    // JOBS per round — ~0.5-1s of pure fixed overhead per nightly fold
-    // for a result the plan collects to the driver anyway. Graphs past
-    // the broadcast-sized cap (a "batch" that merges millions of
-    // components should rebuild the corpus, not fold nightly) fall
-    // back to the distributed propagation unchanged.
-    val localCap = 2000000
-    val edgesLocal = contracted.limit(localCap + 1).collect()
-    val merged =
-      if (edgesLocal.length > localCap)
-        connectedComponents(contracted, "ca", "cb", maxIter = maxIter)
-          .withColumnRenamed("node", "old_label")
-          .withColumnRenamed("label", "merged")
-      else {
-        // union-find with min-label roots: same result as the
-        // propagation (every node of the contracted graph mapped to
-        // its component's minimum), deterministic
-        val parent = new java.util.HashMap[Any, Any]()
-        def find(x: Any): Any = {
-          var r = x
-          while (parent.get(r) != null && parent.get(r) != r)
-            r = parent.get(r)
-          var c = x
-          while (c != r && parent.get(c) != c) {
-            val next = parent.get(c); parent.put(c, r); c = next
-          }
-          r
-        }
-        edgesLocal.foreach { row =>
-          val (a, b) = (row.get(0), row.get(1))
-          if (parent.get(a) == null) parent.put(a, a)
-          if (parent.get(b) == null) parent.put(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) {
-            // min label becomes the root so the final map needs no
-            // second pass ordering; string order matches the
-            // distributed min-aggregate's binary order ([[localLt]])
-            if (localLt(ra, rb)) parent.put(rb, ra)
-            else parent.put(ra, rb)
-          }
-        }
-        import scala.jdk.CollectionConverters._
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("old_label",
-            contracted.schema("ca").dataType),
-          org.apache.spark.sql.types.StructField("merged",
-            contracted.schema("cb").dataType)))
-        val rows = parent.keySet().asScala.toSeq.map(n =>
-          org.apache.spark.sql.Row(n, find(n)))
-        labels.sparkSession.createDataFrame(rows.asJava, schema)
-      }
+    // below; a "batch" that merges millions of components should
+    // rebuild the corpus, not fold nightly.
+    val merged = connectedComponents(contracted, "ca", "cb",
+        maxIter = maxIter, localEdgeCap = localEdgeCap)
+      .withColumnRenamed("node", "old_label")
+      .withColumnRenamed("label", "merged")
     // corpus rewrite: one streaming scan, broadcast of the merge map
     val updated = l.join(broadcast(merged),
         l("label") === merged("old_label"), "left")

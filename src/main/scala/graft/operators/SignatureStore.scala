@@ -246,11 +246,20 @@ object SignatureStore {
     *   When None, the full merged assignment is committed as a
     *   replacement snapshot (legacy behavior, correct but
     *   corpus-sized).
+    * @param batchSigRows `batchSig`'s row count when the caller already
+    *   has it ([[CacheHandle.fill]]'s result); otherwise the cache fill
+    *   here supplies it.
+    *
+    * Jobs: one cache fill (none when the caller filled the frame and
+    * passed its count) plus one write job per committed segment — the
+    * label delta's write scans the labels once when tonight relabels an
+    * old component and reads only a local relation when it does not.
     */
   def appendBatch(spark: SparkSession, root: String, batchSig: DataFrame,
       mergedLabels: DataFrame, numHashes: Int, rowsPerBand: Int,
       tag: Option[String] = None,
-      labelDelta: Option[DataFrame] = None): Unit = {
+      labelDelta: Option[DataFrame] = None,
+      batchSigRows: Option[Long] = None): Unit = {
     // a pre-bands-layout store upgrades here too — appendBatch has the
     // banding parameters, so reading it must not throw
     ensureBands(spark, root, numHashes, rowsPerBand)
@@ -259,8 +268,8 @@ object SignatureStore {
       SegmentedTable.adopt(spark, sigsRoot(root))
     if (SegmentedTable.currentVersion(spark, bandsRoot(root)).isEmpty)
       SegmentedTable.adopt(spark, bandsRoot(root))
-    // persist: the count (for AUTO file sizing), the segment write and
-    // the band derivation must not each re-sign the batch. A caller
+    // persist: the row count (for AUTO file sizing), the segment write
+    // and the band derivation must not each re-sign the batch. A caller
     // that already holds the frame cached (foldNight signs once for
     // candidates AND commit) keeps ownership — don't re-persist, and
     // don't unpersist out from under it.
@@ -268,7 +277,9 @@ object SignatureStore {
       org.apache.spark.storage.StorageLevel.NONE
     val batch = if (wasCached) batchSig else batchSig.persist()
     try {
-      val batchRows = batch.count()
+      // the count is the cache fill's own (no separate counting job),
+      // or the caller's when it filled the cache
+      val batchRows = batchSigRows.getOrElse(CacheHandle.fill(batch))
       // tagged appends are idempotent PER TABLE: a replay after a crash
       // midway through this method (streaming foreachBatch retries the
       // whole batch) skips the tables that already committed this tag
@@ -344,35 +355,46 @@ object SignatureStore {
     * signature frame and the concurrent segment writes are what keep
     * the per-night fixed overhead at (sign + candidates + max(writes))
     * instead of (2×sign + candidates + Σwrites).
+    *
+    * The fixed overhead is counted in Spark jobs: a streaming night
+    * (this fold, the doc-segment append and [[compact]]) starts 19 on
+    * 250-document batches, down from 39 — the signature cache fill
+    * doubles as the commit's row count, the verified edges resolve to
+    * labels on the driver under
+    * [[Dedupe.incrementalComponentsWithDelta]]'s byte budget (with the
+    * distributed contraction past it), and compaction sizes its files
+    * from parquet footers.
     */
   def foldNight(spark: SparkSession, root: String, batch: DataFrame,
       textLookup: DataFrame, idCol: String, textCol: String,
       shingleK: Int, numHashes: Int, rowsPerBand: Int,
       minJaccard: Double, tag: Option[String] = None,
-      caches: graft.core.CacheHandle = graft.core.CacheHandle.session)
-      : Unit = {
+      caches: CacheHandle = CacheHandle.session): Unit = {
     val (bands, labels) = (readBands(spark, root), readLabels(spark, root))
-    val sig = graft.core.CacheHandle.eager(
-      Dedupe.minhashWide(batch, idCol, textCol, shingleK, numHashes,
-        withCount = true).persist())
+    val sig = Dedupe.minhashWide(batch, idCol, textCol, shingleK,
+      numHashes, withCount = true).persist()
     try {
+      val sigRows = CacheHandle.fill(sig)
       val (merged, delta) = Dedupe.incrementalFromStoreWithDelta(
         bands, labels, batch, textLookup, idCol, textCol, shingleK,
         numHashes, rowsPerBand, minJaccard, caches,
         preSigned = Some(sig))
       appendBatch(spark, root, sig, merged, numHashes, rowsPerBand,
-        tag, labelDelta = Some(delta))
+        tag, labelDelta = Some(delta), batchSigRows = Some(sigRows))
     } finally sig.unpersist()
   }
 
   /** Bound delta-segment growth: rewrite signatures and bands as one
     * AUTO-packed segment each and vacuum superseded segments. Search
     * results are unaffected (same rows, fresh manifest, atomic flip);
-    * run it every ~N nights, exactly like lakehouse OPTIMIZE.
+    * run it every ~N nights, exactly like lakehouse OPTIMIZE. The AUTO
+    * file counts come from the signature segments' parquet footers
+    * ([[SegmentedTable.rowCount]]), so sizing starts no Spark job; the
+    * rewrites are the only jobs.
     */
   def compact(spark: SparkSession, root: String,
       numHashes: Int, rowsPerBand: Int): Unit = {
-    val sigRows = readTable(spark, sigsRoot(root)).count()
+    val sigRows = SegmentedTable.rowCount(spark, sigsRoot(root))
     SegmentedTable.compact(spark, sigsRoot(root),
       _.coalesce(autoPartitions(sigRows)))
     val nBands = numHashes / rowsPerBand

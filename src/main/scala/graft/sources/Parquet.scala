@@ -2,7 +2,10 @@ package graft.sources
 
 import java.io.FileNotFoundException
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.ParquetSchemaBridge
 import org.apache.spark.sql.types.StructType
@@ -41,24 +44,38 @@ object Parquet {
       case None => spark.read.parquet(paths: _*)
     }
 
+  /** Rows under `paths`: the sum of the footer row counts of every
+    * data file [[read]] would scan, read on the driver, so sizing a
+    * rewrite from it starts no Spark job. A missing path holds no rows.
+    */
+  def rowCount(spark: SparkSession, paths: String*): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(conf, paths).map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
   /** The data schema [[read]] passes to Spark, or None where it falls
     * back to inference. Partition columns are not part of it.
     */
   private def schema(spark: SparkSession, paths: Seq[String])
-      : Option[StructType] = {
-    val conf = spark.sessionState.newHadoopConf()
-    paths.iterator
-      .flatMap { p =>
-        val path = new Path(p)
-        val fs = path.getFileSystem(conf)
-        val status =
-          try Some(fs.getFileStatus(path))
-          catch { case _: FileNotFoundException => None }
-        status.iterator.flatMap(dataFiles(fs, _))
-      }
+      : Option[StructType] =
+    dataFiles(spark.sessionState.newHadoopConf(), paths)
       .nextOption()
       .map(ParquetSchemaBridge.footerSchema(spark, _))
-  }
+
+  /** The data files under `paths`, lazily and in path order. */
+  private def dataFiles(conf: Configuration, paths: Seq[String])
+      : Iterator[Path] =
+    paths.iterator.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      val status =
+        try Some(fs.getFileStatus(path))
+        catch { case _: FileNotFoundException => None }
+      status.iterator.flatMap(dataFiles(fs, _))
+    }
 
   /** The data files at `s`, lazily: a file is its own; a directory's
     * come in name order, its own files before its subdirectories'.

@@ -125,9 +125,18 @@ object SegmentedTable {
     */
   def read(spark: SparkSession, root: String,
       asOfVersion: Option[Long] = None): DataFrame =
-    Parquet.read(spark,
-      members(spark, root, asOfVersion)
-        .map(m => new Path(root, m).toString): _*)
+    Parquet.read(spark, memberPaths(spark, root, asOfVersion): _*)
+
+  /** Rows of the committed (or as-of) snapshot [[read]] scans, from the
+    * member files' footers ([[Parquet.rowCount]]): no Spark job.
+    */
+  def rowCount(spark: SparkSession, root: String,
+      asOfVersion: Option[Long] = None): Long =
+    Parquet.rowCount(spark, memberPaths(spark, root, asOfVersion): _*)
+
+  private def memberPaths(spark: SparkSession, root: String,
+      asOfVersion: Option[Long]): Seq[String] =
+    members(spark, root, asOfVersion).map(m => new Path(root, m).toString)
 
   /** Merge-on-read for UPSERT semantics: the FIRST member is the base
     * snapshot; every later member is a delta of `keyCols`-keyed
@@ -143,7 +152,9 @@ object SegmentedTable {
     * broadcast is sound because deltas-since-compaction are bounded by
     * the [[compactLatestWins]] cadence — the same contract lakehouse
     * merge-on-read tables document. Keys must be unique within each
-    * segment (one override per key per commit).
+    * segment (one override per key per commit), so a table with ONE
+    * delta (a night since the last compaction) needs no window: the
+    * delta is already latest-wins.
     */
   def readLatestWins(spark: SparkSession, root: String,
       keyCols: Seq[String], asOfVersion: Option[Long] = None): DataFrame =
@@ -157,13 +168,17 @@ object SegmentedTable {
     if (ms.lengthCompare(1) <= 0) Parquet.read(spark, paths: _*)
     else {
       val base = Parquet.read(spark, paths.head)
-      val deltas = paths.tail.zipWithIndex.map { case (p, i) =>
-        Parquet.read(spark, p).withColumn("__seg_ord", lit(i))
-      }.reduce(_.unionByName(_))
-      val keep = row_number().over(Window
-        .partitionBy(keyCols.map(col): _*).orderBy(col("__seg_ord").desc))
-      val latest = deltas.withColumn("__rn", keep)
-        .filter(col("__rn") === 1).drop("__seg_ord", "__rn")
+      val latest =
+        if (paths.lengthCompare(2) == 0) Parquet.read(spark, paths(1))
+        else {
+          val deltas = paths.tail.zipWithIndex.map { case (p, i) =>
+            Parquet.read(spark, p).withColumn("__seg_ord", lit(i))
+          }.reduce(_.unionByName(_))
+          val keep = row_number().over(Window.partitionBy(
+            keyCols.map(col): _*).orderBy(col("__seg_ord").desc))
+          deltas.withColumn("__rn", keep)
+            .filter(col("__rn") === 1).drop("__seg_ord", "__rn")
+        }
       base.join(broadcast(latest.select(keyCols.map(col): _*)),
           keyCols, "left_anti")
         .unionByName(latest.select(base.columns.map(col).toSeq: _*))

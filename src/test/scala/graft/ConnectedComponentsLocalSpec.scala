@@ -123,6 +123,62 @@ class ConnectedComponentsLocalSpec extends SparkSpec {
     assert(viaDefault == viaDistributed)
   }
 
+  test("incremental components: a null endpoint takes the distributed " +
+      "branch, with labels equal to the forced distributed path") {
+    import scala.jdk.CollectionConverters._
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("a",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("b",
+        org.apache.spark.sql.types.LongType)))
+    def edges(rows: org.apache.spark.sql.Row*) =
+      spark.createDataFrame(rows.asJava, schema)
+    val old = Dedupe.connectedComponents(
+      edges(org.apache.spark.sql.Row(1L, 2L),
+        org.apache.spark.sql.Row(7L, 8L)), "a", "b")
+    val batch = edges(org.apache.spark.sql.Row(2L, 7L),
+      org.apache.spark.sql.Row(null, 9L))
+    // only the distributed branch persists frames (the edges and the
+    // touched labels); the driver path caches nothing
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val (full, delta) = Dedupe.incrementalComponentsWithDelta(
+      old, batch, "a", "b")
+    assert(!cache.isEmpty, "expected the distributed branch")
+    val (fullDist, deltaDist) = Dedupe.incrementalComponentsWithDelta(
+      old, batch, "a", "b", localEdgeCap = 0)
+    assert(labelsOfNullable(full) == labelsOfNullable(fullDist))
+    assert(labelsOfNullable(delta) == labelsOfNullable(deltaDist))
+    // without the null edge the same call caches nothing
+    spark.catalog.clearCache()
+    val (fullLocal, _) = Dedupe.incrementalComponentsWithDelta(
+      old, edges(org.apache.spark.sql.Row(2L, 7L)), "a", "b")
+    assert(cache.isEmpty, "expected the driver path")
+    assert(labelsOfNullable(fullLocal).collect { case (Some(n), Some(l)) =>
+      n -> l }.toMap == Map(1L -> 1L, 2L -> 1L, 7L -> 1L, 8L -> 1L))
+  }
+
+  test("incremental components: string keys merge in UTF-8 order on " +
+      "the driver path, equal to the distributed path") {
+    // U+FFFD sorts below an emoji in UTF-8 (and above it in UTF-16):
+    // bridging {emoji, emoji+"z"} to {repl+"a", repl} must relabel the
+    // emoji component to U+FFFD on both paths
+    val emoji = new String(Character.toChars(0x1F600))
+    val repl = "\uFFFD"
+    val old = Dedupe.connectedComponents(
+      strEdges(Seq((emoji, emoji + "z"), (repl + "a", repl))), "a", "b")
+    val batch = strEdges(Seq((emoji + "z", repl + "a"), ("b", "c")))
+    val (full, delta) = Dedupe.incrementalComponentsWithDelta(
+      old, batch, "a", "b")
+    val (fullDist, deltaDist) = Dedupe.incrementalComponentsWithDelta(
+      old, batch, "a", "b", localEdgeCap = 0)
+    assert(strLabels(full) == strLabels(fullDist))
+    assert(strLabels(delta) == strLabels(deltaDist))
+    assert(strLabels(full)(emoji) == repl)
+    assert(strLabels(delta) == Map(emoji -> repl, (emoji + "z") -> repl,
+      "b" -> "b", "c" -> "b"))
+  }
+
   private def labelsOfNullable(df: org.apache.spark.sql.DataFrame)
       : Set[(Option[Long], Option[Long])] =
     df.collect().map(r =>

@@ -749,22 +749,23 @@ class OperatorSpec extends SparkSpec {
     assert(got2 == got)
   }
 
+  // old graph: component {1,2,3}, component {7,8}, singleton pair
+  // {20,21}, far component {40,41}
+  private lazy val oldEdges = Seq((1L, 2L), (2L, 3L), (7L, 8L),
+    (20L, 21L), (40L, 41L)).toDF("a", "b")
+  // new batch exercises every merge shape at once:
+  //  (3,7)   — bridges two old components (labels 1 and 7 merge to 1)
+  //  (8,50)  — unseen node joins an old component
+  //  (60,61) — brand-new component, both endpoints unseen
+  //  (20,21) — purely intra-component (must be a no-op)
+  //  (5,40)  — unseen node with id SMALLER than the old label: the
+  //            whole {40,41} component must relabel to 5
+  private lazy val newEdges = Seq((3L, 7L), (8L, 50L), (60L, 61L),
+    (20L, 21L), (5L, 40L)).toDF("a", "b")
+
   test("incremental components equal a from-scratch run over old ∪ new") {
     def labelsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
       df.orderBy("node").as[(Long, Long)].collect().toSeq
-    // old graph: component {1,2,3}, component {7,8}, singleton pair
-    // {20,21}, far component {40,41}
-    val oldEdges = Seq((1L, 2L), (2L, 3L), (7L, 8L), (20L, 21L),
-      (40L, 41L)).toDF("a", "b")
-    // new batch exercises every merge shape at once:
-    //  (3,7)   — bridges two old components (labels 1 and 7 merge to 1)
-    //  (8,50)  — unseen node joins an old component
-    //  (60,61) — brand-new component, both endpoints unseen
-    //  (20,21) — purely intra-component (must be a no-op)
-    //  (5,40)  — unseen node with id SMALLER than the old label: the
-    //            whole {40,41} component must relabel to 5
-    val newEdges = Seq((3L, 7L), (8L, 50L), (60L, 61L), (20L, 21L),
-      (5L, 40L)).toDF("a", "b")
     val oldLabels = Dedupe.connectedComponents(oldEdges, "a", "b")
     val inc = labelsOf(
       Dedupe.incrementalComponents(oldLabels, newEdges, "a", "b"))
@@ -799,6 +800,27 @@ class OperatorSpec extends SparkSpec {
     val (_, noopDelta) = Dedupe.incrementalComponentsWithDelta(oldLabels,
       Seq((1L, 3L), (7L, 8L)).toDF("a", "b"), "a", "b")
     assert(noopDelta.isEmpty)
+  }
+
+  test("incremental components: the driver label path equals the " +
+      "distributed one (cap 0), full labels and delta") {
+    def setOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.as[(Long, Long)].collect().toSet
+    val oldLabels = Dedupe.connectedComponents(oldEdges, "a", "b")
+    // the fixture's batch, and an all-intra-component one (empty delta)
+    for (batch <- Seq(newEdges, Seq((1L, 3L), (7L, 8L)).toDF("a", "b"))) {
+      val (full, delta) = Dedupe.incrementalComponentsWithDelta(
+        oldLabels, batch, "a", "b")
+      val (fullDist, deltaDist) = Dedupe.incrementalComponentsWithDelta(
+        oldLabels, batch, "a", "b", localEdgeCap = 0)
+      assert(setOf(full) == setOf(fullDist))
+      assert(setOf(delta) == setOf(deltaDist))
+    }
+    val delta = setOf(Dedupe.incrementalComponentsWithDelta(
+      oldLabels, newEdges, "a", "b")._2)
+    // the untouched member 41 moves with its component's label to 5
+    assert(delta == Set(7L -> 1L, 8L -> 1L, 50L -> 1L, 60L -> 60L,
+      61L -> 60L, 5L -> 5L, 40L -> 5L, 41L -> 5L))
   }
 
   test("incrementalFromStore equals from-scratch; store round-trips") {
