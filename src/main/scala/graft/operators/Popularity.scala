@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.functions.PercentileDiscAgg
+import graft.sources.Parquet
 
 /** Per-provider percentile-based popularity scoring.
   *
@@ -16,13 +18,18 @@ import org.apache.spark.sql.functions._
   *  - `catalog/dags/common/popularity/sql.py:313-326` — standardized
   *    score `metric / (metric + constant)` per row.
   *
-  * Scale design: `percentile_disc` is implemented as
-  * groupBy(key, value).count → per-key cumulative window over the
-  * *distinct values*, NOT by collecting all raw values. At 100 TB the
-  * number of distinct (provider, metric_value) pairs is orders of
-  * magnitude smaller than row count (the map-side partial aggregation
-  * collapses duplicates before the shuffle), and the per-key window sort
-  * only sorts distinct values. The reference caches this "heavyweight"
+  * Scale design: `percentile_disc` is one exact aggregate grouped by
+  * key ([[graft.functions.PercentileDiscAgg]]). Its buffer is a
+  * value→count map of the key's distinct values, so the map-side
+  * partial collapses duplicate (key, value) pairs before the single
+  * shuffle — at 100 TB the number of distinct (provider, metric_value)
+  * pairs is orders of magnitude smaller than the row count. The
+  * trade-off: a key's buffer lives in executor memory and cannot spill,
+  * so one key with more distinct values than a task's heap holds fails
+  * the task. The count → cumulative-window pipeline this replaced held
+  * the same distinct values per key but could spill its sort; it cost a
+  * second shuffle, a sort and two windows, and twice the generated
+  * classes. The reference caches this "heavyweight"
   * computation in a matview with a 6h build budget; here it's a small
   * shuffled aggregate.
   */
@@ -30,53 +37,27 @@ object Popularity {
 
   /** Exact Postgres `percentile_disc(p) WITHIN GROUP (ORDER BY valueCol)`
     * per group of `keys`. Nulls are excluded (Postgres aggregates ignore
-    * nulls). Returns one row per key with column `pct`.
+    * nulls), so a key whose values are all null has no row. Returns one
+    * row per key with column `pct`, typed like `valueCol`.
     */
   def percentileDisc(df: DataFrame, keys: Seq[String], valueCol: String,
-      p: Double): DataFrame = {
-    val counts = df
-      .filter(col(valueCol).isNotNull)
-      .groupBy((keys :+ valueCol).map(col): _*)
-      .agg(count(lit(1)).as("__n"))
-    val byKey = Window.partitionBy(keys.map(col): _*)
-    val cumW = byKey.orderBy(col(valueCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    counts
-      .withColumn("__cum", sum("__n").over(cumW))
-      .withColumn("__tot", sum("__n").over(byKey))
-      // smallest value whose cume_dist >= p  <=>  cum >= tot * p
-      .filter(col("__cum") >= col("__tot") * lit(p))
-      .groupBy(keys.map(col): _*)
-      .agg(min(col(valueCol)).as("pct"))
-  }
+      p: Double): DataFrame =
+    percentileDiscMulti(df, keys, valueCol, Seq(p))
+      .withColumnRenamed("pct0", "pct")
 
-  /** Several exact percentile_disc fractions in ONE pass: the same
-    * counts + cumulative window as [[percentileDisc]], then each
-    * fraction's "smallest value with cume_dist ≥ p" falls out of a
-    * single grouped `min(when(cum ≥ tot·p, value))` — one shuffled
-    * aggregate however many cutoffs are asked for (vs one full pass
-    * per fraction when calling [[percentileDisc]] repeatedly).
-    * Returns one row per key with columns `pct0, pct1, …` in `ps`
-    * order.
+  /** Several exact percentile_disc fractions from one aggregate buffer
+    * per key: one shuffled aggregate however many cutoffs are asked for.
+    * Returns one row per key with columns `pct0, pct1, …` in `ps` order,
+    * typed like `valueCol`.
     */
   def percentileDiscMulti(df: DataFrame, keys: Seq[String],
       valueCol: String, ps: Seq[Double]): DataFrame = {
-    val counts = df
-      .filter(col(valueCol).isNotNull)
-      .groupBy((keys :+ valueCol).map(col): _*)
-      .agg(count(lit(1)).as("__n"))
-    val byKey = Window.partitionBy(keys.map(col): _*)
-    val cumW = byKey.orderBy(col(valueCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pcts = ps.zipWithIndex.map { case (p, i) =>
-      min(when(col("__cum") >= col("__tot") * lit(p), col(valueCol)))
-        .as(s"pct$i")
-    }
-    counts
-      .withColumn("__cum", sum("__n").over(cumW))
-      .withColumn("__tot", sum("__n").over(byKey))
+    val pcts = col("__pcts")
+    df.filter(col(valueCol).isNotNull)
       .groupBy(keys.map(col): _*)
-      .agg(pcts.head, pcts.tail: _*)
+      .agg(PercentileDiscAgg.column(col(valueCol), ps).as("__pcts"))
+      .select(keys.map(col) ++
+        ps.indices.map(i => pcts.getItem(i).as(s"pct$i")): _*)
   }
 
   /** Popularity constant per key: `((1-p)/p) * (pct == 0 ? 1 : pct)`.
@@ -102,6 +83,15 @@ object Popularity {
         keys, "left")
       .withColumn("score", col(valueCol) / (col(valueCol) + col("constant")))
 
+  /** The metrics-config upsert
+    * (refresh_popularity_metrics_task_factory.py:25-95 →
+    * popularity/sql.py:139-177): merge incoming (provider, metric,
+    * percentile) rows into the config dim — newest non-null wins.
+    */
+  def updateMetricsConfig(current: DataFrame, incoming: DataFrame)
+      : DataFrame =
+    MergeUpsert.merge(current, incoming, Seq("provider"))
+
   /** The "data refresh" job (SURVEY.md §3.3): recompute the constants
     * dimension and the scored snapshot, write both as parquet — the
     * engine's replacement for the reference's matview refresh
@@ -113,20 +103,15 @@ object Popularity {
     * the directory level (on a lakehouse format this is a transactional
     * table overwrite).
     */
-  /** The metrics-config upsert
-    * (refresh_popularity_metrics_task_factory.py:25-95 →
-    * popularity/sql.py:139-177): merge incoming (provider, metric,
-    * percentile) rows into the config dim — newest non-null wins.
-    */
-  def updateMetricsConfig(current: DataFrame, incoming: DataFrame)
-      : DataFrame =
-    MergeUpsert.merge(current, incoming, Seq("provider"))
-
   def refreshViews(facts: DataFrame, keys: Seq[String], valueCol: String,
       p: Double, outDir: String): Map[String, Any] = {
-    val consts = constants(facts, keys, valueCol, p)
-    consts.coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/popularity_constants")
+    val constsDir = s"$outDir/popularity_constants"
+    constants(facts, keys, valueCol, p).coalesce(1).write.mode("overwrite")
+      .parquet(constsDir)
+    // score against the WRITTEN constants, read back, as
+    // refreshViewsVersioned does: the view costs one pass over the facts
+    // instead of recomputing the percentiles
+    val consts = Parquet.read(facts.sparkSession, constsDir)
     // A13 — run metrics ride the job itself via observe() (no second
     // pass over the data), the Spark-native accumulator surface
     val obs = org.apache.spark.sql.Observation("popularity_refresh")

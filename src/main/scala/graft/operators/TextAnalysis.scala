@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.regex.Pattern
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,7 +14,7 @@ object TextAnalysis {
 
   /** Tiny per-language stopword lists for the n-gram/stopword language
     * heuristic. Deliberately small + deterministic; real pipelines swap
-    * in fastText — the *plumbing* (broadcast dim + explode + argmax) is
+    * in fastText — the *plumbing* (per-language hit counts + argmax) is
     * the operator.
     */
   val stopwords: Seq[(String, String)] = Seq(
@@ -27,31 +29,32 @@ object TextAnalysis {
     "it" -> "il", "it" -> "gli", "it" -> "e", "it" -> "è", "it" -> "un",
     "it" -> "una", "it" -> "per", "it" -> "con", "it" -> "di", "it" -> "che")
 
-  /** Predict a language per document: explode words, broadcast-join the
-    * stopword dim, count hits per language, argmax with deterministic
-    * tie-break (more hits, then lexicographically smallest language;
-    * documents with zero stopword hits get 'und').
+  /** Predict a language per document row: count each language's
+    * stopword hits among the lower-cased text's space-separated words,
+    * argmax with deterministic tie-break (more hits, then
+    * lexicographically smallest language; rows with zero stopword hits,
+    * and null text, get 'und').
+    *
+    * One codegen'd projection, no explode, join or shuffle: per
+    * language, ONE `regexp_count` over `" " + lower(text) + " "` counts
+    * the words equal to one of its stopwords — each match anchors at the
+    * space before a word and must be followed by a space, so a word
+    * matches only whole (punctuation or a tab attached makes it another
+    * word, as splitting on " " does) and is counted once. The argmax is
+    * `least` over `(-hits, lang)` structs of the languages that hit.
     */
   def languageId(docs: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val dim = stopwords.toDF("cand_lang", "word")
-    val hits = docs
-      .select(col(idCol).as("doc"),
-        explode(Dedupe.words(lower(col(textCol)))).as("word"))
-      .join(broadcast(dim), Seq("word"))
-      .groupBy("doc", "cand_lang").agg(count(lit(1)).as("hits"))
-    // argmax as ONE aggregation with map-side partials (the same
-    // min_by rewrite that de-weakened the IVF cell assignment) — no
-    // row_number sort over the hits
-    val best = hits.groupBy("doc").agg(
-      min_by(col("cand_lang"),
-        struct((-col("hits")).as("nh"), col("cand_lang")))
+    val padded = concat(lit(" "), lower(col(textCol)), lit(" "))
+    val perLang = stopwords.groupBy(_._1).toSeq.sortBy(_._1).map {
+      case (lang, words) =>
+        val alternation = words.map(w => Pattern.quote(w._2)).mkString("|")
+        val hits = regexp_count(padded, lit(s" (?:$alternation)(?= )"))
+        when(hits > 0, struct((-hits).as("nh"), lit(lang).as("lang")))
+    }
+    docs.select(col(idCol).as("doc"),
+      coalesce(least(perLang: _*).getField("lang"), lit("und"))
         .as("pred_lang"))
-    docs.select(col(idCol).as("doc"))
-      .join(best, Seq("doc"), "left")
-      .select(col("doc"), coalesce(col("pred_lang"), lit("und")).as("pred_lang"))
   }
 
   /** Heuristic quality signals per document — all exact integer /

@@ -190,10 +190,10 @@ object EnrichmentQueries extends QueryPack {
              CAST(64 + (h2 % 1080) AS BIGINT) AS height
       FROM n"""))
 
-  /** A1 via the custom Catalyst TypedImperativeAggregate
-    * (`percentile_disc_exact`, functions.PercentileDiscAgg) — the
-    * SQL-function-surface parity path; same Postgres semantics as the
-    * windowed implementation in operators.Popularity.
+  /** A1 via the SQL surface of the custom Catalyst
+    * TypedImperativeAggregate (`percentile_disc_exact`,
+    * functions.PercentileDiscAgg) — the aggregate operators.Popularity
+    * runs, called by name.
     */
   val q38 = Q("q38_percentile_agg",
     (s, dir) => {

@@ -13,8 +13,8 @@ object TextQueries extends QueryPack {
   private val dimValues = TextAnalysis.stopwords
     .map { case (l, w) => s"('$l', '$w')" }.mkString(", ")
 
-  /** Language ID: explode → broadcast stopword join → argmax with
-    * deterministic tie-break.
+  /** Language ID: per-language stopword hit counts in one projection →
+    * argmax with deterministic tie-break.
     */
   val q27 = Q("q27_language_id",
     (s, dir) => TextAnalysis.languageId(

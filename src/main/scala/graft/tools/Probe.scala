@@ -3,6 +3,7 @@ package graft.tools
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -119,9 +120,11 @@ object Probe {
   private val (shK, nHashes, rpb, minJ) = (3, 16, 4, 0.5)
 
   /** Run registered queries and print each one's wall time and row
-    * count — with JOBPROFILE_DETAIL set, also its Spark job count, every
-    * job's wall time and description and every stage's task metrics — so
-    * scheduling-floor overhead (many small jobs) is distinguishable
+    * count — with JOBPROFILE_DETAIL set, also its Spark job count, its
+    * code-generation compiles (Janino compilations during the timed run,
+    * driver and local executor alike), every job's wall time and
+    * description and every stage's task metrics — so scheduling-floor
+    * overhead (many small jobs) and codegen cost are distinguishable
     * from data-bound cost. The timed run executes the query's own plan
     * (`queryExecution.toRdd.count()`, as Bench does): a `count()` lets
     * the optimizer prune window outputs and whole exchanges. The row
@@ -142,12 +145,14 @@ object Probe {
         spark.catalog.clearCache()
         log.take()
         val df = fn(spark, sfDir)
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val (_, dt) = timed(df.queryExecution.toRdd.count())
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
         val (jobs, jobLines) = log.take()
         val rows = df.count()
         println(f"== $q rep $rep: rows=$rows wall=$dt%.3fs")
         if (detail) {
-          println(s"  jobs=$jobs")
+          println(s"  jobs=$jobs compiles=$compiles")
           jobLines.foreach(l => println("  " + l))
         }
       }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.{CleanFunctions, LicenseMap, PercentileDiscAgg}
-import graft.operators.{Multimodal, Popularity}
+import graft.operators.Multimodal
 import graft.sources.Tsv
 
 /** Specs for the enrichment-round modules: TSV boundary, multimodal
@@ -561,7 +561,7 @@ class EnrichmentSpec extends SparkSpec {
     val e = Tables(spark, sfDir, "events")
     val agg = e.groupBy(col("event_type"))
       .agg(expr("percentile_disc_exact(value, 0.85D)").as("pct"))
-    val win = Popularity.percentileDisc(e, Seq("event_type"), "value", 0.85)
+    val win = Reference.percentileDisc(e, Seq("event_type"), "value", 0.85)
     assert(agg.exceptAll(win).isEmpty && win.exceptAll(agg).isEmpty)
   }
 

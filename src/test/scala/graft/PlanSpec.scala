@@ -30,6 +30,36 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"))
   }
 
+  /** The final (adaptive) physical plan of a registered query after it
+    * ran, query stages included.
+    */
+  private def executed(name: String)
+      : org.apache.spark.sql.execution.SparkPlan = {
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    df.queryExecution.toRdd.count()
+    df.queryExecution.executedPlan
+  }
+
+  private object Stages
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  test("q12: one hash shuffle (the percentile aggregate) plus the broadcast") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+      ShuffleExchangeExec}
+    val p = executed("q12_popularity_scores")
+    val shuffles = Stages.collect(p) { case s: ShuffleExchangeExec => s }
+    assert(shuffles.size == 1 &&
+      shuffles.head.outputPartitioning.isInstanceOf[HashPartitioning], p)
+    assert(Stages.collect(p) { case b: BroadcastExchangeLike => b }.size == 1, p)
+  }
+
+  test("q27: language ID runs without a shuffle") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val p = executed("q27_language_id")
+    assert(Stages.collect(p) { case s: ShuffleExchangeExec => s }.isEmpty, p)
+  }
+
   test("q30: query side is the broadcast build side") {
     val p = plan("q30_ann_bruteforce")
     assert(p.contains("BroadcastNestedLoopJoin BuildLeft"))
