@@ -5,10 +5,11 @@ import org.apache.spark.sql.DataFrame
 /** Release handle for persisted frames created INSIDE lazy operators.
   *
   * Several operators ([[graft.operators.Dedupe.minhashCandidates]],
-  * [[graft.operators.Dedupe.verifyJaccardBySets]], the SimHash/SRP
-  * band joins) must `persist()` an intermediate frame because a
-  * differently-aliased self-join consumes it twice and Catalyst does
-  * not reuse the exchange. The operator returns a LAZY DataFrame, so
+  * [[graft.operators.Dedupe.nearDupPairs]], the SimHash/SRP band
+  * joins) must `persist()` an intermediate frame because two
+  * concurrent consumers (a differently-aliased self-join, or the
+  * verify's two reads of the candidate pairs) would each recompute it
+  * — Catalyst does not reuse the exchange. The operator returns a LAZY DataFrame, so
   * it cannot unpersist before the caller materializes — and without a
   * hook, library/notebook callers accumulate cached frames for the
   * session lifetime (`clearCache()` is a sledgehammer that also evicts

@@ -25,6 +25,14 @@ import graft.core.CacheHandle
   *    (band, band-signature) keys — never all-pairs;
   *  - candidate verification joins only the candidate pairs back to
   *    shingle sets, not the full corpus cross product.
+  *
+  * The near-dup path has one definition per step: [[withBands]] builds
+  * the LSH banding key for every candidate generator and for the
+  * persisted band index; [[verifyJaccardOneJoin]] (from-scratch) and
+  * [[verifyJaccardInline]] (the nightly fold) are the two exact
+  * verifiers; and [[nearDupPairs]] / [[nearDupComponents]] are the
+  * sign → candidates → verify → components chain every from-scratch
+  * caller runs.
   */
 object Dedupe {
 
@@ -142,11 +150,22 @@ object Dedupe {
         array((0 until numHashes).map(i => col(s"mh$i")): _*).as("sig"))
   }
 
-  /** Long form (doc, i, mh) of the wide signature (unpivot). */
-  def minhashSignature(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int, numHashes: Int): DataFrame =
-    minhashWide(docs, idCol, textCol, shingleK, numHashes)
-      .select(col("doc"), posexplode(col("sig")).as(Seq("i", "mh")))
+  /** `sig` plus the LSH banding key: one row per band, `band` in
+    * [0, numHashes / rowsPerBand) and `band_sig` = that band's
+    * `rowsPerBand` consecutive minhashes joined with "|". The one
+    * definition of the key every candidate generator joins or groups
+    * on, and of the persisted band index ([[bandRowsOf]]).
+    */
+  private[graft] def withBands(sig: DataFrame, numHashes: Int,
+      rowsPerBand: Int): DataFrame =
+    sig
+      .withColumn("band",
+        explode(sequence(lit(0), lit(numHashes / rowsPerBand - 1))))
+      .withColumn("band_sig", array_join(
+        transform(
+          slice(col("sig"), col("band") * rowsPerBand + 1, lit(rowsPerBand)),
+          x => x.cast("string")),
+        "|"))
 
   /** LSH candidate pairs + estimated Jaccard, from wide signatures.
     *
@@ -164,7 +183,6 @@ object Dedupe {
   def minhashCandidates(sigWide: DataFrame, numHashes: Int,
       rowsPerBand: Int, caches: CacheHandle = CacheHandle.session)
       : DataFrame = {
-    val nBands = numHashes / rowsPerBand
     // persist + MATERIALIZE the banded signatures: the self-join below
     // consumes this frame on BOTH sides, and because the two sides
     // project different aliases (doc_a / doc_b) Catalyst does NOT
@@ -176,14 +194,8 @@ object Dedupe {
     // a cluster. Long-lived callers pass a live CacheHandle and
     // release() after materializing; by default the frame ages out
     // with clearCache()/the session.
-    val bands = CacheHandle.eager(caches.track(sigWide
-      .withColumn("band", explode(sequence(lit(0), lit(nBands - 1))))
-      .withColumn("band_sig", array_join(
-        transform(
-          slice(col("sig"), col("band") * rowsPerBand + 1, lit(rowsPerBand)),
-          x => x.cast("string")),
-        "|"))
-      .persist()))
+    val bands = CacheHandle.eager(caches.track(
+      withBands(sigWide, numHashes, rowsPerBand).persist()))
     val a = bands.select(col("doc").as("doc_a"), col("sig").as("sig_a"),
       col("band"), col("band_sig"))
     val b = bands.select(col("doc").as("doc_b"), col("sig").as("sig_b"),
@@ -218,8 +230,8 @@ object Dedupe {
     * self-join emits the same n² rows). For corpora where giant
     * identical-signature buckets must survive, use the self-join form.
     * Callers needing est_jaccard (q24) also stay on minhashCandidates.
-    */
-  /** `minSizeRatio > 0` prunes pairs that provably cannot pass exact
+    *
+    * `minSizeRatio > 0` prunes pairs that provably cannot pass exact
     * Jaccard verification at that threshold: J(A,B) ≤ min(|A|,|B|) /
     * max(|A|,|B|) (intersection bounded by the smaller set, union by
     * the larger), so pairs whose DISTINCT-shingle-count ratio is below
@@ -231,46 +243,54 @@ object Dedupe {
   def minhashCandidatePairs(sigWide: DataFrame, numHashes: Int,
       rowsPerBand: Int, dedup: Boolean = true,
       minSizeRatio: Double = 0.0): DataFrame = {
-    val nBands = numHashes / rowsPerBand
     val cnt =
       if (minSizeRatio > 0) element_at(col("sig"), numHashes + 1)
       else lit(0L)
-    val bands = sigWide
-      .withColumn("band", explode(sequence(lit(0), lit(nBands - 1))))
-      .withColumn("band_sig", array_join(
-        transform(
-          slice(col("sig"), col("band") * rowsPerBand + 1,
-            lit(rowsPerBand)),
-          x => x.cast("string")),
-        "|"))
+    val bands = withBands(sigWide, numHashes, rowsPerBand)
       .select(col("doc"), cnt.as("cnt"), col("band"), col("band_sig"))
     val buckets = bands.groupBy("band", "band_sig")
       .agg(sort_array(collect_list(struct(col("doc"), col("cnt"))))
         .as("ds"))
       .filter(size(col("ds")) > 1)
-    // in-row i<j combinations of the sorted bucket: doc_a < doc_b by
-    // construction (struct sort orders by doc first). A pair sharing
-    // several bands appears once per band; `dedup = false` skips the
-    // DISTINCT exchange for consumers that collapse duplicates anyway
-    // (NOT verifyJaccardOneJoin — its regroup counts rows, see its
-    // scaladoc). The size-ratio prune runs inside the emit lambda, so
-    // hopeless pairs never even reach the dedup exchange.
-    def emit(a: Column, b: Column): Column = struct(
-      a("doc").as("doc_a"), b("doc").as("doc_b"),
-      (least(a("cnt"), b("cnt")).cast("double") >=
-        greatest(a("cnt"), b("cnt")) * lit(minSizeRatio)).as("keep"))
-    val pairs = buckets
+    // A pair sharing several bands appears once per band; `dedup =
+    // false` skips the DISTINCT exchange for consumers that collapse
+    // duplicates anyway (NOT verifyJaccardOneJoin — its regroup counts
+    // rows, see its scaladoc). The size-ratio prune runs inside the
+    // pair emitter, so hopeless pairs never even reach the dedup
+    // exchange.
+    val pairs = bucketPairs(buckets, sizeRatioKeeps(minSizeRatio))
+    if (dedup) pairs.distinct() else pairs
+  }
+
+  /** The in-row i<j combinations of each bucket's sorted `ds` array
+    * (structs with a leading `doc` field) as (doc_a, doc_b) rows, doc_a
+    * < doc_b by construction (the struct sort orders by doc first). Only
+    * combinations `keep(a, b)` accepts are emitted.
+    */
+  private def bucketPairs(buckets: DataFrame,
+      keep: (Column, Column) => Column): DataFrame =
+    buckets
       .select(explode(flatten(transform(
         sequence(lit(0), size(col("ds")) - 2),
         i => filter(
           transform(
             sequence(i + 1, size(col("ds")) - 1),
-            j => emit(element_at(col("ds"), i + 1),
-              element_at(col("ds"), j + 1))),
+            j => {
+              val (a, b) =
+                (element_at(col("ds"), i + 1), element_at(col("ds"), j + 1))
+              struct(a("doc").as("doc_a"), b("doc").as("doc_b"),
+                keep(a, b).as("keep"))
+            }),
           p => p("keep"))))).as("p"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-    if (dedup) pairs.distinct() else pairs
-  }
+
+  /** The size-ratio verify-prune on two bucket entries' `cnt`: J(A,B) ≤
+    * min(|A|,|B|) / max(|A|,|B|), so a pair below `ratio` cannot pass
+    * exact verification at that threshold.
+    */
+  private def sizeRatioKeeps(ratio: Double)(a: Column, b: Column): Column =
+    least(a("cnt"), b("cnt")).cast("double") >=
+      greatest(a("cnt"), b("cnt")) * lit(ratio)
 
   /** Incremental cross-corpus LSH candidates: near-dup pairs between a
     * NEW batch and the EXISTING corpus, from their (independently
@@ -288,16 +308,8 @@ object Dedupe {
     */
   def minhashCandidatesAgainst(newSig: DataFrame, corpusSig: DataFrame,
       numHashes: Int, rowsPerBand: Int): DataFrame = {
-    val nBands = numHashes / rowsPerBand
     def banded(sig: DataFrame, docAs: String, sigAs: String): DataFrame =
-      sig
-        .withColumn("band", explode(sequence(lit(0), lit(nBands - 1))))
-        .withColumn("band_sig", array_join(
-          transform(
-            slice(col("sig"), col("band") * rowsPerBand + 1,
-              lit(rowsPerBand)),
-            x => x.cast("string")),
-          "|"))
+      withBands(sig, numHashes, rowsPerBand)
         .select(col("doc").as(docAs), col("sig").as(sigAs), col("band"),
           col("band_sig"))
     // no persist: unlike the self-join in minhashCandidates, each
@@ -324,22 +336,38 @@ object Dedupe {
     */
   def minhashCandidatePairsAgainst(newSig: DataFrame, corpusSig: DataFrame,
       numHashes: Int, rowsPerBand: Int): DataFrame = {
-    val nBands = numHashes / rowsPerBand
     def banded(sig: DataFrame, docAs: String): DataFrame =
-      sig
-        .withColumn("band", explode(sequence(lit(0), lit(nBands - 1))))
-        .withColumn("band_sig", array_join(
-          transform(
-            slice(col("sig"), col("band") * rowsPerBand + 1,
-              lit(rowsPerBand)),
-            x => x.cast("string")),
-          "|"))
+      withBands(sig, numHashes, rowsPerBand)
         .select(col("doc").as(docAs), col("band"), col("band_sig"))
     banded(newSig, "new_doc")
       .join(banded(corpusSig, "corpus_doc"), Seq("band", "band_sig"))
       .select("new_doc", "corpus_doc")
       .distinct()
   }
+
+  /** Banded rows of a wide signature table (built `withCount = true`):
+    * (doc, band, band_sig, cnt) — the persisted form of the LSH
+    * banding index. Building these rows costs an interpreted
+    * slice/join pass per signature, so a store computes them ONCE per
+    * corpus version ([[SignatureStore.build]]/appendBatch) instead of
+    * re-deriving them from signatures every night (measured ~2.5s of
+    * the nightly floor at the 100× dir).
+    */
+  def bandRowsOf(sigWide: DataFrame, numHashes: Int, rowsPerBand: Int)
+      : DataFrame =
+    withBands(sigWide, numHashes, rowsPerBand)
+      .select(col("doc"), col("band"), col("band_sig"),
+        // fail fast on a count-less signature table (withCount=false):
+        // a silently-NULL cnt would make the size-ratio prune drop
+        // candidate pairs — duplicates missed with no error
+        when(size(col("sig")) === numHashes + 1,
+          element_at(col("sig"), numHashes + 1))
+          .otherwise(raise_error(concat(
+            lit(s"bandRowsOf: expected signature arrays of ${numHashes + 1} " +
+              "elements (numHashes + trailing distinct-shingle count; " +
+              "build with withCount=true), got "),
+            size(col("sig")).cast("string"))))
+          .as("cnt"))
 
   /** The ACTUALLY-incremental nightly dedup pass: cluster a new batch
     * against a corpus whose MinHash signatures and component labels were
@@ -379,39 +407,6 @@ object Dedupe {
     * (LSH banding is per-document deterministic, so the incremental
     * candidate arms partition the full-corpus candidate set exactly).
     */
-  /** Banded rows of a wide signature table (built `withCount = true`):
-    * (doc, band, band_sig, cnt) — the persisted form of the LSH
-    * banding index. Building these rows costs an interpreted
-    * slice/join pass per signature, so a store computes them ONCE per
-    * corpus version ([[SignatureStore.build]]/appendBatch) instead of
-    * re-deriving them from signatures every night (measured ~2.5s of
-    * the nightly floor at the 100× dir).
-    */
-  def bandRowsOf(sigWide: DataFrame, numHashes: Int, rowsPerBand: Int)
-      : DataFrame = {
-    val nBands = numHashes / rowsPerBand
-    sigWide
-      .withColumn("band", explode(sequence(lit(0), lit(nBands - 1))))
-      .withColumn("band_sig", array_join(
-        transform(
-          slice(col("sig"), col("band") * rowsPerBand + 1,
-            lit(rowsPerBand)),
-          x => x.cast("string")),
-        "|"))
-      .select(col("doc"), col("band"), col("band_sig"),
-        // fail fast on a count-less signature table (withCount=false):
-        // a silently-NULL cnt would make the size-ratio prune drop
-        // candidate pairs — duplicates missed with no error
-        when(size(col("sig")) === numHashes + 1,
-          element_at(col("sig"), numHashes + 1))
-          .otherwise(raise_error(concat(
-            lit(s"bandRowsOf: expected signature arrays of ${numHashes + 1} " +
-              "elements (numHashes + trailing distinct-shingle count; " +
-              "build with withCount=true), got "),
-            size(col("sig")).cast("string"))))
-          .as("cnt"))
-  }
-
   def incrementalFromStore(corpusBands: DataFrame, corpusLabels: DataFrame,
       batch: DataFrame, textLookup: DataFrame, idCol: String,
       textCol: String, shingleK: Int, numHashes: Int, rowsPerBand: Int,
@@ -426,8 +421,8 @@ object Dedupe {
     * nightly label commit persists. Both outputs are lazy plans over
     * the same candidate/verify lineage; consuming only one costs
     * nothing for the other.
-    */
-  /** @param preSigned when Some, an ALREADY-persisted-and-materialized
+    *
+    * @param preSigned when Some, an ALREADY-persisted-and-materialized
     *   wide signature frame for `batch` ([[minhashWide]] with
     *   withCount=true) — the nightly loop signs the batch exactly once
     *   and shares the frame between this candidate pass and the
@@ -483,24 +478,8 @@ object Dedupe {
         col("cnt"), col("is_new")))).as("ds"))
       .filter(size(col("ds")) > 1 &&
         exists(col("ds"), d => d("is_new")))
-    val pairs = buckets
-      .select(explode(flatten(transform(
-        sequence(lit(0), size(col("ds")) - 2),
-        i => filter(
-          transform(
-            sequence(i + 1, size(col("ds")) - 1),
-            j => struct(
-              element_at(col("ds"), i + 1)("doc").as("doc_a"),
-              element_at(col("ds"), j + 1)("doc").as("doc_b"),
-              ((element_at(col("ds"), i + 1)("is_new") ||
-                element_at(col("ds"), j + 1)("is_new")) &&
-                least(element_at(col("ds"), i + 1)("cnt"),
-                    element_at(col("ds"), j + 1)("cnt")).cast("double") >=
-                  greatest(element_at(col("ds"), i + 1)("cnt"),
-                    element_at(col("ds"), j + 1)("cnt")) * lit(minJaccard))
-                .as("keep"))),
-          p => p("keep"))))).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+    val pairs = bucketPairs(buckets, (a, b) =>
+      (a("is_new") || b("is_new")) && sizeRatioKeeps(minJaccard)(a, b))
     // inline verify: the candidate frame has ONE consumer (the role-row
     // broadcast build), so verification flows lazily into the edge
     // persist inside incrementalComponents
@@ -510,149 +489,28 @@ object Dedupe {
       "doc_b", caches = caches)
   }
 
-  /** Exact n-gram Jaccard for a given set of candidate pairs
-    * (doc_a, doc_b) — the LSH-prefilter + exact-verify scale path:
-    * shingle sets are joined only for candidates.
-    */
-  def verifyJaccard(candidates: DataFrame, docs: DataFrame, idCol: String,
-      textCol: String, shingleK: Int, minJaccard: Double): DataFrame =
-    verifyJaccardShingled(candidates,
-      shingleRows(docs, idCol, textCol, shingleK), minJaccard)
-
-  /** Exact Jaccard verification where the DISTINCT is pushed BELOW the
-    * candidate filter: only candidate documents' shingles are deduped
-    * and joined. At corpus scale the candidate set is orders of
-    * magnitude smaller than the corpus, so deduplicating every
-    * document's shingles globally (a full shuffle of all shingle rows)
-    * to verify a few pairs is the dominant waste — this semi-joins the
-    * raw shingle rows down to candidate docs first (broadcast of the
-    * candidate doc ids), then dedupes the small remainder. Results are
-    * identical: jaccard is over per-doc distinct shingle SETS either
-    * way. Pass `candidates` persisted — it is consumed three times
-    * (both doc-id sides and the intersection join).
-    */
-  def verifyJaccardForCandidates(candidates: DataFrame, shAll: DataFrame,
-      minJaccard: Double, caches: CacheHandle = CacheHandle.session)
-      : DataFrame = {
-    // one scan of `candidates` (explode, not a two-arm union whose
-    // stages would race to compute a lazily-persisted candidate frame)
-    val candDocs = candidates
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc"))
-      .distinct()
-    // persist + materialize the candidates-only shingle set:
-    // verifyJaccardShingled reads it THREE times (both intersection
-    // sides + the size table), and each unpersisted read would
-    // re-derive the FULL corpus shingle explode behind the semi-join —
-    // eager, because the three consumers are concurrent AQE stages of
-    // ONE action (CacheHandle.eager). The frame is small (candidate
-    // docs only); long-lived callers release it via a live
-    // CacheHandle, or it ages out with clearCache()/the session.
-    val sh = CacheHandle.eager(caches.track(
-      shAll.join(broadcast(candDocs), Seq("doc")).distinct().persist()))
-    verifyJaccardShingled(candidates, sh, minJaccard)
-  }
-
-  /** Exact Jaccard verification that re-derives shingles ONLY for the
-    * candidate documents, from the BASE table: the candidate doc ids
-    * (tiny) broadcast-semi-join `docs` first, and the shingle explode
-    * runs over that small remainder. Unlike
-    * [[verifyJaccardForCandidates]] — which filters an already-exploded
-    * corpus-scale shingle frame — this never touches a second
-    * corpus-scale pass at all: the one full explode feeds the
-    * signatures, and verification re-shingles only the few documents
-    * LSH actually flagged. The small distinct shingle set is persisted
-    * (verifyJaccardShingled reads it three times).
-    */
-  def verifyJaccardForCandidateDocs(candidates: DataFrame, docs: DataFrame,
-      idCol: String, textCol: String, shingleK: Int, minJaccard: Double,
-      maxDocChars: Int = TextAnalysis.defaultMaxDocChars,
-      caches: CacheHandle = CacheHandle.session): DataFrame = {
-    val candDocs = candidates
-      .select(explode(array(col("doc_a"), col("doc_b"))).as(idCol))
-      .distinct()
-    val candTexts = docs.select(col(idCol), col(textCol))
-      .join(broadcast(candDocs), Seq(idCol))
-    // eager: three concurrent consumers in one action (CacheHandle.eager)
-    val sh = CacheHandle.eager(caches.track(
-      shingleRows(candTexts, idCol, textCol, shingleK, maxDocChars)
-        .persist()))
-    verifyJaccardShingled(candidates, sh, minJaccard)
-  }
-
-  /** Exact Jaccard verification with the candidate docs' distinct
-    * shingle SETS held as in-row arrays: candidate doc ids broadcast-
-    * semi-join the base table, the codegen'd [[graft.functions
-    * .ShingleSetExpr]] builds each doc's distinct shingle array in ONE
-    * per-row loop (no explode, no aggregation shuffle — at sf0.1 the
-    * LSH candidates span ~85% of the corpus, so the previous
-    * explode + collect_set shuffled ~2M shingle rows per execution,
-    * measured 3-6s for what is now a ~0.3s narrow map), and the
-    * per-pair jaccard is an in-row `array_intersect` after two joins
-    * of the set frame onto the pair list. (The set is NOT built with
-    * the [[shingles]] array column either: higher-order lambdas are
-    * interpreted and re-evaluate the embedded split() per element —
-    * O(words²) per doc.) At cluster scale the verify joins shuffle
-    * |candidates| rows instead of |candidate shingle rows|.
-    * Row width is bounded by `maxDocChars` (a capped doc's distinct
-    * 3-shingle array is a few MB worst-case); for corpora of
-    * pathological giant documents prefer
-    * [[verifyJaccardForCandidateDocs]], which keeps shingles exploded.
-    */
-  def verifyJaccardBySets(candidates: DataFrame, docs: DataFrame,
-      idCol: String, textCol: String, shingleK: Int, minJaccard: Double,
-      maxDocChars: Int = TextAnalysis.defaultMaxDocChars,
-      caches: CacheHandle = CacheHandle.session): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val candDocs = candidates
-      .select(explode(array(col("doc_a"), col("doc_b"))).as(idCol))
-      .distinct()
-    val candTexts = docs.select(col(idCol), col(textCol))
-      .join(broadcast(candDocs), Seq(idCol))
-    // persist + MATERIALIZE the per-doc set frame: it is consumed
-    // TWICE below (the set_a and set_b joins), and because the two
-    // consumers project different aliases Catalyst does not reuse the
-    // exchange — worse, the two consumers are concurrent AQE stages of
-    // one action, so a lazy persist still computes the base-table scan
-    // + set build twice (CacheHandle.eager; q59's r7 regression
-    // multiplied exactly this with ITS double consumption of this
-    // function's output). One row per candidate doc. Long-lived
-    // callers release it via a live CacheHandle, or it ages out with
-    // clearCache()/the session. The size filter keeps frame parity
-    // with the old aggregation form, which emitted no row for
-    // shingle-less docs.
-    val sets = CacheHandle.eager(caches.track(candTexts.select(col(idCol).as("doc"),
-        ColumnBridge.column(graft.functions.ShingleSetExpr(
-          ColumnBridge.expression(
-            TextAnalysis.capDoc(col(textCol), maxDocChars)),
-          shingleK)).as("shset"))
-      .filter(size(col("shset")) > 0)
-      .persist()))
-    candidates.select("doc_a", "doc_b")
-      .join(sets.select(col("doc").as("doc_a"), col("shset").as("set_a")),
-        "doc_a")
-      .join(sets.select(col("doc").as("doc_b"), col("shset").as("set_b")),
-        "doc_b")
-      .withColumn("inter", size(array_intersect(col("set_a"), col("set_b"))))
-      .withColumn("jaccard", col("inter") /
-        (size(col("set_a")) + size(col("set_b")) - col("inter"))
-          .cast("double"))
-      .filter(col("jaccard") >= lit(minJaccard))
-      .select("doc_a", "doc_b", "jaccard")
-  }
-
   /** Exact Jaccard verification in ONE join: each candidate pair
     * explodes into two role rows (a/b), the per-doc shingle-set frame
     * is joined ONCE on doc, and a (doc_a, doc_b) regroup reassembles
     * both sets in-row for the intersection.
     *
-    * vs [[verifyJaccardBySets]]: that form joins the set frame twice
-    * (set_a, set_b), which forces a persist + eager materialization
-    * (two aliased consumers are concurrent AQE stages — each would
-    * re-run the corpus text scan and set build). Here the set frame
-    * has one consumer, so the whole verify is one job with no cached
-    * state: broadcast of the candidate doc ids, one equi-join, one
-    * pair regroup. Same output: pairs where both docs have non-empty
-    * shingle sets and exact Jaccard ≥ `minJaccard`.
+    * The candidate doc ids (tiny) broadcast-semi-join `docs`, and the
+    * codegen'd [[graft.functions.ShingleSetExpr]] builds each candidate
+    * doc's distinct shingle array in ONE per-row loop — no explode, no
+    * aggregation shuffle (the exploded shingle-row form shuffled ~2M
+    * rows per execution at sf0.1, measured 3-6s for what is a ~0.3s
+    * narrow map; the [[shingles]] array column is no better — its
+    * higher-order lambdas are interpreted and re-evaluate the embedded
+    * split() per element, O(words²) per doc). Joining the set frame
+    * twice instead (set_a, set_b) would force a persist + eager
+    * materialization (two aliased consumers are concurrent AQE stages —
+    * each would re-run the corpus text scan and set build). Here the
+    * set frame has one consumer, so the whole verify is one job with no
+    * cached state: broadcast of the candidate doc ids, one equi-join,
+    * one pair regroup. Output: pairs where both docs have non-empty
+    * shingle sets and exact Jaccard ≥ `minJaccard`. Row width is
+    * bounded by `maxDocChars` (a capped doc's distinct 3-shingle array
+    * is a few MB worst-case).
     *
     * Pass `candidates` distinct (any groupBy/DISTINCT output) — a
     * duplicated pair would double its role rows and corrupt the
@@ -665,17 +523,13 @@ object Dedupe {
   def verifyJaccardOneJoin(candidates: DataFrame, docs: DataFrame,
       idCol: String, textCol: String, shingleK: Int, minJaccard: Double,
       maxDocChars: Int = TextAnalysis.defaultMaxDocChars): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val candDocs = candidates
       .select(explode(array(col("doc_a"), col("doc_b"))).as(idCol))
       .distinct()
     val sets = docs.select(col(idCol), col(textCol))
       .join(broadcast(candDocs), Seq(idCol))
       .select(col(idCol).as("doc"),
-        ColumnBridge.column(graft.functions.ShingleSetExpr(
-          ColumnBridge.expression(
-            TextAnalysis.capDoc(col(textCol), maxDocChars)),
-          shingleK)).as("shset"))
+        shingleSet(textCol, shingleK, maxDocChars).as("shset"))
       .filter(size(col("shset")) > 0)
     val sides = candidates.select(col("doc_a"), col("doc_b"),
         explode(array(
@@ -683,22 +537,7 @@ object Dedupe {
           struct(col("doc_b").as("doc"), lit("b").as("role")))).as("s"))
       .select(col("doc_a"), col("doc_b"),
         col("s.doc").as("doc"), col("s.role").as("role"))
-    sides.join(sets, Seq("doc"))
-      .groupBy("doc_a", "doc_b")
-      .agg(
-        first(when(col("role") === "a", col("shset")), ignoreNulls = true)
-          .as("set_a"),
-        first(when(col("role") === "b", col("shset")), ignoreNulls = true)
-          .as("set_b"),
-        count(lit(1)).as("n_sides"))
-      .filter(col("n_sides") === 2) // both docs had non-empty sets
-      .withColumn("inter",
-        size(array_intersect(col("set_a"), col("set_b"))))
-      .withColumn("jaccard", col("inter") /
-        (size(col("set_a")) + size(col("set_b")) - col("inter"))
-          .cast("double"))
-      .filter(col("jaccard") >= lit(minJaccard))
-      .select("doc_a", "doc_b", "jaccard")
+    pairJaccard(sides.join(sets, Seq("doc")), minJaccard)
   }
 
   /** Exact Jaccard verification as ONE unbroken pipeline: the candidate
@@ -730,7 +569,6 @@ object Dedupe {
   def verifyJaccardInline(candidates: DataFrame, docs: DataFrame,
       idCol: String, textCol: String, shingleK: Int, minJaccard: Double,
       maxDocChars: Int = TextAnalysis.defaultMaxDocChars): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val sides = candidates.select(
         explode(array(
           struct(col("doc_a"), col("doc_b"), col("doc_a").as("doc"),
@@ -739,22 +577,39 @@ object Dedupe {
             lit("b").as("role")))).as("s"))
       .select(col("s.doc_a").as("doc_a"), col("s.doc_b").as("doc_b"),
         col("s.doc").as(idCol), col("s.role").as("role"))
-    docs.select(col(idCol), col(textCol))
+    pairJaccard(docs.select(col(idCol), col(textCol))
       .join(broadcast(sides), Seq(idCol))
       .select(col("doc_a"), col("doc_b"), col("role"),
-        ColumnBridge.column(graft.functions.ShingleSetExpr(
-          ColumnBridge.expression(
-            TextAnalysis.capDoc(col(textCol), maxDocChars)),
-          shingleK)).as("shset"))
-      .filter(size(col("shset")) > 0)
-      .groupBy("doc_a", "doc_b")
+        shingleSet(textCol, shingleK, maxDocChars).as("shset"))
+      .filter(size(col("shset")) > 0), minJaccard)
+  }
+
+  /** A capped document's distinct k-word shingles as one array, built
+    * by the codegen'd [[graft.functions.ShingleSetExpr]].
+    */
+  private def shingleSet(textCol: String, shingleK: Int,
+      maxDocChars: Int): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(graft.functions.ShingleSetExpr(
+      ColumnBridge.expression(
+        TextAnalysis.capDoc(col(textCol), maxDocChars)),
+      shingleK))
+  }
+
+  /** The verifiers' shared tail: role rows (doc_a, doc_b, role, shset)
+    * regroup by pair, pairs missing a side's non-empty set drop out, and
+    * the exact Jaccard of the two sets is thresholded.
+    */
+  private def pairJaccard(roleRows: DataFrame, minJaccard: Double)
+      : DataFrame =
+    roleRows.groupBy("doc_a", "doc_b")
       .agg(
         first(when(col("role") === "a", col("shset")), ignoreNulls = true)
           .as("set_a"),
         first(when(col("role") === "b", col("shset")), ignoreNulls = true)
           .as("set_b"),
         count(lit(1)).as("n_sides"))
-      .filter(col("n_sides") === 2)
+      .filter(col("n_sides") === 2) // both docs had non-empty sets
       .withColumn("inter",
         size(array_intersect(col("set_a"), col("set_b"))))
       .withColumn("jaccard", col("inter") /
@@ -762,46 +617,45 @@ object Dedupe {
           .cast("double"))
       .filter(col("jaccard") >= lit(minJaccard))
       .select("doc_a", "doc_b", "jaccard")
+
+  /** Verified near-duplicate pairs (doc_a < doc_b, jaccard ≥
+    * `minJaccard`) of `docs`, from its signature frame `sig`
+    * ([[minhashWide]] with `withCount = true`): LSH bucket candidates
+    * with the size-ratio prune at `minJaccard`
+    * ([[minhashCandidatePairs]]), then [[verifyJaccardOneJoin]].
+    *
+    * Plan shape: the signature scan has ONE consumer (the bucket
+    * grouping — no banded self-join), and the tiny candidate pair list
+    * is eagerly persisted: its two consumers in the verify (candidate-
+    * doc broadcast, role explode) are concurrent AQE stages that would
+    * otherwise each re-run the signature scan. The verified pairs are
+    * lazy and distinct. `sig` comes in rather than being signed here so
+    * a caller that also writes it ([[SignatureStore.build]]) shares one
+    * persisted frame.
+    */
+  def nearDupPairs(sig: DataFrame, docs: DataFrame, idCol: String,
+      textCol: String, shingleK: Int, numHashes: Int, rowsPerBand: Int,
+      minJaccard: Double, caches: CacheHandle = CacheHandle.session)
+      : DataFrame = {
+    val cand = CacheHandle.eager(caches.track(
+      minhashCandidatePairs(sig, numHashes, rowsPerBand,
+        minSizeRatio = minJaccard).persist()))
+    verifyJaccardOneJoin(cand, docs, idCol, textCol, shingleK, minJaccard)
   }
 
-  /** Exact Jaccard from precomputed shingle rows (persist `sh` — it is
-    * read three times: both intersection sides and the size table).
+  /** Near-duplicate clusters of `docs`: [[connectedComponents]] over
+    * [[nearDupPairs]] — (node, label) for every document in a verified
+    * pair, label = its cluster's smallest doc id. The verified pairs
+    * are not persisted: the components' edge doubling is one explode
+    * scan, so the verify pipeline has exactly ONE consumer.
     */
-  def verifyJaccardShingled(candidates: DataFrame, sh: DataFrame,
-      minJaccard: Double): DataFrame = {
-    val sizes = sh.groupBy("doc").agg(count(lit(1)).as("sz"))
-    val inter = candidates.select("doc_a", "doc_b")
-      .join(sh.select(col("doc").as("doc_a"), col("shingle")), "doc_a")
-      .join(sh.select(col("doc").as("doc_b"), col("shingle")),
-        Seq("doc_b", "shingle"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc").as("doc_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sizes.select(col("doc").as("doc_b"), col("sz").as("sz_b")), "doc_b")
-      .withColumn("jaccard",
-        col("inter") / (col("sz_a") + col("sz_b") - col("inter"))
-          .cast("double"))
-      .filter(col("jaccard") >= lit(minJaccard))
-      .select("doc_a", "doc_b", "jaccard")
-  }
-
-  /** Exact n-gram Jaccard for all pairs sharing at least one shingle.
-    * Only safe on small blocks (quadratic in block size); at corpus
-    * scale use minhashCandidates + verifyJaccard.
-    */
-  def ngramJaccard(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int, minJaccard: Double,
-      caches: CacheHandle = CacheHandle.session): DataFrame = {
-    // eager: the self-join + verifyJaccardShingled consume this frame
-    // through concurrent AQE stages (CacheHandle.eager)
-    val sh = CacheHandle.eager(caches.track(
-      shingleRows(docs, idCol, textCol, shingleK).persist()))
-    val pairs = sh.select(col("doc").as("doc_a"), col("shingle"))
-      .join(sh.select(col("doc").as("doc_b"), col("shingle")), Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    verifyJaccardShingled(pairs, sh, minJaccard)
-  }
+  def nearDupComponents(sig: DataFrame, docs: DataFrame, idCol: String,
+      textCol: String, shingleK: Int, numHashes: Int, rowsPerBand: Int,
+      minJaccard: Double, caches: CacheHandle = CacheHandle.session)
+      : DataFrame =
+    connectedComponents(nearDupPairs(sig, docs, idCol, textCol, shingleK,
+      numHashes, rowsPerBand, minJaccard, caches), "doc_a", "doc_b",
+      distinctEdges = true)
 
   /** Driver-heap working budget for the local union-find paths
     * ([[connectedComponents]], [[incrementalComponentsWithDelta]]):
@@ -1542,63 +1396,9 @@ object Dedupe {
     * runs twice (detection + candidate scan) — at 0.03 µs/window it is
     * ~100× cheaper than shuffling the windows it avoids.
     */
-  /** Duplicated-value detection over a single LONG column, shuffle+
-    * sort form: repartition the raw 8-byte keys by value, radix-sort
-    * each reduce partition, one linear run-length scan emits each
-    * duplicated value once. Same result set as
-    * `groupBy(h).count().filter(_ > 1)`, different cost model: the
-    * hash-agg form builds (and, at ~all-unique cardinality, SPILLS) a
-    * key+count map on BOTH sides of the exchange; this form shuffles
-    * the same bytes and replaces both maps with an in-memory
-    * per-partition long sort. MEASURED OUTCOME (SCALING.md r14): the
-    * hash agg wins at 100× anyway — this path's typed mapPartitions
-    * hop pays per-row object ser/deser outside whole-stage codegen,
-    * ~2.5× the cost of the agg map it avoids. Kept as the documented
-    * negative result and the equality cross-check for the spec.
-    */
-  private[graft] def duplicatedLongsSorted(hashes: DataFrame,
-      colName: String): DataFrame = {
-    import hashes.sparkSession.implicits._
-    hashes.select(col(colName).cast("long"))
-      .repartition(col(colName))
-      .sortWithinPartitions(col(colName))
-      .as[Long]
-      .mapPartitions { it =>
-        new Iterator[Long] {
-          private var pending: java.lang.Long = null
-          private var prev: Long = 0L
-          private var havePrev = false
-          private def advance(): Unit = {
-            while (pending == null && it.hasNext) {
-              val v = it.next()
-              if (havePrev && v == prev) {
-                pending = v
-                // swallow the rest of the run (value emits ONCE); the
-                // first differing element seeds the next comparison —
-                // it may itself start a new run
-                havePrev = false
-                var inRun = true
-                while (inRun && it.hasNext) {
-                  val w = it.next()
-                  if (w != v) { prev = w; havePrev = true; inRun = false }
-                }
-              } else { prev = v; havePrev = true }
-            }
-          }
-          override def hasNext: Boolean = { advance(); pending != null }
-          override def next(): Long = {
-            advance()
-            val v = pending; pending = null; v
-          }
-        }
-      }
-      .toDF(colName)
-  }
-
   def exactSubstrDedup(docs: DataFrame, idCol: String, textCol: String,
       gramLen: Int, prefilterFpp: Double = 0.01,
-      caches: CacheHandle = CacheHandle.session,
-      sortedDetection: Boolean = false): DataFrame = {
+      caches: CacheHandle = CacheHandle.session): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val d = docs.filter(col(textCol).isNotNull)
       .select(col(idCol), col(textCol))
@@ -1607,18 +1407,14 @@ object Dedupe {
           ColumnBridge.expression(col(textCol)), gramLen))))
       .select(col(idCol), (col("pos") + 1).cast("int").as("__p"),
         col("col").as("__h"))
-    // pass 1: duplicated hash VALUES (count > 1), key-only. Strategy
-    // was A/B-measured (SCALING.md round 14) and the hash aggregation
-    // WON at 100x: the sorted run-length scan shuffles the same bytes
-    // but pays a typed mapPartitions hop (per-row object ser/deser
-    // outside whole-stage codegen) that costs ~2.5x more than the agg
-    // map it avoids (62s vs 155s quiet at sf10). Kept selectable as
-    // the measured negative result.
-    val dupRaw =
-      if (sortedDetection) duplicatedLongsSorted(grams.select("__h"), "__h")
-      else grams.groupBy(col("__h"))
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-    val dup = caches.track(dupRaw.select("__h").persist())
+    // pass 1: duplicated hash VALUES (count > 1), key-only. A
+    // repartition + sort run-length scan shuffles the same bytes but
+    // pays a typed mapPartitions hop (per-row object ser/deser outside
+    // whole-stage codegen): measured 155s against this aggregation's
+    // 62s quiet at sf10 (SCALING.md round 14)
+    val dup = caches.track(grams.groupBy(col("__h"))
+      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
+      .select("__h").persist())
     val nDup = dup.count() // sizes the Bloom; materializes the persist
     val bloom = d.sparkSession.sparkContext.broadcast(
       dup.stat.bloomFilter("__h", math.max(1L, nDup), prefilterFpp))

@@ -197,13 +197,8 @@ object SignatureStore {
         packBands(Dedupe.bandRowsOf(sig, numHashes, rowsPerBand)),
         bandsRoot(root))
     }
-    val cand = CacheHandle.eager(caches.track(
-      Dedupe.minhashCandidatePairs(sig, numHashes, rowsPerBand,
-        minSizeRatio = minJaccard).persist()))
-    val pairs = Dedupe.verifyJaccardOneJoin(cand, corpus, idCol, textCol,
-      shingleK, minJaccard)
-    val labels = Dedupe.connectedComponents(pairs, "doc_a", "doc_b",
-      distinctEdges = true)
+    val labels = Dedupe.nearDupComponents(sig, corpus, idCol, textCol,
+      shingleK, numHashes, rowsPerBand, minJaccard, caches)
     // single base segment — nightly label deltas fold over it
     SegmentedTable.commitFull(pack(labels), labelsRoot(root))
     Await.result(Future.sequence(Seq(sigWrite, bandWrite)), Duration.Inf)

@@ -76,33 +76,25 @@ object DedupeQueries extends QueryPack {
   val q25 = Q("q25_ngram_jaccard",
     (s, dir) => {
       val docs = Tables(s, dir, "documents")
-      // Plan shape (r10): the corpus-scale stage is ONE narrow map —
-      // the codegen'd per-row MinHashSigExpr loop (no shingle explode,
-      // no signature shuffle) — feeding bucket-grouped candidate
-      // generation (minhashCandidatePairs: ONE consumer of the
-      // signature scan, no banded self-join, so the only cached state
-      // is the tiny pair list); exact verification re-shingles only
-      // the candidate DOCUMENTS pulled from the base table and joins
-      // the per-doc set frame ONCE (verifyJaccardOneJoin's pair
-      // explode + regroup), so no frame in the plan needs a second
-      // consumer and the whole verify is one job. The pair list is
-      // eagerly persisted — its two consumers (candidate-doc
-      // broadcast, role explode) are concurrent AQE stages that would
-      // otherwise each re-run the signature scan. Measured at sf0.1
-      // (5,000 docs): ~2.1s steady vs ~2.8s for the r8/r9
-      // self-join + two-join-verify form.
-      // withCount + minSizeRatio: the signature pass emits each doc's
-      // distinct-shingle count for free, and pairs whose count ratio
-      // is below minJaccard are pruned in-row (J ≤ min/max — they
-      // cannot pass the verify threshold), so the exact verify never
-      // builds shingle sets for provably-hopeless candidates
+      // Plan shape (Dedupe.nearDupPairs): the corpus-scale stage is
+      // ONE narrow map — the codegen'd per-row MinHashSigExpr loop (no
+      // shingle explode, no signature shuffle) — feeding bucket-grouped
+      // candidate generation (ONE consumer of the signature scan, no
+      // banded self-join, so the only cached state is the tiny,
+      // eagerly persisted pair list); exact verification re-shingles
+      // only the candidate DOCUMENTS pulled from the base table and
+      // joins the per-doc set frame ONCE (verifyJaccardOneJoin), so the
+      // whole verify is one job. Measured at sf0.1 (5,000 docs): ~2.1s
+      // steady vs ~2.8s for the r8/r9 self-join + two-join-verify form.
+      // withCount: the signature pass emits each doc's distinct-shingle
+      // count for free, and pairs whose count ratio is below minJaccard
+      // are pruned in-row (J ≤ min/max — they cannot pass the verify
+      // threshold), so the exact verify never builds shingle sets for
+      // provably-hopeless candidates
       val sig = Dedupe.minhashWide(docs, "doc_id", "text", 3, 16,
         withCount = true)
-      val cand = CacheHandle.eager(CacheHandle.session.track(
-        Dedupe.minhashCandidatePairs(sig, 16, 4, minSizeRatio = 0.5)
-          .persist()))
-      Dedupe.verifyJaccardOneJoin(cand, docs, "doc_id", "text",
-        shingleK = 3, minJaccard = 0.5)
+      Dedupe.nearDupPairs(sig, docs, "doc_id", "text", shingleK = 3,
+        numHashes = 16, rowsPerBand = 4, minJaccard = 0.5)
     },
     Some("""
       WITH w AS (SELECT doc_id,
@@ -205,22 +197,15 @@ object DedupeQueries extends QueryPack {
   val q59 = Q("q59_dedup_clusters",
     (s, dir) => {
       val docs = Tables(s, dir, "documents")
-      // r10 pipeline: bucket-grouped candidates (one consumer of the
-      // signature scan) + one-join verify — see q25's plan-shape note.
+      // Dedupe.nearDupComponents: q25's pairs (see its plan-shape
+      // note) into connected components. The verified pairs are not
+      // persisted: the components' edge doubling is a single explode
+      // scan, so the verify pipeline has exactly ONE consumer — one job
+      // materializes verify + components.
       val sig = Dedupe.minhashWide(docs, "doc_id", "text", 3, 16,
         withCount = true)
-      val cand = CacheHandle.eager(CacheHandle.session.track(
-        Dedupe.minhashCandidatePairs(sig, 16, 4, minSizeRatio = 0.5)
-          .persist()))
-      // no persist on the verified pairs: connectedComponents' edge
-      // doubling is a single explode scan (r9 rewrite) and its doubled
-      // frame is persisted internally, so the verify pipeline has
-      // exactly ONE consumer — the round-0 probe materializes
-      // verify + doubling + init in ONE job.
-      val pairs = Dedupe.verifyJaccardOneJoin(
-        cand, docs, "doc_id", "text", shingleK = 3, minJaccard = 0.5)
-      val labels = Dedupe.connectedComponents(pairs, "doc_a", "doc_b",
-        distinctEdges = true)
+      val labels = Dedupe.nearDupComponents(sig, docs, "doc_id", "text",
+        shingleK = 3, numHashes = 16, rowsPerBand = 4, minJaccard = 0.5)
       // cluster size as a window over the label partition: ONE exchange
       // and one read of the checkpointed labels, where the former
       // groupBy + join read it twice through two shuffles
@@ -637,13 +622,8 @@ object DedupeQueries extends QueryPack {
         .drop("__m")
       val sig = Dedupe.minhashWide(corpus, "doc_id", "text", 3, 16,
         withCount = true)
-      val cand = CacheHandle.eager(CacheHandle.session.track(
-        Dedupe.minhashCandidatePairs(sig, 16, 4, minSizeRatio = 0.5)
-          .persist()))
-      val labels = Dedupe.connectedComponents(
-        Dedupe.verifyJaccardOneJoin(cand, corpus, "doc_id", "text", 3,
-          0.5),
-        "doc_a", "doc_b", distinctEdges = true)
+      val labels = Dedupe.nearDupComponents(sig, corpus, "doc_id", "text",
+        3, 16, 4, 0.5)
       val contam = Dedupe.contamination(corpus, bench, "doc_id", "text",
           shingleK = 5, minOverlap = 0.5)
         .select(col("doc").as("doc_id")).distinct()
@@ -749,13 +729,8 @@ object DedupeQueries extends QueryPack {
         .filter(col("text").isNotNull)
       val sig = Dedupe.minhashWide(docs, "doc_id", "text", 3, 16,
         withCount = true)
-      val cand = CacheHandle.eager(CacheHandle.session.track(
-        Dedupe.minhashCandidatePairs(sig, 16, 4, minSizeRatio = 0.5)
-          .persist()))
-      val labels = Dedupe.connectedComponents(
-        Dedupe.verifyJaccardOneJoin(cand, docs, "doc_id", "text", 3,
-          0.5),
-        "doc_a", "doc_b", distinctEdges = true)
+      val labels = Dedupe.nearDupComponents(sig, docs, "doc_id", "text",
+        3, 16, 4, 0.5)
       // the lm score is a zero-shuffle projection over the SAME corpus
       // scan the id list came from — start from it directly instead of
       // equi-joining it onto a second scan (guide §2.4; the join was
@@ -834,13 +809,8 @@ object DedupeQueries extends QueryPack {
         .drop("__m")
       val sig = Dedupe.minhashWide(corpus, "doc_id", "text", 3, 16,
         withCount = true)
-      val cand = CacheHandle.eager(CacheHandle.session.track(
-        Dedupe.minhashCandidatePairs(sig, 16, 4, minSizeRatio = 0.5)
-          .persist()))
-      val labels = Dedupe.connectedComponents(
-        Dedupe.verifyJaccardOneJoin(cand, corpus, "doc_id", "text", 3,
-          0.5),
-        "doc_a", "doc_b", distinctEdges = true)
+      val labels = Dedupe.nearDupComponents(sig, corpus, "doc_id", "text",
+        3, 16, 4, 0.5)
       val contam = Dedupe.contamination(corpus, bench, "doc_id", "text",
           shingleK = 5, minOverlap = 0.5)
         .select(col("doc").as("doc_id")).distinct()

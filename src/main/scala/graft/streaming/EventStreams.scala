@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.operators.Dedupe
+
 /** Structured Streaming form of the incremental semantics (SURVEY.md
   * §2.8): the reference's dated ingestion windows + reingestion become
   * event-time tumbling windows with a watermark; the idempotent-merge
@@ -158,20 +160,13 @@ object EventStreams {
       : Dataset[CandPair] = {
     import docs.sparkSession.implicits._
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    val nBands = numHashes / rowsPerBand
-    val banded = docs.select(col(idCol).cast("long").as("doc"),
+    val signed = docs.select(col(idCol).cast("long").as("doc"),
         ColumnBridge.column(graft.functions.MinHashSigExpr(
           ColumnBridge.expression(
             graft.operators.TextAnalysis.capDoc(col(textCol))),
           shingleK, numHashes)).as("sig"))
       .filter(size(col("sig")) > 0)
-      .withColumn("band", explode(sequence(lit(0), lit(nBands - 1))))
-      .withColumn("band_sig", array_join(
-        transform(
-          slice(col("sig"), col("band") * rowsPerBand + 1,
-            lit(rowsPerBand)),
-          x => x.cast("string")),
-        "|"))
+    val banded = Dedupe.withBands(signed, numHashes, rowsPerBand)
       .select(col("band"), col("band_sig"), col("doc")).as[BandedDoc]
     banded.groupByKey(b => (b.band, b.band_sig))
       .flatMapGroupsWithState[Seq[Long], CandPair](
@@ -217,8 +212,7 @@ object EventStreams {
       watermarkDelay: String = "0 seconds"): Dataset[CandPair] = {
     import docs.sparkSession.implicits._
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    val nBands = numHashes / rowsPerBand
-    val banded = docs
+    val signed = docs
       .withWatermark(tsCol, watermarkDelay)
       // plain alias only: a cast would mint a NEW attribute without the
       // watermark metadata and EventTimeTimeout then fails analysis
@@ -229,13 +223,7 @@ object EventStreams {
             graft.operators.TextAnalysis.capDoc(col(textCol))),
           shingleK, numHashes)).as("sig"))
       .filter(size(col("sig")) > 0)
-      .withColumn("band", explode(sequence(lit(0), lit(nBands - 1))))
-      .withColumn("band_sig", array_join(
-        transform(
-          slice(col("sig"), col("band") * rowsPerBand + 1,
-            lit(rowsPerBand)),
-          x => x.cast("string")),
-        "|"))
+    val banded = Dedupe.withBands(signed, numHashes, rowsPerBand)
       .select(col("band"), col("band_sig"), col("doc"), col("ts"))
       .as[BandedDocT]
     // state: (doc id, newest event-time ms) per member still in horizon

@@ -10,7 +10,8 @@ import graft.inat.Inat
   */
 class InatSpec extends SparkSpec {
 
-  val fixtures = "/root/reference/catalog/tests/s3-data/inaturalist-open-data"
+  val fixtures =
+    s"${ReferenceFixtures.root}/catalog/tests/s3-data/inaturalist-open-data"
 
   lazy val photos = Inat.readTable(spark, s"$fixtures/photos.csv.gz")
   lazy val observations = Inat.readTable(spark, s"$fixtures/observations.csv.gz")

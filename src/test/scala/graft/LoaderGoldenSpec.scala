@@ -13,7 +13,8 @@ import graft.sources.Tsv
   */
 class LoaderGoldenSpec extends SparkSpec {
 
-  val res = "/root/reference/catalog/tests/dags/common/loader/test_resources"
+  val res =
+    s"${ReferenceFixtures.root}/catalog/tests/dags/common/loader/test_resources"
   val required = Seq("foreign_identifier", "foreign_landing_url", "url",
     "license_", "license_version")
 

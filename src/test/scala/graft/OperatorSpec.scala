@@ -625,9 +625,9 @@ class OperatorSpec extends SparkSpec {
     val caches = CacheHandle()
     val sig = Dedupe.minhashWide(docs, "doc_id", "text", 3, 16)
     val cand = Dedupe.minhashCandidates(sig, 16, 4, caches)
-    val verified = Dedupe.verifyJaccardBySets(cand, docs, "doc_id", "text",
-      3, 0.5, caches = caches)
-    verified.count()   // materialize: both internal persists are now live
+    val verified = Dedupe.verifyJaccardOneJoin(cand, docs, "doc_id", "text",
+      3, 0.5)
+    verified.count()   // materialize: the internal persist is now live
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.nonEmpty)
     caches.release()
@@ -1037,9 +1037,14 @@ class OperatorSpec extends SparkSpec {
     val docs = Seq(
       (1L, "a b c d e"),                       // shingles: abc bcd cde
       (2L, "a b c d x")).toDF("doc_id", "text") // shingles: abc bcd cdx
-    val got = Dedupe.ngramJaccard(docs, "doc_id", "text", 3, 0.0)
-      .as[(Long, Long, Double)].collect().toSeq
-    assert(got == Seq((1L, 2L, 2.0 / 4.0)))    // |∩|=2, |∪|=4
+    val cand = Seq((1L, 2L)).toDF("doc_a", "doc_b")
+    for (verify <- Seq(Dedupe.verifyJaccardOneJoin _,
+        Dedupe.verifyJaccardInline _)) {
+      val got = verify(cand, docs, "doc_id", "text", 3, 0.0,
+          TextAnalysis.defaultMaxDocChars)
+        .as[(Long, Long, Double)].collect().toSeq
+      assert(got == Seq((1L, 2L, 2.0 / 4.0)))  // |∩|=2, |∪|=4
+    }
   }
 
   test("simhash: identical docs share hash, format is 16 hex chars") {

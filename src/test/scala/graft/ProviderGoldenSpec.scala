@@ -14,8 +14,8 @@ import graft.ingest.ProviderExtract
 class ProviderGoldenSpec extends SparkSpec {
   import spark.implicits._
 
-  private val res =
-    "/root/reference/catalog/tests/dags/providers/provider_api_scripts/resources"
+  private val res = s"${ReferenceFixtures.root}/catalog/tests/dags/" +
+    "providers/provider_api_scripts/resources"
 
   private def fixture(rel: String): String =
     new String(Files.readAllBytes(Paths.get(s"$res/$rel")), "UTF-8")

@@ -99,37 +99,4 @@ class SubstrDedupSpec extends SparkSpec {
     // doc 3 untouched
     assert(out(2)._3 == 0)
   }
-
-  test("sorted duplicate detection equals the hash-agg form") {
-    import spark.implicits._
-    import graft.operators.Dedupe
-    // adjacent runs ([1,1,2,2]), runs of length > 2, singletons between
-    // runs — the shapes the run-length scan must not lose
-    val vals = Seq(1L, 1L, 2L, 2L, 2L, 3L, 4L, 4L, 5L,
-      Long.MinValue, Long.MinValue, Long.MaxValue, 7L, 7L, 8L)
-    val df = vals.toDF("__h")
-    val sorted = Dedupe.duplicatedLongsSorted(df, "__h")
-      .as[Long].collect().toSet
-    val agg = df.groupBy("__h").count().filter(col("count") > 1)
-      .select("__h").as[Long].collect().toSet
-    assert(sorted == agg)
-    assert(sorted == Set(1L, 2L, 4L, Long.MinValue, 7L))
-    // randomized cross-check at a few thousand values (deterministic
-    // seed), then the full operator: both detection strategies must
-    // produce byte-identical dedup output on the corpus
-    val rnd = new scala.util.Random(42)
-    val big = Seq.fill(5000)(rnd.nextInt(2000).toLong).toDF("__h")
-    val s2 = Dedupe.duplicatedLongsSorted(big, "__h")
-      .as[Long].collect().toSet
-    val a2 = big.groupBy("__h").count().filter(col("count") > 1)
-      .select("__h").as[Long].collect().toSet
-    assert(s2 == a2)
-    val docs = Tables(spark, sfDir, "documents")
-    val viaSort = Dedupe.exactSubstrDedup(docs, "doc_id", "text", 40,
-      sortedDetection = true)
-    val viaAgg = Dedupe.exactSubstrDedup(docs, "doc_id", "text", 40,
-      sortedDetection = false)
-    assert(viaSort.exceptAll(viaAgg).isEmpty &&
-      viaAgg.exceptAll(viaSort).isEmpty)
-  }
 }
