@@ -241,8 +241,7 @@ object Dedupe {
     * signature's trailing element; band slices never read it).
     */
   def minhashCandidatePairs(sigWide: DataFrame, numHashes: Int,
-      rowsPerBand: Int, dedup: Boolean = true,
-      minSizeRatio: Double = 0.0): DataFrame = {
+      rowsPerBand: Int, minSizeRatio: Double = 0.0): DataFrame = {
     val cnt =
       if (minSizeRatio > 0) element_at(col("sig"), numHashes + 1)
       else lit(0L)
@@ -252,14 +251,11 @@ object Dedupe {
       .agg(sort_array(collect_list(struct(col("doc"), col("cnt"))))
         .as("ds"))
       .filter(size(col("ds")) > 1)
-    // A pair sharing several bands appears once per band; `dedup =
-    // false` skips the DISTINCT exchange for consumers that collapse
-    // duplicates anyway (NOT verifyJaccardOneJoin — its regroup counts
-    // rows, see its scaladoc). The size-ratio prune runs inside the
-    // pair emitter, so hopeless pairs never even reach the dedup
-    // exchange.
-    val pairs = bucketPairs(buckets, sizeRatioKeeps(minSizeRatio))
-    if (dedup) pairs.distinct() else pairs
+    // A pair sharing several bands appears once per band, so the pairs
+    // are made distinct (verifyJaccardOneJoin's regroup counts rows,
+    // see its scaladoc). The size-ratio prune runs inside the pair
+    // emitter, so hopeless pairs never even reach the dedup exchange.
+    bucketPairs(buckets, sizeRatioKeeps(minSizeRatio)).distinct()
   }
 
   /** The in-row i<j combinations of each bucket's sorted `ds` array

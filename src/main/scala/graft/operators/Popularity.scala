@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.PercentileDiscAgg
-import graft.sources.Parquet
 
 /** Per-provider percentile-based popularity scoring.
   *
@@ -93,36 +92,13 @@ object Popularity {
     MergeUpsert.merge(current, incoming, Seq("provider"))
 
   /** The "data refresh" job (SURVEY.md §3.3): recompute the constants
-    * dimension and the scored snapshot, write both as parquet — the
-    * engine's replacement for the reference's matview refresh
-    * (popularity/sql.py:249-283, 385-421; production budget: 6 h for
-    * constants, up to 21 DAYS for the matview — here it is one
-    * broadcast-join pass over the fact table).
+    * dimension and the scored snapshot — the engine's replacement for
+    * the reference's matview refresh (popularity/sql.py:249-283,
+    * 385-421; production budget: 6 h for constants, up to 21 DAYS for
+    * the matview — here it is one broadcast-join pass over the fact
+    * table).
     *
-    * The snapshot overwrite is the "refresh"; readers swap atomically at
-    * the directory level (on a lakehouse format this is a transactional
-    * table overwrite).
-    */
-  def refreshViews(facts: DataFrame, keys: Seq[String], valueCol: String,
-      p: Double, outDir: String): Map[String, Any] = {
-    val constsDir = s"$outDir/popularity_constants"
-    constants(facts, keys, valueCol, p).coalesce(1).write.mode("overwrite")
-      .parquet(constsDir)
-    // score against the WRITTEN constants, read back, as
-    // refreshViewsVersioned does: the view costs one pass over the facts
-    // instead of recomputing the percentiles
-    val consts = Parquet.read(facts.sparkSession, constsDir)
-    // A13 — run metrics ride the job itself via observe() (no second
-    // pass over the data), the Spark-native accumulator surface
-    val obs = org.apache.spark.sql.Observation("popularity_refresh")
-    score(facts, consts, keys, valueCol)
-      .observe(obs, count(lit(1)).as("rows_scored"),
-        sum(when(col("score").isNull, 1L).otherwise(0L)).as("null_scores"))
-      .write.mode("overwrite").parquet(s"$outDir/media_view")
-    obs.get
-  }
-
-  /** The refresh as a TRANSACTION: constants and scored snapshot commit
+    * The refresh is a TRANSACTION: constants and scored snapshot commit
     * as versioned tables (graft.sources.VersionedTable), so a reader
     * mid-scan keeps its resolved version while the pointer flips — the
     * lake equivalent of the reference's `REFRESH MATERIALIZED VIEW

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Commit
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
   *
@@ -388,8 +390,7 @@ object Similarity {
     */
   def appendToIvfIndex(batch: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, path: String): Unit =
-    graft.sources.VersionedTable.withWriterLock(batch.sparkSession,
-        path) {
+    Commit.withWriterLock(batch.sparkSession, path) {
       // resolve INSIDE the writer lock: compaction flips the version
       // pointer under the same lock, so an append can never land its
       // cells in a root that was retired mid-write
@@ -404,62 +405,15 @@ object Similarity {
     * that has never been compacted (the layout [[writeIvfIndex]] and
     * plain appends produce). Every reader and writer of a maintained
     * index goes through this — it is what makes compaction's
-    * copy-then-single-rename version flip atomic for readers.
-    *
-    * The pointer file is replaced atomically (NIO ATOMIC_MOVE on a
-    * local filesystem); on a store whose rename cannot replace, a
-    * reader hitting the sub-millisecond delete+rename window retries,
-    * then falls back to the highest version directory present — it
-    * never silently reads a retired layout.
+    * copy-then-swing version flip atomic for readers: the pointer is
+    * replaced by [[Commit.swing]], so once written it is never missing.
     */
   def currentIvfRoot(spark: org.apache.spark.sql.SparkSession,
       path: String): String = {
     import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(root, "_CURRENT")
-    def readMarker(): Option[String] =
-      if (!fs.exists(cur)) None
-      else {
-        val in = fs.open(cur)
-        val v = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim finally in.close()
-        if (v.isEmpty) None else Some(v)
-      }
-    def rootListing() =
-      if (!fs.exists(root)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(root)
-    readMarker() match {
-      case Some(v) => new Path(root, v).toString
-      case None =>
-        // No marker. A version directory may exist MID-BUILD (the
-        // packed write creates it long before the flip), so its mere
-        // presence proves nothing — the live layout is the root for as
-        // long as the root still has cell directories (never-compacted
-        // index, or first compaction still building). Only when the
-        // root's cells are gone (retired => a flip definitely
-        // happened) does the highest version win; that path is only
-        // reachable inside a non-atomic store's sub-ms delete+rename
-        // window, so retry the marker first.
-        var tries = 0
-        while (tries < 3) {
-          val ls = rootListing()
-          val hasRootCells = ls.exists(s =>
-            s.isDirectory && s.getPath.getName.startsWith("cell_id="))
-          val vd = ls.toSeq.filter(s => s.isDirectory &&
-            s.getPath.getName.matches("_v\\d+")).map(_.getPath.getName)
-          if (hasRootCells || vd.isEmpty) return path
-          readMarker() match {
-            case Some(v) => return new Path(root, v).toString
-            case None =>
-              if (tries == 2)
-                return new Path(root,
-                  vd.maxBy(_.drop(2).toLong)).toString
-              Thread.sleep(50L); tries += 1
-          }
-        }
-        path
-    }
+    Commit.read(Commit.fs(spark, path), new Path(path, "_CURRENT"))
+      .map(_.trim).filter(_.nonEmpty)
+      .fold(path)(v => new Path(path, v).toString)
   }
 
   /** Read a maintained IVF index at its current version — the reader
@@ -478,7 +432,7 @@ object Similarity {
     * default every cell holding more than one data file — the residue
     * [[appendToIvfIndex]] leaves, one file per append per cell) is
     * re-read and rewritten as ceil(rows / targetRowsPerFile) packed
-    * files, swapped in with a rename pair under the index's writer
+    * files, installed by one pointer swing under the index's writer
     * lock. Untouched cells are never read or written — cost scales
     * with the fragmented fraction, not the index.
     *
@@ -487,17 +441,18 @@ object Similarity {
     * compaction a year of nightly appends makes every probed cell a
     * 365-file listing whose tiny files each cost a task.
     *
-    * Visibility — copy-then-single-rename (lakehouse snapshot
+    * Visibility — copy-then-swing (lakehouse snapshot
     * semantics, no torn reads ever): the packed cells are written into
     * a NEW version directory (`_v<n>`, underscore-hidden from naive
     * listings), untouched cells are hard-linked (local FS; copied
-    * elsewhere) into it, and ONE atomic pointer replace (`_CURRENT`)
-    * flips readers to the new snapshot. Nothing a reader could have
-    * planned is renamed or deleted: a query planning mid-compaction
-    * reads the previous version whole; a query planned before the flip
-    * keeps its file list valid because retired versions are deleted
-    * only when they become GRAND-previous (the next compaction) — at
-    * any nightly cadence that is hours of read grace. This is the
+    * elsewhere — [[Commit.linkOrCopy]]) into it, and ONE atomic
+    * pointer replace of `_CURRENT` ([[Commit.swing]]) flips readers to
+    * the new snapshot. Nothing a reader could have planned is renamed
+    * or deleted: a query planning mid-compaction reads the previous
+    * version whole; a query planned before the flip keeps its file
+    * list valid because retired versions are deleted only when they
+    * become GRAND-previous (the next compaction) — at any nightly
+    * cadence that is hours of read grace. This is the
     * same install-aside-flip-pointer discipline as [[SegmentedTable]]'s
     * manifest commit and the reference's ES alias promote
     * (`data_refresh_task_factory.py:183-240`); on an object store the
@@ -507,18 +462,15 @@ object Similarity {
       path: String, cells: Seq[String] = Seq.empty,
       targetRowsPerFile: Long = 500000L): Unit = {
     import org.apache.hadoop.fs.Path
-    graft.sources.VersionedTable.withWriterLock(spark, path) {
+    Commit.withWriterLock(spark, path) {
       val root = new Path(path)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = Commit.fs(spark, path)
       // a prior crashed PRE-VERSIONING compaction may have left a cell
       // stashed-but-not-reinstalled; heal before listing or the cell
       // is invisible
       recoverIvfCompaction(spark, path)
       val dataRoot = new Path(currentIvfRoot(spark, path))
-      val curVersion = dataRoot.getName match {
-        case n if n.matches("_v\\d+") => n.drop(2).toLong
-        case _ => 0L
-      }
+      val curVersion = Commit.numberOf(dataRoot.getName, "_v").getOrElse(0L)
       val cellDirs = fs.listStatus(dataRoot).toSeq
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell_id="))
         .map(_.getPath)
@@ -581,56 +533,26 @@ object Similarity {
             fs.listStatus(src).toSeq.map(_.getPath)
               .filter(f => !f.getName.startsWith(".") &&
                 !f.getName.startsWith("_"))
-              .foreach { f =>
-                val df = new Path(dst, f.getName)
-                val local = fs.isInstanceOf[
-                  org.apache.hadoop.fs.LocalFileSystem] ||
-                  fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-                if (local)
-                  java.nio.file.Files.createLink(
-                    java.nio.file.Paths.get(df.toUri.getPath),
-                    java.nio.file.Paths.get(f.toUri.getPath))
-                else
-                  org.apache.hadoop.fs.FileUtil.copy(fs, f, fs, df,
-                    false, spark.sparkContext.hadoopConfiguration)
-              }
+              .foreach(f =>
+                Commit.linkOrCopy(fs, f, new Path(dst, f.getName)))
           }
-        // THE single rename: flip the version pointer. Readers resolve
+        // THE single swing: flip the version pointer. Readers resolve
         // through currentIvfRoot, so the flip is the only visibility
         // event — before it they read the old snapshot whole, after it
         // the new one whole.
-        val tmpMarker = new Path(root,
-          s"._CURRENT.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-        val out = fs.create(tmpMarker, true)
-        out.write(newName.getBytes("UTF-8")); out.close()
-        val marker = new Path(root, "_CURRENT")
-        val localFs = fs.isInstanceOf[
-          org.apache.hadoop.fs.LocalFileSystem] ||
-          fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-        if (localFs)
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(tmpMarker.toUri.getPath),
-            java.nio.file.Paths.get(marker.toUri.getPath),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        else {
-          // non-atomic stores: sub-ms delete+rename window, covered by
-          // currentIvfRoot's retry-then-highest-version fallback
-          fs.delete(marker, false)
-          require(fs.rename(tmpMarker, marker),
-            s"compact: failed to install pointer $marker")
-        }
+        Commit.swing(fs, new Path(root, "_CURRENT"), newName)
         // retire GRAND-previous layouts only: the version we just
         // replaced stays on disk so any reader that planned against it
         // (or is mid-scan) keeps a valid file list until the NEXT
         // compaction — the versioned twin of SegmentedTable.vacuum's
         // staged-segment grace
         fs.listStatus(root).toSeq
-          .filter(s => s.isDirectory && (
-            (s.getPath.getName.matches("_v\\d+") &&
-              s.getPath.getName.drop(2).toLong < curVersion) ||
-            (curVersion >= 1 &&
-              s.getPath.getName.startsWith("cell_id="))))
+          .filter { s =>
+            val n = s.getPath.getName
+            s.isDirectory && (
+              Commit.numberOf(n, "_v").exists(_ < curVersion) ||
+              (curVersion >= 1 && n.startsWith("cell_id=")))
+          }
           .foreach(s => fs.delete(s.getPath, true))
       }
     }
@@ -652,7 +574,7 @@ object Similarity {
       path: String): Unit = {
     import org.apache.hadoop.fs.Path
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Commit.fs(spark, path)
     if (!fs.exists(root)) return
     fs.listStatus(root).toSeq
       .filter(s => s.isDirectory &&
@@ -694,10 +616,10 @@ object Similarity {
     require(tag.nonEmpty && !tag.contains("/"), s"bad tag: $tag")
     val spark = batch.sparkSession
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Commit.fs(spark, path)
     val marker = new Path(root, s"_batch_tags/$tag")
     if (fs.exists(marker)) return false
-    graft.sources.VersionedTable.withWriterLock(spark, path) {
+    Commit.withWriterLock(spark, path) {
       // resolve the data root INSIDE the lock (see appendToIvfIndex);
       // batch markers stay at the INDEX root so replay decisions
       // survive version flips
@@ -732,8 +654,7 @@ object Similarity {
             }
         }
       fs.delete(staged, true)
-      val out = fs.create(marker, false)
-      out.close()
+      Commit.create(fs, marker)
       true
     }
   }

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -22,13 +20,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   <root>/_LATEST_MANIFEST               text: committed manifest version
   * }}}
   *
-  * A commit stages the new segment directory, then creates a NEW
+  * A commit stages the new segment directory, then installs a NEW
   * manifest file listing all member directories (a few bytes per
-  * segment) with overwrite=false — that create IS the commit, and acts
-  * as a compare-and-swap between concurrent writers: the loser's create
-  * fails, it recomputes the member list from the winner's manifest and
-  * retries, so racing appends/compactions never drop each other's
-  * segments (the log-file commit discipline of lakehouse formats). The
+  * segment) only if no file has its name ([[Commit.publish]]) — that
+  * install IS the commit, and acts as a compare-and-swap between
+  * concurrent writers: the loser's install fails, it recomputes the
+  * member list from the winner's manifest and retries, so racing
+  * appends/compactions never drop each other's segments (the log-file
+  * commit discipline of lakehouse formats). The
   * `_LATEST_MANIFEST` pointer is a read fast-path rolled forward after
   * the commit; [[currentVersion]] takes the newest manifest as truth if
   * the pointer lags. A crashed writer leaves an orphan segment that no
@@ -49,22 +48,8 @@ object SegmentedTable {
 
   private val Pointer = "_LATEST_MANIFEST"
 
-  private def fs(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def manifestPath(root: String, v: Long): Path =
     new Path(root, f"_manifest-$v%08d")
-
-  private def readSmall(f: FileSystem, p: Path): String = {
-    val in = f.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-  }
 
   /** Committed manifest version, or None for a table with no manifest
     * (uninitialized, or a legacy [[VersionedTable]] layout — see
@@ -81,19 +66,25 @@ object SegmentedTable {
     * never hide a committed manifest: readers would report the table
     * uncommitted (exists/members/hasTag all false) and a streaming
     * replay guard would re-apply an already-committed batch.
+    *
+    * Both files are read through [[Commit.read]]: the pointer is swung
+    * atomically and a manifest is installed complete, so a reader racing
+    * a commit never finds either missing or partial.
     */
   def currentVersion(spark: SparkSession, root: String): Option[Long] = {
-    val f = fs(spark, root)
-    val p = new Path(root, Pointer)
+    val f = Commit.fs(spark, root)
     val newest = maxNumbered(f, root, "_manifest-")
-    val pointed = if (f.exists(p)) readSmall(f, p).trim.toLong else 0L
+    val pointed = Commit.read(f, new Path(root, Pointer))
+      .fold(0L)(_.trim.toLong)
     val v = math.max(newest, pointed)
     if (v == 0L) None else Some(v)
   }
 
   private def manifestLines(f: FileSystem, root: String,
       v: Long): Seq[String] =
-    readSmall(f, manifestPath(root, v))
+    Commit.read(f, manifestPath(root, v)).getOrElse(
+      throw new java.io.FileNotFoundException(
+        s"no manifest ${manifestPath(root, v)}"))
       .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
 
   /** Member segment directory NAMES of the committed (or as-of)
@@ -104,7 +95,8 @@ object SegmentedTable {
       asOfVersion: Option[Long] = None): Seq[String] = {
     val v = asOfVersion.orElse(currentVersion(spark, root)).getOrElse(
       throw new IllegalStateException(s"no committed manifest at $root"))
-    manifestLines(fs(spark, root), root, v).filterNot(_.startsWith("#"))
+    manifestLines(Commit.fs(spark, root), root, v)
+      .filterNot(_.startsWith("#"))
   }
 
   /** The tag carried by a segment directory name, if any. */
@@ -185,44 +177,24 @@ object SegmentedTable {
     }
   }
 
-  /** Parse the sequence number of a `<prefix>NNNNNNNN[-tag]` name —
-    * the digits immediately after the prefix (tagged segments carry a
-    * writer-supplied suffix; see [[appendSegment]]).
-    */
-  private def numberOf(name: String, prefix: String): Option[Long] =
-    if (!name.startsWith(prefix)) None
-    else {
-      val digits = name.stripPrefix(prefix).takeWhile(_.isDigit)
-      if (digits.isEmpty) None else scala.util.Try(digits.toLong).toOption
-    }
-
   private def maxNumbered(f: FileSystem, root: String,
-      prefix: String): Long = {
-    val rootPath = new Path(root)
-    if (!f.exists(rootPath)) 0L
-    else f.listStatus(rootPath).toSeq
-      .flatMap(s => numberOf(s.getPath.getName, prefix))
+      prefix: String): Long =
+    Commit.numbered(f, new Path(root), prefix).map(_._1)
       .foldLeft(0L)(math.max)
-  }
 
   /** Publish the manifest produced by `build` (from the prior committed
     * member list) as the next version, with optimistic concurrency:
-    * creating `_manifest-NNNNNNNN` with overwrite=false is the
-    * compare-and-swap — exactly one writer can create a given version,
-    * so a loser recomputes `prior` from the winner's manifest and
-    * retries, and NO committed segment is ever dropped by a concurrent
-    * append (the lost-update failure mode of read-members-then-write).
-    * The pointer file is rolled forward after the commit as a read
-    * fast-path; [[currentVersion]] treats the newest manifest as truth,
-    * so a crash between the two leaves a committed, readable version.
-    *
-    * The manifest is STAGED complete (temp file) and committed by a
-    * no-overwrite rename, so a crash mid-write can never leave a
-    * truncated member list as the committed truth; the rename's
-    * exclusivity is the CAS. Atomicity is the filesystem's: exact on
-    * HDFS-style stores, best-effort on the local filesystem — same
-    * contract log-based lakehouse formats document for their commit
-    * files.
+    * installing `_manifest-NNNNNNNN` only if it is absent
+    * ([[Commit.publish]]) is the compare-and-swap — exactly one writer
+    * can install a given version, so a loser recomputes `prior` from the
+    * winner's manifest and retries, and NO committed segment is ever
+    * dropped by a concurrent append (the lost-update failure mode of
+    * read-members-then-write). The manifest is staged complete before
+    * the install, so a crash mid-write can never leave a truncated
+    * member list as the committed truth. The pointer file is then
+    * swung forward ([[Commit.swing]]) as a read fast-path;
+    * [[currentVersion]] treats the newest manifest as truth, so a crash
+    * between the two leaves a committed, readable version.
     *
     * Durable tags: a tag rides its segment's directory name while the
     * segment is a member; when a successor manifest DROPS a tagged
@@ -233,11 +205,10 @@ object SegmentedTable {
     */
   private def publish(spark: SparkSession, root: String,
       build: Seq[String] => Seq[String]): Long = {
-    val f = fs(spark, root)
+    val f = Commit.fs(spark, root)
     var attempt = 0
     while (true) {
-      val cur = math.max(currentVersion(spark, root).getOrElse(0L),
-        maxNumbered(f, root, "_manifest-"))
+      val cur = currentVersion(spark, root).getOrElse(0L)
       val priorLines =
         if (cur == 0L) Seq.empty[String]
         else manifestLines(f, root, cur)
@@ -249,43 +220,11 @@ object SegmentedTable {
       val content = ((priorTagLines ++ droppedTagLines).distinct
         ++ nextMembers).mkString("\n")
       val next = cur + 1L
-      val mp = manifestPath(root, next)
-      val created =
-        try {
-          val tmp = new Path(root,
-            s".manifest-$next.tmp-${java.util.UUID.randomUUID()}")
-          val mout = f.create(tmp, true)
-          try mout.write(content.getBytes(StandardCharsets.UTF_8))
-          finally mout.close()
-          val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-            new Path(root).toUri, spark.sparkContext.hadoopConfiguration)
-          try { fc.rename(tmp, mp); true } // no OVERWRITE: the CAS
-          catch {
-            case e: Throwable =>
-              f.delete(tmp, false)
-              e match {
-                case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-                  false
-                case _: java.io.IOException if f.exists(mp) => false
-                case _ => throw e
-              }
-          }
-        } catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        }
-      if (created) {
+      if (Commit.publish(f, manifestPath(root, next), content)) {
         // roll the read fast-path forward; failure here is benign (the
         // manifest IS the commit, and the next publish heals the lag)
-        try {
-          val tmp = new Path(root, s".${Pointer}.tmp-$next")
-          val out = f.create(tmp, true)
-          try out.write(next.toString.getBytes(StandardCharsets.UTF_8))
-          finally out.close()
-          val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-            new Path(root).toUri, spark.sparkContext.hadoopConfiguration)
-          fc.rename(tmp, new Path(root, Pointer),
-            org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        } catch { case scala.util.control.NonFatal(_) => () }
+        try Commit.swing(f, new Path(root, Pointer), next.toString)
+        catch { case scala.util.control.NonFatal(_) => () }
         return next
       }
       attempt += 1
@@ -304,7 +243,7 @@ object SegmentedTable {
   private def stageSegment(df: DataFrame, root: String,
       tag: Option[String] = None): String = {
     val spark = df.sparkSession
-    val f = fs(spark, root)
+    val f = Commit.fs(spark, root)
     val n = maxNumbered(f, root, "_seg") + 1L
     val suffix = tag.map { t =>
       require(t.nonEmpty && t.forall(c => c.isLetterOrDigit || c == '_'),
@@ -324,7 +263,7 @@ object SegmentedTable {
     */
   def hasTag(spark: SparkSession, root: String, tag: String): Boolean =
     currentVersion(spark, root).exists { v =>
-      val lines = manifestLines(fs(spark, root), root, v)
+      val lines = manifestLines(Commit.fs(spark, root), root, v)
       lines.contains(s"#tag:$tag") ||
         lines.filterNot(_.startsWith("#"))
           .flatMap(tagOfMember).contains(tag)
@@ -417,7 +356,7 @@ object SegmentedTable {
   def vacuum(spark: SparkSession, root: String,
       keepManifests: Int = 2,
       graceMs: Long = 15L * 60L * 1000L): Unit = {
-    val f = fs(spark, root)
+    val f = Commit.fs(spark, root)
     currentVersion(spark, root).foreach { cur =>
       val keptVersions = (math.max(1L, cur - keepManifests + 1L) to cur)
       val live = keptVersions.flatMap(v =>
@@ -428,7 +367,7 @@ object SegmentedTable {
       // below the committed high-water mark that no kept manifest
       // references is dead ONLY once it has also been quiet for the
       // grace window (see scaladoc: staged segments can be undercut)
-      val maxLiveSeg = live.flatMap(n => numberOf(n, "_seg"))
+      val maxLiveSeg = live.flatMap(n => Commit.numberOf(n, "_seg"))
         .foldLeft(0L)(math.max)
       val deadline = System.currentTimeMillis() - graceMs
       f.listStatus(new Path(root)).toSeq.foreach { st =>
@@ -437,13 +376,12 @@ object SegmentedTable {
         val isDeadSegment = !live.contains(n) &&
           st.getModificationTime < deadline && (
           n.startsWith("_v") ||
-          numberOf(n, "_seg").exists(_ < maxLiveSeg))
+          Commit.numberOf(n, "_seg").exists(_ < maxLiveSeg))
         // only manifests strictly OLDER than the retention window are
         // dead: one numbered above `cur` is a concurrent writer's
         // commit racing this vacuum — deleting it would revoke a
         // committed version
-        val isDeadManifest = n.startsWith("_manifest-") && scala.util.Try(
-          n.stripPrefix("_manifest-").toLong).toOption
+        val isDeadManifest = Commit.numberOf(n, "_manifest-")
           .exists(v => v < keptVersions.head)
         if (isDeadSegment || isDeadManifest) f.delete(p, true)
       }

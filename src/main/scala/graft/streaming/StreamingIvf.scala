@@ -18,13 +18,16 @@ import graft.operators.Similarity
   *
   * Exactly-once: `foreachBatch` re-delivers a micro-batch after a
   * crash, so the append stages aside, moves files in under
-  * tag-suffixed names, and commits a `_batch_tags` marker LAST
-  * ([[Similarity.appendToIvfIndexTagged]]). A replayed batch whose
-  * marker exists skips itself; a replay after a crash mid-move scrubs
-  * its partial files first. Compaction is a pure rewrite (search
-  * results spec-identical), so a replayed or skipped compaction never
-  * affects correctness — a crash inside its rename window is healed
-  * by [[Similarity.recoverIvfCompaction]] at the next fold.
+  * tag-suffixed names, and creates a `_batch_tags` marker LAST
+  * ([[Similarity.appendToIvfIndexTagged]], an exclusive
+  * [[graft.sources.Commit.create]]). A replayed batch whose marker
+  * exists skips itself; a replay after a crash mid-move scrubs its
+  * partial files first. Compaction is a pure rewrite (search results
+  * spec-identical), so a replayed or skipped compaction never affects
+  * correctness — its crash residue (a staged pointer file, a
+  * half-built version directory, or a pre-versioning cell stash) is
+  * cleared by [[Similarity.recoverIvfCompaction]] or the next
+  * compaction.
   *
   * Scale: per micro-batch cost is O(batch) — one broadcast-centroid
   * argmin over the batch and one partitioned write of batch-sized
@@ -40,7 +43,7 @@ import graft.operators.Similarity
   * Read visibility under inline compaction: SAFE for concurrent query
   * traffic. `compactIvfCells` installs the packed cells as a NEW
   * version directory and flips the index's `_CURRENT` pointer with
-  * one atomic rename; readers resolve the pointer through
+  * one atomic swing ([[graft.sources.Commit.swing]]); readers resolve the pointer through
   * [[Similarity.readIvfIndex]], so a query planning mid-compaction
   * reads the previous snapshot whole, and a query already planned
   * keeps a valid file list because a retired version is deleted only

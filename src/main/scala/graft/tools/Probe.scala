@@ -219,7 +219,8 @@ object Probe {
     *  - `<outDir> <suffix> <query> [query ...]`: write each query's
     *    `explain("formatted")` text to `<outDir>/<query>_<suffix>.txt`,
     *    the before/after plan evidence an optimization round commits
-    *    under plans/rNN/.
+    *    under plans/rNN/. The text is [[stablePlan]]'s, so two runs of
+    *    one build write the same file.
     */
   private def plan(spark: SparkSession, sfDir: String,
       args: Seq[String]): Unit = args match {
@@ -239,15 +240,28 @@ object Probe {
         spark.catalog.clearCache()
         CheckpointBridge.releaseAllPersisted(spark)
         val df = SparkEntry.queries(q)(spark, sfDir)
-        // same string explain("formatted") prints
-        val txt = df.queryExecution.explainString(
-          ExplainMode.fromString("formatted"))
+        // the string explain("formatted") prints, run counters masked
+        val txt = stablePlan(df.queryExecution.explainString(
+          ExplainMode.fromString("formatted")))
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(outDir, s"${q}_$suffix.txt"), txt)
         println(s"wrote $outDir/${q}_$suffix.txt (${txt.length} chars)")
       }
     case _ => throw new IllegalArgumentException(usage)
   }
+
+  /** `plan` text with the numbers that move with the JVM's run order
+    * and with racing AQE stages — expression ids (`#N`), lambda
+    * variable ids (`lambda x_N`), `plan_id=N`, `[codegen id : N]` and
+    * query-stage ids (`Arguments: N`) — masked as `N`, so a plan diff
+    * shows only what changed in the plan.
+    */
+  private def stablePlan(txt: String): String =
+    txt.replaceAll("#\\d+", "#N")
+      .replaceAll("(lambda [A-Za-z]+)_\\d+", "$1_N")
+      .replaceAll("plan_id=\\d+", "plan_id=N")
+      .replaceAll("\\[codegen id : \\d+\\]", "[codegen id : N]")
+      .replaceAll("(?m)^Arguments: \\d+$", "Arguments: N")
 
   /** A/B probe for the decontamination plans: the fused Bloom-prefilter
     * form ([[Dedupe.contamination]], r13) against the exploded form

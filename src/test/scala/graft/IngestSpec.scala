@@ -129,14 +129,16 @@ class IngestSpec extends SparkSpec {
     assert(p7.getAs[Long]("global_usage") == 9L)           // ST7 max
   }
 
-  test("popularity refreshViews writes constants + scored snapshot") {
+  test("popularity refreshViewsVersioned writes constants + scored snapshot") {
+    import graft.sources.VersionedTable
     val dir = java.nio.file.Files.createTempDirectory("refresh").toString
     val e = Tables(spark, sfDir, "events")
-    val obs = Popularity.refreshViews(e, Seq("event_type"), "value", 0.85, dir)
+    val obs = Popularity.refreshViewsVersioned(e, Seq("event_type"), "value",
+      0.85, dir)
     assert(obs("rows_scored") == e.count())
     assert(obs("null_scores") == 0L)
-    val consts = spark.read.parquet(s"$dir/popularity_constants")
-    val view = spark.read.parquet(s"$dir/media_view")
+    val consts = VersionedTable.read(spark, s"$dir/popularity_constants")
+    val view = VersionedTable.read(spark, s"$dir/media_view")
     assert(consts.count() == 5)
     assert(view.count() == e.count())
     assert(view.filter(col("score") < 0 || col("score") > 1).count() == 0)

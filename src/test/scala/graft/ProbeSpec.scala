@@ -22,6 +22,16 @@ class ProbeSpec extends SparkSpec {
     assert(spark.range(3).count() == 3)
   }
 
+  test("Probe plan files are identical across two runs of one build") {
+    val dir = java.nio.file.Files.createTempDirectory("plans").toString
+    out("plan", sfDir, dir, "a", "q24_minhash_lsh")
+    out("plan", sfDir, dir, "b", "q24_minhash_lsh")
+    def text(suffix: String) = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(dir, s"q24_minhash_lsh_$suffix.txt"))
+    assert(text("a").contains("#N"), text("a"))
+    assert(text("a") == text("b"))
+  }
+
   test("an unknown probe name fails with a usage that lists every probe") {
     val e = intercept[IllegalArgumentException](Probe.run(spark, Seq("nope", sfDir)))
     Probe.registry.foreach { case (name, _) =>

@@ -13,7 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    which takes it from a footer instead;
   *  - the session configs carry the engine's semantics (UTC, ANSI off,
   *    `nanosAsLong`), so a session is built only by
-  *    [[graft.core.GraftSession]].
+  *    [[graft.core.GraftSession]];
+  *  - a store's commit steps (pointer swing, exclusive publish, writer
+  *    lock) are atomic only as [[graft.sources.Commit]] makes them, so
+  *    no other file renames over a target or builds a FileContext.
   * Each scan keeps a new hand-rolled call from coming back unnoticed.
   */
 class RawParquetReadSpec extends AnyFunSuite {
@@ -54,5 +57,11 @@ class RawParquetReadSpec extends AnyFunSuite {
     scan("""SparkSession\s*\.\s*builder\b""".r, Seq(main, test),
       main.resolve("graft/core/GraftSession.scala"),
       "hand-built sessions (use graft.core.GraftSession)")
+  }
+
+  test("no overwriting rename or FileContext in src/main/scala outside graft.sources.Commit") {
+    scan("""Rename\s*\.\s*OVERWRITE|ATOMIC_MOVE|FileContext\s*\.\s*getFileContext""".r,
+      Seq(main), main.resolve("graft/sources/Commit.scala"),
+      "hand-rolled commit steps (use graft.sources.Commit)")
   }
 }

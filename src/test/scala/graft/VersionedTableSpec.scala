@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.VersionedTable
+import graft.sources.{Commit, VersionedTable}
 
 /** The hand-rolled transactional table: linear versions, pointer-file
   * commit, MERGE-into, time travel, vacuum, crash invisibility.
@@ -58,24 +58,24 @@ class VersionedTableSpec extends SparkSpec {
   test("writer lock is single-flight and releases on completion") {
     val root = tmp()
     // a second writer inside the critical section fails fast
-    VersionedTable.withWriterLock(spark, root) {
+    Commit.withWriterLock(spark, root) {
       VersionedTable.commit(Seq((1, "a")).toDF("id", "x"), root)
       intercept[IllegalStateException] {
-        VersionedTable.withWriterLock(spark, root) { fail("must not run") }
+        Commit.withWriterLock(spark, root) { fail("must not run") }
       }
     }
     // lock released -> next writer proceeds
-    VersionedTable.withWriterLock(spark, root) {
+    Commit.withWriterLock(spark, root) {
       VersionedTable.commit(Seq((2, "b")).toDF("id", "x"), root)
     }
     assert(VersionedTable.currentVersion(spark, root) == Some(2L))
     // lock also releases when the body throws
     intercept[RuntimeException] {
-      VersionedTable.withWriterLock(spark, root) {
+      Commit.withWriterLock(spark, root) {
         throw new RuntimeException("writer crashed")
       }
     }
-    VersionedTable.withWriterLock(spark, root) {}
+    Commit.withWriterLock(spark, root) {}
   }
 
   test("vacuum drops retired versions, keeps the recent window") {
