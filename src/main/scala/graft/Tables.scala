@@ -49,8 +49,4 @@ object Tables {
         df.withColumn("ts", col("ts").cast(TimestampType))
       case _ => df
     }
-
-  /** Register all tables as temp views (used by tests / SQL entry points). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -148,25 +148,11 @@ object CleanFunctions {
   def defaultSource(source: Column, provider: Column): Column =
     coalesce(source, provider)
 
-  /** P10 — tag pipeline (media.py:252-311): drop blacklisted tags,
-    * dedupe, sort (sorted for determinism; reference preserves insert
-    * order which is not reproducible under parallelism).
-    */
-  def cleanTags(tags: Column, blacklist: Seq[String]): Column =
-    array_sort(array_distinct(filter(tags,
-      t => !lower(t).isin(blacklist.map(_.toLowerCase): _*))))
-
   /** P18 — Flickr-style raw tag string: split on whitespace (capped at
     * 2000 chars), dedupe, sort (flickr.py:313-324).
     */
   def splitRawTags(raw: Column): Column =
     array_sort(array_distinct(split(trim(substring(raw, 1, 2000)), "\\s+")))
-
-  /** P2 (pure core) — license pair normalization: lowercase the code,
-    * canonicalize the version to major.minor form. The URL-table lookup
-    * half lives in a broadcast map join (licenses.py:30-134).
-    */
-  def normalizeLicenseCode(c: Column): Column = lower(trim(c))
 
   /** P19 — title cleanup: strip `File:` prefix and a trailing media
     * extension (wikimedia_commons.py:487-501).

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
@@ -290,58 +290,4 @@ case class PqAdcAllExpr(child: Expression, luts: Array[Double],
 
   override protected def withNewChildInternal(c: Expression): PqAdcAllExpr =
     copy(child = c)
-}
-
-/** score = Σ_m lut(m·K + codes(m)) — the ADC inner loop: approximate
-  * dot(query, corpusVec) from M table lookups. `k` is the codebook
-  * size the lut was built with (lut.length = M·K). Kept as the
-  * single-pair kernel (spec baseline, SQL-surface candidate); the
-  * corpus-scale scan uses [[PqAdcAllExpr]], which scores every query
-  * per row without a join.
-  */
-case class PqAdcExpr(left: Expression, right: Expression, k: Int)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(IntegerType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "pq_adc requires (array<int> codes, array<double> lut), got " +
-          s"${left.dataType} and ${right.dataType}")
-    }
-
-  override def dataType: DataType = DoubleType
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val codes = l.asInstanceOf[ArrayData]
-    val lut = r.asInstanceOf[ArrayData]
-    var s = 0.0
-    var mi = 0
-    val n = codes.numElements()
-    while (mi < n) {
-      s += lut.getDouble(mi * k + codes.getInt(mi))
-      mi += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, l) => {
-      val mi = ctx.freshName("mi")
-      val s = ctx.freshName("s")
-      val n = ctx.freshName("n")
-      s"""
-         |double $s = 0.0;
-         |int $n = $c.numElements();
-         |for (int $mi = 0; $mi < $n; $mi++) {
-         |  $s += $l.getDouble($mi * $k + $c.getInt($mi));
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): PqAdcExpr = copy(left = l, right = r)
 }

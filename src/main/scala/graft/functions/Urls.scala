@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** P3 — URL validation and repair (reference `catalog/dags/common/
@@ -101,15 +101,4 @@ object Urls {
       .when(host.rlike(hostPattern) || host.rlike(ipv4Pattern), upgraded)
       .otherwise(lit(null).cast("string"))
   }
-
-  /** Repair every URL column of a record frame in place (the reference's
-    * MediaStore validates url / foreign_landing_url / creator_url /
-    * thumbnail_url this way in `storage/media.py`); irreparable URLs
-    * become null so `MergeUpsert.filterRequired` drops records whose
-    * REQUIRED url died, while optional ones just null out.
-    */
-  def repairUrlColumns(df: DataFrame, urlCols: Seq[String]): DataFrame =
-    urlCols.foldLeft(df) { (d, c) =>
-      d.withColumn(c, validateUrlString(col(c)))
-    }
 }

@@ -745,18 +745,6 @@ object ConcreteProviders {
     StructField("next", StringType),
     StructField("results", ArrayType(freesoundResultSchema))))
 
-  /** The dated-DAG search filter (freesound.py:59-98): full runs scan
-    * `created:[* TO NOW]`, dated runs anchor the range at the DAG date.
-    */
-  def freesoundQueryFilter(date: Option[String]): String = {
-    val start = date.map { d =>
-      java.time.LocalDate.parse(d).atStartOfDay()
-        .format(java.time.format.DateTimeFormatter
-          .ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'"))
-    }.getOrElse("*")
-    s"created:[$start TO NOW]"
-  }
-
   private def freesoundItems(rawResponses: Dataset[String]): DataFrame =
     rawResponses.toDF("value")
       .select(from_json(col("value"), freesoundBatchSchema).as("b"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.functions.{PqAdcExpr, PqEncodeExpr, PqLutExpr}
+import graft.functions.{PqEncodeExpr, PqLutExpr}
 
 /** Product quantization — the compression layer that makes exhaustive
   * ANN feasible at 100 TB. The vector space R^dim is split into M
@@ -53,10 +53,6 @@ object Pq {
 
   def lutCol(vec: Column, codebooks: Seq[Seq[Seq[Double]]]): Column =
     ColumnBridge.column(PqLutExpr(ColumnBridge.expression(vec), codebooks))
-
-  def adcCol(codes: Column, lut: Column, k: Int): Column =
-    ColumnBridge.column(PqAdcExpr(
-      ColumnBridge.expression(codes), ColumnBridge.expression(lut), k))
 
   /** Per-subspace Lloyd k-means. Returns codebooks(m)(code) =
     * ds-dim centroid. One corpus pass per iteration (all subspaces

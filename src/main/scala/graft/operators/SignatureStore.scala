@@ -1,5 +1,9 @@
 package graft.operators
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -186,13 +190,10 @@ object SignatureStore {
     // tables — run the two writes CONCURRENTLY with the candidate/
     // verify/components computation (independent tables, independent
     // manifests; the build pays max(writes, labels) not the sum)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val sigWrite = Future {
+    val sigWrite = concurrently(spark) {
       SegmentedTable.commitFull(pack(sig), sigsRoot(root))
     }
-    val bandWrite = Future {
+    val bandWrite = concurrently(spark) {
       SegmentedTable.commitFull(
         packBands(Dedupe.bandRowsOf(sig, numHashes, rowsPerBand)),
         bandsRoot(root))
@@ -290,12 +291,9 @@ object SignatureStore {
       // night pays max() of the three instead of their sum. Crash
       // semantics are unchanged: per-table tag guards make a replay
       // complete whichever tables missed their commit.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
       val writes = scala.collection.mutable.ArrayBuffer[Future[Unit]]()
       if (!tag.exists(t => SegmentedTable.hasTag(spark, sigsRoot(root), t)))
-        writes += Future {
+        writes += concurrently(spark) {
           SegmentedTable.appendSegment(
             batch.coalesce(autoPartitions(batchRows)), sigsRoot(root),
             tag)
@@ -304,7 +302,7 @@ object SignatureStore {
       // the nightly read must never re-derive them. File count sized
       // from the segment's BAND rows (nBands × batch), not the corpus
       if (!tag.exists(t => SegmentedTable.hasTag(spark, bandsRoot(root), t)))
-        writes += Future {
+        writes += concurrently(spark) {
           SegmentedTable.appendSegment(
             Dedupe.bandRowsOf(batch, numHashes, rowsPerBand)
               .coalesce(autoPartitions(batchRows * nBands)),
@@ -321,7 +319,7 @@ object SignatureStore {
           SegmentedTable.adopt(spark, labelsRoot(root))
         if (!tag.exists(t =>
             SegmentedTable.hasTag(spark, labelsRoot(root), t)))
-          writes += Future {
+          writes += concurrently(spark) {
             SegmentedTable.appendSegment(
               delta.select(col("node"), col("label")).coalesce(1),
               labelsRoot(root), tag)
@@ -404,6 +402,21 @@ object SignatureStore {
       SegmentedTable.compactLatestWins(spark, labelsRoot(root),
         Seq("node"), _.coalesce(autoPartitions(sigRows)))
       SegmentedTable.vacuum(spark, labelsRoot(root))
+    }
+  }
+
+  /** `f` on the global pool, its Spark jobs carrying the caller's job
+    * tags: a pool thread otherwise keeps the tags of whichever thread
+    * created it, and a [[graft.core.RunProfile]] around the caller
+    * would miss the jobs or charge them to another block.
+    */
+  private def concurrently[A](spark: SparkSession)(f: => A): Future[A] = {
+    val sc = spark.sparkContext
+    val tags = sc.getJobTags()
+    Future {
+      sc.clearJobTags()
+      sc.addJobTags(tags)
+      try f finally sc.clearJobTags()
     }
   }
 

@@ -71,11 +71,6 @@ object Similarity {
   private def cos(a: Column, b: Column, dim: Int): Column =
     cosineNative(a, b)
 
-  /** Fixed-dimension cosine (codegen'd). */
-  def cosineFixed(a: Column, b: Column, dim: Int): Column =
-    dotFixed(a, b, dim) /
-      (sqrt(dotFixed(a, a, dim)) * sqrt(dotFixed(b, b, dim)))
-
   /** Brute-force top-k cosine neighbors for each query vector.
     * Output: (vec_id, rank, neighbor_id) — integer-only so results are
     * robust to last-bit fp differences between engines.

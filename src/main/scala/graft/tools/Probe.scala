@@ -1,19 +1,15 @@
 package graft.tools
 
-import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{CheckpointBridge, ListenerBridge}
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 
 import graft.{SparkEntry, Tables}
-import graft.core.{CacheHandle, GraftSession, TempDirs}
+import graft.core.{CacheHandle, GraftSession, RunProfile, TempDirs}
 import graft.functions.JsonEscapeExpr
 import graft.operators.{Dedupe, Pq, Profile, SignatureStore, Similarity}
 
@@ -120,8 +116,8 @@ object Probe {
 
   /** Run registered queries and print each one's wall time and row
     * count — with JOBPROFILE_DETAIL set, also its Spark job count, its
-    * code-generation compiles (Janino compilations during the timed run,
-    * driver and local executor alike), every job's wall time and
+    * code-generation compiles (Janino compilations while the query is
+    * built and run, driver and local executor alike), every job's wall time and
     * description and every stage's task metrics — so scheduling-floor
     * overhead (many small jobs) and codegen cost are distinguishable
     * from data-bound cost. The timed run executes the query's own plan
@@ -138,77 +134,20 @@ object Probe {
     val queries = if (reps.isDefined) args.dropRight(1) else args
     require(queries.nonEmpty, usage)
     val detail = sys.env.get("JOBPROFILE_DETAIL").isDefined
-    withJobLog(spark) { log =>
-      for (rep <- 1 to reps.getOrElse(2); q <- queries) {
-        val fn = SparkEntry.queries(q)
-        spark.catalog.clearCache()
-        log.take()
+    for (rep <- 1 to reps.getOrElse(2); q <- queries) {
+      val fn = SparkEntry.queries(q)
+      spark.catalog.clearCache()
+      val ((df, dt), prof) = RunProfile(spark) {
         val df = fn(spark, sfDir)
-        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-        val (_, dt) = timed(df.queryExecution.toRdd.count())
-        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
-        val (jobs, jobLines) = log.take()
-        val rows = df.count()
-        println(f"== $q rep $rep: rows=$rows wall=$dt%.3fs")
-        if (detail) {
-          println(s"  jobs=$jobs compiles=$compiles")
-          jobLines.foreach(l => println("  " + l))
-        }
+        (df, timed(df.queryExecution.toRdd.count())._2)
+      }
+      val rows = df.count()
+      println(f"== $q rep $rep: rows=$rows wall=$dt%.3fs")
+      if (detail) {
+        println(s"  jobs=${prof.jobs} compiles=${prof.compiles}")
+        prof.lines.foreach(l => println("  " + l))
       }
     }
-  }
-
-  /** The Spark jobs a session starts while attached, each with a line of
-    * its wall time and description and a line per completed stage with
-    * its task metrics.
-    */
-  private final class JobLog(spark: SparkSession) extends SparkListener {
-    private val starts =
-      new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    private val lines =
-      new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    private val jobs = new java.util.concurrent.atomic.AtomicInteger()
-
-    override def onJobStart(js: SparkListenerJobStart): Unit = {
-      val desc = Option(js.properties)
-        .map(_.getProperty("spark.job.description", "")).getOrElse("")
-      starts.put(js.jobId, (System.nanoTime(), desc))
-      jobs.incrementAndGet()
-    }
-    override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-      Option(starts.get(je.jobId)).foreach { case (t0, desc) =>
-        val dt = (System.nanoTime() - t0) / 1e9
-        lines.add(f"job ${je.jobId}%3d ${dt}%7.3fs  ${desc.take(90)}")
-      }
-    }
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val si = sc.stageInfo
-      val wall = (for (a <- si.completionTime; b <- si.submissionTime)
-        yield (a - b) / 1e3).getOrElse(-1.0)
-      val tm = si.taskMetrics
-      lines.add(f"  stage ${si.stageId}%3d ${wall}%7.3fs tasks=${si.numTasks}%4d " +
-        f"cpu=${tm.executorCpuTime / 1e9}%6.2fs run=${tm.executorRunTime / 1e3}%6.2fs " +
-        f"gc=${tm.jvmGCTime / 1e3}%5.2fs in=${tm.inputMetrics.recordsRead}%9d " +
-        f"sw=${tm.shuffleWriteMetrics.recordsWritten}%9d " +
-        f"swB=${tm.shuffleWriteMetrics.bytesWritten}%11d  ${si.name.take(40)}")
-    }
-
-    /** (jobs started, lines) since the previous take, once every event
-      * posted so far has arrived.
-      */
-    def take(): (Int, List[String]) = synchronized {
-      ListenerBridge.drain(spark)
-      val out = (jobs.getAndSet(0), lines.asScala.toList)
-      lines.clear()
-      out
-    }
-  }
-
-  /** `f` with a [[JobLog]] attached to the session. */
-  private def withJobLog[A](spark: SparkSession)(f: JobLog => A): A = {
-    val log = new JobLog(spark)
-    spark.sparkContext.addSparkListener(log)
-    try f(log) finally spark.sparkContext.removeSparkListener(log)
   }
 
   /** Physical plans of registered queries, built but not executed
@@ -716,61 +655,58 @@ object Probe {
       args: Seq[String]): Unit = {
     val reps = intArg(args, 0, 3)
     def t(f: => Unit): Double = timed(f)._2
-    withJobLog(spark) { log =>
-      (1 to reps).foreach { rep =>
-        spark.catalog.clearCache()
-        CheckpointBridge.releaseAllPersisted(spark)
-        val docs = Tables(spark, sfDir, "documents")
-        val store = java.nio.file.Files
-          .createTempDirectory("graft_phase_q80").toString
-        new java.io.File(store).delete()
-        val build = t { SignatureStore.ensureCorpusState(spark, store,
-          docs.filter(col("doc_id") % 4 < 2), "doc_id", "text",
-          shK, nHashes, rpb, minJ) }
-        val nights = Seq(2, 3).map { m =>
-          val batch = docs.filter(col("doc_id") % 4 === m)
-          var tSign = 0.0; var tCand = 0.0; var tCommit = 0.0
-          log.take()
-          val total = t {
-            val (bands, labels) = (SignatureStore.readBands(spark, store),
-              SignatureStore.readLabels(spark, store))
-            val sig = Dedupe.minhashWide(batch, "doc_id", "text", shK,
-              nHashes, withCount = true).persist()
-            var sigRows = 0L
-            tSign = t { sigRows = CacheHandle.fill(sig) }
-            var md: (DataFrame, DataFrame) = null
-            tCand = t { md = Dedupe.incrementalFromStoreWithDelta(
-              bands, labels, batch, docs, "doc_id", "text", shK, nHashes,
-              rpb, minJ, preSigned = Some(sig)) }
-            tCommit = t { SignatureStore.appendBatch(spark, store, sig,
-              md._1, nHashes, rpb, labelDelta = Some(md._2),
-              batchSigRows = Some(sigRows)) }
-            sig.unpersist()
-          }
-          (total, tSign, tCand, tCommit, log.take()._1)
-        }
-        var readSec = 0.0
-        val outSec = t {
-          val (_, labelsFinal) = SignatureStore.read(spark, store)
-          readSec = t { labelsFinal.count() }
-          labelsFinal
-            .withColumn("cluster_size", count(lit(1)).over(
-              Window.partitionBy("label")))
-            .select(col("node").as("doc"), col("label").as("cluster"),
-              col("cluster_size"))
-            .queryExecution.toRdd.count()
-        }
-        def f(d: Double) = f"$d%.2f"
-        println(s"rep=$rep build=${f(build)} " +
-          nights.zipWithIndex.map { case ((tot, s, c, w, jobs), i) =>
-            s"night${i + 1}[total=${f(tot)} sign=${f(s)} cand=${f(c)} " +
-              s"commit=${f(w)} jobs=$jobs]"
-          }.mkString(" ") +
-          s" out=${f(outSec)} (labelread=${f(readSec)})")
-        TempDirs.deleteRecursively(store)
+    (1 to reps).foreach { rep =>
+      spark.catalog.clearCache()
+      CheckpointBridge.releaseAllPersisted(spark)
+      val docs = Tables(spark, sfDir, "documents")
+      val store = java.nio.file.Files
+        .createTempDirectory("graft_phase_q80").toString
+      new java.io.File(store).delete()
+      val build = t { SignatureStore.ensureCorpusState(spark, store,
+        docs.filter(col("doc_id") % 4 < 2), "doc_id", "text",
+        shK, nHashes, rpb, minJ) }
+      val nights = Seq(2, 3).map { m =>
+        val batch = docs.filter(col("doc_id") % 4 === m)
+        var tSign = 0.0; var tCand = 0.0; var tCommit = 0.0
+        val (total, prof) = RunProfile(spark)(t {
+          val (bands, labels) = (SignatureStore.readBands(spark, store),
+            SignatureStore.readLabels(spark, store))
+          val sig = Dedupe.minhashWide(batch, "doc_id", "text", shK,
+            nHashes, withCount = true).persist()
+          var sigRows = 0L
+          tSign = t { sigRows = CacheHandle.fill(sig) }
+          var md: (DataFrame, DataFrame) = null
+          tCand = t { md = Dedupe.incrementalFromStoreWithDelta(
+            bands, labels, batch, docs, "doc_id", "text", shK, nHashes,
+            rpb, minJ, preSigned = Some(sig)) }
+          tCommit = t { SignatureStore.appendBatch(spark, store, sig,
+            md._1, nHashes, rpb, labelDelta = Some(md._2),
+            batchSigRows = Some(sigRows)) }
+          sig.unpersist()
+        })
+        (total, tSign, tCand, tCommit, prof.jobs)
       }
+      var readSec = 0.0
+      val outSec = t {
+        val (_, labelsFinal) = SignatureStore.read(spark, store)
+        readSec = t { labelsFinal.count() }
+        labelsFinal
+          .withColumn("cluster_size", count(lit(1)).over(
+            Window.partitionBy("label")))
+          .select(col("node").as("doc"), col("label").as("cluster"),
+            col("cluster_size"))
+          .queryExecution.toRdd.count()
+      }
+      def f(d: Double) = f"$d%.2f"
+      println(s"rep=$rep build=${f(build)} " +
+        nights.zipWithIndex.map { case ((tot, s, c, w, jobs), i) =>
+          s"night${i + 1}[total=${f(tot)} sign=${f(s)} cand=${f(c)} " +
+            s"commit=${f(w)} jobs=$jobs]"
+        }.mkString(" ") +
+        s" out=${f(outSec)} (labelread=${f(readSec)})")
+      TempDirs.deleteRecursively(store)
     }
-  }
+}
 
   /** Scale probe: semDedup wall time as the cluster count scales with
     * the corpus (the at-scale configuration) vs the fixed oracle k.

@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.CacheHandle
+import graft.core.{CacheHandle, RunProfile}
 
 /** `CacheHandle.eager` fills a persisted frame's cache in one pass over
   * the frame's own lineage: later actions read the cache, not the
@@ -26,25 +24,8 @@ class CacheHandleSpec extends SparkSpec {
 
   /** (jobs, stages) the calling thread's `f` starts. */
   private def jobsAndStages(f: => Unit): (Int, Int) = {
-    val group = s"cachehandle-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val stages = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group)) {
-          jobs.incrementAndGet()
-          stages.addAndGet(js.stageInfos.size)
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "CacheHandleSpec")
-    try { f; ListenerBridge.drain(spark) }
-    finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    (jobs.get, stages.get)
+    val (_, p) = RunProfile(spark)(f)
+    (p.jobs, p.stages)
   }
 
   test("eager fills the cache: a second action reads it, not the source") {

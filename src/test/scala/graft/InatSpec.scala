@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.RunProfile
 import graft.inat.Inat
 
 /** End-to-end test of the iNaturalist pipeline over the reference's own
@@ -19,23 +20,12 @@ class InatSpec extends SparkSpec {
   lazy val taxa = Inat.readTable(spark, s"$fixtures/taxa.csv.gz")
 
   test("readers construct with zero jobs (no inference scan)") {
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val df = Inat.readTable(spark, s"$fixtures/photos.csv.gz")
-      assert(df.schema == Inat.schemas("photos"))
-      Thread.sleep(200) // let any async job-start events drain
-      // explicit schema: building the frame must not run an inference
-      // job over the (at production scale, 120M-row) CSV
-      assert(jobs == 0)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    val (df, profile) = RunProfile(spark)(
+      Inat.readTable(spark, s"$fixtures/photos.csv.gz"))
+    assert(df.schema == Inat.schemas("photos"))
+    // explicit schema: building the frame must not run an inference
+    // job over the (at production scale, 120M-row) CSV
+    assert(profile.jobs == 0)
   }
 
   test("fixtures load with expected columns") {

@@ -2,11 +2,11 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MetadataBuilder
 
+import graft.core.RunProfile
 import graft.sources.Parquet
 
 /** [[graft.sources.Parquet.read]] is a drop-in for a plain parquet read:
@@ -45,37 +45,8 @@ class ParquetReaderSpec extends SparkSpec {
   private def tmp(tag: String): String =
     Files.createTempDirectory(s"pq-$tag-").toString
 
-  /** Jobs started by `f` on this thread, counted by job group; a
-    * sentinel job in another group marks when every earlier job-start
-    * event has reached the listener.
-    */
-  private def jobsStartedBy(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"parquet-reader-${System.nanoTime}"
-    val sentinel = s"$group-sentinel"
-    @volatile var jobs = 0
-    @volatile var drained = false
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id"))
-          .foreach { g =>
-            if (g == group) jobs += 1
-            if (g == sentinel) drained = true
-          }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "reads under test")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "listener drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000L
-      while (!drained && System.currentTimeMillis() < deadline)
-        Thread.sleep(10)
-      assert(drained, "sentinel job never reached the listener")
-      jobs
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Jobs started by `f` on this thread. */
+  private def jobsStartedBy(f: => Unit): Int = RunProfile(spark)(f)._2.jobs
 
   test("every testdata table reads the same, under both nanosAsLong values") {
     val key = "spark.sql.legacy.parquet.nanosAsLong"

@@ -6,9 +6,9 @@
 # passive watcher cannot see a busy co-tenant. This wrapper actively
 # probes: burn every core for PROBE_SEC, read the steal delta across
 # the burst, and require QUIET_NEED consecutive quiet probes (steal <
-# QUIET_PCT) before exec'ing the wrapped command. Complements the
-# bench's internal gate (which caps its wait at 300s — shorter than
-# the co-tenant bursts observed on 2026-08-15).
+# QUIET_PCT) before exec'ing the wrapped command. graft.Bench itself
+# waits for nothing: it records each query's executor CPU beside its
+# wall time, so a contended run shows itself in the artifact.
 #
 # usage: tools/quiet_launch.sh <cmd...>
 #   env: QUIET_PCT (default 2), QUIET_NEED (default 2 consecutive),
