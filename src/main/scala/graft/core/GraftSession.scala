@@ -33,23 +33,15 @@ object GraftSession {
       // events read dies with PARQUET_TYPE_ILLEGAL)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
-      // AQE reduce-partition sizing, parameterized (guide §2.2, r18).
-      // parallelismFirst=false (the flip Spark's config doc suggests
-      // for pure size-based coalescing) was A/B-measured this round —
-      // quiet-gated ABAB, 8-query set, plans/r18/AB_aqe_*.json — and
-      // LOST at this scale: +3.9% total, q25 +17%, q100 +11% (MB-scale
-      // CPU-heavy reduce stages collapse to 1-2 tasks at the 64 MB
-      // advisory target and serialize, outweighing the task-launch
-      // savings of the kilobyte stages). The default therefore stays
-      // the upstream `true`, which is itself scale-adaptive (coalesces
-      // by minPartitionSize but never below the cores available); a
-      // cluster deployment whose shuffles are 100 MB+/partition can
-      // flip it with one env var, and the explicit advisory size keeps
-      // the production target one variable away too.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
+      // AQE reduce-partition sizing stays at Spark's own defaults
+      // (coalescePartitions.parallelismFirst=true, advisory 64 MB;
+      // GraftSessionSpec pins both). parallelismFirst=false, the flip
+      // Spark's config doc suggests for pure size-based coalescing, was
+      // A/B-measured in r18 (quiet-gated ABAB, 8-query set,
+      // plans/r18/AB_aqe_*.json) and LOST at this scale: +3.9% total,
+      // q25 +17%, q100 +11% — MB-scale CPU-heavy reduce stages collapse
+      // to 1-2 tasks at the 64 MB target and serialize, outweighing the
+      // task-launch savings of the kilobyte stages.
       .config("spark.sql.warehouse.dir", warehouse.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()

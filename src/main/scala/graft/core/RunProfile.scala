@@ -6,7 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted}
+  SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.ListenerBridge
 
@@ -121,9 +121,17 @@ object RunProfile {
             f"cpu=${tm.executorCpuTime / 1e9}%6.2fs run=${tm.executorRunTime / 1e3}%6.2fs " +
             f"gc=${tm.jvmGCTime / 1e3}%5.2fs in=${tm.inputMetrics.recordsRead}%9d " +
             f"sw=${tm.shuffleWriteMetrics.recordsWritten}%9d " +
-            f"swB=${tm.shuffleWriteMetrics.bytesWritten}%11d  ${si.name.take(40)}")
+            f"swB=${tm.shuffleWriteMetrics.bytesWritten}%11d  ${stageName(si).take(40)}")
         }
       }
+
+    // a stage adaptive execution submits carries the call site of
+    // Spark's materialization thread, the same for every such stage;
+    // its plan operator is what ties it to the plan
+    private def stageName(si: StageInfo): String =
+      if (si.name.contains("withThreadLocalCaptured"))
+        ListenerBridge.scopeName(si).getOrElse(si.name)
+      else si.name
 
     def profile(compiles: Long): RunProfile = synchronized {
       RunProfile(starts.size, stages, tasks, cpuNs / 1e9, runMs / 1e3,

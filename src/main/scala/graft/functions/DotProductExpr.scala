@@ -11,10 +11,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * The two existing formulations both have a flaw at scale: the
   * higher-order `aggregate(zip_with(...))` fold is interpreted (lambda
   * re-entry per element), and the expanded fixed-dim expression chain
-  * (Similarity.dotFixed) emits dim× inline terms that blow past
-  * JIT-friendly method sizes for large dims. A generated `for` loop
-  * over the two ArrayData buffers is compact AND codegen'd — the form
-  * a columnar engine actually wants for embedding math.
+  * (the spec baseline `graft.Reference.dotFixed`) emits dim× inline
+  * terms that blow past JIT-friendly method sizes for large dims. A
+  * generated `for` loop over the two ArrayData buffers is compact AND
+  * codegen'd — the form a columnar engine actually wants for embedding
+  * math.
   *
   * Summation is left-to-right in index order, each element widened to
   * double first — bit-identical to both existing forms and to the

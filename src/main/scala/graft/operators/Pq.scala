@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -33,10 +32,10 @@ import graft.functions.{PqEncodeExpr, PqLutExpr}
   *    expression (addReferenceObj), exactly like IVF centroids and SRP
   *    planes — never a joined table.
   *  - search: queries (tiny) carry their LUT column and broadcast; the
-  *    corpus side streams the CODE table (written once by
-  *    [[writeIndex]]) — the 64×-smaller scan is the point. Composed
-  *    with IVF ([[writeIvfIndex]] / [[ivfTopK]]) the scan also prunes
-  *    to the probed cells' parquet partitions: IVF-PQ, the standard
+  *    corpus side streams the CODE table ([[encode]]) — the
+  *    64×-smaller scan is the point. Composed with IVF
+  *    ([[writeIvfIndex]] / [[ivfTopK]]) the scan also prunes to the
+  *    probed cells' parquet partitions: IVF-PQ, the standard
   *    billion-vector layout.
   *
   * Determinism (oracle + re-run reproducibility): codebook seeds are
@@ -129,20 +128,26 @@ object Pq {
     */
   def topK(queries: DataFrame, corpusCodes: DataFrame,
       codebooks: Seq[Seq[Seq[Double]]], idCol: String, vecCol: String,
-      k: Int): DataFrame = {
+      k: Int): DataFrame =
+    Similarity.rankTopK(
+      adcScored(queries, corpusCodes, codebooks, idCol, vecCol)
+        .filter(col("neighbor_id") =!= col("vec_id")), "score", k)
+
+  /** Every (query, code row) ADC score as skinny
+    * (vec_id, neighbor_id, `carry`…, score) rows: one generated loop
+    * scores all queries per row against the referenced LUT matrix.
+    */
+  private def adcScored(queries: DataFrame, codes: DataFrame,
+      codebooks: Seq[Seq[Seq[Double]]], idCol: String, vecCol: String,
+      carry: Column*): DataFrame = {
     val (qids, luts) = collectLuts(queries, idCol, vecCol, codebooks)
-    val (m, kCodes) = (codebooks.size, codebooks.head.size)
     val scores = ColumnBridge.column(graft.functions.PqAdcAllExpr(
-      ColumnBridge.expression(col("codes")), luts, qids.length, m, kCodes))
-    corpusCodes
-      .select(col(idCol).as("neighbor_id"), posexplode(scores))
-      .select(element_at(lit(qids), col("pos") + 1).as("vec_id"),
-        col("neighbor_id"), col("col").as("score"))
-      .filter(col("neighbor_id") =!= col("vec_id"))
-      .withColumn("rank", row_number().over(Window.partitionBy("vec_id")
-        .orderBy(col("score").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("vec_id"), col("rank"), col("neighbor_id"))
+      ColumnBridge.expression(col("codes")), luts, qids.length,
+      codebooks.size, codebooks.head.size))
+    codes.select((col(idCol).as("neighbor_id") +: carry) :+
+        posexplode(scores): _*)
+      .select((element_at(lit(qids), col("pos") + 1).as("vec_id") +:
+        col("neighbor_id") +: carry) :+ col("col").as("score"): _*)
   }
 
   /** Two-stage search — ADC shortlist, exact re-rank: the production
@@ -154,35 +159,25 @@ object Pq {
     */
   def topKReranked(queries: DataFrame, corpusCodes: DataFrame,
       corpusVecs: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
-      idCol: String, vecCol: String, k: Int, shortlist: Int): DataFrame = {
-    val cand = topK(queries, corpusCodes, codebooks, idCol, vecCol,
-      shortlist).select("vec_id", "neighbor_id")
+      idCol: String, vecCol: String, k: Int, shortlist: Int): DataFrame =
+    rerank(topK(queries, corpusCodes, codebooks, idCol, vecCol, shortlist),
+      queries, corpusVecs, idCol, vecCol, k)
+
+  /** The exact stage of both two-stage searches: fetch each shortlisted
+    * (vec_id, neighbor_id) pair's raw vectors by id and keep the top `k`
+    * by exact cosine.
+    */
+  private def rerank(shortlisted: DataFrame, queries: DataFrame,
+      corpusVecs: DataFrame, idCol: String, vecCol: String,
+      k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("vec_id"), col(vecCol).as("qv"))
-    cand
+    Similarity.rankTopK(shortlisted.select("vec_id", "neighbor_id")
       .join(corpusVecs.select(col(idCol).as("neighbor_id"),
         col(vecCol).as("cv")), "neighbor_id")
       .join(broadcast(q), "vec_id")
-      .withColumn("cos", Similarity.cosineNative(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(Window.partitionBy("vec_id")
-        .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("vec_id"), col("rank"), col("neighbor_id"))
+      .withColumn("cos", Similarity.cosineNative(col("qv"), col("cv"))),
+      "cos", k)
   }
-
-  /** Materialize the code table (one encode pass; the raw vectors are
-    * not carried — re-join them by id for exact re-ranking if needed).
-    */
-  def writeIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      codebooks: Seq[Seq[Seq[Double]]], path: String): Unit =
-    encode(corpus, idCol, vecCol, codebooks)
-      .write.mode("overwrite").parquet(path)
-
-  def topKIndexed(spark: SparkSession, indexPath: String,
-      queries: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
-      idCol: String, vecCol: String, k: Int): DataFrame =
-    topK(queries,
-      graft.operators.Similarity.readIvfIndex(spark, indexPath),
-      codebooks, idCol, vecCol, k)
 
   /** IVF-PQ index: code table partitioned by IVF cell. A probe reads
     * nprobe/ncells of a table that is already ~64× smaller than the
@@ -215,21 +210,10 @@ object Pq {
   def ivfTopKReranked(spark: SparkSession, indexPath: String,
       queries: DataFrame, centroids: DataFrame, corpusVecs: DataFrame,
       codebooks: Seq[Seq[Seq[Double]]], idCol: String, vecCol: String,
-      k: Int, nprobe: Int, shortlist: Int, dim: Int = -1): DataFrame = {
-    val cand = ivfTopK(spark, indexPath, queries, centroids, codebooks,
-      idCol, vecCol, shortlist, nprobe, dim)
-      .select("vec_id", "neighbor_id")
-    val q = queries.select(col(idCol).as("vec_id"), col(vecCol).as("qv"))
-    cand
-      .join(corpusVecs.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("cv")), "neighbor_id")
-      .join(broadcast(q), "vec_id")
-      .withColumn("cos", Similarity.cosineNative(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(Window.partitionBy("vec_id")
-        .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("vec_id"), col("rank"), col("neighbor_id"))
-  }
+      k: Int, nprobe: Int, shortlist: Int): DataFrame =
+    rerank(ivfTopK(spark, indexPath, queries, centroids, codebooks,
+        idCol, vecCol, shortlist, nprobe),
+      queries, corpusVecs, idCol, vecCol, k)
 
   /** ADC search over the probed cells only: the probed cell set is a
     * plan parameter pruning the partitioned scan (directories never
@@ -239,16 +223,11 @@ object Pq {
     */
   def ivfTopK(spark: SparkSession, indexPath: String, queries: DataFrame,
       centroids: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
-      idCol: String, vecCol: String, k: Int, nprobe: Int,
-      dim: Int = -1): DataFrame = {
-    val (m, kCodes) = (codebooks.size, codebooks.head.size)
+      idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
     val probed = Similarity.probeCells(queries, centroids, idCol, vecCol,
-      nprobe, dim).select("vec_id", "cell_id")
+      nprobe).select("vec_id", "cell_id")
     val probedPairs = probed.collect().map(r => (r.getLong(0), r.get(1)))
     val cellSet = probedPairs.map(_._2).distinct.toSeq
-    val (qids, luts) = collectLuts(queries, idCol, vecCol, codebooks)
-    val scores = ColumnBridge.column(graft.functions.PqAdcAllExpr(
-      ColumnBridge.expression(col("codes")), luts, qids.length, m, kCodes))
     val probedDf = spark.createDataFrame(
       spark.sparkContext.parallelize(probedPairs.toSeq.map {
         case (v, c) => org.apache.spark.sql.Row(v, c) }, 1),
@@ -256,17 +235,10 @@ object Pq {
         org.apache.spark.sql.types.StructField("vec_id",
           org.apache.spark.sql.types.LongType),
         probed.schema("cell_id"))))
-    graft.operators.Similarity.readIvfIndex(spark, indexPath)
-      .filter(col("cell_id").isin(cellSet: _*))
-      .select(col(idCol).as("neighbor_id"), col("cell_id"),
-        posexplode(scores))
-      .select(element_at(lit(qids), col("pos") + 1).as("vec_id"),
-        col("neighbor_id"), col("cell_id"), col("col").as("score"))
-      .join(broadcast(probedDf), Seq("vec_id", "cell_id"), "left_semi")
-      .filter(col("neighbor_id") =!= col("vec_id"))
-      .withColumn("rank", row_number().over(Window.partitionBy("vec_id")
-        .orderBy(col("score").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("vec_id"), col("rank"), col("neighbor_id"))
+    Similarity.rankTopK(
+      adcScored(queries, Similarity.readProbedCells(spark, indexPath, cellSet),
+          codebooks, idCol, vecCol, col("cell_id"))
+        .join(broadcast(probedDf), Seq("vec_id", "cell_id"), "left_semi")
+        .filter(col("neighbor_id") =!= col("vec_id")), "score", k)
   }
 }

@@ -21,33 +21,11 @@ import graft.sources.Commit
   */
 object Similarity {
 
-  /** Elementwise-deterministic cosine between two array<float/double>
-    * columns: fold in index order with double precision (left-to-right,
-    * reproducible across engines).
-    */
-  def cosine(a: Column, b: Column): Column = {
-    val dbl = (c: Column) => transform(c, x => x.cast("double"))
-    val dot = (x: Column, y: Column) =>
-      aggregate(zip_with(dbl(x), dbl(y), _ * _), lit(0.0), _ + _)
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-  }
-
-  /** Fixed-dimension dot product as an expanded expression —
-    * element_at chains are whole-stage-codegen'd where higher-order
-    * lambdas are interpreted (and re-entered per element). Same
-    * left-to-right addition order as the fold, so results are
-    * bit-identical to [[cosine]]; use when the embedding dim is known
-    * (it always is for a real vector table).
-    */
-  def dotFixed(a: Column, b: Column, dim: Int): Column =
-    (1 to dim).map(i =>
-      element_at(a, i).cast("double") * element_at(b, i).cast("double"))
-      .reduce(_ + _)
-
   /** Native codegen'd LOOP dot product (functions.DotProductExpr):
-    * compact generated code at any dim, no interpreted lambdas — same
-    * left-to-right summation as the fold and the expanded form, so
-    * results are bit-identical to both. Accepts array<float> or
+    * compact generated code at any dim, no interpreted lambdas — the
+    * same left-to-right summation as a higher-order fold or an expanded
+    * element_at chain, so results are bit-identical to both (the spec
+    * baselines in `graft.Reference`). Accepts array<float> or
     * array<double> directly (no per-element cast expression needed).
     *
     * Measured on the q44-shaped pair workload (~5M same-label pairs,
@@ -61,32 +39,34 @@ object Similarity {
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
   }
 
+  /** The one vector cosine: every search, verify and probe scores
+    * through it.
+    */
   def cosineNative(a: Column, b: Column): Column =
     dotNative(a, b) / (sqrt(dotNative(a, a)) * sqrt(dotNative(b, b)))
 
-  /** All cosine paths use the native loop expression; `dim` is kept
-    * for source compatibility (the fixed-dim and fold forms remain as
-    * documented equality baselines in specs).
+  /** The tail of every top-k search: per `vec_id`, the `k` rows with the
+    * highest `score`, ties to the lower neighbor id, as
+    * (vec_id, rank, neighbor_id).
     */
-  private def cos(a: Column, b: Column, dim: Int): Column =
-    cosineNative(a, b)
+  private[operators] def rankTopK(scored: DataFrame, score: String,
+      k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(Window.partitionBy("vec_id")
+        .orderBy(col(score).desc, col("neighbor_id").asc)))
+      .filter(col("rank") <= k)
+      .select("vec_id", "rank", "neighbor_id")
 
   /** Brute-force top-k cosine neighbors for each query vector.
     * Output: (vec_id, rank, neighbor_id) — integer-only so results are
     * robust to last-bit fp differences between engines.
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int, dim: Int = -1): DataFrame = {
+      vecCol: String, k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("vec_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = broadcast(q).crossJoin(c)
+    rankTopK(broadcast(q).crossJoin(c)
       .filter(col("neighbor_id") =!= col("vec_id"))
-      .withColumn("cos", cos(col("qv"), col("cv"), dim))
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("vec_id", "rank", "neighbor_id")
+      .withColumn("cos", cosineNative(col("qv"), col("cv"))), "cos", k)
   }
 
   /** Per-query recall of an approximate top-k result against exact
@@ -134,12 +114,12 @@ object Similarity {
     * cap; the metric is a quality MEASUREMENT, not a scale path).
     */
   def pairRecall(found: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, threshold: Double, dim: Int = -1): (Long, Long) = {
+      vecCol: String, threshold: Double): (Long, Long) = {
     val v = corpus.select(col(idCol).as("vid"), col(vecCol).as("v"))
     val truth = v.select(col("vid").as("vec_a"), col("v").as("va"))
       .crossJoin(v.select(col("vid").as("vec_b"), col("v").as("vb")))
       .filter(col("vec_a") < col("vec_b") &&
-        cos(col("va"), col("vb"), dim) >= lit(threshold))
+        cosineNative(col("va"), col("vb")) >= lit(threshold))
       .select("vec_a", "vec_b")
     val nTruth = truth.count()
     val nHit = truth.join(found.select("vec_a", "vec_b"),
@@ -164,7 +144,7 @@ object Similarity {
     * vectors upstream if they should not be indexed).
     */
   def assignCells(vectors: DataFrame, centroids: DataFrame, idCol: String,
-      vecCol: String, dim: Int = -1): DataFrame =
+      vecCol: String): DataFrame =
     vectors.select(col(idCol),
       nearestCellCol(centroidValues(centroids), col(vecCol)).as("cell_id"))
 
@@ -223,7 +203,7 @@ object Similarity {
     * replication of the right side of oversized blocks only.
     */
   def nearDupPairsSalted(df: DataFrame, labelCol: String, idCol: String,
-      vecCol: String, threshold: Double, dim: Int = -1,
+      vecCol: String, threshold: Double,
       maxBlock: Int = 4096): DataFrame = {
     val salts = df.groupBy(labelCol)
       .agg(ceil(count(lit(1)) / lit(maxBlock.toDouble)).cast("int")
@@ -264,7 +244,7 @@ object Similarity {
     * back broadcast-sized.
     */
   def semDedup(vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int, threshold: Double, dim: Int = -1,
+      k: Int, iters: Int, threshold: Double, dim: Int,
       maxBlock: Int = 4096,
       caches: graft.core.CacheHandle = graft.core.CacheHandle.session)
       : DataFrame = {
@@ -281,7 +261,7 @@ object Similarity {
     // left join) — materialize before AQE stages race the cache
     graft.core.CacheHandle.eager(cells)
     val dropped = nearDupPairsSalted(cells, "cell_id", idCol, vecCol,
-        threshold, dim, maxBlock)
+        threshold, maxBlock)
       .select(col("vec_b").as("__drop")).distinct()
     cells.join(dropped, cells(idCol) === col("__drop"), "left_outer")
       .select(cells(idCol), col("cell_id"), col("__drop").isNull.as("keep"))
@@ -658,10 +638,10 @@ object Similarity {
     * query × broadcast centroids — never a window over a product).
     */
   def probeCells(queries: DataFrame, centroids: DataFrame, idCol: String,
-      vecCol: String, nprobe: Int, dim: Int = -1): DataFrame =
+      vecCol: String, nprobe: Int): DataFrame =
     queries.select(col(idCol).as("vec_id"), col(vecCol).as("qv"))
       .crossJoin(broadcast(centroids))
-      .withColumn("sim", cos(col("qv"), col("centroid"), dim))
+      .withColumn("sim", cosineNative(col("qv"), col("centroid")))
       .groupBy("vec_id")
       .agg(first(col("qv")).as("qv"),
         slice(array_sort(collect_list(
@@ -670,32 +650,43 @@ object Similarity {
       .select(col("vec_id"), col("qv"),
         explode(col("top_cells").getField("cell_id")).as("cell_id"))
 
-  /** Search a materialized IVF index: the probed cell set (tiny —
-    * ≤ queries × nprobe values, a plan parameter, not data) statically
-    * prunes the partitioned scan, so only the probed directories are
-    * ever read. Results are identical to [[ivfTopK]] over the same
-    * centroids.
+  /** The rows of a materialized IVF index's `cells` (a plan parameter,
+    * ≤ queries × nprobe values): a partition-column predicate, so only
+    * the probed directories are ever read.
+    */
+  private[operators] def readProbedCells(
+      spark: org.apache.spark.sql.SparkSession, indexPath: String,
+      cells: Seq[Any]): DataFrame =
+    readIvfIndex(spark, indexPath).filter(col("cell_id").isin(cells: _*))
+
+  /** The one IVF search: probe each query's `nprobe` nearest cells,
+    * restrict the corpus to them — `cellsOf` maps the probed
+    * (vec_id, qv, cell_id) rows to the (neighbor_id, cv, cell_id) corpus
+    * rows of those cells — score by cosine and keep the top `k`.
+    */
+  private def ivfSearch(queries: DataFrame, centroids: DataFrame,
+      idCol: String, vecCol: String, k: Int, nprobe: Int)(
+      cellsOf: DataFrame => DataFrame): DataFrame = {
+    val probed = probeCells(queries, centroids, idCol, vecCol, nprobe)
+    rankTopK(broadcast(probed).join(cellsOf(probed), Seq("cell_id"))
+      .filter(col("neighbor_id") =!= col("vec_id"))
+      .withColumn("cos", cosineNative(col("qv"), col("cv"))), "cos", k)
+  }
+
+  /** Search a materialized IVF index: the probed cell set statically
+    * prunes the partitioned scan ([[readProbedCells]]). Results are
+    * identical to [[ivfTopK]] over the same centroids.
     */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, queries: DataFrame, centroids: DataFrame,
-      idCol: String, vecCol: String, k: Int, nprobe: Int,
-      dim: Int = -1): DataFrame = {
-    val probed = probeCells(queries, centroids, idCol, vecCol, nprobe, dim)
-    val cellSet = probed.select("cell_id").distinct()
-      .collect().map(_.get(0)).toSeq
-    val corpus = readIvfIndex(spark, indexPath)
-      .filter(col("cell_id").isin(cellSet: _*))
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        col("cell_id"))
-    val scored = broadcast(probed).join(corpus, Seq("cell_id"))
-      .filter(col("neighbor_id") =!= col("vec_id"))
-      .withColumn("cos", cos(col("qv"), col("cv"), dim))
-    scored.withColumn("rank", row_number().over(
-        Window.partitionBy("vec_id")
-          .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
-      .select("vec_id", "rank", "neighbor_id")
-  }
+      idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame =
+    ivfSearch(queries, centroids, idCol, vecCol, k, nprobe) { probed =>
+      val cellSet = probed.select("cell_id").distinct()
+        .collect().map(_.get(0)).toSeq
+      readProbedCells(spark, indexPath, cellSet)
+        .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+          col("cell_id"))
+    }
 
   /** Deterministic ±1 hyperplane components for signed-random-projection
     * LSH: component (p, d) is +1 iff md5("p,d")'s first hex digit is
@@ -784,31 +775,20 @@ object Similarity {
     cand
       .join(vecs.select(col("vid").as("vec_a"), col("v").as("va")), "vec_a")
       .join(vecs.select(col("vid").as("vec_b"), col("v").as("vb")), "vec_b")
-      .filter(dotNative(col("va"), col("vb")) /
-        (sqrt(dotNative(col("va"), col("va"))) *
-         sqrt(dotNative(col("vb"), col("vb")))) >= lit(threshold))
+      .filter(cosineNative(col("va"), col("vb")) >= lit(threshold))
       .select("vec_a", "vec_b")
   }
 
   /** IVF top-k: restrict the brute-force search to corpus vectors whose
-    * cell is among the query's `nprobe` closest cells.
+    * cell is among the query's `nprobe` closest cells. Each corpus row's
+    * cell is its in-row [[nearestCellCol]], as [[writeIvfIndex]] writes
+    * it.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
-      idCol: String, vecCol: String, k: Int, nprobe: Int,
-      dim: Int = -1): DataFrame = {
-    val corpusCells = assignCells(corpus, centroids, idCol, vecCol, dim)
-      .withColumnRenamed(idCol, "neighbor_id")
-    // top-nprobe cells per query: small in-group sort inside one
-    // aggregate (|centroids| elements), not a window over the product
-    val probed = probeCells(queries, centroids, idCol, vecCol, nprobe, dim)
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .join(corpusCells, "neighbor_id")
-    val scored = broadcast(probed).join(c, Seq("cell_id"))
-      .filter(col("neighbor_id") =!= col("vec_id"))
-      .withColumn("cos", cos(col("qv"), col("cv"), dim))
-    scored.withColumn("rank", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
-      .select("vec_id", "rank", "neighbor_id")
-  }
+      idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame =
+    ivfSearch(queries, centroids, idCol, vecCol, k, nprobe) { _ =>
+      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+        nearestCellCol(centroidValues(centroids), col(vecCol))
+          .as("cell_id"))
+    }
 }

@@ -20,8 +20,7 @@ object SimilarityQueries extends QueryPack {
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       Similarity.bruteForceTopK(
-        emb.filter(col("vec_id") < 10), emb, "vec_id", "embedding", k = 10,
-        dim = 64)
+        emb.filter(col("vec_id") < 10), emb, "vec_id", "embedding", k = 10)
         .select(col("vec_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"))
     },
@@ -74,20 +73,80 @@ object SimilarityQueries extends QueryPack {
       // spread across tasks — results are exactly the plain blocked
       // join's (salting only re-routes which task scores each pair)
       Similarity.nearDupPairsSalted(Tables(s, dir, "embeddings"),
-        "label", "vec_id", "embedding", threshold = 0.35, dim = 64,
-        maxBlock = 256)
+        "label", "vec_id", "embedding", threshold = 0.35, maxBlock = 256)
     },
-    Some("""
+    Some(s"""
       SELECT a.label, a.vec_id AS vec_a, b.vec_id AS vec_b
       FROM embeddings a JOIN embeddings b
         ON a.label = b.label AND a.vec_id < b.vec_id
-      WHERE list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                             CAST(b.embedding AS DOUBLE[])) /
-            (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                   CAST(a.embedding AS DOUBLE[]))) *
-             sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]),
-                                   CAST(b.embedding AS DOUBLE[]))))
-            >= CAST(0.35 AS DOUBLE)"""))
+      WHERE ${cosineAtLeast("a", "b")}"""))
+
+  /** The pair verify of the near-dup oracles (q44, q62/q110,
+    * q85/q102): cosine of `a` and `b`'s embeddings as dot / (norm·norm),
+    * at least 0.35.
+    */
+  private def cosineAtLeast(a: String, b: String): String = {
+    def dot(x: String, y: String) =
+      s"""list_dot_product(CAST($x.embedding AS DOUBLE[]),
+                             CAST($y.embedding AS DOUBLE[]))"""
+    s"""${dot(a, b)} /
+            (sqrt(${dot(a, a)}) *
+             sqrt(${dot(b, b)}))
+            >= CAST(0.35 AS DOUBLE)"""
+  }
+
+  /** (`id`, cell_id) rows: each `embeddings` row (alias `v`, filtered by
+    * `where`) with its `n` most cosine-similar cells of the centroid
+    * table `cents`, ties to the lower cell_id — the oracle of
+    * [[Similarity.nearestCellCol]] (n = 1) and [[Similarity.probeCells]].
+    */
+  private def nearestCells(cents: String, n: Int, v: String = "e",
+      id: String = "vec_id", where: String = ""): String = {
+    val vid = if (id == "vec_id") s"$v.vec_id" else s"$v.vec_id AS $id"
+    val cut = if (n == 1) "= 1" else s"<= $n"
+    s"""SELECT $id, cell_id FROM (
+          SELECT $vid, c.cell_id, row_number() OVER (PARTITION BY $v.vec_id
+            ORDER BY list_cosine_similarity(CAST($v.embedding AS DOUBLE[]),
+                                            c.centroid) DESC,
+                     c.cell_id ASC) AS rn
+          FROM embeddings $v CROSS JOIN $cents c$where) WHERE rn $cut"""
+  }
+
+  /** The top-`k` tail of the rank oracles: `from`'s rows ranked per
+    * vec_id by `score` descending, ties to the lower neighbor id.
+    */
+  private def rankOracle(score: String, from: String, k: Int): String =
+    s"""SELECT vec_id, CAST(rn AS BIGINT) AS rank, neighbor_id FROM (
+        SELECT vec_id, neighbor_id, row_number() OVER (PARTITION BY vec_id
+          ORDER BY $score DESC, neighbor_id ASC) AS rn FROM $from)
+      WHERE rn <= $k"""
+
+  /** The IVF probe CTEs: `corpus_cells` (each corpus vector's cell
+    * among `cents`) and `probed` (each of the 10 queries' `nprobe`
+    * nearest cells).
+    */
+  private def probeCtes(cents: String, nprobe: Int): String =
+    s"""corpus_cells AS (
+        ${nearestCells(cents, 1, id = "neighbor_id")}),
+      probed AS (
+        ${nearestCells(cents, nprobe, v = "q",
+          where = " WHERE q.vec_id < 10")})"""
+
+  /** q46/q72's search after the centroids `cents`: top-5 exact-cosine
+    * neighbors of each query among the corpus of its 3 probed cells.
+    */
+  private def ivfSearchOracle(cents: String): String =
+    s"""${probeCtes(cents, 3)},
+      scored AS (
+        SELECT p.vec_id, cc.neighbor_id,
+          list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
+                                 CAST(e.embedding AS DOUBLE[])) AS cos
+        FROM probed p
+        JOIN corpus_cells cc ON cc.cell_id = p.cell_id
+        JOIN embeddings q ON q.vec_id = p.vec_id
+        JOIN embeddings e ON e.vec_id = cc.neighbor_id
+        WHERE cc.neighbor_id <> p.vec_id)
+      ${rankOracle("cos", "scored", 5)}"""
 
   /** IVF scale-path ANN: centroids are deterministic representatives
     * (each label's lowest-id vector), every corpus vector is assigned
@@ -105,58 +164,52 @@ object SimilarityQueries extends QueryPack {
         .select(emb("label").as("cell_id"),
           transform(col("embedding"), x => x.cast("double")).as("centroid"))
       Similarity.ivfTopK(emb.filter(col("vec_id") < 10), emb, centroids,
-        "vec_id", "embedding", k = 5, nprobe = 3, dim = 64)
+        "vec_id", "embedding", k = 5, nprobe = 3)
         .select(col("vec_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"))
     },
-    Some("""
+    Some(s"""
       WITH centroids AS (
         SELECT e.label AS cell_id, CAST(e.embedding AS DOUBLE[]) AS centroid
         FROM embeddings e
         JOIN (SELECT label, MIN(vec_id) AS cvid FROM embeddings GROUP BY label) m
           ON e.vec_id = m.cvid),
-      corpus_cells AS (
-        SELECT neighbor_id, cell_id FROM (
-          SELECT e.vec_id AS neighbor_id, c.cell_id,
-            row_number() OVER (PARTITION BY e.vec_id ORDER BY
-              list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c.centroid) DESC,
-              c.cell_id ASC) AS rn
-          FROM embeddings e CROSS JOIN centroids c)
-        WHERE rn = 1),
-      probed AS (
-        SELECT vec_id, cell_id FROM (
-          SELECT q.vec_id, c.cell_id,
-            row_number() OVER (PARTITION BY q.vec_id ORDER BY
-              list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), c.centroid) DESC,
-              c.cell_id ASC) AS rn
-          FROM embeddings q CROSS JOIN centroids c
-          WHERE q.vec_id < 10)
-        WHERE rn <= 3),
-      scored AS (
-        SELECT p.vec_id, cc.neighbor_id,
-          list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                                 CAST(e.embedding AS DOUBLE[])) AS cos
-        FROM probed p
-        JOIN corpus_cells cc ON cc.cell_id = p.cell_id
-        JOIN embeddings q ON q.vec_id = p.vec_id
-        JOIN embeddings e ON e.vec_id = cc.neighbor_id
-        WHERE cc.neighbor_id <> p.vec_id)
-      SELECT vec_id, CAST(rn AS BIGINT) AS rank, neighbor_id FROM (
-        SELECT vec_id, neighbor_id,
-          row_number() OVER (PARTITION BY vec_id
-            ORDER BY cos DESC, neighbor_id ASC) AS rn
-        FROM scored)
-      WHERE rn <= 5"""))
+      ${ivfSearchOracle("centroids")}"""))
 
-  /** The 64 ±1 hyperplanes (dim 64) for SRP-LSH, derived from md5 in
-    * Scala and emitted as LITERALS into both the Spark plan and the
-    * oracle SQL — single source of truth, no hash math in SQL.
+  /** SRP-LSH near-dup pairs over `planes` ±1 hyperplanes (dim 64) in
+    * bands of `rowsPerBand` bits, verified at cosine ≥ 0.35. The planes
+    * are derived from md5 in Scala and emitted as LITERALS into both the
+    * Spark plan and the oracle SQL — single source of truth, no hash
+    * math in SQL.
     */
-  private val srpSigns = Similarity.srpSigns(planes = 64, dim = 64)
-
-  private val srpValues = srpSigns.zipWithIndex.map { case (s, p) =>
-    s"($p, [${s.map(v => if (v > 0) "1.0" else "-1.0").mkString(", ")}])"
-  }.mkString(", ")
+  private def srpQ(name: String, planes: Int, rowsPerBand: Int): Q = {
+    val signs = Similarity.srpSigns(planes, dim = 64)
+    val values = signs.zipWithIndex.map { case (s, p) =>
+      s"($p, [${s.map(v => if (v > 0) "1.0" else "-1.0").mkString(", ")}])"
+    }.mkString(", ")
+    Q(name,
+      (s, dir) => Similarity.srpNearDupPairs(
+        Tables(s, dir, "embeddings"), "vec_id", "embedding",
+        signs, rowsPerBand = rowsPerBand, threshold = 0.35),
+      Some(s"""
+      WITH hp(p, sv) AS (VALUES $values),
+      bits AS (SELECT vec_id,
+          string_agg(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), sv) > 0
+                          THEN '1' ELSE '0' END, '' ORDER BY p) AS bits
+        FROM embeddings CROSS JOIN hp GROUP BY vec_id),
+      bands AS (SELECT vec_id, band,
+          substr(bits, band * $rowsPerBand + 1, $rowsPerBand) AS bb
+        FROM bits
+        CROSS JOIN (SELECT unnest(range(${planes / rowsPerBand})) AS band) bd),
+      cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+        FROM bands a JOIN bands b ON a.band = b.band AND a.bb = b.bb
+          AND a.vec_id < b.vec_id)
+      SELECT c.vec_a, c.vec_b
+      FROM cand c
+      JOIN embeddings ea ON ea.vec_id = c.vec_a
+      JOIN embeddings eb ON eb.vec_id = c.vec_b
+      WHERE ${cosineAtLeast("ea", "eb")}"""))
+  }
 
   /** SRP-LSH (random-hyperplane) bucketed near-dup pairs + exact cosine
     * verify — the unsupervised LSH-bucketed ANN scale path (no blocking
@@ -166,43 +219,7 @@ object SimilarityQueries extends QueryPack {
     * space is 8×256 — r7's 4-bit bands put ~6% of ALL pairs through the
     * verify over a 64-value key space: skew + a quadratic constant.)
     */
-  val q62 = Q("q62_srp_lsh",
-    (s, dir) => Similarity.srpNearDupPairs(
-      Tables(s, dir, "embeddings"), "vec_id", "embedding",
-      srpSigns, rowsPerBand = 8, threshold = 0.35),
-    Some(s"""
-      WITH hp(p, sv) AS (VALUES $srpValues),
-      bits AS (SELECT vec_id,
-          string_agg(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), sv) > 0
-                          THEN '1' ELSE '0' END, '' ORDER BY p) AS bits
-        FROM embeddings CROSS JOIN hp GROUP BY vec_id),
-      bands AS (SELECT vec_id, band,
-          substr(bits, band * 8 + 1, 8) AS bb
-        FROM bits
-        CROSS JOIN (SELECT unnest(range(8)) AS band) bd),
-      cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.bb = b.bb
-          AND a.vec_id < b.vec_id)
-      SELECT c.vec_a, c.vec_b
-      FROM cand c
-      JOIN embeddings ea ON ea.vec_id = c.vec_a
-      JOIN embeddings eb ON eb.vec_id = c.vec_b
-      WHERE list_dot_product(CAST(ea.embedding AS DOUBLE[]),
-                             CAST(eb.embedding AS DOUBLE[])) /
-            (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]),
-                                   CAST(ea.embedding AS DOUBLE[]))) *
-             sqrt(list_dot_product(CAST(eb.embedding AS DOUBLE[]),
-                                   CAST(eb.embedding AS DOUBLE[]))))
-            >= CAST(0.35 AS DOUBLE)"""))
-
-  /** The 96 ±1 hyperplanes (dim 64) for the SCALED SRP-LSH variant —
-    * same literal-emission discipline as [[srpSigns]].
-    */
-  private val srpSignsWide = Similarity.srpSigns(planes = 96, dim = 64)
-
-  private val srpValuesWide = srpSignsWide.zipWithIndex.map { case (s, p) =>
-    s"($p, [${s.map(v => if (v > 0) "1.0" else "-1.0").mkString(", ")}])"
-  }.mkString(", ")
+  val q62 = srpQ("q62_srp_lsh", planes = 64, rowsPerBand = 8)
 
   /** SRP-LSH with the BAND-WIDTH DIAL TURNED FOR CORPUS SIZE — q62's
     * operator with 96 planes split 8 bands × 12 bits. Why it exists:
@@ -219,72 +236,33 @@ object SimilarityQueries extends QueryPack {
     * shrinking the band count (recall falls exponentially in w but is
     * recovered linearly in bands).
     */
-  val q110 = Q("q110_srp_lsh_scaled",
-    (s, dir) => Similarity.srpNearDupPairs(
-      Tables(s, dir, "embeddings"), "vec_id", "embedding",
-      srpSignsWide, rowsPerBand = 12, threshold = 0.35),
-    Some(s"""
-      WITH hp(p, sv) AS (VALUES $srpValuesWide),
-      bits AS (SELECT vec_id,
-          string_agg(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), sv) > 0
-                          THEN '1' ELSE '0' END, '' ORDER BY p) AS bits
-        FROM embeddings CROSS JOIN hp GROUP BY vec_id),
-      bands AS (SELECT vec_id, band,
-          substr(bits, band * 12 + 1, 12) AS bb
-        FROM bits
-        CROSS JOIN (SELECT unnest(range(8)) AS band) bd),
-      cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.bb = b.bb
-          AND a.vec_id < b.vec_id)
-      SELECT c.vec_a, c.vec_b
-      FROM cand c
-      JOIN embeddings ea ON ea.vec_id = c.vec_a
-      JOIN embeddings eb ON eb.vec_id = c.vec_b
-      WHERE list_dot_product(CAST(ea.embedding AS DOUBLE[]),
-                             CAST(eb.embedding AS DOUBLE[])) /
-            (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]),
-                                   CAST(ea.embedding AS DOUBLE[]))) *
-             sqrt(list_dot_product(CAST(eb.embedding AS DOUBLE[]),
-                                   CAST(eb.embedding AS DOUBLE[]))))
-            >= CAST(0.35 AS DOUBLE)"""))
+  val q110 = srpQ("q110_srp_lsh_scaled", planes = 96, rowsPerBand = 12)
 
-  /** Shared oracle CTE chain for the k-means queries (q72/q85/q102):
+  /** Shared oracle CTE chain for the k-means queries (q72/q85/q102,
+    * and q105 with `p` = "i" so its names compose with [[pqCtesK]]):
     * min-id seeds (cell_id = id-rank) + two Lloyd passes → final
-    * centroids `c2`. Each consumer appends its own corpus assignment
-    * over c2 — mirror of [[Similarity.kmeansCentroids]] with the given
+    * centroids `${p}c2`. Each consumer appends its own corpus assignment
+    * over them — mirror of [[Similarity.kmeansCentroids]] with the given
     * k, iters=2.
     */
-  private def lloydCtesK(k: Int) = s"""seeds AS (
+  private def lloydCtes(k: Int, p: String = ""): String = {
+    val passes = (1 to 2).map { i =>
+      val prev = if (i == 1) s"${p}seeds" else s"${p}c${i - 1}"
+      s"""${p}a$i AS (${nearestCells(prev, 1)}),
+      ${p}c$i AS (SELECT cell_id, list(m ORDER BY d) AS centroid FROM (
+          SELECT a.cell_id, u.d, AVG(u.v) AS m
+          FROM ${p}a$i a JOIN embeddings e USING (vec_id),
+            LATERAL (SELECT unnest(CAST(e.embedding AS DOUBLE[])) AS v,
+                     generate_subscripts(e.embedding, 1) AS d) u
+          GROUP BY a.cell_id, u.d) GROUP BY cell_id)"""
+    }
+    s"""${p}seeds AS (
         SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell_id,
                CAST(embedding AS DOUBLE[]) AS centroid
         FROM (SELECT vec_id, embedding FROM embeddings
               ORDER BY vec_id LIMIT $k)),
-      a1 AS (SELECT vec_id, cell_id FROM (
-          SELECT e.vec_id, c.cell_id, row_number() OVER (PARTITION BY e.vec_id
-            ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                            c.centroid) DESC,
-                     c.cell_id ASC) AS rn
-          FROM embeddings e CROSS JOIN seeds c) WHERE rn = 1),
-      c1 AS (SELECT cell_id, list(m ORDER BY d) AS centroid FROM (
-          SELECT a.cell_id, u.d, AVG(u.v) AS m
-          FROM a1 a JOIN embeddings e USING (vec_id),
-            LATERAL (SELECT unnest(CAST(e.embedding AS DOUBLE[])) AS v,
-                     generate_subscripts(e.embedding, 1) AS d) u
-          GROUP BY a.cell_id, u.d) GROUP BY cell_id),
-      a2 AS (SELECT vec_id, cell_id FROM (
-          SELECT e.vec_id, c.cell_id, row_number() OVER (PARTITION BY e.vec_id
-            ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                            c.centroid) DESC,
-                     c.cell_id ASC) AS rn
-          FROM embeddings e CROSS JOIN c1 c) WHERE rn = 1),
-      c2 AS (SELECT cell_id, list(m ORDER BY d) AS centroid FROM (
-          SELECT a.cell_id, u.d, AVG(u.v) AS m
-          FROM a2 a JOIN embeddings e USING (vec_id),
-            LATERAL (SELECT unnest(CAST(e.embedding AS DOUBLE[])) AS v,
-                     generate_subscripts(e.embedding, 1) AS d) u
-          GROUP BY a.cell_id, u.d) GROUP BY cell_id)"""
-
-  private val lloydCtes = lloydCtesK(8)
+      ${passes.mkString(",\n      ")}"""
+  }
 
   /** IVF with LEARNED centroids — the honest ANN scale path (real
     * corpora have no labels to seed cells from, unlike q46): k-means
@@ -315,46 +293,13 @@ object SimilarityQueries extends QueryPack {
         idxPath)
       Similarity.ivfTopKIndexed(s, idxPath,
         emb.filter(col("vec_id") < 10), centroids,
-        "vec_id", "embedding", k = 5, nprobe = 3, dim = 64)
+        "vec_id", "embedding", k = 5, nprobe = 3)
         .select(col("vec_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"))
     },
     Some(s"""
-      WITH $lloydCtes,
-      corpus_cells AS (
-        SELECT neighbor_id, cell_id FROM (
-          SELECT e.vec_id AS neighbor_id, c.cell_id,
-            row_number() OVER (PARTITION BY e.vec_id ORDER BY
-              list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                     c.centroid) DESC,
-              c.cell_id ASC) AS rn
-          FROM embeddings e CROSS JOIN c2 c)
-        WHERE rn = 1),
-      probed AS (
-        SELECT vec_id, cell_id FROM (
-          SELECT q.vec_id, c.cell_id,
-            row_number() OVER (PARTITION BY q.vec_id ORDER BY
-              list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                                     c.centroid) DESC,
-              c.cell_id ASC) AS rn
-          FROM embeddings q CROSS JOIN c2 c
-          WHERE q.vec_id < 10)
-        WHERE rn <= 3),
-      scored AS (
-        SELECT p.vec_id, cc.neighbor_id,
-          list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                                 CAST(e.embedding AS DOUBLE[])) AS cos
-        FROM probed p
-        JOIN corpus_cells cc ON cc.cell_id = p.cell_id
-        JOIN embeddings q ON q.vec_id = p.vec_id
-        JOIN embeddings e ON e.vec_id = cc.neighbor_id
-        WHERE cc.neighbor_id <> p.vec_id)
-      SELECT vec_id, CAST(rn AS BIGINT) AS rank, neighbor_id FROM (
-        SELECT vec_id, neighbor_id,
-          row_number() OVER (PARTITION BY vec_id
-            ORDER BY cos DESC, neighbor_id ASC) AS rn
-        FROM scored)
-      WHERE rn <= 5"""))
+      WITH ${lloydCtes(8)},
+      ${ivfSearchOracle("c2")}"""))
 
   /** Shared oracle CTE chain for the PQ queries (q81/q83): training
     * (seeds → one Lloyd mean-update with empty-cell carry-over),
@@ -429,10 +374,24 @@ object SimilarityQueries extends QueryPack {
     },
     Some(s"""
       WITH $pqCtes
-      SELECT vec_id, CAST(rn AS BIGINT) AS rank, neighbor_id FROM (
-        SELECT vec_id, neighbor_id, row_number() OVER (PARTITION BY vec_id
-          ORDER BY score DESC, neighbor_id ASC) AS rn FROM scored)
-      WHERE rn <= 10"""))
+      ${rankOracle("score", "scored", 10)}"""))
+
+  /** The two-stage oracles' exact stage, the mirror of `Pq.rerank`:
+    * `from`'s top-`shortlist` ADC candidates per query, re-ranked by
+    * exact cosine to a top-10.
+    */
+  private def rerankOracle(from: String, shortlist: Int): String =
+    s"""cand AS (SELECT vec_id, neighbor_id FROM (
+          SELECT vec_id, neighbor_id, row_number() OVER (PARTITION BY vec_id
+            ORDER BY score DESC, neighbor_id ASC) AS rn FROM $from)
+        WHERE rn <= $shortlist),
+      rer AS (SELECT c.vec_id, c.neighbor_id,
+                list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
+                                       CAST(e.embedding AS DOUBLE[])) AS cos
+              FROM cand c
+              JOIN embeddings q ON q.vec_id = c.vec_id
+              JOIN embeddings e ON e.vec_id = c.neighbor_id)
+      ${rankOracle("cos", "rer", 10)}"""
 
   /** Two-stage PQ search: ADC shortlist (50) from the code table, then
     * exact cosine re-rank of ONLY the shortlisted raw vectors — the
@@ -452,20 +411,31 @@ object SimilarityQueries extends QueryPack {
     },
     Some(s"""
       WITH $pqCtes,
-      cand AS (SELECT vec_id, neighbor_id FROM (
-        SELECT vec_id, neighbor_id, row_number() OVER (PARTITION BY vec_id
-          ORDER BY score DESC, neighbor_id ASC) AS rn FROM scored)
-        WHERE rn <= 50),
-      rer AS (SELECT c.vec_id, c.neighbor_id,
-                list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                                       CAST(e.embedding AS DOUBLE[])) AS cos
-              FROM cand c
-              JOIN embeddings q ON q.vec_id = c.vec_id
-              JOIN embeddings e ON e.vec_id = c.neighbor_id)
-      SELECT vec_id, CAST(rn AS BIGINT) AS rank, neighbor_id FROM (
-        SELECT vec_id, neighbor_id, row_number() OVER (PARTITION BY vec_id
-          ORDER BY cos DESC, neighbor_id ASC) AS rn FROM rer)
-      WHERE rn <= 10"""))
+      ${rerankOracle("scored", 50)}"""))
+
+  /** SemDeDup over `k` clusters (iters=2, τ=0.35, maxBlock=256) and
+    * its oracle: the [[lloydCtes]] clustering, each vector's final cell,
+    * and the [[cosineAtLeast]] drop of every vector with a lower-id
+    * same-cell neighbor.
+    */
+  private def semDedupQ(name: String, k: Int): Q =
+    Q(name,
+      (s, dir) => Similarity.semDedup(Tables(s, dir, "embeddings"),
+        "vec_id", "embedding", k = k, iters = 2, threshold = 0.35,
+        dim = 64, maxBlock = 256),
+      Some(s"""
+      WITH ${lloydCtes(k)},
+      cells AS (${nearestCells("c2", 1)}),
+      dropped AS (
+        SELECT DISTINCT b.vec_id
+        FROM cells a JOIN cells b
+          ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
+        JOIN embeddings ea ON ea.vec_id = a.vec_id
+        JOIN embeddings eb ON eb.vec_id = b.vec_id
+        WHERE ${cosineAtLeast("ea", "eb")})
+      SELECT c.vec_id, CAST(c.cell_id AS INT) AS cell_id,
+             d.vec_id IS NULL AS keep
+      FROM cells c LEFT JOIN dropped d ON d.vec_id = c.vec_id"""))
 
   /** SemDeDup ([[Similarity.semDedup]]): k-means clustering (the q72
     * Lloyd chain, k=8, iters=2) + within-cluster cosine dedup at
@@ -475,34 +445,7 @@ object SimilarityQueries extends QueryPack {
     * (vec_id, cell_id, keep) over the whole corpus, so the hash check
     * pins the clustering AND the drop decisions.
     */
-  val q85 = Q("q85_semdedup",
-    (s, dir) => Similarity.semDedup(Tables(s, dir, "embeddings"),
-      "vec_id", "embedding", k = 8, iters = 2, threshold = 0.35,
-      dim = 64, maxBlock = 256),
-    Some(s"""
-      WITH $lloydCtes,
-      cells AS (SELECT vec_id, cell_id FROM (
-          SELECT e.vec_id, c.cell_id, row_number() OVER (PARTITION BY e.vec_id
-            ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                            c.centroid) DESC,
-                     c.cell_id ASC) AS rn
-          FROM embeddings e CROSS JOIN c2 c) WHERE rn = 1),
-      dropped AS (
-        SELECT DISTINCT b.vec_id
-        FROM cells a JOIN cells b
-          ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
-        JOIN embeddings ea ON ea.vec_id = a.vec_id
-        JOIN embeddings eb ON eb.vec_id = b.vec_id
-        WHERE list_dot_product(CAST(ea.embedding AS DOUBLE[]),
-                               CAST(eb.embedding AS DOUBLE[])) /
-              (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]),
-                                     CAST(ea.embedding AS DOUBLE[]))) *
-               sqrt(list_dot_product(CAST(eb.embedding AS DOUBLE[]),
-                                     CAST(eb.embedding AS DOUBLE[]))))
-              >= CAST(0.35 AS DOUBLE))
-      SELECT c.vec_id, CAST(c.cell_id AS INT) AS cell_id,
-             d.vec_id IS NULL AS keep
-      FROM cells c LEFT JOIN dropped d ON d.vec_id = c.vec_id"""))
+  val q85 = semDedupQ("q85_semdedup", k = 8)
 
   /** SemDeDup at the SCALE-PROPORTIONAL cluster count (k = 64 ≈ n/8 at
     * this corpus — SemDeDup's own discipline is cluster count ∝ corpus
@@ -512,34 +455,7 @@ object SimilarityQueries extends QueryPack {
     * Benching BOTH points makes the documented k∝n discipline a
     * measured artifact line instead of a probe-only claim.
     */
-  val q102 = Q("q102_semdedup_scaled",
-    (s, dir) => Similarity.semDedup(Tables(s, dir, "embeddings"),
-      "vec_id", "embedding", k = 64, iters = 2, threshold = 0.35,
-      dim = 64, maxBlock = 256),
-    Some(s"""
-      WITH ${lloydCtesK(64)},
-      cells AS (SELECT vec_id, cell_id FROM (
-          SELECT e.vec_id, c.cell_id, row_number() OVER (PARTITION BY e.vec_id
-            ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                            c.centroid) DESC,
-                     c.cell_id ASC) AS rn
-          FROM embeddings e CROSS JOIN c2 c) WHERE rn = 1),
-      dropped AS (
-        SELECT DISTINCT b.vec_id
-        FROM cells a JOIN cells b
-          ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
-        JOIN embeddings ea ON ea.vec_id = a.vec_id
-        JOIN embeddings eb ON eb.vec_id = b.vec_id
-        WHERE list_dot_product(CAST(ea.embedding AS DOUBLE[]),
-                               CAST(eb.embedding AS DOUBLE[])) /
-              (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]),
-                                     CAST(ea.embedding AS DOUBLE[]))) *
-               sqrt(list_dot_product(CAST(eb.embedding AS DOUBLE[]),
-                                     CAST(eb.embedding AS DOUBLE[]))))
-              >= CAST(0.35 AS DOUBLE))
-      SELECT c.vec_id, CAST(c.cell_id AS INT) AS cell_id,
-             d.vec_id IS NULL AS keep
-      FROM cells c LEFT JOIN dropped d ON d.vec_id = c.vec_id"""))
+  val q102 = semDedupQ("q102_semdedup_scaled", k = 64)
 
   /** Oracle CTE chain for the SERVING-grade PQ codebook (M=8, K=64,
     * THREE Lloyd mean-updates — vs q81's oracle-tractability point
@@ -588,41 +504,6 @@ object SimilarityQueries extends QueryPack {
                   FROM sub s JOIN cb$iters c ON c.m = s.m) WHERE rn = 1)"""
   }
 
-  /** IVF Lloyd chain with PREFIXED names (iseeds, iaN, icN) so it
-    * composes with [[pqCtesK]] in one WITH — same semantics as
-    * [[lloydCtesK]] / [[Similarity.kmeansCentroids]] (min-id seeds,
-    * cosine assignment, two mean updates → final centroids `ic2`).
-    */
-  private def ivfCtesK(k: Int): String = s"""iseeds AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell_id,
-               CAST(embedding AS DOUBLE[]) AS centroid
-        FROM (SELECT vec_id, embedding FROM embeddings
-              ORDER BY vec_id LIMIT $k)),
-      ia1 AS (SELECT vec_id, cell_id FROM (
-          SELECT e.vec_id, c.cell_id, row_number() OVER (PARTITION BY e.vec_id
-            ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                            c.centroid) DESC,
-                     c.cell_id ASC) AS rn
-          FROM embeddings e CROSS JOIN iseeds c) WHERE rn = 1),
-      ic1 AS (SELECT cell_id, list(m ORDER BY d) AS centroid FROM (
-          SELECT a.cell_id, u.d, AVG(u.v) AS m
-          FROM ia1 a JOIN embeddings e USING (vec_id),
-            LATERAL (SELECT unnest(CAST(e.embedding AS DOUBLE[])) AS v,
-                     generate_subscripts(e.embedding, 1) AS d) u
-          GROUP BY a.cell_id, u.d) GROUP BY cell_id),
-      ia2 AS (SELECT vec_id, cell_id FROM (
-          SELECT e.vec_id, c.cell_id, row_number() OVER (PARTITION BY e.vec_id
-            ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                            c.centroid) DESC,
-                     c.cell_id ASC) AS rn
-          FROM embeddings e CROSS JOIN ic1 c) WHERE rn = 1),
-      ic2 AS (SELECT cell_id, list(m ORDER BY d) AS centroid FROM (
-          SELECT a.cell_id, u.d, AVG(u.v) AS m
-          FROM ia2 a JOIN embeddings e USING (vec_id),
-            LATERAL (SELECT unnest(CAST(e.embedding AS DOUBLE[])) AS v,
-                     generate_subscripts(e.embedding, 1) AS d) u
-          GROUP BY a.cell_id, u.d) GROUP BY cell_id)"""
-
   /** The SERVING configuration, oracle-pinned end to end: IVF-PQ index
     * (learned 16-cell IVF, K=64 3-Lloyd PQ codebook — the
     * serving-grade codebook the r14 recall probe quantified, vs q81's
@@ -650,32 +531,14 @@ object SimilarityQueries extends QueryPack {
       Pq.writeIvfIndex(emb, centroids, "vec_id", "embedding", cb, idxPath)
       Pq.ivfTopKReranked(s, idxPath, emb.filter(col("vec_id") < 10),
         centroids, emb, cb, "vec_id", "embedding", k = 10, nprobe = 8,
-        shortlist = 200, dim = 64)
+        shortlist = 200)
         .select(col("vec_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"))
     },
     Some(s"""
       WITH ${pqCtesK(64, 3)},
-      ${ivfCtesK(16)},
-      corpus_cells AS (
-        SELECT neighbor_id, cell_id FROM (
-          SELECT e.vec_id AS neighbor_id, c.cell_id,
-            row_number() OVER (PARTITION BY e.vec_id ORDER BY
-              list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                     c.centroid) DESC,
-              c.cell_id ASC) AS rn
-          FROM embeddings e CROSS JOIN ic2 c)
-        WHERE rn = 1),
-      probed AS (
-        SELECT vec_id, cell_id FROM (
-          SELECT q.vec_id, c.cell_id,
-            row_number() OVER (PARTITION BY q.vec_id ORDER BY
-              list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                                     c.centroid) DESC,
-              c.cell_id ASC) AS rn
-          FROM embeddings q CROSS JOIN ic2 c
-          WHERE q.vec_id < 10)
-        WHERE rn <= 8),
+      ${lloydCtes(16, "i")},
+      ${probeCtes("ic2", 8)},
       lut AS (SELECT q.vec_id, c.m, c.code,
                      list_dot_product(
                        list_slice(CAST(q.embedding AS DOUBLE[]),
@@ -690,20 +553,7 @@ object SimilarityQueries extends QueryPack {
                         AND l.vec_id = p.vec_id
               WHERE t.vec_id <> l.vec_id
               GROUP BY l.vec_id, t.vec_id),
-      cand AS (SELECT vec_id, neighbor_id FROM (
-          SELECT vec_id, neighbor_id, row_number() OVER (PARTITION BY vec_id
-            ORDER BY score DESC, neighbor_id ASC) AS rn FROM adc)
-        WHERE rn <= 200),
-      rer AS (SELECT c.vec_id, c.neighbor_id,
-                list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                                       CAST(e.embedding AS DOUBLE[])) AS cos
-              FROM cand c
-              JOIN embeddings q ON q.vec_id = c.vec_id
-              JOIN embeddings e ON e.vec_id = c.neighbor_id)
-      SELECT vec_id, CAST(rn AS BIGINT) AS rank, neighbor_id FROM (
-        SELECT vec_id, neighbor_id, row_number() OVER (PARTITION BY vec_id
-          ORDER BY cos DESC, neighbor_id ASC) AS rn FROM rer)
-      WHERE rn <= 10"""))
+      ${rerankOracle("adc", 200)}"""))
 
   override def all: Seq[Q] =
     Seq(q30, q31, q44, q46, q62, q72, q81, q83, q85, q102, q105, q110)

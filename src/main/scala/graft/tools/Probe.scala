@@ -34,7 +34,7 @@ object Probe {
     "query" -> ("<query> [query ...] [reps=2]", query _),
     "plan" -> ("<query> [substring] | <outDir> <suffix> <query> [query ...]",
       plan _),
-    "contam" -> ("[runs=3]", contam _),
+    "contam" -> ("[runs=3] [fpp=0.001]", contam _),
     "profile" -> ("[reps=3]", profile _),
     "incremental" -> ("[denoms=2,8,32]", incremental _),
     "storewrite" -> ("[denom=32]", storeWrite _),
@@ -209,7 +209,8 @@ object Probe {
     * wall for 100× rows — strictly linear in corpus tokens with no
     * collision bound to hide behind), so its constant factor IS its
     * scale story; this probe records the measured ratio the fused
-    * expression buys. Prints one JSON line.
+    * expression buys at the prefilter false-positive rate `fpp`. Prints
+    * one JSON line.
     */
   private def contam(spark: SparkSession, dir: String,
       args: Seq[String]): Unit = {
@@ -222,7 +223,7 @@ object Probe {
       val ts = (1 to runs).map(_ => timed(f))
       (ts.map(_._2), ts.head._1)
     }
-    val fpp = sys.env.getOrElse("CONTAM_FPP", "0.001").toDouble
+    val fpp = args.lift(1).fold(0.001)(_.toDouble)
     val (fused, nF) = series(Dedupe.contamination(
       corpus, bench, "doc_id", "text", 5, 0.5,
       prefilterFpp = fpp).count())
@@ -438,7 +439,7 @@ object Probe {
       val queries = emb.filter(col("vec_id") < 100)
       def search(): Set[(Long, Long)] = Similarity.ivfTopKIndexed(spark,
           path, queries, centroids, "vec_id", "embedding", 10,
-          nprobe = 8, dim = 64)
+          nprobe = 8)
         .select("vec_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       search() // codegen warm-up
@@ -508,7 +509,7 @@ object Probe {
     // "cost of recall 1.0" every approximate line is compared against)
     val (truth, bruteSec) = timeIt {
       val t = Similarity.bruteForceTopK(queries, emb, "vec_id",
-        "embedding", k, dim = 64).persist()
+        "embedding", k).persist()
       t.count(); t
     }
     warm += truth
@@ -524,7 +525,7 @@ object Probe {
     Seq(1, 2, 4, 8, 16).foreach { nprobe =>
       val (r, sec) = timeIt {
         val a = Similarity.ivfTopK(queries, emb, centroids, "vec_id",
-          "embedding", k, nprobe, dim = 64)
+          "embedding", k, nprobe)
         Similarity.meanRecallAtK(a, truth)
       }
       out += s"ivf_nprobe$nprobe" -> hit(r, sec)
@@ -593,8 +594,8 @@ object Probe {
         val (r, sec) = timeIt {
           Similarity.meanRecallAtK(
             Pq.ivfTopKReranked(spark, ivfpqPath, queries, centroids,
-              emb, cb64, "vec_id", "embedding", k, nprobe, shortlist,
-              dim = 64), truth)
+              emb, cb64, "vec_id", "embedding", k, nprobe, shortlist),
+            truth)
         }
         out += s"ivfpq_nprobe${nprobe}_rerank$shortlist" -> hit(r, sec)
     }
@@ -614,7 +615,7 @@ object Probe {
         f.count(); f
       }
       val (hits, tot) = Similarity.pairRecall(found, srpCorpus, "vec_id",
-        "embedding", 0.35, dim = 64)
+        "embedding", 0.35)
       val srpRecall = if (tot == 0) 1.0 else hits.toDouble / tot
       out += s"srp_pairs_rpb$rowsPerBand" -> Obj("recall" -> srpRecall,
         "hit" -> hits, "truth" -> tot, "corpus" -> srpN, "sec" -> srpSec)

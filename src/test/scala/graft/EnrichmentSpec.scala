@@ -277,13 +277,13 @@ class EnrichmentSpec extends SparkSpec {
         "image", Multimodal.syntheticPng(7L))).toDS()).toDF()
       .select(col("id").as("vec_id"), col("embedding"))
     val brute = Similarity.bruteForceTopK(qEmb, corpus, "vec_id",
-      "embedding", 3, dim = 48)
+      "embedding", 3)
     assert(brute.select("neighbor_id").as[Long].collect().toSet ==
       Set(7L, 47L, 87L))
     val cents = Similarity.kmeansCentroids(corpus, "vec_id", "embedding",
       8, iters = 2, dim = 48)
     val ivf = Similarity.ivfTopK(qEmb, corpus, cents, "vec_id",
-      "embedding", 3, nprobe = 8, dim = 48)
+      "embedding", 3, nprobe = 8)
     assert(ivf.select("neighbor_id").as[Long].collect().toSet ==
       Set(7L, 47L, 87L))
   }
@@ -545,13 +545,13 @@ class EnrichmentSpec extends SparkSpec {
         "audio", Multimodal.syntheticWav(7L))).toDS()).toDF()
       .select(col("id").as("vec_id"), col("embedding"))
     val brute = Similarity.bruteForceTopK(qEmb, corpus, "vec_id",
-      "embedding", 3, dim = 16)
+      "embedding", 3)
     assert(brute.select("neighbor_id").as[Long].collect().toSet ==
       Set(7L, 47L, 87L))
     val cents = Similarity.kmeansCentroids(corpus, "vec_id", "embedding",
       8, iters = 2, dim = 16)
     val ivf = Similarity.ivfTopK(qEmb, corpus, cents, "vec_id",
-      "embedding", 3, nprobe = 8, dim = 16)
+      "embedding", 3, nprobe = 8)
     assert(ivf.select("neighbor_id").as[Long].collect().toSet ==
       Set(7L, 47L, 87L))
   }

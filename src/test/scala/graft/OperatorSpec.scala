@@ -711,8 +711,7 @@ class OperatorSpec extends SparkSpec {
       k = 3, iters = 3, dim = 4).orderBy("cell_id").collect()
     assert(got.map(_.toString).toSeq == again.map(_.toString).toSeq)
     // all members assigned to their seed's cluster
-    val assigned = Similarity.assignCells(pts, cent, "vec_id", "embedding",
-        dim = 4)
+    val assigned = Similarity.assignCells(pts, cent, "vec_id", "embedding")
       .withColumn("expected", (col("vec_id") % 3).cast("int"))
     assert(assigned.filter(col("cell_id") =!= col("expected")).count() == 0)
     // the materialized-index probe path returns exactly the direct path
@@ -722,10 +721,10 @@ class OperatorSpec extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("ivf").toString
     Similarity.writeIvfIndex(emb, learned, "vec_id", "embedding", idx)
     val direct = Similarity.ivfTopK(emb.filter(col("vec_id") < 5), emb,
-      learned, "vec_id", "embedding", k = 3, nprobe = 2, dim = 64)
+      learned, "vec_id", "embedding", k = 3, nprobe = 2)
     val indexed = Similarity.ivfTopKIndexed(spark, idx,
       emb.filter(col("vec_id") < 5), learned, "vec_id", "embedding",
-      k = 3, nprobe = 2, dim = 64)
+      k = 3, nprobe = 2)
     assert(direct.exceptAll(indexed).isEmpty &&
       indexed.exceptAll(direct).isEmpty)
     learned.unpersist()
@@ -1442,10 +1441,10 @@ class OperatorSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val foundAll = Seq((1L, 2L), (3L, 4L)).toDF("vec_a", "vec_b")
     assert(Similarity.pairRecall(foundAll, vecs, "vec_id", "embedding",
-      0.9, dim = 2) == ((2L, 2L)))
+      0.9) == ((2L, 2L)))
     val foundHalf = Seq((1L, 2L), (1L, 3L)).toDF("vec_a", "vec_b")
     assert(Similarity.pairRecall(foundHalf, vecs, "vec_id", "embedding",
-      0.9, dim = 2) == ((1L, 2L)))
+      0.9) == ((1L, 2L)))
   }
 
   test("store guards: pre-bands store upgrades in place, count-less " +
@@ -1882,9 +1881,9 @@ class OperatorSpec extends SparkSpec {
     val corpus = vecs(0, 240)
     val queries = vecs(0, 5)
     val viaIndex = Similarity.ivfTopKIndexed(spark, dir, queries,
-      centroids, "vec_id", "embedding", k = 3, nprobe = 2, dim = dim)
+      centroids, "vec_id", "embedding", k = 3, nprobe = 2)
     val direct = Similarity.ivfTopK(queries, corpus, centroids,
-      "vec_id", "embedding", k = 3, nprobe = 2, dim = dim)
+      "vec_id", "embedding", k = 3, nprobe = 2)
     assert(viaIndex.exceptAll(direct).isEmpty &&
       direct.exceptAll(viaIndex).isEmpty)
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Pq, Similarity}
 
@@ -80,13 +81,13 @@ class PqSpec extends SparkSpec {
     Pq.writeIvfIndex(emb, centroids, "vec_id", "embedding", cb, path)
     val queries = emb.filter(col("vec_id") < 5)
     val got = Pq.ivfTopK(spark, path, queries, centroids, cb,
-      "vec_id", "embedding", k = 5, nprobe = 2, dim = dim)
+      "vec_id", "embedding", k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
 
     // reference: same probed cells, exhaustive ADC over the in-memory
     // code table filtered to those cells
     val probed = Similarity.probeCells(queries, centroids,
-      "vec_id", "embedding", nprobe = 2, dim = dim)
+      "vec_id", "embedding", nprobe = 2)
       .select("vec_id", "cell_id")
       .collect().map(r => (r.getLong(0), r.get(1))).toSet
     val cells = Similarity.assignCells(emb, centroids, "vec_id", "embedding")
@@ -134,7 +135,7 @@ class PqSpec extends SparkSpec {
     // left vector, its near-dup partner should appear in the PQ top-10
     // far more often than the ~0.5% random-chance rate.
     val pairs = Similarity.nearDupPairsSalted(emb, "label", "vec_id",
-      "embedding", threshold = 0.35, dim = dim, maxBlock = 256)
+      "embedding", threshold = 0.35, maxBlock = 256)
       .collect().map(r => (r.getLong(1), r.getLong(2)))
     assert(pairs.nonEmpty)
     val queries = emb.filter(col("vec_id").isin(pairs.map(_._1): _*))
@@ -167,9 +168,9 @@ class PqSpec extends SparkSpec {
     // the full corpus with the same frozen centroids
     val queries = emb.filter(col("vec_id") < 10)
     val viaIndex = Similarity.ivfTopKIndexed(spark, path, queries,
-      centroids, "vec_id", "embedding", 10, nprobe = 4, dim = dim)
+      centroids, "vec_id", "embedding", 10, nprobe = 4)
     val direct = Similarity.ivfTopK(queries, emb, centroids, "vec_id",
-      "embedding", 10, nprobe = 4, dim = dim)
+      "embedding", 10, nprobe = 4)
     assert(viaIndex.exceptAll(direct).isEmpty &&
       direct.exceptAll(viaIndex).isEmpty)
     // every appended row landed in its assigned cell partition — the
@@ -177,7 +178,7 @@ class PqSpec extends SparkSpec {
     val idx = spark.read.parquet(path)
       .select(col("vec_id"), col("cell_id").cast("int").as("cell_id"))
     val expect = Similarity.assignCells(emb, centroids, "vec_id",
-      "embedding", dim)
+      "embedding")
       .select(col("vec_id"), col("cell_id").cast("int").as("cell_id"))
     assert(idx.exceptAll(expect).isEmpty && expect.exceptAll(idx).isEmpty)
     // compaction: cells fragmented by the append (build file + append
@@ -199,7 +200,7 @@ class PqSpec extends SparkSpec {
     assert(after.values.forall(_ == 1), s"compaction left fragments: $after")
     assert(after.keySet == before.keySet)
     val viaCompacted = Similarity.ivfTopKIndexed(spark, path, queries,
-      centroids, "vec_id", "embedding", 10, nprobe = 4, dim = dim)
+      centroids, "vec_id", "embedding", 10, nprobe = 4)
     assert(viaCompacted.exceptAll(direct).isEmpty &&
       direct.exceptAll(viaCompacted).isEmpty)
     // targeted compaction only touches the named cells: re-fragment one
@@ -223,13 +224,13 @@ class PqSpec extends SparkSpec {
     // hash oracles cannot see.
     val queries = emb.filter(col("vec_id") < 50)
     val truth = Similarity.bruteForceTopK(queries, emb, "vec_id",
-      "embedding", 10, dim).persist()
+      "embedding", 10).persist()
     truth.count()
     val centroids = Similarity.kmeansCentroids(emb, "vec_id",
       "embedding", k = 16, iters = 2, dim = dim)
     def ivfRecall(nprobe: Int): Double = Similarity.meanRecallAtK(
       Similarity.ivfTopK(queries, emb, centroids, "vec_id", "embedding",
-        10, nprobe, dim), truth)
+        10, nprobe), truth)
     val (r1, r4, r8, r16) =
       (ivfRecall(1), ivfRecall(4), ivfRecall(8), ivfRecall(16))
     // more probes can only add candidates: recall is monotone
@@ -258,7 +259,7 @@ class PqSpec extends SparkSpec {
       val found = Similarity.srpNearDupPairs(emb, "vec_id", "embedding",
         Similarity.srpSigns(64, dim), rowsPerBand = rpb, threshold = 0.35)
       val (hit, tot) = Similarity.pairRecall(found, emb, "vec_id",
-        "embedding", 0.35, dim)
+        "embedding", 0.35)
       if (tot == 0) 1.0 else hit.toDouble / tot
     }
     val (s8, s4) = (srpRecall(8), srpRecall(4))
@@ -274,7 +275,7 @@ class PqSpec extends SparkSpec {
     // (recall bounded by min(cell coverage, shortlist quality))
     val queries = emb.filter(col("vec_id") < 50)
     val truth = Similarity.bruteForceTopK(queries, emb, "vec_id",
-      "embedding", 10, dim).persist()
+      "embedding", 10).persist()
     truth.count()
     val centroids = Similarity.kmeansCentroids(emb, "vec_id",
       "embedding", k = 16, iters = 2, dim = dim)
@@ -287,13 +288,66 @@ class PqSpec extends SparkSpec {
       def recall(nprobe: Int, shortlist: Int): Double =
         Similarity.meanRecallAtK(
           Pq.ivfTopKReranked(spark, idx, queries, centroids, emb, cb64,
-            "vec_id", "embedding", 10, nprobe, shortlist, dim), truth)
+            "vec_id", "embedding", 10, nprobe, shortlist), truth)
       val r8 = recall(8, 200)
       val r16 = recall(16, 200)
       assert(r8 >= 0.80, s"ivfpq nprobe=8 rerank@200 recall $r8")
       // more probed cells can only add candidates
       assert(r16 >= r8, s"nprobe monotonicity: $r16 < $r8")
       assert(r16 >= 0.90, s"ivfpq nprobe=16 rerank@200 recall $r16")
+    } finally graft.core.TempDirs.deleteRecursively(idx)
+  }
+
+  /** 200 seeded Gaussian vectors (dim 16), its first 20 as queries, and
+    * 8 k-means cells over it: small enough for exact rank-by-rank
+    * equalities between the search paths.
+    */
+  private lazy val seeded = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(13)
+    (0L until 200L).map(i =>
+      (i, Seq.fill(16)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
+  }
+  private lazy val seededQueries = seeded.filter(col("vec_id") < 20)
+  private lazy val seededCells = Similarity.kmeansCentroids(seeded,
+    "vec_id", "embedding", k = 8, iters = 2, dim = 16)
+
+  private def ranks(df: DataFrame): Seq[(Long, Int, Long)] =
+    df.orderBy("vec_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+
+  test("IVF over the corpus and over its index at full probe equals " +
+      "brute force rank by rank") {
+    assert(seededCells.count() == 8)
+    val brute = ranks(Similarity.bruteForceTopK(seededQueries, seeded,
+      "vec_id", "embedding", 10))
+    assert(brute.size == 200)
+    assert(ranks(Similarity.ivfTopK(seededQueries, seeded, seededCells,
+      "vec_id", "embedding", 10, nprobe = 8)) == brute)
+    val idx = java.nio.file.Files.createTempDirectory("pqspec_ivf").toString
+    try {
+      Similarity.writeIvfIndex(seeded, seededCells, "vec_id", "embedding",
+        idx)
+      assert(ranks(Similarity.ivfTopKIndexed(spark, idx, seededQueries,
+        seededCells, "vec_id", "embedding", 10, nprobe = 8)) == brute)
+    } finally graft.core.TempDirs.deleteRecursively(idx)
+  }
+
+  test("IVF-PQ re-rank at full probe equals the exhaustive PQ re-rank " +
+      "rank by rank") {
+    assert(seededCells.count() == 8)
+    val cb16 = Pq.train(seeded, "vec_id", "embedding", m = 4, k = 8,
+      iters = 2, dim = 16)
+    val exhaustive = ranks(Pq.topKReranked(seededQueries,
+      Pq.encode(seeded, "vec_id", "embedding", cb16), seeded, cb16,
+      "vec_id", "embedding", k = 10, shortlist = 30))
+    assert(exhaustive.size == 200)
+    val idx = java.nio.file.Files.createTempDirectory("pqspec_ivfpq").toString
+    try {
+      Pq.writeIvfIndex(seeded, seededCells, "vec_id", "embedding", cb16, idx)
+      assert(ranks(Pq.ivfTopKReranked(spark, idx, seededQueries,
+        seededCells, seeded, cb16, "vec_id", "embedding", k = 10,
+        nprobe = 8, shortlist = 30)) == exhaustive)
     } finally graft.core.TempDirs.deleteRecursively(idx)
   }
 }

@@ -182,7 +182,7 @@ class PropertySpec extends SparkSpec {
     val three = emb.select(
       Similarity.dotNative(col("v"), col("v")).as("loop"),
       aggregate(zip_with(dbl, dbl, _ * _), lit(0.0), _ + _).as("fold"),
-      Similarity.dotFixed(col("v"), col("v"), 64).as("fixed"))
+      Reference.dotFixed(col("v"), col("v"), 64).as("fixed"))
     // bitwise: fp equality, not tolerance — all three sum in index order
     assert(three.filter(col("loop") =!= col("fold") ||
       col("loop") =!= col("fixed")).count() == 0)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -72,4 +72,13 @@ object Reference {
       .join(best, Seq("doc"), "left")
       .select(col("doc"), coalesce(col("pred_lang"), lit("und")).as("pred_lang"))
   }
+
+  /** Fixed-dimension dot product as an expanded `element_at` chain, the
+    * form [[graft.operators.Similarity.dotNative]]'s loop replaced: the
+    * same left-to-right addition order, so results are bit-identical.
+    */
+  def dotFixed(a: Column, b: Column, dim: Int): Column =
+    (1 to dim).map(i =>
+      element_at(a, i).cast("double") * element_at(b, i).cast("double"))
+      .reduce(_ + _)
 }

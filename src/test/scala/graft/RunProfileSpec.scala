@@ -64,4 +64,14 @@ class RunProfileSpec extends SparkSpec {
     // after it returned either
     assert(first.stages == 0 && first.tasks == 0, first)
   }
+
+  test("an adaptive-execution stage is named by its plan operator, not " +
+      "the materialization thread's call site") {
+    val (_, p) = RunProfile(spark)(
+      spark.range(0, 1000, 1, 4).repartition(2).count())
+    val stageLines = p.lines.filter(_.startsWith("  stage "))
+    assert(stageLines.nonEmpty, p.lines)
+    assert(!stageLines.exists(_.contains("withThreadLocalCaptured")),
+      stageLines)
+  }
 }

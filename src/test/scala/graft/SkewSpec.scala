@@ -27,11 +27,11 @@ class SkewSpec extends SparkSpec {
     val emb = Tables(spark, sfDir, "embeddings").limit(2000)
     // maxBlock large enough that s=1 everywhere -> the plain blocked join
     val plain = graft.operators.Similarity.nearDupPairsSalted(
-      emb, "label", "vec_id", "embedding", 0.3, dim = 64,
+      emb, "label", "vec_id", "embedding", 0.3,
       maxBlock = 1000000)
     // aggressively small cap -> every block salted into many buckets
     val salted = graft.operators.Similarity.nearDupPairsSalted(
-      emb, "label", "vec_id", "embedding", 0.3, dim = 64, maxBlock = 17)
+      emb, "label", "vec_id", "embedding", 0.3, maxBlock = 17)
     assert(plain.count() == salted.count())
     assert(salted.exceptAll(plain).isEmpty &&
       plain.exceptAll(salted).isEmpty)

@@ -26,9 +26,9 @@ class StreamingIvfSpec extends SparkSpec {
       : Unit = {
     val queries = seen.filter(col("vec_id") < 10)
     val viaIndex = Similarity.ivfTopKIndexed(spark, path, queries,
-      centroids, "vec_id", "embedding", 10, nprobe = 4, dim = dim)
+      centroids, "vec_id", "embedding", 10, nprobe = 4)
     val direct = Similarity.ivfTopK(queries, seen, centroids, "vec_id",
-      "embedding", 10, nprobe = 4, dim = dim)
+      "embedding", 10, nprobe = 4)
     assert(viaIndex.exceptAll(direct).isEmpty &&
       direct.exceptAll(viaIndex).isEmpty)
   }
@@ -128,7 +128,7 @@ class StreamingIvfSpec extends SparkSpec {
         "image", Multimodal.syntheticPng(7L))).toDS()).toDF()
       .select(col("id").as("vec_id"), col("embedding"))
     val hits = Similarity.ivfTopKIndexed(spark, index, qEmb, cents,
-      "vec_id", "embedding", 4, nprobe = 4, dim = vdim)
+      "vec_id", "embedding", 4, nprobe = 4)
     assert(hits.select("neighbor_id").as[Long].collect().toSet ==
       Set(7L, 27L, 47L, 67L))
   }
