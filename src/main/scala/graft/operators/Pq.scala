@@ -187,8 +187,8 @@ object Pq {
       idCol: String, vecCol: String, codebooks: Seq[Seq[Seq[Double]]],
       path: String): Unit =
     // encode + assign in ONE narrow pass over the corpus — the previous
-    // assignCells + id equi-join shuffled the corpus twice before the
-    // write (guide §2.4); both kernels are per-row codegen'd loops
+    // argmax aggregation + id equi-join shuffled the corpus twice before
+    // the write (guide §2.4); both kernels are per-row codegen'd loops
     corpus
       .select(col(idCol),
         encodeCol(col(vecCol), codebooks).as("codes"),

@@ -127,27 +127,6 @@ object Similarity {
     (nHit, nTruth)
   }
 
-  /** Assign each vector to its nearest centroid (IVF cell). `centroids`
-    * must be small (broadcast): (cell_id, centroid array<double>).
-    *
-    * Argmax is ONE aggregation pass with map-side partial combine —
-    * `min_by` over (-sim, cell_id) picks the highest similarity with ties
-    * to the smallest cell_id (identical to a row_number(sim desc,
-    * cell_id asc)=1 pick, without the full sort-shuffle of the
-    * corpus×centroids cross product).
-    *
-    * Contract (in-row projection semantics, r17): ONE output row per
-    * INPUT row — duplicate ids each keep their row (the pre-r17
-    * groupBy form collapsed them; no caller feeds duplicate ids) — and
-    * a null `vecCol` yields a null cell_id (index writers partition
-    * such rows under the Hive default-partition bucket; filter null
-    * vectors upstream if they should not be indexed).
-    */
-  def assignCells(vectors: DataFrame, centroids: DataFrame, idCol: String,
-      vecCol: String): DataFrame =
-    vectors.select(col(idCol),
-      nearestCellCol(centroidValues(centroids), col(vecCol)).as("cell_id"))
-
   /** The (cell_id, centroid) rows of a k×dim centroid frame as local
     * values — the form [[nearestCellCol]] takes. This is a collect:
     * callers run it once, where they hold the frame, never while a
@@ -165,7 +144,7 @@ object Similarity {
     * ([[graft.functions.NearestCentroidExpr]]) — centroids ride the
     * expression as a referenced constant (local k×dim values, see
     * [[centroidValues]]: Lloyd passes collect them by design, indexes
-    * freeze them). This is what turned [[assignCells]] from
+    * freeze them). This turned cell assignment from
     * crossJoin(broadcast) → groupBy(argmax) — a k× row multiplication
     * plus a corpus-wide shuffle, which every caller then JOINED back
     * onto the corpus (a second corpus-sized exchange) — into a narrow
@@ -237,11 +216,10 @@ object Similarity {
     * Scale shape: the pairwise quadratic runs WITHIN clusters only —
     * k bounds the expected block at |corpus|/k — and oversized clusters
     * are salt-split by [[nearDupPairsSalted]] so no single task owns a
-    * hot cluster's n². The assignment carries each vector THROUGH the
-    * argmax aggregation (`first` over the k broadcast-crossjoin copies)
-    * instead of joining assignments back to the corpus: one corpus
-    * shuffle, not two. The dropped-id set (typically ≪ corpus) joins
-    * back broadcast-sized.
+    * hot cluster's n². The assignment is the in-row argmax
+    * [[nearestCellCol]], a narrow projection that carries each vector
+    * along, so the corpus reaches the pair join without a shuffle. The
+    * dropped-id set (typically ≪ corpus) joins back broadcast-sized.
     */
   def semDedup(vectors: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, threshold: Double, dim: Int,
@@ -277,8 +255,8 @@ object Similarity {
     * up to floating-point accumulation order.
     *
     * Scale shape, per iteration:
-    *  - assignment is [[assignCells]]: corpus × broadcast(k centroids),
-    *    argmax folded into ONE map-side-combined aggregation;
+    *  - assignment is the in-row argmax [[nearestCellCol]] over the
+    *    local k centroids: one narrow corpus scan, no exchange;
     *  - the new means are `dim` independent `avg(element_at(vec, i))`
     *    aggregates — NO per-dimension explode (a |corpus|×dim row
     *    shuffle); partial aggregation reduces each partition to k×dim
@@ -313,8 +291,8 @@ object Similarity {
     (1 to iters).foldLeft(seeds) { (centroids, _) =>
       // in-row assignment (nearestCellCol): each pass is ONE narrow
       // corpus scan into the partially-aggregated mean update — the
-      // previous form ran assignCells (crossJoin → corpus-wide argmax
-      // shuffle) and then JOINED the assignment back onto a second
+      // previous form ran a crossJoin → corpus-wide argmax shuffle
+      // and then JOINED the assignment back onto a second
       // corpus scan (two more exchanges) per iteration (guide §2.4)
       val next = vectors
         .select(nearestCellCol(centroidValues(centroids), col(vecCol))
@@ -338,8 +316,8 @@ object Similarity {
   def writeIvfIndex(corpus: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, path: String): Unit =
     // in-row assignment: the write is ONE narrow pass over the corpus —
-    // the previous assignCells + join-back shuffled the corpus twice
-    // (argmax aggregation, id equi-join) before any byte was written
+    // the previous argmax aggregation + id equi-join shuffled the corpus
+    // twice before any byte was written
     corpus
       .withColumn("cell_id",
         nearestCellCol(centroidValues(centroids), col(vecCol)))

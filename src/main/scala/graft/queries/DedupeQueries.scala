@@ -3,6 +3,8 @@ package graft.queries
 import graft.{Q, QueryPack, Tables}
 import graft.core.CacheHandle
 import graft.operators.{Dedupe, TextAnalysis}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Training-data deduplication coverage: exact content-hash dedup,
@@ -30,21 +32,14 @@ object DedupeQueries extends QueryPack {
              md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
       FROM documents"""))
 
-  /** MinHash (16 hashes over 3-word shingles) + LSH banding (4 bands × 4
-    * rows): candidate pairs where at least one band fully agrees, with the
-    * estimated Jaccard (matching hashes / 16).
+  /** The MinHash oracle chain over `src`'s documents: distinct 3-word
+    * shingles `sh(doc, shingle)`, each shingle's hash (its md5's first
+    * 7 hex digits), 16 hash signatures `sig(doc, i, mh)` and 4-row band
+    * signatures `bs(doc, band, band_sig)`.
     */
-  val q24 = Q("q24_minhash_lsh",
-    (s, dir) => {
-      val sig = Dedupe.minhashWide(
-        Tables(s, dir, "documents"), "doc_id", "text",
-        shingleK = 3, numHashes = 16)
-      Dedupe.minhashCandidates(sig, numHashes = 16, rowsPerBand = 4)
-    },
-    Some("""
-      WITH w AS (SELECT doc_id,
+  private def minhashCtes(src: String) = s"""w AS (SELECT doc_id,
                string_split(substr(text, 1, 1048576), ' ') AS ws
-             FROM documents),
+             FROM $src),
       sh AS (SELECT DISTINCT doc_id AS doc,
                ws[i + 1] || ' ' || ws[i + 2] || ' ' || ws[i + 3] AS shingle
              FROM (SELECT doc_id, ws, unnest(range(len(ws) - 2)) AS i
@@ -57,16 +52,59 @@ object DedupeQueries extends QueryPack {
               GROUP BY doc, i),
       bs AS (SELECT doc, i // 4 AS band,
                string_agg(CAST(mh AS VARCHAR), '|' ORDER BY i) AS band_sig
-             FROM sig GROUP BY doc, i // 4),
-      cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
+             FROM sig GROUP BY doc, i // 4)"""
+
+  /** Candidate pairs `cand(doc_a, doc_b)`, a < b, agreeing on a band. */
+  private val selfCand = """cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
                FROM bs a JOIN bs b ON a.band = b.band
-                AND a.band_sig = b.band_sig AND a.doc < b.doc)
-      SELECT c.doc_a, c.doc_b,
+                AND a.band_sig = b.band_sig AND a.doc < b.doc)"""
+
+  /** The estimated Jaccard (matching hashes / 16) of each `cand` pair,
+    * whose columns are `a` and `b`.
+    */
+  private def estJaccard(a: String, b: String) = s"""SELECT c.$a, c.$b,
              CAST(COUNT(*) AS BIGINT) / CAST(16 AS DOUBLE) AS est_jaccard
       FROM cand c
-      JOIN sig sa ON sa.doc = c.doc_a
-      JOIN sig sb ON sb.doc = c.doc_b AND sb.i = sa.i AND sb.mh = sa.mh
-      GROUP BY c.doc_a, c.doc_b"""))
+      JOIN sig sa ON sa.doc = c.$a
+      JOIN sig sb ON sb.doc = c.$b AND sb.i = sa.i AND sb.mh = sa.mh
+      GROUP BY c.$a, c.$b"""
+
+  /** The band candidates ([[selfCand]]) and their exact verification:
+    * `sizes` counts each doc's distinct shingles, `inter` each pair's
+    * shared ones; [[verifiedPairs]] keeps those with [[jaccard]] ≥ 0.5.
+    */
+  private val verifyCtes =
+    s"""$selfCand,
+      sizes AS (SELECT doc, COUNT(*) AS sz FROM sh GROUP BY doc),
+      inter AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
+                FROM cand c
+                JOIN sh a ON a.doc = c.doc_a
+                JOIN sh b ON b.doc = c.doc_b AND b.shingle = a.shingle
+                GROUP BY c.doc_a, c.doc_b)"""
+
+  private val jaccard =
+    "CAST(n_inter AS BIGINT) / CAST(sa.sz + sb.sz - n_inter AS DOUBLE)"
+
+  private val verifiedPairs = s"""FROM inter
+      JOIN sizes sa ON sa.doc = doc_a
+      JOIN sizes sb ON sb.doc = doc_b
+      WHERE $jaccard >= CAST(0.5 AS DOUBLE)"""
+
+  /** MinHash (16 hashes over 3-word shingles) + LSH banding (4 bands × 4
+    * rows): candidate pairs where at least one band fully agrees, with the
+    * estimated Jaccard (matching hashes / 16).
+    */
+  val q24 = Q("q24_minhash_lsh",
+    (s, dir) => {
+      val sig = Dedupe.minhashWide(
+        Tables(s, dir, "documents"), "doc_id", "text",
+        shingleK = 3, numHashes = 16)
+      Dedupe.minhashCandidates(sig, numHashes = 16, rowsPerBand = 4)
+    },
+    Some(s"""
+      WITH ${minhashCtes("documents")},
+      $selfCand
+      ${estJaccard("doc_a", "doc_b")}"""))
 
   /** LSH-prefilter + exact verify: exact 3-gram Jaccard computed only
     * for the MinHash band candidates, thresholded — the 100 TB-safe
@@ -96,80 +134,25 @@ object DedupeQueries extends QueryPack {
       Dedupe.nearDupPairs(sig, docs, "doc_id", "text", shingleK = 3,
         numHashes = 16, rowsPerBand = 4, minJaccard = 0.5)
     },
-    Some("""
-      WITH w AS (SELECT doc_id,
-               string_split(substr(text, 1, 1048576), ' ') AS ws
-             FROM documents),
-      sh AS (SELECT DISTINCT doc_id AS doc,
-               ws[i + 1] || ' ' || ws[i + 2] || ' ' || ws[i + 3] AS shingle
-             FROM (SELECT doc_id, ws, unnest(range(len(ws) - 2)) AS i
-                   FROM w) t),
-      hs AS (SELECT doc, CAST((((((((strpos('0123456789abcdef', substr(m, 1, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(m, 2, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 3, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 4, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 5, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 6, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 7, 1)) - 1)) AS BIGINT) AS h
-             FROM (SELECT doc, md5(shingle) AS m FROM sh) t),
-      sig AS (SELECT doc, i,
-                MIN(((2 * i + 1) * h + (104729 * i + 12345)) % 2147483647) AS mh
-              FROM hs CROSS JOIN (SELECT unnest(range(16)) AS i) ii
-              GROUP BY doc, i),
-      bs AS (SELECT doc, i // 4 AS band,
-               string_agg(CAST(mh AS VARCHAR), '|' ORDER BY i) AS band_sig
-             FROM sig GROUP BY doc, i // 4),
-      cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-               FROM bs a JOIN bs b ON a.band = b.band
-                AND a.band_sig = b.band_sig AND a.doc < b.doc),
-      sizes AS (SELECT doc, COUNT(*) AS sz FROM sh GROUP BY doc),
-      inter AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-                FROM cand c
-                JOIN sh a ON a.doc = c.doc_a
-                JOIN sh b ON b.doc = c.doc_b AND b.shingle = a.shingle
-                GROUP BY c.doc_a, c.doc_b)
+    Some(s"""
+      WITH ${minhashCtes("documents")},
+      $verifyCtes
       SELECT doc_a, doc_b,
-             CAST(n_inter AS BIGINT) / CAST(sa.sz + sb.sz - n_inter AS DOUBLE) AS jaccard
-      FROM inter
-      JOIN sizes sa ON sa.doc = doc_a
-      JOIN sizes sb ON sb.doc = doc_b
-      WHERE CAST(n_inter AS BIGINT) / CAST(sa.sz + sb.sz - n_inter AS DOUBLE) >= CAST(0.5 AS DOUBLE)"""))
+             $jaccard AS jaccard
+      $verifiedPairs"""))
 
-  /** Shared by q59 (from-scratch) and q79 (incremental): the
-    * incremental path must produce EXACTLY the clusters a batch run
-    * over the full corpus would, so both check against the same
-    * recursive transitive-closure oracle.
-    */
   /** The cluster-resolution CTE chain (shingles → minhash → bands →
     * candidates → exact verify → transitive closure `lab` + sizes
-    * `cs`), parameterized by the source relation so the capstone
-    * pipeline (q100) can run it over a filtered corpus. Used inside a
-    * `WITH RECURSIVE`.
+    * `cs`), parameterized by the source relation so the curation
+    * pipelines (q100/q103) can run it over a filtered corpus. Used
+    * inside a `WITH RECURSIVE`. q59 (from-scratch), q79 and q80
+    * (incremental) share its oracle: the incremental paths must produce
+    * EXACTLY the clusters a batch run over the full corpus would.
     */
-  private def clusterCtes(src: String) = s"""w AS (SELECT doc_id,
-               string_split(substr(text, 1, 1048576), ' ') AS ws
-             FROM $src),
-      sh AS (SELECT DISTINCT doc_id AS doc,
-               ws[i + 1] || ' ' || ws[i + 2] || ' ' || ws[i + 3] AS shingle
-             FROM (SELECT doc_id, ws, unnest(range(len(ws) - 2)) AS i
-                   FROM w) t),
-      hs AS (SELECT doc, CAST((((((((strpos('0123456789abcdef', substr(m, 1, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(m, 2, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 3, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 4, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 5, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 6, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 7, 1)) - 1)) AS BIGINT) AS h
-             FROM (SELECT doc, md5(shingle) AS m FROM sh) t),
-      sig AS (SELECT doc, i,
-                MIN(((2 * i + 1) * h + (104729 * i + 12345)) % 2147483647) AS mh
-              FROM hs CROSS JOIN (SELECT unnest(range(16)) AS i) ii
-              GROUP BY doc, i),
-      bs AS (SELECT doc, i // 4 AS band,
-               string_agg(CAST(mh AS VARCHAR), '|' ORDER BY i) AS band_sig
-             FROM sig GROUP BY doc, i // 4),
-      cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-               FROM bs a JOIN bs b ON a.band = b.band
-                AND a.band_sig = b.band_sig AND a.doc < b.doc),
-      sizes AS (SELECT doc, COUNT(*) AS sz FROM sh GROUP BY doc),
-      inter AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-                FROM cand c
-                JOIN sh a ON a.doc = c.doc_a
-                JOIN sh b ON b.doc = c.doc_b AND b.shingle = a.shingle
-                GROUP BY c.doc_a, c.doc_b),
+  private def clusterCtes(src: String) = s"""${minhashCtes(src)},
+      $verifyCtes,
       pairs AS (SELECT doc_a, doc_b
-                FROM inter
-                JOIN sizes sa ON sa.doc = doc_a
-                JOIN sizes sb ON sb.doc = doc_b
-                WHERE CAST(n_inter AS BIGINT) / CAST(sa.sz + sb.sz - n_inter AS DOUBLE) >= CAST(0.5 AS DOUBLE)),
+                $verifiedPairs),
       edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
                 UNION SELECT doc_b, doc_a FROM pairs),
       reach AS (SELECT src AS node, src AS r FROM edges
@@ -184,6 +167,30 @@ object DedupeQueries extends QueryPack {
       SELECT lab.node AS doc, lab.cluster, cs.cluster_size
       FROM lab JOIN cs ON cs.cluster = lab.cluster"""
 
+  /** Near-dup cluster labels `(node, label)` of `docs`: q25's verified
+    * pairs (3-word shingles, 16 hashes, 4-row bands, Jaccard ≥ 0.5; see
+    * q25's plan-shape note) into connected components. The pairs are
+    * not persisted: the components' edge doubling is a single explode
+    * scan, so the verify pipeline has exactly ONE consumer — one job
+    * materializes verify + components.
+    */
+  private[graft] def nearDupLabels(docs: DataFrame): DataFrame =
+    Dedupe.nearDupComponents(
+      Dedupe.minhashWide(docs, "doc_id", "text", 3, 16, withCount = true),
+      docs, "doc_id", "text", 3, 16, 4, 0.5)
+
+  /** The `(doc, cluster, cluster_size)` surface of cluster labels, the
+    * size a window over the label partition: ONE exchange and one read
+    * of the labels, where a groupBy + join read them twice through two
+    * shuffles.
+    */
+  private[graft] def withClusterSizes(labels: DataFrame): DataFrame =
+    labels
+      .withColumn("cluster_size",
+        count(lit(1)).over(Window.partitionBy("label")))
+      .select(col("node").as("doc"), col("label").as("cluster"),
+        col("cluster_size"))
+
   /** Near-dup CLUSTER resolution — the stage after pair verification:
     * verified pairs (the q25 output) become edges of an undirected
     * graph; connected components assign every involved document the
@@ -195,26 +202,7 @@ object DedupeQueries extends QueryPack {
     * that survives 100 TB).
     */
   val q59 = Q("q59_dedup_clusters",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      // Dedupe.nearDupComponents: q25's pairs (see its plan-shape
-      // note) into connected components. The verified pairs are not
-      // persisted: the components' edge doubling is a single explode
-      // scan, so the verify pipeline has exactly ONE consumer — one job
-      // materializes verify + components.
-      val sig = Dedupe.minhashWide(docs, "doc_id", "text", 3, 16,
-        withCount = true)
-      val labels = Dedupe.nearDupComponents(sig, docs, "doc_id", "text",
-        shingleK = 3, numHashes = 16, rowsPerBand = 4, minJaccard = 0.5)
-      // cluster size as a window over the label partition: ONE exchange
-      // and one read of the checkpointed labels, where the former
-      // groupBy + join read it twice through two shuffles
-      labels
-        .withColumn("cluster_size", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("label")))
-        .select(col("node").as("doc"), col("label").as("cluster"),
-          col("cluster_size"))
-    },
+    (s, dir) => withClusterSizes(nearDupLabels(Tables(s, dir, "documents"))),
     Some(dedupClustersOracle))
 
   /** Incremental CLUSTER maintenance — the nightly-ingest pipeline end
@@ -247,14 +235,10 @@ object DedupeQueries extends QueryPack {
         .ensureCorpusState(s, store,
           docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
           shingleK = 3, numHashes = 16, rowsPerBand = 4, minJaccard = 0.5)
-      val labels = Dedupe.incrementalFromStore(corpusBands, corpusLabels,
-        docs.filter(col("doc_id") % 2 === 1), docs, "doc_id", "text",
-        shingleK = 3, numHashes = 16, rowsPerBand = 4, minJaccard = 0.5)
-      labels
-        .withColumn("cluster_size", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("label")))
-        .select(col("node").as("doc"), col("label").as("cluster"),
-          col("cluster_size"))
+      withClusterSizes(Dedupe.incrementalFromStore(corpusBands,
+        corpusLabels, docs.filter(col("doc_id") % 2 === 1), docs, "doc_id",
+        "text", shingleK = 3, numHashes = 16, rowsPerBand = 4,
+        minJaccard = 0.5))
     },
     Some(dedupClustersOracle))
 
@@ -286,25 +270,17 @@ object DedupeQueries extends QueryPack {
       val (k, n, rpb, minJ) = (3, 16, 4, 0.5)
       SignatureStore.ensureCorpusState(s, store,
         docs.filter(col("doc_id") % 4 < 2), "doc_id", "text", k, n, rpb, minJ)
-      // night 1: fold batch 1, commit v+1 — ONE batch signing shared
-      // between the candidate pass and the segment commit, the label
-      // commit writing only the CHANGED rows (O(changed) delta over
-      // the store's base), and the three segment writes overlapped
-      // (foldNight)
-      SignatureStore.foldNight(s, store,
-        docs.filter(col("doc_id") % 4 === 2), docs, "doc_id", "text",
-        k, n, rpb, minJ)
-      // night 2: reads the FLIPPED store, folds batch 2, commits v+2
-      SignatureStore.foldNight(s, store,
-        docs.filter(col("doc_id") % 4 === 3), docs, "doc_id", "text",
+      // night 1 folds batch 1 and commits v+1 — ONE batch signing
+      // shared between the candidate pass and the segment commit, the
+      // label commit writing only the CHANGED rows (O(changed) delta
+      // over the store's base), and the three segment writes overlapped
+      // (foldNight); night 2 reads the FLIPPED store, folds batch 2 and
+      // commits v+2
+      for (night <- Seq(2, 3)) SignatureStore.foldNight(s, store,
+        docs.filter(col("doc_id") % 4 === night), docs, "doc_id", "text",
         k, n, rpb, minJ)
       // what any reader sees after the loop ran twice
-      val (_, labelsFinal) = SignatureStore.read(s, store)
-      labelsFinal
-        .withColumn("cluster_size", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("label")))
-        .select(col("node").as("doc"), col("label").as("cluster"),
-          col("cluster_size"))
+      withClusterSizes(SignatureStore.read(s, store)._2)
     },
     Some(dedupClustersOracle))
 
@@ -324,33 +300,22 @@ object DedupeQueries extends QueryPack {
         docs.filter(col("doc_id") % 4 =!= 1), "doc_id", "text", 3, 16)
       Dedupe.minhashCandidatesAgainst(newSig, corpusSig, 16, 4)
     },
-    Some("""
-      WITH w AS (SELECT doc_id,
-               string_split(substr(text, 1, 1048576), ' ') AS ws
-             FROM documents),
-      sh AS (SELECT DISTINCT doc_id AS doc,
-               ws[i + 1] || ' ' || ws[i + 2] || ' ' || ws[i + 3] AS shingle
-             FROM (SELECT doc_id, ws, unnest(range(len(ws) - 2)) AS i
-                   FROM w) t),
-      hs AS (SELECT doc, CAST((((((((strpos('0123456789abcdef', substr(m, 1, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(m, 2, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 3, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 4, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 5, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 6, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(m, 7, 1)) - 1)) AS BIGINT) AS h
-             FROM (SELECT doc, md5(shingle) AS m FROM sh) t),
-      sig AS (SELECT doc, i,
-                MIN(((2 * i + 1) * h + (104729 * i + 12345)) % 2147483647) AS mh
-              FROM hs CROSS JOIN (SELECT unnest(range(16)) AS i) ii
-              GROUP BY doc, i),
-      bs AS (SELECT doc, i // 4 AS band,
-               string_agg(CAST(mh AS VARCHAR), '|' ORDER BY i) AS band_sig
-             FROM sig GROUP BY doc, i // 4),
+    Some(s"""
+      WITH ${minhashCtes("documents")},
       cand AS (SELECT DISTINCT a.doc AS new_doc, b.doc AS corpus_doc
                FROM bs a JOIN bs b ON a.band = b.band
                 AND a.band_sig = b.band_sig
                WHERE a.doc % 4 = 1 AND b.doc % 4 <> 1)
-      SELECT c.new_doc, c.corpus_doc,
-             CAST(COUNT(*) AS BIGINT) / CAST(16 AS DOUBLE) AS est_jaccard
-      FROM cand c
-      JOIN sig sa ON sa.doc = c.new_doc
-      JOIN sig sb ON sb.doc = c.corpus_doc AND sb.i = sa.i AND sb.mh = sa.mh
-      GROUP BY c.new_doc, c.corpus_doc"""))
+      ${estJaccard("new_doc", "corpus_doc")}"""))
+
+  /** The 5-word `shingle`s of the split texts `ws` of `src`'s docs —
+    * the decontamination unit — closing the CTE they are selected in.
+    */
+  private def shingles5(src: String) =
+    s"""ws[i + 1] || ' ' || ws[i + 2] || ' ' || ws[i + 3] || ' ' ||
+                 ws[i + 4] || ' ' || ws[i + 5] AS shingle
+             FROM (SELECT doc_id, ws, unnest(range(len(ws) - 4)) AS i
+                   FROM $src) t)"""
 
   /** Benchmark decontamination: treat every 7th document as the held-out
     * evaluation suite and flag corpus documents sharing ≥ 50% of a
@@ -368,20 +333,13 @@ object DedupeQueries extends QueryPack {
         docs.filter(col("doc_id") % 7 === 0),
         "doc_id", "text", shingleK = 5, minOverlap = 0.5)
     },
-    Some("""
+    Some(s"""
       WITH w AS (SELECT doc_id,
                string_split(substr(text, 1, 1048576), ' ') AS ws
              FROM documents),
-      csh AS (SELECT doc_id AS doc,
-               ws[i + 1] || ' ' || ws[i + 2] || ' ' || ws[i + 3] || ' ' ||
-                 ws[i + 4] || ' ' || ws[i + 5] AS shingle
-             FROM (SELECT doc_id, ws, unnest(range(len(ws) - 4)) AS i
-                   FROM w WHERE doc_id % 7 <> 0) t),
+      csh AS (SELECT doc_id AS doc, ${shingles5("w WHERE doc_id % 7 <> 0")},
       bsh AS (SELECT DISTINCT doc_id AS bench_id,
-               ws[i + 1] || ' ' || ws[i + 2] || ' ' || ws[i + 3] || ' ' ||
-                 ws[i + 4] || ' ' || ws[i + 5] AS shingle
-             FROM (SELECT doc_id, ws, unnest(range(len(ws) - 4)) AS i
-                   FROM w WHERE doc_id % 7 = 0) t),
+               ${shingles5("w WHERE doc_id % 7 = 0")},
       bsz AS (SELECT bench_id, COUNT(*) AS bench_sz FROM bsh GROUP BY 1),
       hits AS (SELECT c.doc, b.bench_id,
                  COUNT(DISTINCT c.shingle) AS n_overlap
@@ -391,10 +349,10 @@ object DedupeQueries extends QueryPack {
       FROM hits JOIN bsz USING (bench_id)
       WHERE CAST(n_overlap AS DOUBLE) / bench_sz >= CAST(0.5 AS DOUBLE)"""))
 
-  /** 64-bit SimHash as a 16-hex-char string per document. */
-  val q26 = Q("q26_simhash",
-    (s, dir) => Dedupe.simhash(Tables(s, dir, "documents"), "doc_id", "text"),
-    Some("""
+  /** The simhash derivation through its hex digits
+    * `hx(doc, nib_idx, ch)`.
+    */
+  private val simhashHx = """
       WITH wd AS (SELECT DISTINCT doc_id AS doc,
                     unnest(string_split(substr(text, 1, 1048576), ' ')) AS word
                   FROM documents),
@@ -410,9 +368,17 @@ object DedupeQueries extends QueryPack {
               FROM bits GROUP BY doc, j // 4),
       hx AS (SELECT doc, nib_idx,
                substr('0123456789abcdef', CAST(nv AS INTEGER) + 1, 1) AS ch
-             FROM nib)
-      SELECT doc, string_agg(ch, '' ORDER BY nib_idx) AS simhash
-      FROM hx GROUP BY doc"""))
+             FROM nib)"""
+
+  private val simhashSelect =
+    """SELECT doc, string_agg(ch, '' ORDER BY nib_idx) AS simhash
+      FROM hx GROUP BY doc"""
+
+  /** 64-bit SimHash as a 16-hex-char string per document. */
+  val q26 = Q("q26_simhash",
+    (s, dir) => Dedupe.simhash(Tables(s, dir, "documents"), "doc_id", "text"),
+    Some(s"""$simhashHx
+      $simhashSelect"""))
 
   /** 4-char hex substring of `col` starting at 1-based `start`, parsed
     * to an integer — DuckDB-side chunk parser for the simhash bands.
@@ -425,25 +391,13 @@ object DedupeQueries extends QueryPack {
   /** The q26 simhash derivation as a reusable oracle CTE chain
     * (through `sh(doc, simhash)`).
     */
-  private val simhashCte = """
-      WITH wd AS (SELECT DISTINCT doc_id AS doc,
-                    unnest(string_split(substr(text, 1, 1048576), ' ')) AS word
-                  FROM documents),
-      h AS (SELECT doc, md5(word) AS h FROM wd),
-      bits AS (SELECT doc, j,
-                 CASE WHEN SUM(2 * ((( strpos('0123456789abcdef',
-                        substr(h, (j // 4) + 1, 1)) - 1) >> (3 - (j % 4))) & 1) - 1) > 0
-                      THEN 1 ELSE 0 END AS bit
-               FROM h CROSS JOIN (SELECT unnest(range(64)) AS j) jj
-               GROUP BY doc, j),
-      nib AS (SELECT doc, j // 4 AS nib_idx,
-                SUM(bit << (3 - (j % 4))) AS nv
-              FROM bits GROUP BY doc, j // 4),
-      hx AS (SELECT doc, nib_idx,
-               substr('0123456789abcdef', CAST(nv AS INTEGER) + 1, 1) AS ch
-             FROM nib),
-      sh AS (SELECT doc, string_agg(ch, '' ORDER BY nib_idx) AS simhash
-             FROM hx GROUP BY doc)"""
+  private val simhashCte = s"""$simhashHx,
+      sh AS ($simhashSelect)"""
+
+  /** The hamming distance of two docs' chunks `ca`, `cb`. */
+  private val hamming = (0 until 4)
+    .map(j => s"bit_count(xor(ca.c$j, cb.c$j))")
+    .mkString("CAST(", " + ", " AS BIGINT)")
 
   /** SimHash near-dup pairs: 64-bit fingerprints split into 4 16-bit
     * chunks; pigeonhole banding (hamming ≤ 3 forces ≥ 1 identical
@@ -468,16 +422,11 @@ object DedupeQueries extends QueryPack {
       cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
                FROM banded a JOIN banded b
                  ON a.band = b.band AND a.bv = b.bv AND a.doc < b.doc)
-      SELECT c.doc_a, c.doc_b,
-             CAST(bit_count(xor(ca.c0, cb.c0)) + bit_count(xor(ca.c1, cb.c1)) +
-                  bit_count(xor(ca.c2, cb.c2)) + bit_count(xor(ca.c3, cb.c3))
-               AS BIGINT) AS hamming
+      SELECT c.doc_a, c.doc_b, $hamming AS hamming
       FROM cand c
       JOIN ch ca ON ca.doc = c.doc_a
       JOIN ch cb ON cb.doc = c.doc_b
-      WHERE CAST(bit_count(xor(ca.c0, cb.c0)) + bit_count(xor(ca.c1, cb.c1)) +
-                 bit_count(xor(ca.c2, cb.c2)) + bit_count(xor(ca.c3, cb.c3))
-              AS BIGINT) <= 3"""))
+      WHERE $hamming <= 3"""))
 
   /** Cross-document duplicated-segment removal (CCNet/RefinedWeb
     * paragraph dedup on a newline-free corpus): 10-word segments,
@@ -569,9 +518,158 @@ object DedupeQueries extends QueryPack {
   private val pipelineWeightValues = pipelineWeights.toSeq.sorted
     .map { case (l, w) => s"('$l', $w)" }.mkString(", ")
 
-  private val pipelineLmValues = graft.operators.TextAnalysis
-    .pretrainedUnigramFp.toSeq.sorted
-    .map { case (w, fp) => s"('$w', ${fp}::BIGINT)" }.mkString(", ")
+  /** Adds `cluster` (the near-dup label, or the doc's own id for a
+    * singleton) and `keeper`: the cluster's highest-`avg_bits` copy,
+    * ties to the smallest id — q101's and q103's survivor. One window
+    * over the cluster partition (cluster sizes are bounded by true
+    * duplicate groups); avg_bits is an exact-integer ratio, so the
+    * ordering is engine-identical.
+    */
+  private def withBestKeeper(scored: DataFrame): DataFrame =
+    scored
+      .withColumn("cluster", coalesce(col("label"), col("doc_id")))
+      .withColumn("keeper", first(col("doc_id")).over(
+        Window.partitionBy("cluster")
+          .orderBy(col("avg_bits").desc, col("doc_id").asc)))
+
+  /** The curation pipeline q100 and q103 run (see q100), over the
+    * non-benchmark docs. `nearKeep` is the near-dup survivor rule: given
+    * the scored docs with their cluster `label` (null for a singleton)
+    * and `avg_bits`, it adds `near_keep` and any column the output
+    * carries before it. The output is `doc`, the per-doc flags in
+    * column order, then `selected`.
+    */
+  private def curationPipeline(s: SparkSession, dir: String,
+      nearKeep: DataFrame => DataFrame): DataFrame = {
+    val docs = Tables(s, dir, "documents")
+    val corpus = docs.filter(col("doc_id") % 7 =!= 0 &&
+      col("text").isNotNull)
+    val bench = docs.filter(col("doc_id") % 7 === 0)
+    // lm score and the exact-dedup content hash are both per-row
+    // expressions over text — computed in ONE corpus scan (the lm
+    // projection carries lang + text, md5 rides the same collapsed
+    // projection) with exact_keep as a window on that frame, instead
+    // of two separate corpus scans JOINED back onto a third
+    // (guide §2.4: two corpus-sized equi-joins and two text scans
+    // removed; values identical — the joins were 1:1 on doc_id)
+    val scored = TextAnalysis.unigramLmScore(corpus, "doc_id", "text",
+        carry = Seq("lang", "text"))
+      .withColumn("__m", md5(col("text")))
+      .select(col("doc").as("doc_id"), col("lang"),
+        col("keep").as("lm_keep"), col("avg_bits"), col("__m"))
+      .withColumn("exact_keep", col("doc_id") ===
+        min(col("doc_id")).over(Window.partitionBy(col("__m"))))
+      .drop("__m")
+    val labels = nearDupLabels(corpus)
+    val contam = Dedupe.contamination(corpus, bench, "doc_id", "text",
+        shingleK = 5, minOverlap = 0.5)
+      .select(col("doc").as("doc_id")).distinct()
+      .withColumn("__c", lit(true))
+    val base = CacheHandle.eager(CacheHandle.session.track(
+      nearKeep(scored
+          .join(labels.withColumnRenamed("node", "doc_id"),
+            Seq("doc_id"), "left")
+          .join(contam, Seq("doc_id"), "left"))
+        .withColumn("contaminated", col("__c").isNotNull)
+        .drop("label", "__c", "avg_bits", "cluster")
+        .persist()))
+    val survivors = base.filter(col("lm_keep") && col("exact_keep") &&
+      col("near_keep") && !col("contaminated"))
+    val selected = graft.operators.Sampling.sourceMix(survivors,
+        "doc_id", "lang", pipelineWeights)
+      .select(col("doc_id")).withColumn("__s", lit(true))
+    base.join(selected, Seq("doc_id"), "left")
+      .select(col("doc_id").as("doc") +: base.columns.tail.map(col) :+
+        col("__s").isNotNull.as("selected"): _*)
+  }
+
+  /** The unigram-LM oracle CTEs over `src`: the frozen vocabulary
+    * `lmv`, its tokens `lt` and each doc's token count and summed
+    * fixed-point score `lmsc(doc_id, n, sfp)`.
+    */
+  private def lmCtes(src: String) =
+    s"""lmv(word, fp) AS (VALUES ${TextQueries.lmValues}),
+      lt AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
+             FROM $src),
+      lmsc AS (SELECT doc_id, count(*) AS n,
+                 CAST(sum(coalesce(lmv.fp,
+                   ${TextAnalysis.UnigramOovFp}))
+                   AS BIGINT) AS sfp
+               FROM lt LEFT JOIN lmv USING (word) GROUP BY doc_id)"""
+
+  private val lmKeepCte = """lm AS (SELECT doc_id,
+               (CAST(sfp AS DOUBLE) / 1024.0) / n >= -3.0 AS lm_keep
+             FROM lmsc)"""
+
+  private val avgBitsCte = """sc AS (SELECT doc_id,
+               (CAST(sfp AS DOUBLE) / 1024.0) / n AS avg_bits
+             FROM lmsc)"""
+
+  /** The best-keeper pick of q101/q103's oracles: `name(cluster,
+    * keeper)` over `src`'s (cluster, doc, avg_bits) rows.
+    */
+  private def keeperCte(name: String, src: String) =
+    s"""$name AS (SELECT cluster, doc AS keeper FROM (
+              SELECT cluster, doc, row_number() OVER (PARTITION BY cluster
+                ORDER BY avg_bits DESC, doc ASC) AS rn FROM $src)
+            WHERE rn = 1)"""
+
+  /** q100/q103's oracle through the per-doc decisions: the corpus, its
+    * near-dup clusters `lab`, the LM CTEs and `score` over them (a CTE
+    * named `rel`), exact dedup `ex`, and the contaminated docs `cont` —
+    * corpus docs sharing ≥ 50% of a benchmark doc's distinct 5-word
+    * shingles (q66's rule; the corpus side splits the MinHash chain's
+    * `w`). `base` holds each doc's lang, `flags` and contaminated.
+    */
+  private def curationCtes(score: String, rel: String, flags: String) = s"""
+      WITH RECURSIVE corpus AS (SELECT * FROM documents
+        WHERE doc_id % 7 <> 0 AND text IS NOT NULL),
+      ${clusterCtes("corpus")},
+      ${lmCtes("corpus")},
+      $score,
+      ex AS (SELECT doc_id, doc_id = MIN(doc_id) OVER
+               (PARTITION BY md5(text)) AS exact_keep
+             FROM corpus),
+      bw AS (SELECT doc_id,
+               string_split(substr(text, 1, 1048576), ' ') AS ws
+             FROM documents WHERE doc_id % 7 = 0),
+      csh5 AS (SELECT doc_id AS doc, ${shingles5("w")},
+      bsh5 AS (SELECT DISTINCT doc_id AS bench_id, ${shingles5("bw")},
+      bsz AS (SELECT bench_id, COUNT(*) AS bench_sz FROM bsh5 GROUP BY 1),
+      cont AS (SELECT DISTINCT doc FROM (
+          SELECT c.doc, b.bench_id, COUNT(DISTINCT c.shingle) AS n_ov
+          FROM csh5 c JOIN bsh5 b USING (shingle) GROUP BY 1, 2) h
+        JOIN bsz USING (bench_id)
+        WHERE CAST(n_ov AS DOUBLE) / bench_sz >= CAST(0.5 AS DOUBLE)),
+      base AS (SELECT c.doc_id AS doc, c.lang, $flags,
+               (ct.doc IS NOT NULL) AS contaminated
+             FROM corpus c
+             JOIN $rel ON $rel.doc_id = c.doc_id
+             JOIN ex ON ex.doc_id = c.doc_id
+             LEFT JOIN lab ON lab.node = c.doc_id
+             LEFT JOIN cont ct ON ct.doc = c.doc_id)"""
+
+  /** The source mix over the survivors of the per-doc decisions `base`,
+    * then the output: `base`'s `cols` and `selected`.
+    */
+  private def mixTail(base: String, cols: String*) =
+    s"""surv AS (SELECT * FROM $base WHERE lm_keep AND exact_keep
+               AND near_keep AND NOT contaminated),
+      wts(lang, wt) AS (VALUES $pipelineWeightValues),
+      nn AS (SELECT lang, COUNT(*) AS cnt FROM surv JOIN wts USING (lang)
+             GROUP BY lang),
+      tt AS (SELECT MIN(cnt / wt) AS t FROM nn JOIN wts USING (lang)),
+      rr AS (SELECT nn.lang,
+               CASE WHEN wts.wt * tt.t / nn.cnt >= 1 THEN 'g'
+                    ELSE printf('%08x', CAST(floor(wts.wt * tt.t / nn.cnt *
+                      4294967296.0) AS BIGINT)) END AS thr
+             FROM nn JOIN wts ON nn.lang = wts.lang CROSS JOIN tt)
+      SELECT ${cols.map("b." + _).mkString(", ")},
+             coalesce(sv.sel, FALSE) AS selected
+      FROM $base b LEFT JOIN (
+        SELECT s.doc, substr(md5(CAST(s.doc AS VARCHAR)), 1, 8) < rr.thr
+          AS sel
+        FROM surv s JOIN rr USING (lang)) sv ON sv.doc = b.doc"""
 
   /** THE CAPSTONE: the full training-data curation pipeline as one
     * query — every stage an operator the suite verifies individually,
@@ -599,178 +697,48 @@ object DedupeQueries extends QueryPack {
     * action.
     */
   val q100 = Q("q100_pipeline",
-    (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables(s, dir, "documents")
-      val corpus = docs.filter(col("doc_id") % 7 =!= 0 &&
-        col("text").isNotNull)
-      val bench = docs.filter(col("doc_id") % 7 === 0)
-      // lm score and the exact-dedup content hash are both per-row
-      // expressions over text — computed in ONE corpus scan (the lm
-      // projection carries lang + text, md5 rides the same collapsed
-      // projection) with exact_keep as a window on that frame, instead
-      // of two separate corpus scans JOINED back onto a third
-      // (guide §2.4: two corpus-sized equi-joins and two text scans
-      // removed; values identical — the joins were 1:1 on doc_id)
-      val scored = TextAnalysis.unigramLmScore(corpus, "doc_id", "text",
-          carry = Seq("lang", "text"))
-        .withColumn("__m", md5(col("text")))
-        .select(col("doc").as("doc_id"), col("lang"),
-          col("keep").as("lm_keep"), col("__m"))
-        .withColumn("exact_keep", col("doc_id") ===
-          min(col("doc_id")).over(Window.partitionBy(col("__m"))))
-        .drop("__m")
-      val sig = Dedupe.minhashWide(corpus, "doc_id", "text", 3, 16,
-        withCount = true)
-      val labels = Dedupe.nearDupComponents(sig, corpus, "doc_id", "text",
-        3, 16, 4, 0.5)
-      val contam = Dedupe.contamination(corpus, bench, "doc_id", "text",
-          shingleK = 5, minOverlap = 0.5)
-        .select(col("doc").as("doc_id")).distinct()
-        .withColumn("__c", lit(true))
-      val base = CacheHandle.eager(CacheHandle.session.track(
-        scored
-          .join(labels.withColumnRenamed("node", "doc_id"),
-            Seq("doc_id"), "left")
-          .join(contam, Seq("doc_id"), "left")
-          .withColumn("near_keep",
-            col("label").isNull || col("label") === col("doc_id"))
-          .withColumn("contaminated", col("__c").isNotNull)
-          .drop("label", "__c")
-          .persist()))
-      val survivors = base.filter(col("lm_keep") && col("exact_keep") &&
-        col("near_keep") && !col("contaminated"))
-      val selected = graft.operators.Sampling.sourceMix(survivors,
-          "doc_id", "lang", pipelineWeights)
-        .select(col("doc_id")).withColumn("__s", lit(true))
-      base.join(selected, Seq("doc_id"), "left")
-        .select(col("doc_id").as("doc"), col("lang"), col("lm_keep"),
-          col("exact_keep"), col("near_keep"), col("contaminated"),
-          col("__s").isNotNull.as("selected"))
-    },
-    Some(s"""
-      WITH RECURSIVE corpus AS (SELECT * FROM documents
-        WHERE doc_id % 7 <> 0 AND text IS NOT NULL),
-      ${clusterCtes("corpus")},
-      lmv(word, fp) AS (VALUES $pipelineLmValues),
-      lt AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-             FROM corpus),
-      lmsc AS (SELECT doc_id, count(*) AS n,
-                 CAST(sum(coalesce(lmv.fp,
-                   ${graft.operators.TextAnalysis.UnigramOovFp}))
-                   AS BIGINT) AS sfp
-               FROM lt LEFT JOIN lmv USING (word) GROUP BY doc_id),
-      lm AS (SELECT doc_id,
-               (CAST(sfp AS DOUBLE) / 1024.0) / n >= -3.0 AS lm_keep
-             FROM lmsc),
-      ex AS (SELECT doc_id, doc_id = MIN(doc_id) OVER
-               (PARTITION BY md5(text)) AS exact_keep
-             FROM corpus),
-      bw AS (SELECT doc_id,
-               string_split(substr(text, 1, 1048576), ' ') AS ws
-             FROM documents WHERE doc_id % 7 = 0),
-      csh5 AS (SELECT doc_id AS doc,
-               ws[i + 1] || ' ' || ws[i + 2] || ' ' || ws[i + 3] || ' ' ||
-                 ws[i + 4] || ' ' || ws[i + 5] AS shingle
-             FROM (SELECT doc_id, ws, unnest(range(len(ws) - 4)) AS i
-                   FROM w) t),
-      bsh5 AS (SELECT DISTINCT doc_id AS bench_id,
-               ws[i + 1] || ' ' || ws[i + 2] || ' ' || ws[i + 3] || ' ' ||
-                 ws[i + 4] || ' ' || ws[i + 5] AS shingle
-             FROM (SELECT doc_id, ws, unnest(range(len(ws) - 4)) AS i
-                   FROM bw) t),
-      bsz AS (SELECT bench_id, COUNT(*) AS bench_sz FROM bsh5 GROUP BY 1),
-      cont AS (SELECT DISTINCT doc FROM (
-          SELECT c.doc, b.bench_id, COUNT(DISTINCT c.shingle) AS n_ov
-          FROM csh5 c JOIN bsh5 b USING (shingle) GROUP BY 1, 2) h
-        JOIN bsz USING (bench_id)
-        WHERE CAST(n_ov AS DOUBLE) / bench_sz >= CAST(0.5 AS DOUBLE)),
-      base AS (SELECT c.doc_id AS doc, c.lang, lm.lm_keep, ex.exact_keep,
+    (s, dir) => curationPipeline(s, dir, _.withColumn("near_keep",
+      col("label").isNull || col("label") === col("doc_id"))),
+    Some(s"""${curationCtes(lmKeepCte, "lm", """lm.lm_keep, ex.exact_keep,
                (lab.cluster IS NULL OR lab.cluster = c.doc_id)
-                 AS near_keep,
-               (ct.doc IS NOT NULL) AS contaminated
-             FROM corpus c
-             JOIN lm ON lm.doc_id = c.doc_id
-             JOIN ex ON ex.doc_id = c.doc_id
-             LEFT JOIN lab ON lab.node = c.doc_id
-             LEFT JOIN cont ct ON ct.doc = c.doc_id),
-      surv AS (SELECT * FROM base WHERE lm_keep AND exact_keep
-               AND near_keep AND NOT contaminated),
-      wts(lang, wt) AS (VALUES $pipelineWeightValues),
-      nn AS (SELECT lang, COUNT(*) AS cnt FROM surv JOIN wts USING (lang)
-             GROUP BY lang),
-      tt AS (SELECT MIN(cnt / wt) AS t FROM nn JOIN wts USING (lang)),
-      rr AS (SELECT nn.lang,
-               CASE WHEN wts.wt * tt.t / nn.cnt >= 1 THEN 'g'
-                    ELSE printf('%08x', CAST(floor(wts.wt * tt.t / nn.cnt *
-                      4294967296.0) AS BIGINT)) END AS thr
-             FROM nn JOIN wts ON nn.lang = wts.lang CROSS JOIN tt)
-      SELECT b.doc, b.lang, b.lm_keep, b.exact_keep, b.near_keep,
-             b.contaminated, coalesce(sv.sel, FALSE) AS selected
-      FROM base b LEFT JOIN (
-        SELECT s.doc, substr(md5(CAST(s.doc AS VARCHAR)), 1, 8) < rr.thr
-          AS sel
-        FROM surv s JOIN rr USING (lang)) sv ON sv.doc = b.doc"""))
+                 AS near_keep""")},
+      ${mixTail("base", "doc", "lang", "lm_keep", "exact_keep", "near_keep",
+        "contaminated")}"""))
 
   /** Quality-aware dedup survivorship: within each near-dup cluster
     * keep the HIGHEST-quality copy (unigram-LM score, ties to the
     * smallest id) instead of q59/q100's arbitrary min-id keeper — what
     * a production pipeline actually wants from its duplicates. Cluster
     * labels come from the q59 machinery; singleton docs are their own
-    * keeper. The keeper pick is one window over the cluster partition
-    * (cluster sizes are tiny — bounded by true duplicate groups);
-    * avg_bits is an exact-integer ratio so the ordering is
-    * engine-identical.
+    * keeper ([[withBestKeeper]]).
     */
   val q101 = Q("q101_best_keeper",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables(s, dir, "documents")
         .filter(col("text").isNotNull)
-      val sig = Dedupe.minhashWide(docs, "doc_id", "text", 3, 16,
-        withCount = true)
-      val labels = Dedupe.nearDupComponents(sig, docs, "doc_id", "text",
-        3, 16, 4, 0.5)
+      val labels = nearDupLabels(docs)
       // the lm score is a zero-shuffle projection over the SAME corpus
       // scan the id list came from — start from it directly instead of
       // equi-joining it onto a second scan (guide §2.4; the join was
       // 1:1 on doc_id, values identical)
       val scored = TextAnalysis.unigramLmScore(docs, "doc_id", "text")
         .select(col("doc").as("doc_id"), col("avg_bits"))
-      val w = Window.partitionBy("cluster")
-        .orderBy(col("avg_bits").desc, col("doc_id").asc)
-      scored
-        .join(labels.withColumnRenamed("node", "doc_id"),
-          Seq("doc_id"), "left")
-        .withColumn("cluster",
-          coalesce(col("label"), col("doc_id")))
-        .withColumn("keeper", first(col("doc_id")).over(w))
+      withBestKeeper(scored.join(labels.withColumnRenamed("node", "doc_id"),
+          Seq("doc_id"), "left"))
         .select(col("doc_id").as("doc"), col("cluster"), col("keeper"),
           (col("doc_id") === col("keeper")).as("keep"))
     },
     Some(s"""
       WITH RECURSIVE ${clusterCtes("documents")},
-      lmv(word, fp) AS (VALUES $pipelineLmValues),
-      lt AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-             FROM documents WHERE text IS NOT NULL),
-      lmsc AS (SELECT doc_id, count(*) AS n,
-                 CAST(sum(coalesce(lmv.fp,
-                   ${graft.operators.TextAnalysis.UnigramOovFp}))
-                   AS BIGINT) AS sfp
-               FROM lt LEFT JOIN lmv USING (word) GROUP BY doc_id),
-      sc AS (SELECT doc_id,
-               (CAST(sfp AS DOUBLE) / 1024.0) / n AS avg_bits
-             FROM lmsc),
+      ${lmCtes("documents WHERE text IS NOT NULL")},
+      $avgBitsCte,
       allc AS (SELECT d.doc_id AS doc,
                  coalesce(lab.cluster, d.doc_id) AS cluster, sc.avg_bits
                FROM documents d
                LEFT JOIN lab ON lab.node = d.doc_id
                JOIN sc ON sc.doc_id = d.doc_id
                WHERE d.text IS NOT NULL),
-      k AS (SELECT cluster, doc AS keeper FROM (
-              SELECT cluster, doc, row_number() OVER (PARTITION BY cluster
-                ORDER BY avg_bits DESC, doc ASC) AS rn FROM allc)
-            WHERE rn = 1)
+      ${keeperCte("k", "allc")}
       SELECT a.doc, a.cluster, k.keeper, a.doc = k.keeper AS keep
       FROM allc a JOIN k USING (cluster)"""))
 
@@ -790,124 +758,17 @@ object DedupeQueries extends QueryPack {
     * by true duplicate groups.
     */
   val q103 = Q("q103_pipeline_best",
-    (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables(s, dir, "documents")
-      val corpus = docs.filter(col("doc_id") % 7 =!= 0 &&
-        col("text").isNotNull)
-      val bench = docs.filter(col("doc_id") % 7 === 0)
-      // same one-scan fuse as q100 (lm + md5 in one projection,
-      // exact_keep as a window) — avg_bits rides the same frame for
-      // the keeper window below
-      val scored = TextAnalysis.unigramLmScore(corpus, "doc_id", "text",
-          carry = Seq("lang", "text"))
-        .withColumn("__m", md5(col("text")))
-        .select(col("doc").as("doc_id"), col("lang"),
-          col("keep").as("lm_keep"), col("avg_bits"), col("__m"))
-        .withColumn("exact_keep", col("doc_id") ===
-          min(col("doc_id")).over(Window.partitionBy(col("__m"))))
-        .drop("__m")
-      val sig = Dedupe.minhashWide(corpus, "doc_id", "text", 3, 16,
-        withCount = true)
-      val labels = Dedupe.nearDupComponents(sig, corpus, "doc_id", "text",
-        3, 16, 4, 0.5)
-      val contam = Dedupe.contamination(corpus, bench, "doc_id", "text",
-          shingleK = 5, minOverlap = 0.5)
-        .select(col("doc").as("doc_id")).distinct()
-        .withColumn("__c", lit(true))
-      val w = Window.partitionBy("cluster")
-        .orderBy(col("avg_bits").desc, col("doc_id").asc)
-      val base = CacheHandle.eager(CacheHandle.session.track(
-        scored
-          .join(labels.withColumnRenamed("node", "doc_id"),
-            Seq("doc_id"), "left")
-          .join(contam, Seq("doc_id"), "left")
-          .withColumn("cluster", coalesce(col("label"), col("doc_id")))
-          .withColumn("keeper", first(col("doc_id")).over(w))
-          .withColumn("near_keep", col("doc_id") === col("keeper"))
-          .withColumn("contaminated", col("__c").isNotNull)
-          .drop("label", "__c", "avg_bits", "cluster")
-          .persist()))
-      val survivors = base.filter(col("lm_keep") && col("exact_keep") &&
-        col("near_keep") && !col("contaminated"))
-      val selected = graft.operators.Sampling.sourceMix(survivors,
-          "doc_id", "lang", pipelineWeights)
-        .select(col("doc_id")).withColumn("__s", lit(true))
-      base.join(selected, Seq("doc_id"), "left")
-        .select(col("doc_id").as("doc"), col("lang"), col("lm_keep"),
-          col("exact_keep"), col("keeper"), col("near_keep"),
-          col("contaminated"), col("__s").isNotNull.as("selected"))
-    },
-    Some(s"""
-      WITH RECURSIVE corpus AS (SELECT * FROM documents
-        WHERE doc_id % 7 <> 0 AND text IS NOT NULL),
-      ${clusterCtes("corpus")},
-      lmv(word, fp) AS (VALUES $pipelineLmValues),
-      lt AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-             FROM corpus),
-      lmsc AS (SELECT doc_id, count(*) AS n,
-                 CAST(sum(coalesce(lmv.fp,
-                   ${graft.operators.TextAnalysis.UnigramOovFp}))
-                   AS BIGINT) AS sfp
-               FROM lt LEFT JOIN lmv USING (word) GROUP BY doc_id),
-      sc AS (SELECT doc_id,
-               (CAST(sfp AS DOUBLE) / 1024.0) / n AS avg_bits
-             FROM lmsc),
-      ex AS (SELECT doc_id, doc_id = MIN(doc_id) OVER
-               (PARTITION BY md5(text)) AS exact_keep
-             FROM corpus),
-      bw AS (SELECT doc_id,
-               string_split(substr(text, 1, 1048576), ' ') AS ws
-             FROM documents WHERE doc_id % 7 = 0),
-      csh5 AS (SELECT doc_id AS doc,
-               ws[i + 1] || ' ' || ws[i + 2] || ' ' || ws[i + 3] || ' ' ||
-                 ws[i + 4] || ' ' || ws[i + 5] AS shingle
-             FROM (SELECT doc_id, ws, unnest(range(len(ws) - 4)) AS i
-                   FROM w) t),
-      bsh5 AS (SELECT DISTINCT doc_id AS bench_id,
-               ws[i + 1] || ' ' || ws[i + 2] || ' ' || ws[i + 3] || ' ' ||
-                 ws[i + 4] || ' ' || ws[i + 5] AS shingle
-             FROM (SELECT doc_id, ws, unnest(range(len(ws) - 4)) AS i
-                   FROM bw) t),
-      bsz AS (SELECT bench_id, COUNT(*) AS bench_sz FROM bsh5 GROUP BY 1),
-      cont AS (SELECT DISTINCT doc FROM (
-          SELECT c.doc, b.bench_id, COUNT(DISTINCT c.shingle) AS n_ov
-          FROM csh5 c JOIN bsh5 b USING (shingle) GROUP BY 1, 2) h
-        JOIN bsz USING (bench_id)
-        WHERE CAST(n_ov AS DOUBLE) / bench_sz >= CAST(0.5 AS DOUBLE)),
-      base AS (SELECT c.doc_id AS doc, c.lang,
+    (s, dir) => curationPipeline(s, dir, withBestKeeper(_)
+      .withColumn("near_keep", col("doc_id") === col("keeper"))),
+    Some(s"""${curationCtes(avgBitsCte, "sc", """
                sc.avg_bits >= -3.0 AS lm_keep, ex.exact_keep,
-               coalesce(lab.cluster, c.doc_id) AS cluster, sc.avg_bits,
-               (ct.doc IS NOT NULL) AS contaminated
-             FROM corpus c
-             JOIN sc ON sc.doc_id = c.doc_id
-             JOIN ex ON ex.doc_id = c.doc_id
-             LEFT JOIN lab ON lab.node = c.doc_id
-             LEFT JOIN cont ct ON ct.doc = c.doc_id),
-      kp AS (SELECT cluster, doc AS keeper FROM (
-              SELECT cluster, doc, row_number() OVER (PARTITION BY cluster
-                ORDER BY avg_bits DESC, doc ASC) AS rn FROM base)
-            WHERE rn = 1),
+               coalesce(lab.cluster, c.doc_id) AS cluster, sc.avg_bits""")},
+      ${keeperCte("kp", "base")},
       base2 AS (SELECT b.doc, b.lang, b.lm_keep, b.exact_keep, kp.keeper,
                b.doc = kp.keeper AS near_keep, b.contaminated
              FROM base b JOIN kp USING (cluster)),
-      surv AS (SELECT * FROM base2 WHERE lm_keep AND exact_keep
-               AND near_keep AND NOT contaminated),
-      wts(lang, wt) AS (VALUES $pipelineWeightValues),
-      nn AS (SELECT lang, COUNT(*) AS cnt FROM surv JOIN wts USING (lang)
-             GROUP BY lang),
-      tt AS (SELECT MIN(cnt / wt) AS t FROM nn JOIN wts USING (lang)),
-      rr AS (SELECT nn.lang,
-               CASE WHEN wts.wt * tt.t / nn.cnt >= 1 THEN 'g'
-                    ELSE printf('%08x', CAST(floor(wts.wt * tt.t / nn.cnt *
-                      4294967296.0) AS BIGINT)) END AS thr
-             FROM nn JOIN wts ON nn.lang = wts.lang CROSS JOIN tt)
-      SELECT b.doc, b.lang, b.lm_keep, b.exact_keep, b.keeper,
-             b.near_keep, b.contaminated, coalesce(sv.sel, FALSE) AS selected
-      FROM base2 b LEFT JOIN (
-        SELECT s.doc, substr(md5(CAST(s.doc AS VARCHAR)), 1, 8) < rr.thr
-          AS sel
-        FROM surv s JOIN rr USING (lang)) sv ON sv.doc = b.doc"""))
+      ${mixTail("base2", "doc", "lang", "lm_keep", "exact_keep", "keeper",
+        "near_keep", "contaminated")}"""))
 
   override def all: Seq[Q] =
     Seq(q22, q23, q24, q25, q26, q59, q66, q68, q69, q75, q79, q80, q88,

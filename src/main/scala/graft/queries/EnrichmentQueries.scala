@@ -2,8 +2,8 @@ package graft.queries
 
 import graft.{Q, QueryPack, Tables}
 import graft.functions.{CleanFunctions, LicenseMap, PercentileDiscAgg}
-import graft.operators.MergeUpsert
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.operators.{MergeUpsert, Multimodal}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -430,6 +430,110 @@ object EnrichmentQueries extends QueryPack {
         CAST(SUM((cnt - 1) * bytes) AS BIGINT) AS reclaim_bytes
       FROM g GROUP BY kind"""))
 
+  /** The embed → dedup tail of q104/q106/q108: the embedded blobs
+    * grouped by a 64-bit digest of their embedding — `grp` the group's
+    * min id, `grp_size` its size — and the embedding unpivoted to
+    * scalar `(idx, val)` rows. `carry` are the per-blob columns the
+    * output keeps between `doc` and `grp`.
+    *
+    * The dedup is a window over the digest (q107's "group on a digest
+    * at 100 TB" shape), so the decode projection below it runs exactly
+    * once: the previous aggregate+join-back form recomputed it for the
+    * join side, measured 2x the decode cost at sf1. One shuffle,
+    * partitions bounded by true duplicate-group size; a digest
+    * collision (odds ~2^-64) would hash-mismatch against the oracle's
+    * seed classes. The unpivot keeps every decoded value hash-pinned by
+    * the oracle comparator, which cannot sort array cells.
+    */
+  private def digestDedup(emb: DataFrame, carry: String*): DataFrame = {
+    val w = Window.partitionBy(xxhash64(to_json(col("embedding"))))
+    val out = ("doc" +: carry :+ "grp" :+ "grp_size").map(col)
+    emb.select(col("id").as("doc") +: carry.map(col) :+
+        min("id").over(w).as("grp") :+ count(lit(1)).over(w).as("grp_size") :+
+        col("embedding"): _*)
+      .select(out :+ posexplode(col("embedding")).as(Seq("i", "val")): _*)
+      .select(out :+ col("i").cast("long").as("idx") :+ col("val"): _*)
+  }
+
+  /** The seed-class oracle tail of q104/q106/q108: equal payloads embed
+    * equally, so a doc's group is its payload's seed class (`doc_id %
+    * mod`) and `grp` the class's min id. Output: `doc`, the constant
+    * `carry` columns, the group, and the features `f(doc_id, idx, val)`.
+    */
+  private def seedClassTail(mod: Int, carry: String) = s"""grp AS (
+        SELECT doc_id % $mod AS seed, MIN(doc_id) AS grp,
+               COUNT(*) AS grp_size
+        FROM documents GROUP BY 1)
+      SELECT f.doc_id AS doc, $carry, g.grp, g.grp_size,
+             CAST(f.idx AS BIGINT) AS idx, f.val
+      FROM f JOIN grp g ON f.doc_id % $mod = g.seed"""
+
+  /** The synthetic PNGs' decoded pixels from their formula: `px` every
+    * (doc, x, y) of the 16×16 image, docs filtered by `where`, and `pm`
+    * the 4×4-patch channel means.
+    */
+  private def imagePixelCtes(px: String, pm: String, where: String) =
+    s"""$px AS (
+        SELECT d.doc_id, d.doc_id % 251 AS seed, x.x, y.y
+        FROM documents d
+        CROSS JOIN generate_series(0, 15) AS x(x)
+        CROSS JOIN generate_series(0, 15) AS y(y)$where),
+      $pm AS (
+        SELECT doc_id, y // 4 AS gy, x // 4 AS gx,
+          CAST(SUM((seed*31 + x*7 + y*13) % 256) AS DOUBLE) / 16 AS mr,
+          CAST(SUM((seed*17 + x*3 + y*5) % 256) AS DOUBLE) / 16 AS mg,
+          CAST(SUM((seed*29 + x*11 + y*3) % 256) AS DOUBLE) / 16 AS mb
+        FROM $px GROUP BY 1, 2, 3)"""
+
+  /** The synthetic GIFs' decoded frames from their formula: `px` the
+    * palette index of every (doc, sampled frame, x, y), docs filtered by
+    * `where` (`seed` an extra leading column), and `pm` each frame's
+    * 2×2-patch channel means.
+    */
+  private def videoPixelCtes(px: String, pm: String, seed: String,
+      where: String) = s"""$px AS (
+        SELECT d.doc_id, ${seed}s.s, x.x, y.y,
+          ((d.doc_id % 61)*31 + (s.s*2)*37 + x.x*7 + y.y*13) % 256 AS pi
+        FROM documents d
+        CROSS JOIN generate_series(0, 3) AS s(s)
+        CROSS JOIN generate_series(0, 15) AS x(x)
+        CROSS JOIN generate_series(0, 15) AS y(y)$where),
+      $pm AS (
+        SELECT doc_id, s, y // 8 AS gy, x // 8 AS gx,
+          CAST(SUM(pi) AS DOUBLE) / 64 AS mr,
+          CAST(SUM((pi*3) % 256) AS DOUBLE) / 64 AS mg,
+          CAST(SUM((pi*7) % 256) AS DOUBLE) / 64 AS mb
+        FROM $px GROUP BY 1, 2, 3, 4)"""
+
+  /** Each media kind's synthetic payload of a doc id: pixels, samples
+    * and frames are pure functions of the id's seed class (`id % 251`,
+    * `% 97`, `% 61`), which the oracles recompute from their formulas.
+    */
+  private val mediaPayload: Map[String, Long => Array[Byte]] = Map(
+    "image" -> (id => Multimodal.syntheticPng(id % 251)),
+    "audio" -> (id => Multimodal.syntheticWav(id % 97)),
+    "video" -> (id => Multimodal.syntheticGif(id % 61)))
+
+  /** One synthetic `kind` blob per document. */
+  private def mediaBlobs(s: SparkSession, dir: String, kind: String)
+      : Dataset[Multimodal.MediaBlob] = {
+    import s.implicits._
+    val payload = mediaPayload(kind)
+    Tables(s, dir, "documents").select(col("doc_id")).as[Long]
+      .mapPartitions(_.map(id => Multimodal.MediaBlob(id, kind, payload(id))))
+  }
+
+  /** The `doc_id % 4` modality router of q107 and q109: image, audio
+    * and video docs carry their synthetic payload, text docs their
+    * UTF-8 text.
+    */
+  private def routedBlob(id: Long, text: String): Multimodal.MediaBlob =
+    Seq("image", "audio", "video").lift((id % 4).toInt) match {
+      case Some(kind) => Multimodal.MediaBlob(id, kind, mediaPayload(kind)(id))
+      case None => Multimodal.MediaBlob(id, "text",
+        text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+
   /** The multimodal pillar END TO END REAL: synthesize one 16×16 PNG
     * per document (pixels a pure function of `doc_id % 251` —
     * [[graft.operators.Multimodal.syntheticPng]]), DECODE it with the
@@ -444,60 +548,20 @@ object EnrichmentQueries extends QueryPack {
     * payloads embed equally and distinct payloads don't collide.
     *
     * Scale shape: encode+decode+embed is ONE mapPartitions projection
-    * — decoded exactly once, because the dedup is a window over a
-    * 64-bit digest of the embedding (q107's "group on a digest at
-    * 100 TB" shape; the previous aggregate+join-back form recomputed
-    * the whole decode projection for the join side, measured 2x the
-    * decode cost at sf1). One shuffle, partitions bounded by true
-    * duplicate-group size; a digest collision (odds ~2^-64) would
-    * hash-mismatch against the oracle's seed classes. The OUTPUT
-    * unpivots the embedding to `(idx, val)` scalar rows (one per
-    * feature) so every decoded value stays hash-pinned by the
-    * driver's comparator, which cannot sort array cells.
+    * — decoded exactly once via the digest-window dedup
+    * ([[digestDedup]]).
     */
   val q104 = Q("q104_image_embed_dedup",
-    (s, dir) => {
-      import s.implicits._
-      import graft.operators.Multimodal
-      val docs = Tables(s, dir, "documents").select(col("doc_id"))
-      val blobs = docs.as[Long].mapPartitions { it =>
-        it.map(id => Multimodal.MediaBlob(id, "image",
-          Multimodal.syntheticPng(id % 251)))
-      }
-      val emb = Multimodal.embedImage(blobs, grid = 4).toDF()
-      val w = Window.partitionBy(xxhash64(to_json(col("embedding"))))
-      emb.select(col("id").as("doc"), col("width"), col("height"),
-          min("id").over(w).as("grp"),
-          count(lit(1)).over(w).as("grp_size"), col("embedding"))
-        .select(col("doc"), col("width"), col("height"), col("grp"),
-          col("grp_size"), posexplode(col("embedding")).as(Seq("i", "val")))
-        .select(col("doc"), col("width"), col("height"), col("grp"),
-          col("grp_size"), col("i").cast("long").as("idx"), col("val"))
-    },
-    Some("""
-      WITH px AS (
-        SELECT d.doc_id, d.doc_id % 251 AS seed, x.x, y.y
-        FROM documents d
-        CROSS JOIN generate_series(0, 15) AS x(x)
-        CROSS JOIN generate_series(0, 15) AS y(y)),
-      pm AS (
-        SELECT doc_id, y // 4 AS gy, x // 4 AS gx,
-          CAST(SUM((seed*31 + x*7 + y*13) % 256) AS DOUBLE) / 16 AS mr,
-          CAST(SUM((seed*17 + x*3 + y*5) % 256) AS DOUBLE) / 16 AS mg,
-          CAST(SUM((seed*29 + x*11 + y*3) % 256) AS DOUBLE) / 16 AS mb
-        FROM px GROUP BY 1, 2, 3),
+    (s, dir) => digestDedup(Multimodal.embedImage(
+      mediaBlobs(s, dir, "image"), grid = 4).toDF(), "width", "height"),
+    Some(s"""
+      WITH ${imagePixelCtes("px", "pm", "")},
       f AS (
         SELECT doc_id, (gy*4 + gx)*3 + c.c AS idx,
           CASE c.c WHEN 0 THEN mr WHEN 1 THEN mg ELSE mb END AS val
         FROM pm CROSS JOIN generate_series(0, 2) AS c(c)),
-      grp AS (
-        SELECT doc_id % 251 AS seed, MIN(doc_id) AS grp,
-               COUNT(*) AS grp_size
-        FROM documents GROUP BY 1)
-      SELECT f.doc_id AS doc, CAST(16 AS INTEGER) AS width,
-             CAST(16 AS INTEGER) AS height, g.grp, g.grp_size,
-             CAST(f.idx AS BIGINT) AS idx, f.val
-      FROM f JOIN grp g ON f.doc_id % 251 = g.seed"""))
+      ${seedClassTail(251,
+        "CAST(16 AS INTEGER) AS width, CAST(16 AS INTEGER) AS height")}"""))
 
   /** The AUDIO leg of the multimodal pillar, end to end real:
     * synthesize one 64-sample WAV per document (16-bit PCM samples a
@@ -513,36 +577,16 @@ object EnrichmentQueries extends QueryPack {
     * sign-extension, or band-indexing bug hash-mismatches.
     *
     * Scale shape: encode+decode+embed is ONE mapPartitions projection
-    * — decoded exactly once via the digest-window dedup (see q104;
-    * the decode here is the trio's most expensive per blob, ~360 us
-    * of javax.sound SPI probing per WAV, so not paying it twice
-    * matters most on this leg). The OUTPUT unpivots the embedding to
-    * `(idx, val)` scalar rows so every decoded band statistic stays
-    * hash-pinned by the driver's comparator, which cannot sort array
-    * cells.
+    * — decoded exactly once via the digest-window dedup
+    * ([[digestDedup]]; the decode here is the trio's most expensive per
+    * blob, ~360 us of javax.sound SPI probing per WAV, so not paying it
+    * twice matters most on this leg).
     */
   val q106 = Q("q106_audio_embed_dedup",
-    (s, dir) => {
-      import s.implicits._
-      import graft.operators.Multimodal
-      val docs = Tables(s, dir, "documents").select(col("doc_id"))
-      val blobs = docs.as[Long].mapPartitions { it =>
-        it.map(id => Multimodal.MediaBlob(id, "audio",
-          Multimodal.syntheticWav(id % 97)))
-      }
-      val emb = Multimodal.embedAudio(blobs, bands = 8).toDF()
-      val w = Window.partitionBy(xxhash64(to_json(col("embedding"))))
-      emb.select(col("id").as("doc"), col("sample_rate"),
-          col("n_samples"), min("id").over(w).as("grp"),
-          count(lit(1)).over(w).as("grp_size"), col("embedding"))
-        .select(col("doc"), col("sample_rate"), col("n_samples"),
-          col("grp"), col("grp_size"),
-          posexplode(col("embedding")).as(Seq("i", "val")))
-        .select(col("doc"), col("sample_rate"), col("n_samples"),
-          col("grp"), col("grp_size"),
-          col("i").cast("long").as("idx"), col("val"))
-    },
-    Some("""
+    (s, dir) => digestDedup(Multimodal.embedAudio(
+        mediaBlobs(s, dir, "audio"), bands = 8).toDF(),
+      "sample_rate", "n_samples"),
+    Some(s"""
       WITH s AS (
         SELECT d.doc_id, d.doc_id % 97 AS seed, i.i,
           ((d.doc_id % 97)*131071 + i.i*8191) % 65536 - 32768 AS v
@@ -556,14 +600,8 @@ object EnrichmentQueries extends QueryPack {
         SELECT doc_id, band*2 + c.c AS idx,
           CASE c.c WHEN 0 THEN mean ELSE mabs END AS val
         FROM b CROSS JOIN generate_series(0, 1) AS c(c)),
-      grp AS (
-        SELECT doc_id % 97 AS seed, MIN(doc_id) AS grp,
-               COUNT(*) AS grp_size
-        FROM documents GROUP BY 1)
-      SELECT f.doc_id AS doc, CAST(8000 AS DOUBLE) AS sample_rate,
-             CAST(64 AS INTEGER) AS n_samples, g.grp, g.grp_size,
-             CAST(f.idx AS BIGINT) AS idx, f.val
-      FROM f JOIN grp g ON f.doc_id % 97 = g.seed"""))
+      ${seedClassTail(97, "CAST(8000 AS DOUBLE) AS sample_rate, " +
+        "CAST(64 AS INTEGER) AS n_samples")}"""))
 
   /** Cross-modal dedup router — the capstone of the multimodal pillar:
     * ONE scan over `documents` routes each row to its modality
@@ -591,27 +629,18 @@ object EnrichmentQueries extends QueryPack {
   val q107 = Q("q107_multimodal_route_dedup",
     (s, dir) => {
       import s.implicits._
-      import graft.operators.Multimodal
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val keyed = docs.as[(Long, String)].mapPartitions { it =>
         it.map { case (id, text) =>
-          id % 4 match {
-            case 0L =>
-              val (_, _, f) = Multimodal.imagePatchMeans(
-                Multimodal.syntheticPng(id % 251)).get
-              (id, "image", f.toSeq, "")
-            case 1L =>
-              val (_, _, _, f) = Multimodal.audioBandStats(
-                Multimodal.syntheticWav(id % 97)).get
-              (id, "audio", f.toSeq, "")
-            case 2L =>
-              val (_, _, f) = Multimodal.videoFrameFeatures(
-                Multimodal.syntheticGif(id % 61)).get
-              (id, "video", f.toSeq, "")
-            case _ =>
-              (id, "text", Seq.empty[Double], text)
+          val b = routedBlob(id, text)
+          val f = b.kind match {
+            case "image" => Multimodal.imagePatchMeans(b.content).get._3
+            case "audio" => Multimodal.audioBandStats(b.content).get._4
+            case "video" => Multimodal.videoFrameFeatures(b.content).get._3
+            case _ => Array.empty[Double]
           }
+          (id, b.kind, f.toSeq, if (b.kind == "text") text else "")
         }
       }.toDF("doc", "kind", "embedding", "text")
         // collapse every modality's key to ONE 64-bit digest before
@@ -663,54 +692,18 @@ object EnrichmentQueries extends QueryPack {
     * Scale shape: encode+seek+decode+embed is ONE mapPartitions
     * projection (only sampled frames decode, never the whole
     * animation) — decoded exactly once via the digest-window dedup
-    * (see q104). The OUTPUT unpivots the embedding to `(idx, val)`
-    * scalar rows so every decoded frame feature stays hash-pinned by
-    * the driver's comparator, which cannot sort array cells.
+    * ([[digestDedup]]).
     */
   val q108 = Q("q108_video_frame_dedup",
-    (s, dir) => {
-      import s.implicits._
-      import graft.operators.Multimodal
-      val docs = Tables(s, dir, "documents").select(col("doc_id"))
-      val blobs = docs.as[Long].mapPartitions { it =>
-        it.map(id => Multimodal.MediaBlob(id, "video",
-          Multimodal.syntheticGif(id % 61)))
-      }
-      val emb = Multimodal.embedVideo(blobs, sample = 4, grid = 2).toDF()
-      val w = Window.partitionBy(xxhash64(to_json(col("embedding"))))
-      emb.select(col("id").as("doc"), col("n_frames"),
-          min("id").over(w).as("grp"),
-          count(lit(1)).over(w).as("grp_size"), col("embedding"))
-        .select(col("doc"), col("n_frames"), col("grp"),
-          col("grp_size"), posexplode(col("embedding")).as(Seq("i", "val")))
-        .select(col("doc"), col("n_frames"), col("grp"),
-          col("grp_size"), col("i").cast("long").as("idx"), col("val"))
-    },
-    Some("""
-      WITH px AS (
-        SELECT d.doc_id, d.doc_id % 61 AS seed, s.s, x.x, y.y,
-          ((d.doc_id % 61)*31 + (s.s*2)*37 + x.x*7 + y.y*13) % 256 AS pi
-        FROM documents d
-        CROSS JOIN generate_series(0, 3) AS s(s)
-        CROSS JOIN generate_series(0, 15) AS x(x)
-        CROSS JOIN generate_series(0, 15) AS y(y)),
-      pm AS (
-        SELECT doc_id, s, y // 8 AS gy, x // 8 AS gx,
-          CAST(SUM(pi) AS DOUBLE) / 64 AS mr,
-          CAST(SUM((pi*3) % 256) AS DOUBLE) / 64 AS mg,
-          CAST(SUM((pi*7) % 256) AS DOUBLE) / 64 AS mb
-        FROM px GROUP BY 1, 2, 3, 4),
+    (s, dir) => digestDedup(Multimodal.embedVideo(
+      mediaBlobs(s, dir, "video"), sample = 4, grid = 2).toDF(), "n_frames"),
+    Some(s"""
+      WITH ${videoPixelCtes("px", "pm", "d.doc_id % 61 AS seed, ", "")},
       f AS (
         SELECT doc_id, s*12 + (gy*2 + gx)*3 + c.c AS idx,
           CASE c.c WHEN 0 THEN mr WHEN 1 THEN mg ELSE mb END AS val
         FROM pm CROSS JOIN generate_series(0, 2) AS c(c)),
-      grp AS (
-        SELECT doc_id % 61 AS seed, MIN(doc_id) AS grp,
-               COUNT(*) AS grp_size
-        FROM documents GROUP BY 1)
-      SELECT f.doc_id AS doc, CAST(8 AS INTEGER) AS n_frames,
-             g.grp, g.grp_size, CAST(f.idx AS BIGINT) AS idx, f.val
-      FROM f JOIN grp g ON f.doc_id % 61 = g.seed"""))
+      ${seedClassTail(61, "CAST(8 AS INTEGER) AS n_frames")}"""))
 
   /** Decoded-signal quality gates over a mixed-modality corpus — the
     * multimodal twin of the Gopher text rules (q52): route each
@@ -731,22 +724,10 @@ object EnrichmentQueries extends QueryPack {
   val q109 = Q("q109_multimodal_quality",
     (s, dir) => {
       import s.implicits._
-      import graft.operators.Multimodal
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val blobs = docs.as[(Long, String)].mapPartitions { it =>
-        it.map { case (id, text) =>
-          id % 4 match {
-            case 0L => Multimodal.MediaBlob(id, "image",
-              Multimodal.syntheticPng(id % 251))
-            case 1L => Multimodal.MediaBlob(id, "audio",
-              Multimodal.syntheticWav(id % 97))
-            case 2L => Multimodal.MediaBlob(id, "video",
-              Multimodal.syntheticGif(id % 61))
-            case _ => Multimodal.MediaBlob(id, "text",
-              text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          }
-        }
+        it.map { case (id, text) => routedBlob(id, text) }
       }
       Multimodal.qualitySignals(blobs).toDF()
         .select(col("id").as("doc"), col("kind"), col("decodable"),
@@ -763,19 +744,8 @@ object EnrichmentQueries extends QueryPack {
             .otherwise(col("q_main") >= 0.5 && col("q_aux") >= 10)))
             .as("keep"))
     },
-    Some("""
-      WITH ipx AS (
-        SELECT d.doc_id, d.doc_id % 251 AS seed, x.x, y.y
-        FROM documents d
-        CROSS JOIN generate_series(0, 15) AS x(x)
-        CROSS JOIN generate_series(0, 15) AS y(y)
-        WHERE d.doc_id % 4 = 0),
-      ipm AS (
-        SELECT doc_id, y // 4 AS gy, x // 4 AS gx,
-          CAST(SUM((seed*31 + x*7 + y*13) % 256) AS DOUBLE) / 16 AS mr,
-          CAST(SUM((seed*17 + x*3 + y*5) % 256) AS DOUBLE) / 16 AS mg,
-          CAST(SUM((seed*29 + x*11 + y*3) % 256) AS DOUBLE) / 16 AS mb
-        FROM ipx GROUP BY 1, 2, 3),
+    Some(s"""
+      WITH ${imagePixelCtes("ipx", "ipm", " WHERE d.doc_id % 4 = 0")},
       img AS (
         SELECT doc_id, SUM(mr + mg + mb) / 48 AS q_main,
                CAST(16 AS DOUBLE) AS q_aux
@@ -789,20 +759,7 @@ object EnrichmentQueries extends QueryPack {
         SELECT doc_id, CAST(SUM(av) AS DOUBLE) / 64 AS q_main,
                CAST(8 AS DOUBLE) AS q_aux
         FROM asm GROUP BY 1),
-      vpx AS (
-        SELECT d.doc_id, s.s, x.x, y.y,
-          ((d.doc_id % 61)*31 + (s.s*2)*37 + x.x*7 + y.y*13) % 256 AS pi
-        FROM documents d
-        CROSS JOIN generate_series(0, 3) AS s(s)
-        CROSS JOIN generate_series(0, 15) AS x(x)
-        CROSS JOIN generate_series(0, 15) AS y(y)
-        WHERE d.doc_id % 4 = 2),
-      vpm AS (
-        SELECT doc_id, s, y // 8 AS gy, x // 8 AS gx,
-          CAST(SUM(pi) AS DOUBLE) / 64 AS mr,
-          CAST(SUM((pi*3) % 256) AS DOUBLE) / 64 AS mg,
-          CAST(SUM((pi*7) % 256) AS DOUBLE) / 64 AS mb
-        FROM vpx GROUP BY 1, 2, 3, 4),
+      ${videoPixelCtes("vpx", "vpm", "", " WHERE d.doc_id % 4 = 2")},
       vid AS (
         SELECT doc_id, SUM(mr + mg + mb) / 48 AS q_main,
                CAST(8 AS DOUBLE) AS q_aux

@@ -285,10 +285,9 @@ object SimilarityQueries extends QueryPack {
       // the iteration lineage — no persist needed
       val centroids = Similarity.kmeansCentroids(
         emb, "vec_id", "embedding", k = 8, iters = 2, dim = 64)
-      // app-id suffix so concurrent sessions don't clobber each
-      // other's index (VERDICT r9 nit)
-      val idxPath = s"${sys.props("java.io.tmpdir")}/graft_q72_ivf_" +
-        s.sparkContext.applicationId
+      // slot-claimed scratch: one index per JVM, the previous run's
+      // reclaimed, and concurrent JVMs never clobber each other's
+      val idxPath = graft.core.TempDirs.claim("graft_q72_ivf") + "/index"
       Similarity.writeIvfIndex(emb, centroids, "vec_id", "embedding",
         idxPath)
       Similarity.ivfTopKIndexed(s, idxPath,

@@ -296,7 +296,7 @@ object TextQueries extends QueryPack {
       FROM documents"""
     })
 
-  private val lmValues = TextAnalysis.pretrainedUnigramFp.toSeq.sorted
+  private[queries] val lmValues = TextAnalysis.pretrainedUnigramFp.toSeq.sorted
     .map { case (w, fp) => s"('$w', ${fp}::BIGINT)" }.mkString(", ")
 
   /** Unigram-LM quality score (the CCNet perplexity filter): frozen

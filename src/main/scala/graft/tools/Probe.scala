@@ -4,7 +4,6 @@ import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 
@@ -12,6 +11,7 @@ import graft.{SparkEntry, Tables}
 import graft.core.{CacheHandle, GraftSession, RunProfile, TempDirs}
 import graft.functions.JsonEscapeExpr
 import graft.operators.{Dedupe, Pq, Profile, SignatureStore, Similarity}
+import graft.queries.DedupeQueries
 
 /** Local measurement probes: one main for every hand-run diagnosis the
   * engine's rounds rely on (plan iteration, A/Bs of alternative
@@ -193,7 +193,11 @@ object Probe {
     * and with racing AQE stages — expression ids (`#N`), lambda
     * variable ids (`lambda x_N`), `plan_id=N`, `[codegen id : N]` and
     * query-stage ids (`Arguments: N`) — masked as `N`, so a plan diff
-    * shows only what changed in the plan.
+    * shows only what changed in the plan. So are the per-run object
+    * identities: array constants (`[D@N`, a PQ lookup table), JVM
+    * lambda classes (`$$Lambda@N`), [[graft.core.TempDirs]] slot
+    * directories (`<slot>-pN-N`, an index path) and RDD ids and call
+    * sites (`MapPartitionsRDD[N] at createDataFrame at Pq.scala:N`).
     */
   private def stablePlan(txt: String): String =
     txt.replaceAll("#\\d+", "#N")
@@ -201,6 +205,10 @@ object Probe {
       .replaceAll("plan_id=\\d+", "plan_id=N")
       .replaceAll("\\[codegen id : \\d+\\]", "[codegen id : N]")
       .replaceAll("(?m)^Arguments: \\d+$", "Arguments: N")
+      .replaceAll("\\[([A-Z])@[0-9a-f]+", "[$1@N")
+      .replaceAll("Lambda(\\$\\d+)?/0x[0-9a-f]+@[0-9a-f]+", "Lambda@N")
+      .replaceAll("([A-Za-z0-9_]+)-p\\d+-\\d+", "$1-pN-N")
+      .replaceAll("RDD\\[\\d+\\]( at \\w+ at [\\w.]+):\\d+", "RDD[N]$1:N")
 
   /** A/B probe for the decontamination plans: the fused Bloom-prefilter
     * form ([[Dedupe.contamination]], r13) against the exploded form
@@ -301,10 +309,7 @@ object Probe {
     val docs = Tables(spark, sfDir, "documents")
     // from-scratch baseline (q59's plan), median of 3
     def scratch(): Double = timeIt {
-      val sig = Dedupe.minhashWide(docs, "doc_id", "text", shK, nHashes,
-        withCount = true)
-      Dedupe.nearDupComponents(sig, docs, "doc_id", "text", shK, nHashes,
-          rpb, minJ)
+      DedupeQueries.nearDupLabels(docs)
         .queryExecution.toRdd.count() // full materialization (no count-pruning)
     }
     scratch() // warm-up
@@ -691,11 +696,7 @@ object Probe {
       val outSec = t {
         val (_, labelsFinal) = SignatureStore.read(spark, store)
         readSec = t { labelsFinal.count() }
-        labelsFinal
-          .withColumn("cluster_size", count(lit(1)).over(
-            Window.partitionBy("label")))
-          .select(col("node").as("doc"), col("label").as("cluster"),
-            col("cluster_size"))
+        DedupeQueries.withClusterSizes(labelsFinal)
           .queryExecution.toRdd.count()
       }
       def f(d: Double) = f"$d%.2f"

@@ -30,7 +30,7 @@ class NearestCentroidSpec extends SparkSpec {
       val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
         k = k, iters = 1, dim = 64)
       val expect = aggregationForm(cents)
-      val got = Similarity.assignCells(emb, cents, "vec_id", "embedding")
+      val got = Reference.assignCells(emb, cents, "vec_id", "embedding")
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(got == expect, s"k=$k: assignment diverged")
     }
@@ -39,7 +39,7 @@ class NearestCentroidSpec extends SparkSpec {
   test("assignment plan has zero exchanges") {
     val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
       k = 4, iters = 1, dim = 64)
-    val plan = Similarity.assignCells(emb, cents, "vec_id", "embedding")
+    val plan = Reference.assignCells(emb, cents, "vec_id", "embedding")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"expected narrow plan:\n$plan")
   }
@@ -60,7 +60,7 @@ class NearestCentroidSpec extends SparkSpec {
     val dup = spark.createDataFrame(Seq(
       org.apache.spark.sql.Row(7, one),
       org.apache.spark.sql.Row(3, one)).asJava, schema)
-    val got = Similarity.assignCells(emb, dup, "vec_id", "embedding")
+    val got = Reference.assignCells(emb, dup, "vec_id", "embedding")
       .select("cell_id").distinct().collect().map(_.getInt(0)).toSeq
     assert(got == Seq(3), s"tie must pick cell 3, got $got")
   }

@@ -711,7 +711,7 @@ class OperatorSpec extends SparkSpec {
       k = 3, iters = 3, dim = 4).orderBy("cell_id").collect()
     assert(got.map(_.toString).toSeq == again.map(_.toString).toSeq)
     // all members assigned to their seed's cluster
-    val assigned = Similarity.assignCells(pts, cent, "vec_id", "embedding")
+    val assigned = Reference.assignCells(pts, cent, "vec_id", "embedding")
       .withColumn("expected", (col("vec_id") % 3).cast("int"))
     assert(assigned.filter(col("cell_id") =!= col("expected")).count() == 0)
     // the materialized-index probe path returns exactly the direct path

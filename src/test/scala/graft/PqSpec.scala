@@ -90,7 +90,7 @@ class PqSpec extends SparkSpec {
       "vec_id", "embedding", nprobe = 2)
       .select("vec_id", "cell_id")
       .collect().map(r => (r.getLong(0), r.get(1))).toSet
-    val cells = Similarity.assignCells(emb, centroids, "vec_id", "embedding")
+    val cells = Reference.assignCells(emb, centroids, "vec_id", "embedding")
       .collect().map(r => r.getLong(0) -> r.get(1)).toMap
     val enc = Pq.encode(emb, "vec_id", "embedding", cb)
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
@@ -177,7 +177,7 @@ class PqSpec extends SparkSpec {
     // invariant probe pruning depends on
     val idx = spark.read.parquet(path)
       .select(col("vec_id"), col("cell_id").cast("int").as("cell_id"))
-    val expect = Similarity.assignCells(emb, centroids, "vec_id",
+    val expect = Reference.assignCells(emb, centroids, "vec_id",
       "embedding")
       .select(col("vec_id"), col("cell_id").cast("int").as("cell_id"))
     assert(idx.exceptAll(expect).isEmpty && expect.exceptAll(idx).isEmpty)

@@ -24,12 +24,15 @@ class ProbeSpec extends SparkSpec {
 
   test("Probe plan files are identical across two runs of one build") {
     val dir = java.nio.file.Files.createTempDirectory("plans").toString
-    out("plan", sfDir, dir, "a", "q24_minhash_lsh")
-    out("plan", sfDir, dir, "b", "q24_minhash_lsh")
-    def text(suffix: String) = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(dir, s"q24_minhash_lsh_$suffix.txt"))
-    assert(text("a").contains("#N"), text("a"))
-    assert(text("a") == text("b"))
+    val queries = Seq("q24_minhash_lsh", "q72_kmeans_ivf", "q105_ivfpq_serving")
+    out("plan" +: sfDir +: dir +: "a" +: queries: _*)
+    out("plan" +: sfDir +: dir +: "b" +: queries: _*)
+    queries.foreach { q =>
+      def text(suffix: String) = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(dir, s"${q}_$suffix.txt"))
+      assert(text("a").contains("#N"), text("a"))
+      assert(text("a") == text("b"), q)
+    }
   }
 
   test("an unknown probe name fails with a usage that lists every probe") {

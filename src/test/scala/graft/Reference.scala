@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Similarity.{centroidValues, nearestCellCol}
+
 /** The slow shuffle pipelines the engine's one-pass operators replaced,
   * kept as the references specs pin the fast paths bit-equal to.
   */
@@ -81,4 +83,17 @@ object Reference {
     (1 to dim).map(i =>
       element_at(a, i).cast("double") * element_at(b, i).cast("double"))
       .reduce(_ + _)
+
+  /** Each vector's nearest-centroid (IVF) cell as an `(id, cell_id)`
+    * frame — the assignment reference specs hold the index, search and
+    * semantic-dedup paths to. `centroids` is a small
+    * (cell_id, centroid array<double>) frame.
+    *
+    * One output row per INPUT row — duplicate ids each keep their row —
+    * and a null `vecCol` yields a null cell_id.
+    */
+  def assignCells(vectors: DataFrame, centroids: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    vectors.select(col(idCol),
+      nearestCellCol(centroidValues(centroids), col(vecCol)).as("cell_id"))
 }

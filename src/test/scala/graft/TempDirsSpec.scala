@@ -1,14 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.core.TempDirs
 
 /** Multi-JVM safety of the scratch-slot registry (r16 judge stretch
   * item): pid-stamped slot directories, stale-pid reclaim, and strict
   * hands-off for live foreign suites.
   */
-class TempDirsSpec extends AnyFunSuite {
+class TempDirsSpec extends SparkSpec {
 
   private val slot = s"tdspec${System.nanoTime()}"
 
@@ -55,5 +53,15 @@ class TempDirsSpec extends AnyFunSuite {
       TempDirs.claim(slot)
       assert(odd.exists())
     } finally TempDirs.deleteRecursively(odd.getPath)
+  }
+
+  test("q72 keeps one index slot per JVM however often it is built") {
+    // building q72 writes its IVF index (the plan reads it back)
+    (1 to 2).foreach(_ => SparkEntry.queries("q72_kmeans_ivf")(spark, sfDir))
+    val mine = s"graft_q72_ivf-p${ProcessHandle.current().pid()}-"
+    val slots = Option(new java.io.File(sys.props("java.io.tmpdir"))
+      .listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith(mine))
+    assert(slots.length == 1, slots.map(_.getName).mkString(", "))
   }
 }
