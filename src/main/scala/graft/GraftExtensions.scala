@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.functions.{DotProductExpr, HtmlToTextExpr, MinHashSigExpr,
   PercentileDiscAgg, SanitizeStringExpr, ShingleSetExpr, SimHashExpr,
@@ -21,7 +23,7 @@ object GraftExtensions {
       throw new IllegalArgumentException(s"$what must be a constant")
     else e.eval(null) match {
       case i: Int => i
-      case l: Long => l.toInt
+      case l: Long if l.isValidInt => l.toInt
       case s: Short => s.toInt
       case b: Byte => b.toInt
       case other =>
@@ -53,34 +55,44 @@ object GraftExtensions {
     f(exprs)
   }
 
+  /** A SQL argument as the Column a kernel's builder takes, and the
+    * built Column back as the expression the registry wants.
+    */
+  private def col(e: Expression): Column = ColumnBridge.column(e)
+  private def expr(c: Column): Expression = ColumnBridge.expression(c)
+
   /** (name, arity-checked builder) for every scalar SQL-surface
     * function.
     */
   private val scalarFns: Seq[(String, Seq[Expression] => Expression)] =
     Seq(
       ("sanitize_string",
-        arity(1, "sanitize_string(text)")(e => SanitizeStringExpr(e.head))),
+        arity(1, "sanitize_string(text)")(e =>
+          expr(SanitizeStringExpr(col(e.head))))),
       ("html_to_text",
-        arity(1, "html_to_text(html)")(e => HtmlToTextExpr(e.head))),
+        arity(1, "html_to_text(html)")(e =>
+          expr(HtmlToTextExpr(col(e.head))))),
       ("dot_product",
         arity(2, "dot_product(a, b)")(e => DotProductExpr(e.head, e(1)))),
       ("simhash64",
-        arity(1, "simhash64(text)")(e => SimHashExpr(e.head))),
+        arity(1, "simhash64(text)")(e => expr(SimHashExpr(col(e.head))))),
       ("minhash_sig",
         arity(3, "minhash_sig(text, shingleK, numHashes)")(e =>
-          MinHashSigExpr(e.head, litInt(e(1), "minhash_sig shingleK"),
-            litInt(e(2), "minhash_sig numHashes")))),
+          expr(MinHashSigExpr(col(e.head),
+            litInt(e(1), "minhash_sig shingleK"),
+            litInt(e(2), "minhash_sig numHashes"))))),
       ("winnow_fingerprints",
         arity(3, "winnow_fingerprints(text, k, w)")(e =>
-          WinnowFingerprintsExpr(e.head, litInt(e(1), "winnow_fingerprints k"),
-            litInt(e(2), "winnow_fingerprints w")))),
+          expr(WinnowFingerprintsExpr(col(e.head),
+            litInt(e(1), "winnow_fingerprints k"),
+            litInt(e(2), "winnow_fingerprints w"))))),
       ("shingle_set",
         arity(2, "shingle_set(text, k)")(e =>
-          ShingleSetExpr(e.head, litInt(e(1), "shingle_set k")))),
+          expr(ShingleSetExpr(col(e.head), litInt(e(1), "shingle_set k"))))),
       ("unicode_normalize",
         arity(2, "unicode_normalize(text, form)")(e =>
-          UnicodeNormalizeExpr(e.head, UnicodeNormalizeExpr.formOf(
-            litString(e(1), "unicode_normalize form"))))),
+          expr(UnicodeNormalizeExpr(col(e.head), UnicodeNormalizeExpr.formOf(
+            litString(e(1), "unicode_normalize form")))))),
       ("tokenize",
         arity(1, "tokenize(text)")(e =>
           graft.functions.TokenizeExpr(e.head))),

@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -20,59 +18,29 @@ import org.apache.spark.util.sketch.BloomFilter
   * bit-compatible with `putString`'s insertion path, so filters built
   * by `DataFrame.stat.bloomFilter` probe correctly.
   */
-case class BloomMightContainExpr(child: Expression,
-    bloom: Broadcast[BloomFilter]) extends UnaryExpression {
+object BloomMightContainExpr {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_might_contain requires STRING input, got ${child.dataType}")
+  /** [[mightContain]] over a string key column. */
+  def apply(key: Column, bloom: Broadcast[BloomFilter]): Column =
+    Kernel.call(this, "mightContain", BooleanType, Seq(key -> StringType),
+      Seq(bloom))
 
-  override def dataType: DataType = BooleanType
-
-  override def nullSafeEval(v: Any): Any =
-    bloom.value.mightContainBinary(v.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val ref = ctx.addReferenceObj("bloomBc", bloom,
-      classOf[Broadcast[BloomFilter]].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"((org.apache.spark.util.sketch.BloomFilter)$ref.value())" +
-        s".mightContainBinary($c.getBytes())")
-  }
-
-  override protected def withNewChildInternal(c: Expression)
-      : BloomMightContainExpr = copy(child = c)
+  def mightContain(key: UTF8String, bloom: Broadcast[BloomFilter])
+      : Boolean =
+    bloom.value.mightContainBinary(key.getBytes)
 }
 
 /** LONG-key sibling of [[BloomMightContainExpr]]: probes with
   * `mightContainLong`, bit-compatible with `putLong` — the insertion
   * path `DataFrame.stat.bloomFilter` uses for integral columns.
   */
-case class BloomMightContainLongExpr(child: Expression,
-    bloom: Broadcast[BloomFilter]) extends UnaryExpression {
+object BloomMightContainLongExpr {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_might_contain_long requires BIGINT input, got ${child.dataType}")
+  /** [[mightContain]] over a long key column. */
+  def apply(key: Column, bloom: Broadcast[BloomFilter]): Column =
+    Kernel.call(this, "mightContain", BooleanType, Seq(key -> LongType),
+      Seq(bloom))
 
-  override def dataType: DataType = BooleanType
-
-  override def nullSafeEval(v: Any): Any =
-    bloom.value.mightContainLong(v.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val ref = ctx.addReferenceObj("bloomBc", bloom,
-      classOf[Broadcast[BloomFilter]].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"((org.apache.spark.util.sketch.BloomFilter)$ref.value())" +
-        s".mightContainLong($c)")
-  }
-
-  override protected def withNewChildInternal(c: Expression)
-      : BloomMightContainLongExpr = copy(child = c)
+  def mightContain(key: Long, bloom: Broadcast[BloomFilter]): Boolean =
+    bloom.value.mightContainLong(key)
 }

@@ -21,28 +21,17 @@ object CleanFunctions {
     * semantics to [[sanitizeString]] (asserted in specs), ~3× fewer
     * string traversals on the ingest hot path.
     */
-  def sanitizeStringNative(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(SanitizeStringExpr(ColumnBridge.expression(c)))
-  }
+  def sanitizeStringNative(c: Column): Column = SanitizeStringExpr(c)
 
   /** lxml-style text-node join (see [[HtmlTextNodesExpr]]) — internal
     * whitespace preserved, entities decoded, outer strip.
     */
-  def htmlTextNodes(c: Column, sep: String): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(HtmlTextNodesExpr(
-      ColumnBridge.expression(c),
-      ColumnBridge.expression(org.apache.spark.sql.functions.lit(sep))))
-  }
+  def htmlTextNodes(c: Column, sep: String): Column = HtmlTextNodesExpr(c, sep)
 
   /** First href/src link target in an HTML fragment
     * (`wikimedia_commons.py:525-526` iterlinks()[0]).
     */
-  def htmlFirstLink(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(HtmlFirstLinkExpr(ColumnBridge.expression(c)))
-  }
+  def htmlFirstLink(c: Column): Column = HtmlTextNodesExpr.firstLink(c)
 
   /** `media.py:17` exact-match banned tags. */
   val tagBlacklist: Seq[String] = Seq("no person", "squareformat")
@@ -174,12 +163,9 @@ object CleanFunctions {
     trim(regexp_replace(decoded, "\\s+", " "))
   }
 
-  /** P17 as a native codegen'd expression (HtmlToTextExpr) — identical
+  /** P17 as a native codegen'd kernel (HtmlToTextExpr) — identical
     * semantics to [[htmlToText]] without the six regex engine passes;
     * equality asserted in specs including entity-cascade cases.
     */
-  def htmlToTextNative(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(HtmlToTextExpr(ColumnBridge.expression(c)))
-  }
+  def htmlToTextNative(c: Column): Column = HtmlToTextExpr(c)
 }

@@ -20,6 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * Summation is left-to-right in index order, each element widened to
   * double first — bit-identical to both existing forms and to the
   * DuckDB oracle's list_dot_product.
+  *
+  * Why this stays an inline loop: SCALING.md § Kernel calls.
   */
 case class DotProductExpr(left: Expression, right: Expression)
   extends BinaryExpression {

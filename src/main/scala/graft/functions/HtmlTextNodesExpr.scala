@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** lxml-style HTML text-node extraction, the exact semantics of the
@@ -24,68 +23,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * collects the non-empty character-data runs between tags — exactly
   * lxml's text nodes for the flat markup these fields carry.
   */
-case class HtmlTextNodesExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+object HtmlTextNodesExpr {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "html_text_nodes requires (STRING html, STRING sep)")
-  override def dataType: DataType = StringType
+  /** [[textJoin]] over an HTML column, nodes joined with `sep`. */
+  def apply(html: Column, sep: String): Column =
+    Kernel.call(this, "textJoin", StringType,
+      Seq(html -> StringType, lit(sep) -> StringType))
 
-  override def nullSafeEval(html: Any, sep: Any): Any =
-    UTF8String.fromString(HtmlTextNodesExpr.textJoin(
-      html.asInstanceOf[UTF8String].toString,
-      sep.asInstanceOf[UTF8String].toString))
+  /** [[firstLinkHref]] over an HTML column: null when the markup
+    * carries no link.
+    */
+  def firstLink(html: Column): Column =
+    Kernel.call(this, "firstLinkHref", StringType, Seq(html -> StringType),
+      returnNullable = true)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, (h, s) =>
-      "org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.HtmlTextNodesExpr.textJoin($h.toString(), $s.toString()))")
+  def textJoin(html: UTF8String, sep: UTF8String): UTF8String =
+    UTF8String.fromString(textJoin(html.toString, sep.toString))
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression)
-      : HtmlTextNodesExpr = copy(left = l, right = r)
-}
-
-/** First `href`/`src` link target in an HTML fragment (nullable) — see
-  * [[HtmlTextNodesExpr.firstLinkHref]].
-  */
-case class HtmlFirstLinkExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"html_first_link requires STRING input, got ${child.dataType}")
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(v: Any): Any = {
-    val r = HtmlTextNodesExpr.firstLinkHref(v.asInstanceOf[UTF8String].toString)
+  def firstLinkHref(html: UTF8String): UTF8String = {
+    val r = firstLinkHref(html.toString)
     if (r == null) null else UTF8String.fromString(r)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val link = ctx.freshName("link")
-      s"""
-         |String $link = graft.functions.HtmlTextNodesExpr.firstLinkHref($c.toString());
-         |if ($link == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString($link);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression)
-      : HtmlFirstLinkExpr = copy(child = c)
-}
-
-object HtmlTextNodesExpr {
 
   /** Decode the character-reference set lxml resolves in practice for
     * these fields. Single left-to-right pass, so `&amp;lt;` decodes to

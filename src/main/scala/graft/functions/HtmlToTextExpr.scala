@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** P17 HTML→text as a native codegen'd Catalyst expression. The Column
+/** P17 HTML→text as one codegen'd kernel call. The Column
   * form (CleanFunctions.htmlToText) runs SIX regex passes (tag strip,
   * four entity decodes, whitespace collapse); this replaces the regex
   * engines with two single-pass scans plus four literal replaces —
@@ -17,29 +15,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * Reference semantics: `wikimedia_commons.py` description cleanup /
   * the loader's HTML-bearing description fields.
   */
-case class HtmlToTextExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"html_to_text requires STRING input, got ${child.dataType}")
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(
-      HtmlToTextExpr.clean(v.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      "org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.HtmlToTextExpr.clean($c.toString()))")
-
-  override protected def withNewChildInternal(c: Expression)
-      : HtmlToTextExpr = copy(child = c)
-}
-
 object HtmlToTextExpr {
+
+  /** [[clean]] over a text column. */
+  def apply(html: Column): Column =
+    Kernel.call(this, "clean", StringType, Seq(html -> StringType))
+
+  def clean(u: UTF8String): UTF8String =
+    UTF8String.fromString(clean(u.toString))
 
   @inline private def isWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' ||

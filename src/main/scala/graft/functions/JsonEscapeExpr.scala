@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `json.dumps(ensure_ascii=False)` string-content escaping as ONE
@@ -17,29 +15,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * U+0001-U+0007 and U+000E-U+001F through unescaped (invalid JSON
   * and a divergence from json.dumps).
   */
-case class JsonEscapeExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"json_escape requires STRING input, got ${child.dataType}")
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(
-      JsonEscapeExpr.escape(v.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      "org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.JsonEscapeExpr.escape($c.toString()))")
-
-  override protected def withNewChildInternal(c: Expression)
-      : JsonEscapeExpr = copy(child = c)
-}
-
 object JsonEscapeExpr {
+
+  /** [[escape]] over a text column. */
+  def apply(text: Column): Column =
+    Kernel.call(this, "escape", StringType, Seq(text -> StringType))
+
+  def escape(u: UTF8String): UTF8String =
+    UTF8String.fromString(escape(u.toString))
 
   def escape(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length + 8)

@@ -2,11 +2,9 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** MinHash signature over k-word shingles as ONE codegen'd per-row
@@ -51,33 +49,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * is below the verify threshold cannot pass and is dropped before any
   * shingle set is built.
   */
-case class MinHashSigExpr(child: Expression, k: Int, numHashes: Int,
-    withCount: Boolean = false)
-  extends UnaryExpression {
-
-  require(k >= 1 && numHashes >= 1,
-    s"minhash_sig needs k >= 1 and numHashes >= 1, got k=$k n=$numHashes")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig requires STRING input, got ${child.dataType}")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    MinHashSigExpr.sig(v.asInstanceOf[UTF8String], k, numHashes, withCount)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashSigExpr.sig($c, $k, $numHashes, $withCount)")
-
-  override protected def withNewChildInternal(c: Expression): MinHashSigExpr =
-    copy(child = c)
-}
-
 object MinHashSigExpr {
+
+  /** [[sig]] over a text column. */
+  def apply(text: Column, k: Int, numHashes: Int,
+      withCount: Boolean = false): Column = {
+    require(k >= 1 && numHashes >= 1,
+      s"minhash_sig needs k >= 1 and numHashes >= 1, got k=$k n=$numHashes")
+    Kernel.call(this, "sig", ArrayType(LongType, containsNull = false),
+      Seq(text -> StringType), Seq(k, numHashes, withCount))
+  }
 
   private val Empty = new GenericArrayData(Array.empty[Long])
 

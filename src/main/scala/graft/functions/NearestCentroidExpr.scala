@@ -34,6 +34,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   *    struct ordering uses, with ties keeping the lower cell_id.
   *
   * `centroids` must be passed sorted by ascending cell_id.
+  *
+  * Why this stays an inline loop: SCALING.md § Kernel calls.
   */
 case class NearestCentroidExpr(child: Expression,
     cellIds: Seq[Int], centroids: Seq[Seq[Double]])

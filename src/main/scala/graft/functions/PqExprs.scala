@@ -44,6 +44,8 @@ private[functions] object PqExprs {
   * codebook(m)(code)) — the PQ encoder. Squared distance (no sqrt):
   * monotone, so the argmin and its tie-set match the oracle's
   * `list_distance` (which does take the sqrt) exactly.
+  *
+  * Why this stays an inline loop: SCALING.md § Kernel calls.
   */
 case class PqEncodeExpr(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
   extends UnaryExpression {
@@ -140,6 +142,8 @@ case class PqEncodeExpr(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
   * — the per-query asymmetric-distance lookup table, computed ONCE on
   * the (tiny, broadcast) query side so the corpus-scale ADC scan does
   * M array lookups per row instead of M×K×ds multiplies.
+  *
+  * Why this stays an inline loop: SCALING.md § Kernel calls.
   */
 case class PqLutExpr(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
   extends UnaryExpression {
@@ -233,6 +237,8 @@ case class PqLutExpr(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
   * arithmetic. One generated loop over a referenced double[] does the
   * same lookups with zero per-pair materialization; the exploded
   * output row is (id, query_idx, score) — skinny.
+  *
+  * Why this stays an inline loop: SCALING.md § Kernel calls.
   */
 case class PqAdcAllExpr(child: Expression, luts: Array[Double],
     nq: Int, m: Int, k: Int)

@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** P4 string sanitization as a native codegen'd Catalyst expression —
+/** P4 string sanitization as one codegen'd kernel call —
   * ONE pass over the string instead of the translate + 2×regexp_replace
   * chain (3 passes, 2 regex engines) in CleanFunctions.sanitizeString.
   *
@@ -16,30 +14,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * space, leading/trailing whitespace trimmed. Equality with the regex
   * form is asserted in specs over the reference fixtures.
   */
-case class SanitizeStringExpr(child: Expression)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sanitize_string requires STRING input, got ${child.dataType}")
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(
-      SanitizeStringExpr.clean(v.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      "org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.SanitizeStringExpr.clean($c.toString()))")
-
-  override protected def withNewChildInternal(c: Expression)
-      : SanitizeStringExpr = copy(child = c)
-}
-
 object SanitizeStringExpr {
+
+  /** [[clean]] over a text column. */
+  def apply(text: Column): Column =
+    Kernel.call(this, "clean", StringType, Seq(text -> StringType))
+
+  def clean(u: UTF8String): UTF8String =
+    UTF8String.fromString(clean(u.toString))
 
   /** Exactly the regex `\s` class (NOT Character.isWhitespace, which
     * also matches U+001C-1F and not U+000B consistently across

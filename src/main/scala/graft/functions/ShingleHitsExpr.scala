@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -40,36 +38,17 @@ import org.apache.spark.util.sketch.BloomFilter
   * probes use `mightContainBinary`, bit-compatible with
   * `DataFrame.stat.bloomFilter`'s string insertion path.
   */
-case class ShingleHitsExpr(child: Expression, k: Int,
-    bloom: Broadcast[BloomFilter]) extends UnaryExpression {
+object ShingleHitsExpr {
 
-  require(k >= 1, s"shingle_hits needs k >= 1, got k=$k")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"shingle_hits requires STRING input, got ${child.dataType}")
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    ShingleHitsExpr.hits(v.asInstanceOf[UTF8String], k, bloom.value)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val ref = ctx.addReferenceObj("benchBloomBc", bloom,
-      classOf[Broadcast[BloomFilter]].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleHitsExpr.hits($c, $k, " +
-        s"(org.apache.spark.util.sketch.BloomFilter)$ref.value())")
+  /** [[hits]] over a text column against a broadcast filter. */
+  def apply(text: Column, k: Int, bloom: Broadcast[BloomFilter]): Column = {
+    require(k >= 1, s"shingle_hits needs k >= 1, got k=$k")
+    Kernel.call(this, "hits", ArrayType(StringType, containsNull = false),
+      Seq(text -> StringType), Seq(k, bloom))
   }
 
-  override protected def withNewChildInternal(c: Expression)
-      : ShingleHitsExpr = copy(child = c)
-}
-
-object ShingleHitsExpr {
+  def hits(u: UTF8String, k: Int, bloom: Broadcast[BloomFilter]): ArrayData =
+    hits(u, k, bloom.value)
 
   private val Empty = new GenericArrayData(Array.empty[Any])
 

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The DISTINCT k-word shingle set of a text as ONE codegen'd per-row
@@ -26,32 +24,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * return an EMPTY array (the aggregation form emits no row — callers
   * filter `size(...) > 0` for identical frames).
   */
-case class ShingleSetExpr(child: Expression, k: Int)
-  extends UnaryExpression {
-
-  require(k >= 1, s"shingle_set needs k >= 1, got k=$k")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"shingle_set requires STRING input, got ${child.dataType}")
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    ShingleSetExpr.shingleSet(v.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleSetExpr.shingleSet($c, $k)")
-
-  override protected def withNewChildInternal(c: Expression): ShingleSetExpr =
-    copy(child = c)
-}
-
 object ShingleSetExpr {
+
+  /** [[shingleSet]] over a text column. */
+  def apply(text: Column, k: Int): Column = {
+    require(k >= 1, s"shingle_set needs k >= 1, got k=$k")
+    Kernel.call(this, "shingleSet",
+      ArrayType(StringType, containsNull = false),
+      Seq(text -> StringType), Seq(k))
+  }
 
   private val Empty = new GenericArrayData(Array.empty[Any])
 

@@ -2,10 +2,8 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit SimHash over the DISTINCT space-separated words of a text
@@ -28,27 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * bytes (0x20 never occurs inside a multi-byte sequence) and md5
   * consumes the byte slices directly — no per-word String garbage.
   */
-case class SimHashExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"simhash64 requires STRING input, got ${child.dataType}")
-
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(v: Any): Any =
-    SimHashExpr.simhash64(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHashExpr.simhash64($c)")
-
-  override protected def withNewChildInternal(c: Expression): SimHashExpr =
-    copy(child = c)
-}
-
 object SimHashExpr {
+
+  /** [[simhash64]] over a text column. */
+  def apply(text: Column): Column =
+    Kernel.call(this, "simhash64", StringType, Seq(text -> StringType))
 
   private val mdLocal: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))

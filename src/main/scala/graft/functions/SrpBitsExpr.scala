@@ -28,6 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * list_dot_product, which the q62 oracle uses): elements widened to
   * double and summed left-to-right in index order, `> 0` strict —
   * bit-identical signs.
+  *
+  * Why this stays an inline loop: SCALING.md § Kernel calls.
   */
 case class SrpBitsExpr(child: Expression, planes: Seq[Seq[Double]])
   extends UnaryExpression {

@@ -1,15 +1,13 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Expression pair for exact duplicate-substring removal
+/** Kernel pair for exact duplicate-substring removal
   * ([[graft.operators.Dedupe.exactSubstrDedup]], the ExactSubstr
   * operator of Lee et al. 2022, arXiv:2107.06499).
   *
@@ -29,32 +27,14 @@ object SubstrDedupExprs
   * candidate windows on the REAL substring before any removal, so hash
   * quality affects candidate volume only, never results.
   */
-case class GramHashesExpr(child: Expression, length: Int)
-  extends UnaryExpression {
-
-  require(length >= 2, s"gram_hashes needs length >= 2, got $length")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"gram_hashes requires STRING input, got ${child.dataType}")
-
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    GramHashesExpr.gramHashes(v.asInstanceOf[UTF8String], length)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.GramHashesExpr.gramHashes($c, $length)")
-
-  override protected def withNewChildInternal(c: Expression): GramHashesExpr =
-    copy(child = c)
-}
-
 object GramHashesExpr {
+
+  /** [[gramHashes]] over a text column. */
+  def apply(text: Column, length: Int): Column = {
+    require(length >= 2, s"gram_hashes needs length >= 2, got $length")
+    Kernel.call(this, "gramHashes", ArrayType(LongType, containsNull = false),
+      Seq(text -> StringType), Seq(length))
+  }
 
   private val Empty = new GenericArrayData(Array.empty[Long])
   final val Base = 1000003L
@@ -94,43 +74,18 @@ object GramHashesExpr {
   * assembly itself, so there is nothing corpus-sized to push further
   * down.
   */
-case class CutSpansExpr(text: Expression, starts: Expression, length: Int)
-  extends BinaryExpression {
-
-  require(length >= 2, s"cut_spans needs length >= 2, got $length")
-
-  override def left: Expression = text
-  override def right: Expression = starts
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (text.dataType == StringType &&
-        starts.dataType.isInstanceOf[ArrayType] &&
-        starts.dataType.asInstanceOf[ArrayType].elementType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cut_spans requires (STRING, ARRAY<INT>), got " +
-        s"(${text.dataType}, ${starts.dataType})")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("clean_text", StringType, nullable = false),
-    StructField("n_spans", LongType, nullable = false),
-    StructField("removed_chars", LongType, nullable = false)))
-
-  override def nullSafeEval(t: Any, st: Any): Any =
-    CutSpansExpr.cutSpans(t.asInstanceOf[UTF8String],
-      st.asInstanceOf[ArrayData], length)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, (t, st) =>
-      s"graft.functions.CutSpansExpr.cutSpans($t, $st, $length)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): CutSpansExpr =
-    copy(text = newLeft, starts = newRight)
-}
-
 object CutSpansExpr {
+
+  /** [[cutSpans]] over a text column and its sorted window starts. */
+  def apply(text: Column, starts: Column, length: Int): Column = {
+    require(length >= 2, s"cut_spans needs length >= 2, got $length")
+    Kernel.call(this, "cutSpans", StructType(Seq(
+        StructField("clean_text", StringType, nullable = false),
+        StructField("n_spans", LongType, nullable = false),
+        StructField("removed_chars", LongType, nullable = false))),
+      Seq(text -> StringType, starts -> ArrayType(IntegerType)),
+      Seq(length))
+  }
 
   def cutSpans(u: UTF8String, startsArr: ArrayData, gramLen: Int)
       : InternalRow = {

@@ -1,28 +1,15 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Number of alphanumeric token runs in a string — ONE generated byte
-  * scan, no regex, no array materialization.
-  *
-  * Definition parity (load-bearing for the BM25 oracle): equals the
-  * count of non-empty elements of `split(lower(text), "[^a-z0-9]+")` —
-  * a maximal run of [A-Za-z0-9] is exactly one non-empty split
-  * element (case folding keeps ASCII letters alphanumeric, and every
-  * non-ASCII byte has the high bit set, so it is never in [a-z0-9] and
-  * acts as a delimiter in both formulations; multi-byte continuation
-  * bytes too). The split form costs a 500 MB regex pass plus an 80M
-  * element array per corpus scan at the 100× point; computing doc
-  * length via `size(filter(split(...)))` additionally ran the
-  * interpreted ArrayFilter lambda per element — this loop replaces
-  * both with ~1 ns/byte.
-  */
 /** The lowered alphanumeric tokens themselves — the array the BM25
-  * explode consumes — as the same single byte scan: maximal [A-Za-z0-9]
+  * explode consumes — as [[TokenCountExpr]]'s byte scan: maximal [A-Za-z0-9]
   * runs, ASCII letters lowered in place, emitted as zero-regex
   * UTF8Strings.
   *
@@ -40,6 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * string to UTF-16, runs java.util.regex, and allocates the empty
   * boundary tokens — measured 115 s of CPU for a 500 MB corpus scan at
   * the 100× point, ~5× this loop.
+  *
+  * Why this stays an inline loop: SCALING.md § Kernel calls.
   */
 case class TokenizeExpr(child: Expression) extends UnaryExpression {
 
@@ -129,55 +118,26 @@ object TokenizeExpr {
   * Token/dl definitions are [[TokenizeExpr]]/[[TokenCountExpr]]'s,
   * so tf and dl equal the oracle's split-lower-filter formulation.
   */
-case class QueryTermCountsExpr(child: Expression, terms: Seq[String])
-  extends UnaryExpression {
-
-  require(terms.nonEmpty && terms.distinct == terms,
-    "terms must be non-empty and distinct")
-  require(terms.forall(t => t.nonEmpty &&
-    t.getBytes("UTF-8").forall(TokenizeExpr.alnum)),
-    "terms must be non-empty lowered alphanumeric tokens")
-
-  private val termBytes: Array[Array[Byte]] =
-    terms.map(_.getBytes("UTF-8")).toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"query_term_counts requires string input, got $t")
-  }
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any = {
-    val bytes = v.asInstanceOf[UTF8String].getBytes
-    val out = QueryTermCountsExpr.scan(bytes, termBytes)
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val termsRef = ctx.addReferenceObj("queryTerms", termBytes, "byte[][]")
-    nullSafeCodeGen(ctx, ev, s => {
-      val out = ctx.freshName("out")
-      s"""
-         |long[] $out = graft.functions.QueryTermCountsExpr.scan(
-         |  $s.getBytes(), $termsRef);
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(c: Expression)
-      : QueryTermCountsExpr = copy(child = c)
-}
-
 object QueryTermCountsExpr {
+
+  /** [[scan]] over a text column for the distinct lowered `terms`. */
+  def apply(text: Column, terms: Seq[String]): Column = {
+    require(terms.nonEmpty && terms.distinct == terms,
+      "terms must be non-empty and distinct")
+    require(terms.forall(t => t.nonEmpty &&
+      t.getBytes("UTF-8").forall(TokenizeExpr.alnum)),
+      "terms must be non-empty lowered alphanumeric tokens")
+    Kernel.call(this, "scan", ArrayType(LongType, containsNull = false),
+      Seq(text -> StringType), Seq(QueryTerms(terms)))
+  }
+
+  def scan(u: UTF8String, terms: QueryTerms): ArrayData =
+    new GenericArrayData(scan(u.getBytes, terms.bytes))
+
   /** One pass: out(0) = token count, out(t+1) = occurrences of
-    * terms(t). Shared by the interpreted and generated paths (the loop
-    * is branch-heavy enough that a single JIT-compiled method beats
-    * inlining it into every generated class).
+    * terms(t). A kernel, not an inline loop: it is branch-heavy enough
+    * that a single JIT-compiled method beats inlining it into every
+    * generated class.
     */
   def scan(bytes: Array[Byte], terms: Array[Array[Byte]]): Array[Long] = {
     val out = new Array[Long](terms.length + 1)
@@ -211,6 +171,35 @@ object QueryTermCountsExpr {
   }
 }
 
+/** The term constant of a [[QueryTermCountsExpr]] plan: compares by its
+  * terms and prints them; their UTF-8 bytes, which the scan compares
+  * token runs against, are built once per JVM.
+  */
+final case class QueryTerms(terms: Seq[String]) {
+
+  override def toString: String = terms.mkString("QueryTerms(", ", ", ")")
+
+  @transient lazy val bytes: Array[Array[Byte]] =
+    terms.map(_.getBytes("UTF-8")).toArray
+}
+
+/** Number of alphanumeric token runs in a string — ONE generated byte
+  * scan, no regex, no array materialization.
+  *
+  * Definition parity (load-bearing for the BM25 oracle): equals the
+  * count of non-empty elements of `split(lower(text), "[^a-z0-9]+")` —
+  * a maximal run of [A-Za-z0-9] is exactly one non-empty split
+  * element (case folding keeps ASCII letters alphanumeric, and every
+  * non-ASCII byte has the high bit set, so it is never in [a-z0-9] and
+  * acts as a delimiter in both formulations; multi-byte continuation
+  * bytes too). The split form costs a 500 MB regex pass plus an 80M
+  * element array per corpus scan at the 100× point; computing doc
+  * length via `size(filter(split(...)))` additionally ran the
+  * interpreted ArrayFilter lambda per element — this loop replaces
+  * both with ~1 ns/byte.
+  *
+  * Why this stays an inline loop: SCALING.md § Kernel calls.
+  */
 case class TokenCountExpr(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

@@ -2,13 +2,11 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Unicode normalization as a codegen'd Catalyst expression — the
+/** Unicode normalization as a codegen'd kernel call — the
   * normalize-before-fingerprint step every text-dedup pipeline needs
   * (decomposed "café" vs composed "café", full-width digits, ligatures
   * all hash differently without it, so visually-identical documents
@@ -27,31 +25,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * 100 TB mostly-ASCII corpus costs one narrow codegen'd projection —
   * no shuffle, no UDF boundary.
   */
-case class UnicodeNormalizeExpr(child: Expression, form: Normalizer.Form)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"unicode_normalize requires STRING input, got ${child.dataType}")
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(Normalizer.normalize(
-      v.asInstanceOf[UTF8String].toString, form))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      "org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"java.text.Normalizer.normalize($c.toString(), " +
-        s"java.text.Normalizer.Form.${form.name()}))")
-
-  override protected def withNewChildInternal(c: Expression)
-      : UnicodeNormalizeExpr = copy(child = c)
-}
-
 object UnicodeNormalizeExpr {
+
+  /** [[normalize]] over a text column. */
+  def apply(text: Column, form: Normalizer.Form): Column =
+    Kernel.call(this, "normalize", StringType, Seq(text -> StringType),
+      Seq(form))
+
+  def normalize(u: UTF8String, form: Normalizer.Form): UTF8String =
+    UTF8String.fromString(Normalizer.normalize(u.toString, form))
 
   /** Parse a form name (case-insensitive) — the SQL surface's second
     * argument.

@@ -3,10 +3,8 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Total fixed-point unigram log-likelihood of a text column under a
@@ -29,59 +27,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * exactly `split(text, " ")` / DuckDB `string_split(text, ' ')`;
   * lookups compare raw UTF-8 byte slices (no per-token String garbage).
   */
-case class UnigramScoreExpr(child: Expression, vocabFp: Map[String, Long],
-    oovFp: Long) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"unigram_score requires STRING input, got ${child.dataType}")
-
-  override def dataType: DataType = LongType
-
-  @transient private lazy val vocab = new UnigramVocab(vocabFp)
-
-  override def nullSafeEval(v: Any): Any =
-    UnigramScoreExpr.score(v.asInstanceOf[UTF8String], vocab, oovFp)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val vocabRef = ctx.addReferenceObj("unigramVocab", vocab,
-      classOf[UnigramVocab].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.UnigramScoreExpr.score($c, $vocabRef, ${oovFp}L)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): UnigramScoreExpr =
-    copy(child = c)
-}
-
-/** Serializable vocabulary: plain byte arrays cross the wire; the
-  * zero-copy ByteBuffer-keyed lookup map is rebuilt lazily per JVM.
-  */
-final class UnigramVocab(vocabFp: Map[String, Long]) extends Serializable {
-
-  private val entryWords: Array[Array[Byte]] =
-    vocabFp.keysIterator
-      .map(_.getBytes(StandardCharsets.UTF_8)).toArray
-  private val entryFps: Array[Long] = vocabFp.valuesIterator.toArray
-
-  @transient private lazy val lookup: java.util.HashMap[ByteBuffer, java.lang.Long] = {
-    val m = new java.util.HashMap[ByteBuffer, java.lang.Long](
-      entryWords.length * 2)
-    var i = 0
-    while (i < entryWords.length) {
-      m.put(ByteBuffer.wrap(entryWords(i)), Long.box(entryFps(i)))
-      i += 1
-    }
-    m
-  }
-
-  def fpOf(bytes: Array[Byte], start: Int, len: Int): java.lang.Long =
-    lookup.get(ByteBuffer.wrap(bytes, start, len))
-}
-
 object UnigramScoreExpr {
+
+  /** [[score]] over a text column. */
+  def apply(text: Column, vocabFp: Map[String, Long], oovFp: Long): Column =
+    Kernel.call(this, "score", LongType, Seq(text -> StringType),
+      Seq(UnigramVocab(vocabFp), oovFp))
 
   def score(u: UTF8String, vocab: UnigramVocab, oovFp: Long): Long = {
     val bytes = u.getBytes
@@ -97,4 +48,27 @@ object UnigramScoreExpr {
     }
     sum
   }
+}
+
+/** The vocabulary constant of a [[UnigramScoreExpr]] plan: compares by
+  * its table, so two plans over equal tables are equal, and prints its
+  * size, not its entries. The zero-copy ByteBuffer-keyed lookup map is
+  * rebuilt lazily per JVM.
+  */
+final case class UnigramVocab(vocabFp: Map[String, Long]) {
+
+  override def toString: String = s"UnigramVocab(${vocabFp.size} words)"
+
+  @transient private lazy val lookup
+      : java.util.HashMap[ByteBuffer, java.lang.Long] = {
+    val m = new java.util.HashMap[ByteBuffer, java.lang.Long](
+      vocabFp.size * 2)
+    vocabFp.foreach { case (w, fp) =>
+      m.put(ByteBuffer.wrap(w.getBytes(StandardCharsets.UTF_8)), Long.box(fp))
+    }
+    m
+  }
+
+  def fpOf(bytes: Array[Byte], start: Int, len: Int): java.lang.Long =
+    lookup.get(ByteBuffer.wrap(bytes, start, len))
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03) as a
@@ -33,31 +31,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Documents shorter than k + w - 1 code points yield an empty array.
   */
-case class WinnowFingerprintsExpr(child: Expression, k: Int, w: Int)
-  extends UnaryExpression {
-
-  require(k >= 1 && w >= 1, s"winnow needs k >= 1 and w >= 1, got k=$k w=$w")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"winnow_fingerprints requires STRING input, got ${child.dataType}")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    WinnowFingerprintsExpr.winnow(v.asInstanceOf[UTF8String].toString, k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.WinnowFingerprintsExpr.winnow($c.toString(), $k, $w)")
-
-  override protected def withNewChildInternal(c: Expression)
-      : WinnowFingerprintsExpr = copy(child = c)
-}
-
 object WinnowFingerprintsExpr {
+
+  /** [[winnow]] over a text column. */
+  def apply(text: Column, k: Int, w: Int): Column = {
+    require(k >= 1 && w >= 1, s"winnow needs k >= 1 and w >= 1, got k=$k w=$w")
+    Kernel.call(this, "winnow", ArrayType(LongType, containsNull = false),
+      Seq(text -> StringType), Seq(k, w))
+  }
+
+  def winnow(u: UTF8String, k: Int, w: Int): ArrayData =
+    winnow(u.toString, k, w)
 
   private val Empty = new GenericArrayData(Array.empty[Long])
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.{CleanFunctions, HtmlTextNodesExpr, LicenseMap}
+import graft.functions.{CleanFunctions, LicenseMap}
 
 /** The CONCRETE provider configurations — Flickr, Wikimedia Commons,
   * Smithsonian and Freesound — parsed from the real API response
@@ -27,10 +27,6 @@ import graft.functions.{CleanFunctions, HtmlTextNodesExpr, LicenseMap}
 object ConcreteProviders {
 
   import org.apache.spark.sql.graftbridge.ColumnBridge
-
-  private def textJoin(c: Column, sep: String): Column =
-    ColumnBridge.column(HtmlTextNodesExpr(
-      ColumnBridge.expression(c), ColumnBridge.expression(lit(sep))))
 
   // =====================================================================
   // Flickr (flickr.py) — `photos.photo` batch array, numeric license
@@ -143,7 +139,8 @@ object ConcreteProviders {
     // with " ", outer strip, truncate; key dropped when absent/blank
     val descText = when(
       trim(coalesce(col("description._content"), lit(""))) =!= "",
-      substring(textJoin(col("description._content"), " "),
+      substring(
+        CleanFunctions.htmlTextNodes(col("description._content"), " "),
         1, maxDescriptionLength))
 
     // _create_tags_list (flickr.py:313-324): strip → truncate →
@@ -362,7 +359,7 @@ object ConcreteProviders {
       col("license"), col("license_version"),
       concat(lit("https://creativecommons.org/"), col("license_path"),
         lit("/")).as("license_url"),
-      when(hasArtist, textJoin(artist, "")).as("creator"),
+      when(hasArtist, CleanFunctions.htmlTextNodes(artist, "")).as("creator"),
       when(hasArtist, CleanFunctions.htmlFirstLink(artist))
         .as("creator_url"),
       wmCleanTitle(ext("ObjectName"), col("page_title")).as("title"),
@@ -390,8 +387,8 @@ object ConcreteProviders {
         ext("DateTime").as("last_modified_at_source"),
         categories.as("categories"),
         col("latitude"), col("longitude"), col("map_datum"),
-        when(descr.isNotNull && descr =!= "", textJoin(descr, " "))
-          .as("description"),
+        when(descr.isNotNull && descr =!= "",
+          CleanFunctions.htmlTextNodes(descr, " ")).as("description"),
         when(col("media_type") === "audio", audioFields.getField("channels"))
           .as("channels")).as("meta_data"),
       when(col("media_type") === "audio", lit("wikimedia_audio"))

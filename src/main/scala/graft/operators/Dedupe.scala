@@ -123,17 +123,14 @@ object Dedupe {
   def minhashWide(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int, numHashes: Int,
       maxDocChars: Int = TextAnalysis.defaultMaxDocChars,
-      withCount: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+      withCount: Boolean = false): DataFrame =
     docs.select(col(idCol).as("doc"),
-        ColumnBridge.column(graft.functions.MinHashSigExpr(
-          ColumnBridge.expression(
-            TextAnalysis.capDoc(col(textCol), maxDocChars)),
-          shingleK, numHashes, withCount)).as("sig"))
+        graft.functions.MinHashSigExpr(
+          TextAnalysis.capDoc(col(textCol), maxDocChars),
+          shingleK, numHashes, withCount).as("sig"))
       // the groupBy form emits no row for docs with < k words; the
       // expression returns an empty array for them — drop for parity
       .filter(size(col("sig")) > 0)
-  }
 
   /** Signature from precomputed (doc, shingle) rows — callers that also
     * need the shingle frame elsewhere (e.g. exact verification) compute
@@ -584,13 +581,9 @@ object Dedupe {
     * by the codegen'd [[graft.functions.ShingleSetExpr]].
     */
   private def shingleSet(textCol: String, shingleK: Int,
-      maxDocChars: Int): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(graft.functions.ShingleSetExpr(
-      ColumnBridge.expression(
-        TextAnalysis.capDoc(col(textCol), maxDocChars)),
-      shingleK))
-  }
+      maxDocChars: Int): Column =
+    graft.functions.ShingleSetExpr(
+      TextAnalysis.capDoc(col(textCol), maxDocChars), shingleK)
 
   /** The verifiers' shared tail: role rows (doc_a, doc_b, role, shset)
     * regroup by pair, pairs missing a side's non-empty set drop out, and
@@ -1228,7 +1221,6 @@ object Dedupe {
       maxDocChars: Int = TextAnalysis.defaultMaxDocChars,
       prefilterFpp: Double = 0.001,
       caches: CacheHandle = CacheHandle.session): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     // two plan-construction actions over the persisted bench shingles:
     // the sizing count (which doubles as the cache materialization —
     // no separate eager job) and the Bloom aggregate over the cache
@@ -1241,10 +1233,9 @@ object Dedupe {
         prefilterFpp))
     val bsz = bsh.groupBy("bench_id").agg(count(lit(1)).as("bench_sz"))
     val hits = corpus.select(col(idCol).as("doc"),
-      explode(ColumnBridge.column(graft.functions.ShingleHitsExpr(
-        ColumnBridge.expression(
-          TextAnalysis.capDoc(col(textCol), maxDocChars)),
-        shingleK, bloom))).as("shingle"))
+      explode(graft.functions.ShingleHitsExpr(
+        TextAnalysis.capDoc(col(textCol), maxDocChars), shingleK, bloom))
+        .as("shingle"))
     // count(1), not countDistinct: the expression emits each of a
     // doc's shingles at most once, and (bench_id, shingle) is distinct
     // by construction, so the join fans out uniquely
@@ -1296,13 +1287,10 @@ object Dedupe {
     * explode creeping back.
     */
   def simhash(docs: DataFrame, idCol: String, textCol: String,
-      maxDocChars: Int = TextAnalysis.defaultMaxDocChars): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+      maxDocChars: Int = TextAnalysis.defaultMaxDocChars): DataFrame =
     docs.select(col(idCol).as("doc"),
-      ColumnBridge.column(graft.functions.SimHashExpr(
-        ColumnBridge.expression(
-          TextAnalysis.capDoc(col(textCol), maxDocChars)))).as("simhash"))
-  }
+      graft.functions.SimHashExpr(
+        TextAnalysis.capDoc(col(textCol), maxDocChars)).as("simhash"))
 
   /** One row per fixed-width word segment of each document: (doc,
     * seg_idx, seg). The last segment of a document may be shorter than
@@ -1395,12 +1383,10 @@ object Dedupe {
   def exactSubstrDedup(docs: DataFrame, idCol: String, textCol: String,
       gramLen: Int, prefilterFpp: Double = 0.01,
       caches: CacheHandle = CacheHandle.session): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val d = docs.filter(col(textCol).isNotNull)
       .select(col(idCol), col(textCol))
     def grams = d.select(col(idCol),
-        posexplode(ColumnBridge.column(graft.functions.GramHashesExpr(
-          ColumnBridge.expression(col(textCol)), gramLen))))
+        posexplode(graft.functions.GramHashesExpr(col(textCol), gramLen)))
       .select(col(idCol), (col("pos") + 1).cast("int").as("__p"),
         col("col").as("__h"))
     // pass 1: duplicated hash VALUES (count > 1), key-only. A
@@ -1416,9 +1402,8 @@ object Dedupe {
       dup.stat.bloomFilter("__h", math.max(1L, nDup), prefilterFpp))
     // pass 2: re-scan, keep only windows whose hash the Bloom knows —
     // a shuffle-free prefilter; survivors are match-sized
-    val cand = grams.filter(ColumnBridge.column(
-      graft.functions.BloomMightContainLongExpr(
-        ColumnBridge.expression(col("__h")), bloom)))
+    val cand = grams.filter(
+      graft.functions.BloomMightContainLongExpr(col("__h"), bloom))
     // candidates only: fetch the real window and keep every occurrence
     // that is not its window's minimal (doc, pos)
     val withGram = cand.join(d, Seq(idCol))
@@ -1431,11 +1416,8 @@ object Dedupe {
       .filter(occ =!= col("__min"))
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(col("__p"))).as("__starts"))
-    val cut = ColumnBridge.column(graft.functions.CutSpansExpr(
-      ColumnBridge.expression(col(textCol)),
-      ColumnBridge.expression(
-        coalesce(col("__starts"), array().cast("array<int>"))),
-      gramLen))
+    val cut = graft.functions.CutSpansExpr(col(textCol),
+      coalesce(col("__starts"), array().cast("array<int>")), gramLen)
     d.join(removals, Seq(idCol), "left_outer")
       .withColumn("__cut", cut)
       .select(col(idCol), col("__cut.clean_text").as("clean_text"),

@@ -137,12 +137,10 @@ object MergeUpsert {
   def urlConflictFilterBloom(staged: DataFrame, target: DataFrame,
       urlCol: String, fidCol: String, expectedItems: Long = 1000000L,
       fpp: Double = 0.01): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val bloom = staged.stat.bloomFilter(urlCol, expectedItems, fpp)
     val bc = staged.sparkSession.sparkContext.broadcast(bloom)
-    val pruned = target.filter(ColumnBridge.column(
-      graft.functions.BloomMightContainExpr(
-        ColumnBridge.expression(col(urlCol)), bc)))
+    val pruned = target.filter(
+      graft.functions.BloomMightContainExpr(col(urlCol), bc))
     urlConflictFilter(staged, pruned, urlCol, fidCol)
   }
 

@@ -113,12 +113,10 @@ object Retrieval {
       queryTerms: DataFrame, k: Int, k1: Double = 1.2, b: Double = 0.75,
       caches: graft.core.CacheHandle = graft.core.CacheHandle.session)
       : DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val terms = queryTerms.select("term").distinct()
       .collect().map(_.getString(0)).sorted
-    val counts = ColumnBridge.column(
-      graft.functions.QueryTermCountsExpr(
-        ColumnBridge.expression(col(textCol)), terms.toSeq))
+    val counts = graft.functions.QueryTermCountsExpr(col(textCol),
+      terms.toSeq)
     val qs = graft.core.CacheHandle.eager(caches.track(docs
       .select(col(idCol).as("doc_id"), counts.as("a")).persist()))
     val stats = qs.agg(

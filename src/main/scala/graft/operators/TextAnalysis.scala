@@ -194,12 +194,9 @@ object TextAnalysis {
     * ligatures) collapse to one fingerprint. One narrow projection with
     * a quick-check fast path for already-normalized text; no shuffle.
     */
-  def normalizeUnicode(text: Column, form: String): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(graft.functions.UnicodeNormalizeExpr(
-      ColumnBridge.expression(text),
-      graft.functions.UnicodeNormalizeExpr.formOf(form)))
-  }
+  def normalizeUnicode(text: Column, form: String): Column =
+    graft.functions.UnicodeNormalizeExpr(text,
+      graft.functions.UnicodeNormalizeExpr.formOf(form))
 
   /** Default per-document size cap for the character/shingle-explode
     * operators (winnow, shingling, simhash): 1M code points. At corpus
@@ -237,9 +234,8 @@ object TextAnalysis {
     */
   def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
       k: Int, w: Int, maxDocChars: Int = defaultMaxDocChars): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val fps = ColumnBridge.column(graft.functions.WinnowFingerprintsExpr(
-      ColumnBridge.expression(capDoc(col(textCol), maxDocChars)), k, w))
+    val fps = graft.functions.WinnowFingerprintsExpr(
+      capDoc(col(textCol), maxDocChars), k, w)
     docs.select(col(idCol).as("doc"), explode(fps).as("fp"))
   }
 
@@ -290,18 +286,21 @@ object TextAnalysis {
     * integer multiple of 1/1024 bit, so per-document sums are exact
     * integers — identical at any reduction order or partitioning.
     */
-  val pretrainedUnigramFp: Map[String, Long] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
+  val pretrainedUnigramFp: Map[String, Long] =
     Seq("a", "agg", "batch", "big", "column", "customer", "data", "dup",
       "fast", "filter", "group", "hash", "join", "key", "line", "merge",
       "order", "part", "query", "row", "scan", "slow", "small", "sort",
       "spark", "stream", "table", "the", "value", "vector", "window")
-      .map { w =>
-        md.reset()
-        val hex = md.digest(w.getBytes("UTF-8"))
-          .take(2).map(b => f"${b & 0xff}%02x").mkString
-        w -> -(1024L + java.lang.Long.parseLong(hex.take(3), 16))
-      }.toMap
+      .map(w => w -> md5Fp(w)).toMap
+
+  /** The frozen tables' weight of `key`: -(1024 + n), n the first three
+    * hex digits of md5(key) — between -1 and -5 bits in fixed point.
+    */
+  private def md5Fp(key: String): Long = {
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes("UTF-8"))
+      .take(2).map(b => f"${b & 0xff}%02x").mkString
+    -(1024L + java.lang.Long.parseLong(hex.take(3), 16))
   }
 
   /** Out-of-vocabulary penalty: -16 bits in the same fixed point. */
@@ -313,15 +312,9 @@ object TextAnalysis {
     * hash (`"t:" + word`) — the stand-in for an LM fit on the target
     * distribution (e.g. Wikipedia) rather than the raw crawl.
     */
-  val targetUnigramFp: Map[String, Long] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    pretrainedUnigramFp.keySet.toSeq.sorted.map { w =>
-      md.reset()
-      val hex = md.digest(("t:" + w).getBytes("UTF-8"))
-        .take(2).map(b => f"${b & 0xff}%02x").mkString
-      w -> -(1024L + java.lang.Long.parseLong(hex.take(3), 16))
-    }.toMap
-  }
+  val targetUnigramFp: Map[String, Long] =
+    pretrainedUnigramFp.keySet.toSeq.sorted.map(w => w -> md5Fp("t:" + w))
+      .toMap
 
   /** Target-LM OOV: one bit harsher than the raw LM's, so unknown
     * words push AGAINST selection.
@@ -367,14 +360,12 @@ object TextAnalysis {
       vocabFp: Map[String, Long] = pretrainedUnigramFp,
       oovFp: Long = UnigramOovFp, keepBits: Double = -3.0,
       carry: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     // null texts are dropped (SQL unnest-of-NULL semantics: a null doc
     // has no tokens, not a null score row)
     docs.filter(col(textCol).isNotNull).select(col(idCol).as("doc") +:
         carry.map(col) :+
         size(Dedupe.words(col(textCol))).cast("long").as("n_tokens") :+
-        ColumnBridge.column(graft.functions.UnigramScoreExpr(
-          ColumnBridge.expression(col(textCol)), vocabFp, oovFp))
+        graft.functions.UnigramScoreExpr(col(textCol), vocabFp, oovFp)
           .as("sum_fp"): _*)
       .withColumn("avg_bits",
         (col("sum_fp").cast("double") / lit(1024.0)) / col("n_tokens"))

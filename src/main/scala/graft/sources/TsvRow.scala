@@ -41,12 +41,8 @@ object TsvRow {
     * let U+0001-U+0007 / U+000E-U+001F through raw — invalid JSON,
     * diverging from json.dumps).
     */
-  def jsonStr(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val escaped = ColumnBridge.column(
-      graft.functions.JsonEscapeExpr(ColumnBridge.expression(c)))
-    concat(lit("\""), escaped, lit("\""))
-  }
+  def jsonStr(c: Column): Column =
+    concat(lit("\""), graft.functions.JsonEscapeExpr(c), lit("\""))
 
   /** json.dumps-style object from (key, pre-encoded value) pairs —
     * `{"k": v, "k2": v2}`; null-valued keys drop; empty → null

@@ -159,12 +159,10 @@ object EventStreams {
       textCol: String, shingleK: Int, numHashes: Int, rowsPerBand: Int)
       : Dataset[CandPair] = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val signed = docs.select(col(idCol).cast("long").as("doc"),
-        ColumnBridge.column(graft.functions.MinHashSigExpr(
-          ColumnBridge.expression(
-            graft.operators.TextAnalysis.capDoc(col(textCol))),
-          shingleK, numHashes)).as("sig"))
+        graft.functions.MinHashSigExpr(
+          graft.operators.TextAnalysis.capDoc(col(textCol)),
+          shingleK, numHashes).as("sig"))
       .filter(size(col("sig")) > 0)
     val banded = Dedupe.withBands(signed, numHashes, rowsPerBand)
       .select(col("band"), col("band_sig"), col("doc")).as[BandedDoc]
@@ -211,17 +209,15 @@ object EventStreams {
       rowsPerBand: Int, horizonMs: Long,
       watermarkDelay: String = "0 seconds"): Dataset[CandPair] = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val signed = docs
       .withWatermark(tsCol, watermarkDelay)
       // plain alias only: a cast would mint a NEW attribute without the
       // watermark metadata and EventTimeTimeout then fails analysis
       .select(col(idCol).cast("long").as("doc"),
         col(tsCol).as("ts"),
-        ColumnBridge.column(graft.functions.MinHashSigExpr(
-          ColumnBridge.expression(
-            graft.operators.TextAnalysis.capDoc(col(textCol))),
-          shingleK, numHashes)).as("sig"))
+        graft.functions.MinHashSigExpr(
+          graft.operators.TextAnalysis.capDoc(col(textCol)),
+          shingleK, numHashes).as("sig"))
       .filter(size(col("sig")) > 0)
     val banded = Dedupe.withBands(signed, numHashes, rowsPerBand)
       .select(col("band"), col("band_sig"), col("doc"), col("ts"))

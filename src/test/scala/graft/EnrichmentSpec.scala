@@ -595,10 +595,13 @@ class EnrichmentSpec extends SparkSpec {
     assert(tok.filter(not(col("t") <=> col("t_api")) ||
       col("n") =!= col("n_api")).count() == 0)
     assert(tok.filter(col("n") =!= size(col("t"))).count() == 0)
-    // constant-shape params are enforced
-    intercept[Exception] {
-      spark.sql("SELECT minhash_sig(text, doc_id, 8) FROM sql_docs")
-        .collect()
+    // constant-shape params are enforced: a column, and a BIGINT
+    // literal outside INT range (which must not wrap to k = 3)
+    Seq("doc_id", "4294967299").foreach { k =>
+      intercept[Exception] {
+        spark.sql(s"SELECT minhash_sig(text, $k, 8) FROM sql_docs")
+          .collect()
+      }
     }
     // wrong arity names the expected signature (not IndexOutOfBounds)
     val arityErr = intercept[Throwable] {

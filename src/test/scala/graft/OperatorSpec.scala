@@ -505,12 +505,10 @@ class OperatorSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(bloomed == plain && plain.nonEmpty && plain.size < 3000)
     // no false negatives: every inserted url must probe true
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val bf = staged.stat.bloomFilter(col("url"), 10000L, 0.05)
     val bc = spark.sparkContext.broadcast(bf)
-    val misses = staged.filter(!ColumnBridge.column(
-      graft.functions.BloomMightContainExpr(
-        ColumnBridge.expression(col("url")), bc))).count()
+    val misses = staged.filter(
+      !graft.functions.BloomMightContainExpr(col("url"), bc)).count()
     assert(misses == 0)
   }
 

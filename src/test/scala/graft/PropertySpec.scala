@@ -86,7 +86,6 @@ class PropertySpec extends SparkSpec {
     // tokens, multi-byte words, forced repeats, docs around the k-word
     // minimum — the in-row set must match the aggregation form as a SET
     import graft.operators.Dedupe
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val word: Gen[String] = Gen.frequency(
       5 -> Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, Gen.alphaLowerChar))
         .map(_.mkString),
@@ -98,8 +97,7 @@ class PropertySpec extends SparkSpec {
     val docs = sample(docGen, 400).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val viaExpr = docs.select(col("doc_id").as("doc"),
-        ColumnBridge.column(graft.functions.ShingleSetExpr(
-          ColumnBridge.expression(col("text")), 3)).as("shset"))
+        graft.functions.ShingleSetExpr(col("text"), 3).as("shset"))
       .filter(size(col("shset")) > 0)
       .select(col("doc"), array_sort(col("shset")).as("shset"))
       .orderBy("doc").as[(Long, Seq[String])].collect().toSeq

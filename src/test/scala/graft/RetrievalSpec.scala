@@ -54,11 +54,8 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("QueryTermCountsExpr equals the exploded-join formulation") {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val terms = Seq("join", "spark", "zzznothere", "a1b2c3")
-    val counts = ColumnBridge.column(
-      graft.functions.QueryTermCountsExpr(
-        ColumnBridge.expression(col("text")), terms))
+    val counts = graft.functions.QueryTermCountsExpr(col("text"), terms)
     val edge = Seq((9000L, "a1b2c3 JOIN join--spark. a1B2c3"),
       (9001L, ""), (9002L, "héllo spark wörld")).toDF("doc_id", "text")
     val src = docs.select("doc_id", "text").union(edge)
