@@ -3,11 +3,14 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.api.java.UDF1
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType,
   DateType, DecimalType, IntegerType, LongType, ShortType, StringType,
   StructField, StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.CacheHandle
 
@@ -28,8 +31,9 @@ import graft.core.CacheHandle
   *
   * The near-dup path has one definition per step: [[withBands]] builds
   * the LSH banding key for every candidate generator and for the
-  * persisted band index; [[verifyJaccardOneJoin]] (from-scratch) and
-  * [[verifyJaccardInline]] (the nightly fold) are the two exact
+  * persisted band index; [[verifyCandidates]] (from-scratch: on the
+  * driver under the local byte budget, else [[verifyJaccardOneJoin]])
+  * and [[verifyJaccardInline]] (the nightly fold) are the exact
   * verifiers; and [[nearDupPairs]] / [[nearDupComponents]] are the
   * sign → candidates → verify → components chain every from-scratch
   * caller runs.
@@ -611,16 +615,21 @@ object Dedupe {
     * `minJaccard`) of `docs`, from its signature frame `sig`
     * ([[minhashWide]] with `withCount = true`): LSH bucket candidates
     * with the size-ratio prune at `minJaccard`
-    * ([[minhashCandidatePairs]]), then [[verifyJaccardOneJoin]].
+    * ([[minhashCandidatePairs]]), then the exact verify
+    * ([[verifyCandidates]]): on the driver while the candidates and
+    * their documents fit the local byte budget, else
+    * [[verifyJaccardOneJoin]].
     *
     * Plan shape: the signature scan has ONE consumer (the bucket
     * grouping — no banded self-join), and the tiny candidate pair list
-    * is eagerly persisted: its two consumers in the verify (candidate-
-    * doc broadcast, role explode) are concurrent AQE stages that would
-    * otherwise each re-run the signature scan. The verified pairs are
-    * lazy and distinct. `sig` comes in rather than being signed here so
-    * a caller that also writes it ([[SignatureStore.build]]) shares one
-    * persisted frame.
+    * is eagerly persisted: the driver verify collects it, and the
+    * fallback's two consumers (candidate-doc broadcast, role explode)
+    * are concurrent AQE stages that would otherwise each re-run the
+    * signature scan. Within the budget the verified pairs are a local
+    * relation — one collect of the candidate documents, no verify
+    * exchange; past it they are lazy and distinct. `sig` comes in
+    * rather than being signed here so a caller that also writes it
+    * ([[SignatureStore.build]]) shares one persisted frame.
     */
   def nearDupPairs(sig: DataFrame, docs: DataFrame, idCol: String,
       textCol: String, shingleK: Int, numHashes: Int, rowsPerBand: Int,
@@ -629,14 +638,117 @@ object Dedupe {
     val cand = CacheHandle.eager(caches.track(
       minhashCandidatePairs(sig, numHashes, rowsPerBand,
         minSizeRatio = minJaccard).persist()))
-    verifyJaccardOneJoin(cand, docs, idCol, textCol, shingleK, minJaccard)
+    verifyCandidates(cand, docs, idCol, textCol, shingleK, minJaccard)
+  }
+
+  /** [[verifyJaccardOneJoin]]'s rows and schema: computed on the driver
+    * ([[localJaccard]]) as a local relation when the pairs, their
+    * documents' capped texts and shingle sets fit `byteBudget`
+    * estimated bytes, else [[verifyJaccardOneJoin]] itself.
+    * `candidates` must be distinct, persisted and filled: the driver
+    * path collects it, and the fallback reads it twice.
+    */
+  private[graft] def verifyCandidates(candidates: DataFrame,
+      docs: DataFrame, idCol: String, textCol: String, shingleK: Int,
+      minJaccard: Double, byteBudget: Long = localEdgeByteBudget)
+      : DataFrame = {
+    val oneJoin = verifyJaccardOneJoin(candidates, docs, idCol, textCol,
+      shingleK, minJaccard)
+    localJaccard(candidates, docs, idCol, textCol, shingleK, minJaccard,
+        byteBudget) match {
+      case Some(rows) =>
+        candidates.sparkSession.createDataFrame(rows.asJava, oneJoin.schema)
+      case None => oneJoin
+    }
+  }
+
+  /** The exact verify on the driver: the candidate pairs under the
+    * local row cap ([[collectLocalEdges]]), then `(id, capped text)` of
+    * their distinct ids in ONE bounded collect — filtered by membership
+    * in the driver's id set, so no broadcast job and a plan (and
+    * generated code) that does not grow with the ids — each text's set
+    * built by the distributed verify's own kernel
+    * ([[graft.functions.ShingleSetExpr.shingleSet]]) from the text's
+    * exact UTF-8 bytes, and [[pairJaccard]]'s arithmetic. None — run
+    * the distributed verify — wherever the local result could differ or
+    * would not fit: a null endpoint, a key type [[estKeyBytes]] rejects
+    * or a `docs` id of another type, a repeated pair or an id collected
+    * twice (the join's `n_sides` guard drops their pairs), or pairs,
+    * texts and sets past `byteBudget` estimated bytes. As in the join, a
+    * null text or one with fewer than k words has no set: its pairs
+    * drop.
+    */
+  private def localJaccard(candidates: DataFrame, docs: DataFrame,
+      idCol: String, textCol: String, shingleK: Int, minJaccard: Double,
+      byteBudget: Long): Option[Seq[Row]] = {
+    val keyType = candidates.schema("doc_a").dataType
+    val estKey = estKeyBytes(keyType)
+    for {
+      pairs <- collectLocalEdges(candidates, "doc_a", "doc_b",
+        localEdgeRows, byteBudget)
+      if docs.schema(idCol).dataType == keyType &&
+        pairs.iterator.map(r => (r.get(0), r.get(1))).toSet.size ==
+          pairs.length
+      ids = pairs.iterator.flatMap(r => Iterator(r.get(0), r.get(1))).toSet
+      member: UDF1[Any, Boolean] = id => ids(id)
+      texts <- boundedCollect(docs
+        .filter(udf(member, BooleanType)(col(idCol)))
+        .select(col(idCol),
+          TextAnalysis.capDoc(col(textCol)).cast("binary")))
+      sets <- shingleSets(texts, shingleK, estKey,
+        byteBudget - collectedBytes(pairs, estKey))
+    } yield pairs.toSeq.flatMap { r =>
+      val (a, b) = (sets.get(r.get(0)), sets.get(r.get(1)))
+      if (a == null || b == null || a.isEmpty || b.isEmpty) None
+      else {
+        val (small, large) = if (a.size <= b.size) (a, b) else (b, a)
+        val inter = small.asScala.count(large.contains)
+        val jaccard = inter.toDouble / (a.size + b.size - inter).toDouble
+        if (jaccard >= minJaccard) Some(Row(r.get(0), r.get(1), jaccard))
+        else None
+      }
+    }
+  }
+
+  /** id → distinct shingle set of `(id, capped text bytes)` rows (empty
+    * for a null or short text), or None when an id repeats or the
+    * estimated bytes pass `budget`: each text row ~64 B + key + its
+    * bytes, each shingle ~96 B of UTF8String, copied bytes and set
+    * entry + its bytes.
+    */
+  private def shingleSets(texts: Array[Row], k: Int, estKey: Long,
+      budget: Long)
+      : Option[java.util.Map[Any, java.util.Set[UTF8String]]] = {
+    val sets = new java.util.HashMap[Any, java.util.Set[UTF8String]]()
+    var bytes = 0L
+    var i = 0
+    while (i < texts.length && bytes <= budget &&
+        !sets.containsKey(texts(i).get(0))) {
+      val set = new java.util.HashSet[UTF8String]()
+      if (!texts(i).isNullAt(1)) {
+        val text = texts(i).getAs[Array[Byte]](1)
+        val arr = graft.functions.ShingleSetExpr.shingleSet(
+          UTF8String.fromBytes(text), k)
+        bytes += 64L + estKey + text.length
+        for (j <- 0 until arr.numElements()) {
+          val sh = arr.getUTF8String(j)
+          set.add(sh)
+          bytes += 96L + sh.numBytes
+        }
+      }
+      sets.put(texts(i).get(0), set)
+      i += 1
+    }
+    if (i == texts.length && bytes <= budget) Some(sets) else None
   }
 
   /** Near-duplicate clusters of `docs`: [[connectedComponents]] over
     * [[nearDupPairs]] — (node, label) for every document in a verified
-    * pair, label = its cluster's smallest doc id. The verified pairs
-    * are not persisted: the components' edge doubling is one explode
-    * scan, so the verify pipeline has exactly ONE consumer.
+    * pair, label = its cluster's smallest doc id. Pairs verified on
+    * the driver come in as a local relation, which the components'
+    * local path collects with no job; past the budget the verified
+    * pairs are not persisted — the components' edge doubling is one
+    * explode scan, so the verify pipeline has exactly ONE consumer.
     */
   def nearDupComponents(sig: DataFrame, docs: DataFrame, idCol: String,
       textCol: String, shingleK: Int, numHashes: Int, rowsPerBand: Int,
@@ -655,6 +767,9 @@ object Dedupe {
     * 8 GB driver this engine documents.
     */
   private val localEdgeByteBudget: Long = 256L << 20
+
+  /** Default ROW cap of the local paths' edge collect. */
+  private val localEdgeRows = 2000000
 
   /** JVM-side "less than" matching the distributed min-aggregate's
     * ordering, for the local union-find paths: strings compare as
@@ -733,7 +848,8 @@ object Dedupe {
     * construction, the guard is for arbitrary callers).
     */
   private def collectLocalEdges(edges: DataFrame, aCol: String,
-      bCol: String, localEdgeCap: Int): Option[Array[Row]] = {
+      bCol: String, localEdgeCap: Int,
+      byteBudget: Long = localEdgeByteBudget): Option[Array[Row]] = {
     val keyType = edges.schema(aCol).dataType
     val estKey = estKeyBytes(keyType)
     if (localEdgeCap <= 0 || estKey == 0 ||
@@ -744,11 +860,11 @@ object Dedupe {
       // the long-key row cap at the established 2M while making
       // wide-string graphs byte-bound
       val effCap = math.min(localEdgeCap.toLong,
-        localEdgeByteBudget / (48L + 2L * estKey)).toInt
+        byteBudget / (48L + 2L * estKey)).toInt
       boundedCollect(edges.select(col(aCol), col(bCol)).limit(effCap + 1))
         .filter(el => el.length <= effCap &&
           !el.exists(r => r.isNullAt(0) || r.isNullAt(1)) &&
-          collectedBytes(el, estKey) <= localEdgeByteBudget)
+          collectedBytes(el, estKey) <= byteBudget)
     }
   }
 
@@ -780,6 +896,18 @@ object Dedupe {
       }
     }
     parent.keySet.asScala.iterator.map(n => n -> find(n)).toMap
+  }
+
+  /** `df`'s rows when it is a local relation (the driver paths of
+    * [[connectedComponents]] and [[nearDupPairs]]) whose `keyCol` has a
+    * type the local paths key on ([[estKeyBytes]]) — collected with no
+    * Spark job — else None.
+    */
+  private[graft] def localRows(df: DataFrame, keyCol: String)
+      : Option[Array[Row]] = df.queryExecution.logical match {
+    case _: LocalRelation if estKeyBytes(df.schema(keyCol).dataType) > 0 =>
+      Some(df.collect())
+    case _ => None
   }
 
   /** A local relation of key pairs, both columns of type `t`. */
@@ -824,7 +952,7 @@ object Dedupe {
     */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25, distinctEdges: Boolean = false,
-      localEdgeCap: Int = 2000000): DataFrame =
+      localEdgeCap: Int = localEdgeRows): DataFrame =
     // Bounded driver-side union-find first (r17, guide §1.2 "the
     // distributed algorithm"): near-dup EDGE sets are tiny relative to
     // their corpora by LSH construction (verified pairs ≈ true
@@ -833,9 +961,11 @@ object Dedupe {
     // jobs PER ROUND — measured 3-5 jobs of pure fixed overhead per
     // invocation at sf0.1 for graphs that fit in kilobytes. When the
     // edge list fits under a bounded collect it is strictly cheaper to
-    // resolve on the driver — ONE job materializes the whole
-    // candidate/verify lineage — and the result re-enters as a local
-    // relation every consumer can broadcast. Graphs past the cap (a
+    // resolve on the driver — ONE job materializes a lazy edge lineage
+    // (the distributed verify), and edges that are already a local
+    // relation (the driver verify, [[verifyCandidates]]) collect with
+    // no job — and the result re-enters as a local relation every
+    // consumer can broadcast. Graphs past the cap (a
     // corpus whose duplicate graph itself approaches driver memory)
     // fall back to the unchanged distributed propagation, discarding
     // the capped collect (one extra edge scan on the rare fallback);
@@ -1002,7 +1132,7 @@ object Dedupe {
   def incrementalComponentsWithDelta(labels: DataFrame,
       newEdges: DataFrame, aCol: String, bCol: String, maxIter: Int = 25,
       caches: CacheHandle = CacheHandle.session,
-      localEdgeCap: Int = 2000000): (DataFrame, DataFrame) = {
+      localEdgeCap: Int = localEdgeRows): (DataFrame, DataFrame) = {
     val l = labels.select(col("node"), col("label"))
     val keyType = l.schema("node").dataType
     val local =

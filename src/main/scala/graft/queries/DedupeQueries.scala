@@ -1,9 +1,11 @@
 package graft.queries
 
+import scala.jdk.CollectionConverters._
+
 import graft.{Q, QueryPack, Tables}
 import graft.core.CacheHandle
 import graft.operators.{Dedupe, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -120,9 +122,12 @@ object DedupeQueries extends QueryPack {
       // candidate generation (ONE consumer of the signature scan, no
       // banded self-join, so the only cached state is the tiny,
       // eagerly persisted pair list); exact verification re-shingles
-      // only the candidate DOCUMENTS pulled from the base table and
-      // joins the per-doc set frame ONCE (verifyJaccardOneJoin), so the
-      // whole verify is one job. Measured at sf0.1 (5,000 docs): ~2.1s
+      // only the candidate DOCUMENTS pulled from the base table: on the
+      // driver while the pairs and their capped texts fit the local
+      // byte budget — one collect of the candidate docs, no verify
+      // exchange, and the output is a local relation — else by joining
+      // the per-doc set frame ONCE (verifyJaccardOneJoin, one job).
+      // Measured at sf0.1 (5,000 docs) before the driver verify: ~2.1s
       // steady vs ~2.8s for the r8/r9 self-join + two-join-verify form.
       // withCount: the signature pass emits each doc's distinct-shingle
       // count for free, and pairs whose count ratio is below minJaccard
@@ -169,10 +174,11 @@ object DedupeQueries extends QueryPack {
 
   /** Near-dup cluster labels `(node, label)` of `docs`: q25's verified
     * pairs (3-word shingles, 16 hashes, 4-row bands, Jaccard ≥ 0.5; see
-    * q25's plan-shape note) into connected components. The pairs are
-    * not persisted: the components' edge doubling is a single explode
-    * scan, so the verify pipeline has exactly ONE consumer — one job
-    * materializes verify + components.
+    * q25's plan-shape note) into connected components. Within the
+    * local byte budget both run on the driver and the labels are a
+    * local relation; past it the pairs are not persisted — the
+    * components' edge doubling is a single explode scan, so the verify
+    * pipeline has exactly ONE consumer.
     */
   private[graft] def nearDupLabels(docs: DataFrame): DataFrame =
     Dedupe.nearDupComponents(
@@ -182,14 +188,28 @@ object DedupeQueries extends QueryPack {
   /** The `(doc, cluster, cluster_size)` surface of cluster labels, the
     * size a window over the label partition: ONE exchange and one read
     * of the labels, where a groupBy + join read them twice through two
-    * shuffles.
+    * shuffles. Labels that are already a local relation (the driver
+    * path of [[Dedupe.connectedComponents]]) are counted on the driver
+    * into a local relation of the window form's rows and schema — no
+    * exchange, no job.
     */
-  private[graft] def withClusterSizes(labels: DataFrame): DataFrame =
-    labels
+  private[graft] def withClusterSizes(labels: DataFrame): DataFrame = {
+    val windowed = labels
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy("label")))
       .select(col("node").as("doc"), col("label").as("cluster"),
         col("cluster_size"))
+    Dedupe.localRows(labels, "label") match {
+      case Some(rows) =>
+        val (n, l) = (labels.schema.fieldIndex("node"),
+          labels.schema.fieldIndex("label"))
+        val sizes = rows.groupMapReduce(_.get(l))(_ => 1L)(_ + _)
+        labels.sparkSession.createDataFrame(
+          rows.toSeq.map(r => Row(r.get(n), r.get(l), sizes(r.get(l)))).asJava,
+          windowed.schema)
+      case None => windowed
+    }
+  }
 
   /** Near-dup CLUSTER resolution — the stage after pair verification:
     * verified pairs (the q25 output) become edges of an undirected

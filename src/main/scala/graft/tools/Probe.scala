@@ -120,9 +120,10 @@ object Probe {
     * built and run, driver and local executor alike), every job's wall time and
     * description and every stage's task metrics — so scheduling-floor
     * overhead (many small jobs) and codegen cost are distinguishable
-    * from data-bound cost. The timed run executes the query's own plan
-    * (`queryExecution.toRdd.count()`, as Bench does): a `count()` lets
-    * the optimizer prune window outputs and whole exchanges. The row
+    * from data-bound cost. The timed run builds the query and executes
+    * its own plan (`queryExecution.toRdd.count()`), as Bench does: a
+    * query may do much of its work while it is built, and a `count()`
+    * lets the optimizer prune window outputs and whole exchanges. The row
     * count is the query's `count()`, taken after the timed run. With
     * several queries named they run interleaved: alternation cancels
     * slow machine drift that back-to-back blocks fold entirely into
@@ -138,8 +139,11 @@ object Probe {
       val fn = SparkEntry.queries(q)
       spark.catalog.clearCache()
       val ((df, dt), prof) = RunProfile(spark) {
-        val df = fn(spark, sfDir)
-        (df, timed(df.queryExecution.toRdd.count())._2)
+        timed {
+          val df = fn(spark, sfDir)
+          df.queryExecution.toRdd.count()
+          df
+        }
       }
       val rows = df.count()
       println(f"== $q rep $rep: rows=$rows wall=$dt%.3fs")

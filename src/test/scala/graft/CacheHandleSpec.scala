@@ -67,6 +67,21 @@ class CacheHandleSpec extends SparkSpec {
     } finally cached.unpersist()
   }
 
+  test("a refill after unpersist compiles no code: every fill runs " +
+      "under the session's one class loader") {
+    val df = spark.range(0, 1000, 1, 4)
+      .groupBy((col("id") % 13).as("k")).agg(sum("id").as("s"))
+      .persist()
+    try {
+      CacheHandle.fill(df)
+      df.unpersist(blocking = true)
+      df.persist()
+      val (n, p) = RunProfile(spark)(CacheHandle.fill(df))
+      assert(n == 13)
+      assert(p.compiles == 0, p)
+    } finally df.unpersist()
+  }
+
   test("fill returns the row count") {
     val (df, _) = countedSource()
     val filtered = df.filter(col("id") % 7 === 0).persist()

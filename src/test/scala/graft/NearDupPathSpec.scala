@@ -1,9 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
+import graft.core.{CacheHandle, RunProfile}
 import graft.operators.Dedupe
+import graft.queries.DedupeQueries
 
 /** The near-dup path's paired operators pinned against each other: the
   * nightly fold's inline verifier against the from-scratch one-join
@@ -50,6 +53,104 @@ class NearDupPathSpec extends SparkSpec {
         assert(!inline.exists(_.take(2).contains(short)))
       }
     } finally cand.unpersist()
+  }
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.logical.isInstanceOf[LocalRelation]
+
+  /** `docs` plus a hub in four colliding pairs, a 2-word doc and a
+    * null-text doc, with their persisted, filled, distinct LSH
+    * candidates: (corpus, candidates, hub id, 2-word id, null-text id).
+    */
+  private def hubCorpus(): (DataFrame, DataFrame, Long, Long, Long) = {
+    val hubWords = (1 to 120).map(i => s"hubword$i")
+    val (hub, short, nul) = (1000000L, 1000010L, 1000020L)
+    val extra = (Seq(hub -> hubWords.mkString(" "), short -> "two words") ++
+      (1 to 4).map(e => (hub + e) ->
+        hubWords.updated(e * 20, s"edit$e").mkString(" ")))
+      .toDF("doc_id", "text")
+      .union(Seq(nul).toDF("doc_id").select(col("doc_id"),
+        lit(null).cast("string").as("text")))
+    val all = docs.union(extra)
+    val sig = Dedupe.minhashWide(all, "doc_id", "text", 3, 16,
+      withCount = true)
+    val cand = CacheHandle.eager(Dedupe.minhashCandidatePairs(sig, 16, 4)
+      .union(Seq((hub, short), (hub, nul)).toDF("doc_a", "doc_b"))
+      .distinct()
+      .persist())
+    (all, cand, hub, short, nul)
+  }
+
+  test("the driver verify equals verifyJaccardOneJoin, hub, short and null-text docs included") {
+    val (all, cand, hub, short, nul) = hubCorpus()
+    try {
+      val pairs = rows(cand, "doc_a", "doc_b")
+      assert(pairs.count(_.contains(hub)) >= 4)
+      assert(pairs.exists(_.contains(short)) && pairs.exists(_.contains(nul)))
+      for (minJ <- Seq(0.0, 0.5)) {
+        val local = Dedupe.verifyCandidates(cand, all, "doc_id", "text", 3,
+          minJ)
+        val oneJoin = Dedupe.verifyJaccardOneJoin(cand, all, "doc_id",
+          "text", 3, minJ)
+        assert(isLocal(local), s"minJaccard $minJ")
+        assert(local.schema == oneJoin.schema)
+        val got = rows(local, "doc_a", "doc_b", "jaccard")
+        assert(got == rows(oneJoin, "doc_a", "doc_b", "jaccard"),
+          s"minJaccard $minJ")
+        assert(local.count() == got.size)
+        assert(got.count(_.take(2).contains(hub)) >= 4)
+        assert(!got.exists(p => p.contains(short) || p.contains(nul)))
+      }
+    } finally cand.unpersist()
+  }
+
+  test("the driver verify falls back to the join past the budget or on a repeated id") {
+    val (all, cand, hub, _, _) = hubCorpus()
+    try {
+      def same(corpus: DataFrame, budget: Long): Unit = {
+        val got = Dedupe.verifyCandidates(cand, corpus, "doc_id", "text", 3,
+          0.5, budget)
+        assert(!isLocal(got))
+        assert(rows(got, "doc_a", "doc_b", "jaccard") == rows(
+          Dedupe.verifyJaccardOneJoin(cand, corpus, "doc_id", "text", 3,
+            0.5), "doc_a", "doc_b", "jaccard"))
+      }
+      same(all, 0L)
+      // the hub's second row has one more side in each of its pairs: the
+      // join drops them, and the driver verify must not decide otherwise
+      same(all.union(all.filter(col("doc_id") === hub)), 256L << 20)
+    } finally cand.unpersist()
+  }
+
+  test("withClusterSizes counts local labels as the window form does") {
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L), (10L, 11L), (11L, 12L),
+      (12L, 10L)).toDF("a", "b")
+    val labels = Dedupe.connectedComponents(edges, "a", "b")
+    assert(isLocal(labels))
+    val local = DedupeQueries.withClusterSizes(labels)
+    val windowed = DedupeQueries.withClusterSizes(labels.filter(lit(true)))
+    assert(isLocal(local) && !isLocal(windowed))
+    assert(local.schema == windowed.schema)
+    val cols = Seq("doc", "cluster", "cluster_size")
+    assert(rows(local, cols: _*) == rows(windowed, cols: _*))
+    assert(rows(local, cols: _*).contains(Seq(12L, 10L, 3L)))
+  }
+
+  test("q59 reruns in at most 4 jobs with no exchange or window in its plan") {
+    // q59's chain over the sf0.01 documents
+    def run(): (DataFrame, RunProfile) = RunProfile(spark) {
+      val df = DedupeQueries.withClusterSizes(
+        DedupeQueries.nearDupLabels(docs))
+      df.queryExecution.toRdd.count()
+      df
+    }
+    try {
+      run()
+      val (df, p) = run()
+      assert(p.jobs <= 4, p)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange") && !plan.contains("Window"), plan)
+    } finally spark.catalog.clearCache()
   }
 
   test("minhashCandidatePairsAgainst is minhashCandidatesAgainst without the estimate") {
