@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType,
-  DateType, DecimalType, IntegerType, LongType, ShortType, StringType,
-  StructField, StructType, TimestampType}
+  DateType, DecimalType, DoubleType, IntegerType, LongType, ShortType,
+  StringType, StructField, StructType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.CacheHandle
@@ -242,9 +242,29 @@ object Dedupe {
     * signature's trailing element; band slices never read it).
     */
   def minhashCandidatePairs(sigWide: DataFrame, numHashes: Int,
-      rowsPerBand: Int, minSizeRatio: Double = 0.0): DataFrame = {
+      rowsPerBand: Int, minSizeRatio: Double = 0.0): DataFrame =
+    bucketCandidates(sigWide, numHashes, rowsPerBand, minSizeRatio,
+      withCounts = false)
+
+  /** [[minhashCandidatePairs]] plus each side's distinct-shingle count
+    * (`cnt_a`, `cnt_b`, read from a `withCount = true` signature): the
+    * driver verify sizes its documents from them before it collects a
+    * single text ([[verifyCandidates]]). A doc's count is a function of
+    * its text, so the pairs stay distinct on (doc_a, doc_b) — unless
+    * one id carries two texts of different counts, whose pairs every
+    * verifier drops (more than two sides, see [[verifyJaccardOneJoin]]).
+    */
+  private[graft] def countedCandidatePairs(sigWide: DataFrame,
+      numHashes: Int, rowsPerBand: Int, minSizeRatio: Double): DataFrame =
+    bucketCandidates(sigWide, numHashes, rowsPerBand, minSizeRatio,
+      withCounts = true)
+
+  private def bucketCandidates(sigWide: DataFrame, numHashes: Int,
+      rowsPerBand: Int, minSizeRatio: Double, withCounts: Boolean)
+      : DataFrame = {
     val cnt =
-      if (minSizeRatio > 0) element_at(col("sig"), numHashes + 1)
+      if (minSizeRatio > 0 || withCounts)
+        element_at(col("sig"), numHashes + 1)
       else lit(0L)
     val bands = withBands(sigWide, numHashes, rowsPerBand)
       .select(col("doc"), cnt.as("cnt"), col("band"), col("band_sig"))
@@ -256,16 +276,21 @@ object Dedupe {
     // are made distinct (verifyJaccardOneJoin's regroup counts rows,
     // see its scaladoc). The size-ratio prune runs inside the pair
     // emitter, so hopeless pairs never even reach the dedup exchange.
-    bucketPairs(buckets, sizeRatioKeeps(minSizeRatio)).distinct()
+    bucketPairs(buckets, sizeRatioKeeps(minSizeRatio), withCounts)
+      .distinct()
   }
 
   /** The in-row i<j combinations of each bucket's sorted `ds` array
     * (structs with a leading `doc` field) as (doc_a, doc_b) rows, doc_a
-    * < doc_b by construction (the struct sort orders by doc first). Only
+    * < doc_b by construction (the struct sort orders by doc first), and
+    * with `withCounts` the two entries' `cnt` as (cnt_a, cnt_b). Only
     * combinations `keep(a, b)` accepts are emitted.
     */
   private def bucketPairs(buckets: DataFrame,
-      keep: (Column, Column) => Column): DataFrame =
+      keep: (Column, Column) => Column,
+      withCounts: Boolean = false): DataFrame = {
+    val out = Seq("doc_a", "doc_b") ++
+      (if (withCounts) Seq("cnt_a", "cnt_b") else Nil)
     buckets
       .select(explode(flatten(transform(
         sequence(lit(0), size(col("ds")) - 2),
@@ -275,11 +300,15 @@ object Dedupe {
             j => {
               val (a, b) =
                 (element_at(col("ds"), i + 1), element_at(col("ds"), j + 1))
-              struct(a("doc").as("doc_a"), b("doc").as("doc_b"),
-                keep(a, b).as("keep"))
+              val counts =
+                if (withCounts) Seq(a("cnt").as("cnt_a"), b("cnt").as("cnt_b"))
+                else Nil
+              struct(Seq(a("doc").as("doc_a"), b("doc").as("doc_b")) ++
+                counts :+ keep(a, b).as("keep"): _*)
             }),
           p => p("keep"))))).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+      .select(out.map(c => col(s"p.$c").as(c)): _*)
+  }
 
   /** The size-ratio verify-prune on two bucket entries' `cnt`: J(A,B) ≤
     * min(|A|,|B|) / max(|A|,|B|), so a pair below `ratio` cannot pass
@@ -635,68 +664,87 @@ object Dedupe {
       textCol: String, shingleK: Int, numHashes: Int, rowsPerBand: Int,
       minJaccard: Double, caches: CacheHandle = CacheHandle.session)
       : DataFrame = {
-    val cand = CacheHandle.eager(caches.track(
-      minhashCandidatePairs(sig, numHashes, rowsPerBand,
-        minSizeRatio = minJaccard).persist()))
-    verifyCandidates(cand, docs, idCol, textCol, shingleK, minJaccard)
+    val cand = caches.track(countedCandidatePairs(sig, numHashes,
+      rowsPerBand, minSizeRatio = minJaccard).persist())
+    val nPairs = CacheHandle.fill(cand)
+    verifyCandidates(cand, nPairs, docs, idCol, textCol, shingleK,
+      minJaccard)
   }
 
   /** [[verifyJaccardOneJoin]]'s rows and schema: computed on the driver
     * ([[localJaccard]]) as a local relation when the pairs, their
     * documents' capped texts and shingle sets fit `byteBudget`
     * estimated bytes, else [[verifyJaccardOneJoin]] itself.
-    * `candidates` must be distinct, persisted and filled: the driver
-    * path collects it, and the fallback reads it twice.
+    * `candidates` — `nPairs` distinct rows of [[countedCandidatePairs]]
+    * — must be persisted and filled: the driver path collects it, and
+    * the fallback reads it twice.
     */
-  private[graft] def verifyCandidates(candidates: DataFrame,
+  private[graft] def verifyCandidates(candidates: DataFrame, nPairs: Long,
       docs: DataFrame, idCol: String, textCol: String, shingleK: Int,
       minJaccard: Double, byteBudget: Long = localEdgeByteBudget)
-      : DataFrame = {
-    val oneJoin = verifyJaccardOneJoin(candidates, docs, idCol, textCol,
-      shingleK, minJaccard)
-    localJaccard(candidates, docs, idCol, textCol, shingleK, minJaccard,
-        byteBudget) match {
+      : DataFrame =
+    localJaccard(candidates, nPairs, docs, idCol, textCol, shingleK,
+        minJaccard, byteBudget) match {
       case Some(rows) =>
-        candidates.sparkSession.createDataFrame(rows.asJava, oneJoin.schema)
-      case None => oneJoin
+        candidates.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+          candidates.schema("doc_a"), candidates.schema("doc_b"),
+          StructField("jaccard", DoubleType))))
+      case None =>
+        verifyJaccardOneJoin(candidates, docs, idCol, textCol, shingleK,
+          minJaccard)
     }
-  }
 
-  /** The exact verify on the driver: the candidate pairs under the
-    * local row cap ([[collectLocalEdges]]), then `(id, capped text)` of
-    * their distinct ids in ONE bounded collect — filtered by membership
-    * in the driver's id set, so no broadcast job and a plan (and
-    * generated code) that does not grow with the ids — each text's set
-    * built by the distributed verify's own kernel
-    * ([[graft.functions.ShingleSetExpr.shingleSet]]) from the text's
-    * exact UTF-8 bytes, and [[pairJaccard]]'s arithmetic. None — run
-    * the distributed verify — wherever the local result could differ or
-    * would not fit: a null endpoint, a key type [[estKeyBytes]] rejects
-    * or a `docs` id of another type, a repeated pair or an id collected
-    * twice (the join's `n_sides` guard drops their pairs), or pairs,
-    * texts and sets past `byteBudget` estimated bytes. As in the join, a
-    * null text or one with fewer than k words has no set: its pairs
-    * drop.
+  /** The exact verify on the driver, sized before each collect so that
+    * a candidate set past the budget costs the fallback at most one
+    * collect of the cached pairs and never a text: the pair count
+    * against the local row cap and the budget, then the collected
+    * pairs' `cnt_a`/`cnt_b` against it ([[candidateDocBytes]]). Only
+    * then `(id, capped text)` of their distinct ids in ONE bounded
+    * collect — filtered by membership in the driver's id set, so no
+    * broadcast job and a plan (and generated code) that does not grow
+    * with the ids — each text's set built by the distributed verify's
+    * own kernel ([[graft.functions.ShingleSetExpr.shingleSet]]) from the
+    * text's exact UTF-8 bytes and charged at its actual size, and
+    * [[pairJaccard]]'s arithmetic. None — run the distributed verify —
+    * wherever the local result could differ or would not fit: a null
+    * endpoint, a key type [[estKeyBytes]] rejects or a `docs` id of
+    * another type, a repeated pair or an id collected twice (the join's
+    * `n_sides` guard drops their pairs), or pairs, ids, texts and sets
+    * past `byteBudget` estimated bytes. As in the join, a null text or
+    * one with fewer than k words has no set: its pairs drop. A text far
+    * longer than its distinct shingles suggest (one phrase repeated) is
+    * collected before its bytes are counted; spark.driver.maxResultSize
+    * bounds that collect.
     */
-  private def localJaccard(candidates: DataFrame, docs: DataFrame,
-      idCol: String, textCol: String, shingleK: Int, minJaccard: Double,
-      byteBudget: Long): Option[Seq[Row]] = {
+  private def localJaccard(candidates: DataFrame, nPairs: Long,
+      docs: DataFrame, idCol: String, textCol: String, shingleK: Int,
+      minJaccard: Double, byteBudget: Long): Option[Seq[Row]] = {
     val keyType = candidates.schema("doc_a").dataType
     val estKey = estKeyBytes(keyType)
+    // each pair: its collected row of two keys and two counts, and its
+    // entry in the repeated-pair check's set
+    def pairBytes(pairs: Array[Row]) =
+      collectedBytes(pairs, estKey) + 64L * pairs.length
+    val fits = estKey > 0 && nPairs <= localEdgeRows &&
+      nPairs * (48L + 4L * estKey + 64L) <= byteBudget &&
+      candidates.schema("doc_b").dataType == keyType &&
+      docs.schema(idCol).dataType == keyType
     for {
-      pairs <- collectLocalEdges(candidates, "doc_a", "doc_b",
-        localEdgeRows, byteBudget)
-      if docs.schema(idCol).dataType == keyType &&
+      pairs <- if (!fits) None else boundedCollect(
+        candidates.select("doc_a", "doc_b", "cnt_a", "cnt_b"))
+      if !pairs.exists(r => r.isNullAt(0) || r.isNullAt(1)) &&
         pairs.iterator.map(r => (r.get(0), r.get(1))).toSet.size ==
           pairs.length
-      ids = pairs.iterator.flatMap(r => Iterator(r.get(0), r.get(1))).toSet
-      member: UDF1[Any, Boolean] = id => ids(id)
+      cnt = docCounts(pairs)
+      if pairBytes(pairs) + cnt.valuesIterator.map(c =>
+        candidateDocBytes(c, shingleK, estKey)).sum <= byteBudget
+      member: UDF1[Any, Boolean] = id => cnt.contains(id)
       texts <- boundedCollect(docs
         .filter(udf(member, BooleanType)(col(idCol)))
         .select(col(idCol),
           TextAnalysis.capDoc(col(textCol)).cast("binary")))
       sets <- shingleSets(texts, shingleK, estKey,
-        byteBudget - collectedBytes(pairs, estKey))
+        byteBudget - pairBytes(pairs) - idEntryBytes * cnt.size)
     } yield pairs.toSeq.flatMap { r =>
       val (a, b) = (sets.get(r.get(0)), sets.get(r.get(1)))
       if (a == null || b == null || a.isEmpty || b.isEmpty) None
@@ -709,6 +757,33 @@ object Dedupe {
       }
     }
   }
+
+  /** Each candidate id → the largest distinct-shingle count
+    * (`cnt_a`/`cnt_b`, null as 0) its collected `(doc_a, doc_b, cnt_a,
+    * cnt_b)` pairs carry: the driver verify's id set, shipped to the
+    * text collect's membership filter.
+    */
+  private def docCounts(pairs: Array[Row])
+      : scala.collection.mutable.HashMap[Any, Long] = {
+    val cnt = scala.collection.mutable.HashMap.empty[Any, Long]
+    for (r <- pairs; s <- 0 to 1) {
+      val c = if (r.isNullAt(2 + s)) 0L else r.getAs[Number](2 + s).longValue
+      cnt.update(r.get(s), math.max(c, cnt.getOrElse(r.get(s), 0L)))
+    }
+    cnt
+  }
+
+  /** Driver bytes of one entry of [[docCounts]]' map. */
+  private val idEntryBytes = 72L
+
+  /** A candidate doc's estimated driver bytes in the driver verify
+    * before its text is seen, from its distinct-shingle count `cnt`:
+    * its id entry, its text row (~64 B + key) and its shingle set as
+    * [[shingleSets]] charges them, each shingle ~96 B plus its k words,
+    * and the text ~one word per shingle, at ~6 B a word.
+    */
+  private def candidateDocBytes(cnt: Long, k: Int, estKey: Long): Long =
+    idEntryBytes + 64L + estKey + cnt * (96L + 6L * k + 6L)
 
   /** id → distinct shingle set of `(id, capped text bytes)` rows (empty
     * for a null or short text), or None when an id repeats or the
@@ -759,12 +834,13 @@ object Dedupe {
       distinctEdges = true)
 
   /** Driver-heap working budget for the local union-find paths
-    * ([[connectedComponents]], [[incrementalComponentsWithDelta]]):
-    * every array those paths collect must fit in this many estimated
-    * bytes or the call falls back to the distributed propagation. Peak
-    * local footprint (collect + parent map + result rows) is a small
-    * multiple (~3x) of the budget — ~0.75 GB worst case against the
-    * 8 GB driver this engine documents.
+    * ([[connectedComponents]], [[incrementalComponentsWithDelta]]) and
+    * the driver verify ([[verifyCandidates]]): every array those paths
+    * collect must fit in this many estimated bytes or the call falls
+    * back to the distributed path. Peak local footprint (collect +
+    * parent map + result rows) is a small multiple (~3x) of the budget
+    * — ~0.75 GB worst case against the 8 GB driver this engine
+    * documents.
     */
   private val localEdgeByteBudget: Long = 256L << 20
 
@@ -848,8 +924,7 @@ object Dedupe {
     * construction, the guard is for arbitrary callers).
     */
   private def collectLocalEdges(edges: DataFrame, aCol: String,
-      bCol: String, localEdgeCap: Int,
-      byteBudget: Long = localEdgeByteBudget): Option[Array[Row]] = {
+      bCol: String, localEdgeCap: Int): Option[Array[Row]] = {
     val keyType = edges.schema(aCol).dataType
     val estKey = estKeyBytes(keyType)
     if (localEdgeCap <= 0 || estKey == 0 ||
@@ -860,11 +935,11 @@ object Dedupe {
       // the long-key row cap at the established 2M while making
       // wide-string graphs byte-bound
       val effCap = math.min(localEdgeCap.toLong,
-        byteBudget / (48L + 2L * estKey)).toInt
+        localEdgeByteBudget / (48L + 2L * estKey)).toInt
       boundedCollect(edges.select(col(aCol), col(bCol)).limit(effCap + 1))
         .filter(el => el.length <= effCap &&
           !el.exists(r => r.isNullAt(0) || r.isNullAt(1)) &&
-          collectedBytes(el, estKey) <= byteBudget)
+          collectedBytes(el, estKey) <= localEdgeByteBudget)
     }
   }
 

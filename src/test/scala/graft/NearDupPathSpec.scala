@@ -60,9 +60,11 @@ class NearDupPathSpec extends SparkSpec {
 
   /** `docs` plus a hub in four colliding pairs, a 2-word doc and a
     * null-text doc, with their persisted, filled, distinct LSH
-    * candidates: (corpus, candidates, hub id, 2-word id, null-text id).
+    * candidates: (corpus, candidates, their count, hub id, 2-word id,
+    * null-text id).
     */
-  private def hubCorpus(): (DataFrame, DataFrame, Long, Long, Long) = {
+  private def hubCorpus()
+      : (DataFrame, DataFrame, Long, Long, Long, Long) = {
     val hubWords = (1 to 120).map(i => s"hubword$i")
     val (hub, short, nul) = (1000000L, 1000010L, 1000020L)
     val extra = (Seq(hub -> hubWords.mkString(" "), short -> "two words") ++
@@ -74,22 +76,23 @@ class NearDupPathSpec extends SparkSpec {
     val all = docs.union(extra)
     val sig = Dedupe.minhashWide(all, "doc_id", "text", 3, 16,
       withCount = true)
-    val cand = CacheHandle.eager(Dedupe.minhashCandidatePairs(sig, 16, 4)
-      .union(Seq((hub, short), (hub, nul)).toDF("doc_a", "doc_b"))
+    val cand = Dedupe.countedCandidatePairs(sig, 16, 4, 0.0)
+      .union(Seq((hub, short, 0L, 0L), (hub, nul, 0L, 0L))
+        .toDF("doc_a", "doc_b", "cnt_a", "cnt_b"))
       .distinct()
-      .persist())
-    (all, cand, hub, short, nul)
+      .persist()
+    (all, cand, CacheHandle.fill(cand), hub, short, nul)
   }
 
   test("the driver verify equals verifyJaccardOneJoin, hub, short and null-text docs included") {
-    val (all, cand, hub, short, nul) = hubCorpus()
+    val (all, cand, n, hub, short, nul) = hubCorpus()
     try {
       val pairs = rows(cand, "doc_a", "doc_b")
       assert(pairs.count(_.contains(hub)) >= 4)
       assert(pairs.exists(_.contains(short)) && pairs.exists(_.contains(nul)))
       for (minJ <- Seq(0.0, 0.5)) {
-        val local = Dedupe.verifyCandidates(cand, all, "doc_id", "text", 3,
-          minJ)
+        val local = Dedupe.verifyCandidates(cand, n, all, "doc_id", "text",
+          3, minJ)
         val oneJoin = Dedupe.verifyJaccardOneJoin(cand, all, "doc_id",
           "text", 3, minJ)
         assert(isLocal(local), s"minJaccard $minJ")
@@ -105,11 +108,11 @@ class NearDupPathSpec extends SparkSpec {
   }
 
   test("the driver verify falls back to the join past the budget or on a repeated id") {
-    val (all, cand, hub, _, _) = hubCorpus()
+    val (all, cand, n, hub, _, _) = hubCorpus()
     try {
       def same(corpus: DataFrame, budget: Long): Unit = {
-        val got = Dedupe.verifyCandidates(cand, corpus, "doc_id", "text", 3,
-          0.5, budget)
+        val got = Dedupe.verifyCandidates(cand, n, corpus, "doc_id", "text",
+          3, 0.5, budget)
         assert(!isLocal(got))
         assert(rows(got, "doc_a", "doc_b", "jaccard") == rows(
           Dedupe.verifyJaccardOneJoin(cand, corpus, "doc_id", "text", 3,
@@ -119,6 +122,21 @@ class NearDupPathSpec extends SparkSpec {
       // the hub's second row has one more side in each of its pairs: the
       // join drops them, and the driver verify must not decide otherwise
       same(all.union(all.filter(col("doc_id") === hub)), 256L << 20)
+    } finally cand.unpersist()
+  }
+
+  test("past the budget the driver verify collects no text") {
+    val (all, cand, n, _, _, _) = hubCorpus()
+    try {
+      // a zero budget is decided from the pair count alone; one that
+      // holds the pairs but not their documents' shingle sets, from the
+      // collected pairs' counts — never from a collect of the texts
+      for ((budget, jobs) <- Seq(0L -> 0, n * 208L + 1000L -> 1)) {
+        val (got, p) = RunProfile(spark)(Dedupe.verifyCandidates(cand, n,
+          all, "doc_id", "text", 3, 0.5, budget))
+        assert(!isLocal(got), s"budget $budget")
+        assert(p.jobs == jobs, s"budget $budget: $p")
+      }
     } finally cand.unpersist()
   }
 
